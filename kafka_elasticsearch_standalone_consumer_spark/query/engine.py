@@ -40,6 +40,24 @@ from kafka_elasticsearch_standalone_consumer_spark.query import bm25, kernels
 from kafka_elasticsearch_standalone_consumer_spark.tables import Warehouse
 
 TOPK_SCHEMA = "doc_id long, score double"
+MANY_SCHEMA = "qid string, " + TOPK_SCHEMA + ", rank int"
+
+# Placement threshold of search() / search_many(): a warehouse query with
+# no DataFrame-valued mask whose planned posting volume (Σ df over its
+# planned terms, summed over a batch) is at or below this runs on the
+# driver; anything larger runs on the executors. Measured crossover,
+# forced driver vs forced executor, local[4] on a 4-vCPU VM, docs_per_shard
+# 2^14, wall / process-tree CPU per call (best or median of 2-3 calls):
+#   ~22k turns (2 shards): the driver wins everywhere measured — single
+#     bmw queries at 0.47M postings 0.58 s / 0.65 CPU s vs 1.44 s / 2.51
+#     CPU s, 16-query batches at 2.18M 1.01 s / 1.12 CPU s vs 1.71 s / 2.76.
+#   ~200k turns (12 shards): single bmw queries 1.56M postings 1.29 s /
+#     1.34 CPU s vs 1.61 s / 2.66 CPU s; the executor first matches the
+#     driver's wall at 1.85M (1.98 s vs 1.95 s) and batches at 2.66M
+#     (1.63 s vs 1.62 s). The driver's tree CPU stays at about half the
+#     executor's up to 3.4M. exact mode is cheaper on the driver than bmw.
+# So the wall crossover is ~2M postings; the constant sits below it.
+DRIVER_MAX_POSTINGS = 1_500_000
 
 
 def _boost_combine(score: "F.Column", fv: "F.Column", boost_mode: str) -> "F.Column":
@@ -149,35 +167,30 @@ class Index:
             self.meta = dict(self.meta, n_docs=totals[0], avgdl=totals[1])
         segs = list_segments(self.wh)
         if len(segs) <= 1:
-            self.postings = self.wh.read(spark, "postings").withColumn(
-                "baked_avgdl", F.lit(float(self.meta["avgdl"]))
-            )
-            self.term_stats = self.wh.read(spark, "term_stats")
             self._seg_whs = [self.wh]
             self._seg_baked = [float(self.meta["avgdl"])]
         else:
-            # incremental segments present: union postings (each carries the
-            # avgdl its block-max bounds were baked with — the kernel
-            # substitutes a safe bound if the global avgdl drifted up), and
-            # re-aggregate the term dictionary so df/idf stay globally exact
-            whs = [self.wh] + [seg_warehouse(self.wh, s["seg_id"]) for s in segs[1:]]
-            baked = [s["baked_avgdl"] for s in segs]
-            parts = [
-                w.read(spark, "postings").withColumn("baked_avgdl", F.lit(float(a)))
-                for w, a in zip(whs, baked)
+            self._seg_whs = [self.wh] + [
+                seg_warehouse(self.wh, s["seg_id"]) for s in segs[1:]
             ]
-            p = parts[0]
-            for q in parts[1:]:
-                p = p.unionByName(q)
-            self.postings = p
-            ts = whs[0].read(spark, "term_stats")
-            for w in whs[1:]:
-                ts = ts.unionByName(w.read(spark, "term_stats"))
-            self.term_stats = ts.groupBy("term").agg(
-                F.sum("df").alias("df"), F.max("max_tf").alias("max_tf")
-            )
-            self._seg_whs = whs
-            self._seg_baked = [float(a) for a in baked]
+            self._seg_baked = [float(s["baked_avgdl"]) for s in segs]
+        self._pads_cache: dict = {}
+
+    # postings / term_stats are the executor-side views of the open-time
+    # segment snapshot (_seg_whs). They are built on first use: a Spark
+    # parquet read lists partitions and infers the schema (~1-2 s per
+    # open with a few segments), which the driver-side serving path never
+    # needs. Plain attributes once built, so callers may replace them
+    # (idx.postings = idx.postings.persist()); ephemeral() assigns both.
+    @functools.cached_property
+    def postings(self) -> DataFrame:
+        """Postings of every segment in the open-time snapshot, each row
+        carrying the avgdl its block-max bounds were baked with (the
+        kernel substitutes a safe bound if the global avgdl drifted up)."""
+        parts = [
+            w.read(self.spark, "postings").withColumn("baked_avgdl", F.lit(a))
+            for w, a in zip(self._seg_whs, self._seg_baked)
+        ]
         # NOTE (round 6): a size-derived coalesce of this scan (21 MB /
         # 95 files / 30 partitions → 1) was tried and REVERTED on
         # measurement: the warm single-query wall was a wash (best-of-3
@@ -186,7 +199,20 @@ class Index:
         # parallelism and regressed ~30% (0.86–0.98 s → 1.13–1.36 s,
         # interleaved A/B). The near-empty-task overhead the coalesce
         # targeted is already absorbed by local-mode scheduling.
-        self._pads_cache: dict = {}
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    @functools.cached_property
+    def term_stats(self) -> DataFrame:
+        """The term dictionary; with incremental segments, re-aggregated so
+        df/idf stay globally exact."""
+        parts = [w.read(self.spark, "term_stats") for w in self._seg_whs]
+        if len(parts) == 1:
+            return parts[0]
+        return (
+            functools.reduce(DataFrame.unionByName, parts)
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"), F.max("max_tf").alias("max_tf"))
+        )
 
     @classmethod
     def ephemeral(
@@ -258,6 +284,21 @@ class Index:
         idx._doc_stats = doc_stats
         idx._docs = docs
         return idx
+
+    def _frame(self, schema: str, columns: dict | None = None) -> DataFrame:
+        """Driver-held rows as a DataFrame over ONE Arrow LocalRelation:
+        collecting it launches no Spark job, where a createDataFrame over
+        Python rows launches one even when empty (~0.4 s wall, ~1.3 CPU s
+        on local[4]). ``columns`` maps each ``schema`` column to an
+        array-like; None gives the empty result."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import DataType
+
+        struct = DataType.fromDDL(schema)
+        arrow = to_arrow_schema(struct)
+        tbl = arrow.empty_table() if columns is None else pa.table(columns, schema=arrow)
+        return self.spark.createDataFrame(tbl, struct)
 
     SOURCE_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
@@ -432,8 +473,10 @@ class Index:
 
         return analyze_positions(phrase, self.meta.get("analyzer", "standard"))
 
-    def _plan_terms(self, query_text: str) -> tuple[dict[str, float], list[int]]:
-        """Query analysis + idf·weight per present term + bucket list.
+    def _plan_terms(self, query_text: str, with_volume: bool = False) -> tuple:
+        """Query analysis + idf·weight per present term + bucket list
+        (+ the planned posting volume Σ df when ``with_volume`` — the
+        placement input of search / search_many).
 
         The term→(df, bucket) resolution is the Lucene term-dictionary
         lookup. Against a warehouse it is a driver-side pyarrow read of the
@@ -449,7 +492,7 @@ class Index:
             query_text, self.meta.get("analyzer", "standard")
         )
         if not weights:
-            return {}, []
+            return ({}, [], 0) if with_volume else ({}, [])
         terms = sorted(weights)
         rows = self._lookup_terms_arrow(terms)
         if rows is None:
@@ -468,6 +511,8 @@ class Index:
             for t in sorted(df_by)
         }
         buckets = sorted({bucket_by[t] for t in df_by})
+        if with_volume:
+            return idfw, buckets, sum(df_by.values())
         return idfw, buckets
 
     def _lookup_terms_arrow(self, terms: list[str]):
@@ -581,6 +626,17 @@ class Index:
     ) -> DataFrame:
         """Top-k BM25 (OR semantics). mode: bmw | exact | intersect.
 
+        Placement is decided after planning, from the term dictionary the
+        plan already read. A warehouse-backed query with no DataFrame-valued
+        mask — no ``where``, ``min_should_match`` ≤ 1, none of the ``_``
+        hooks — whose planned posting volume (Σ df of its planned terms) is
+        at most ``DRIVER_MAX_POSTINGS`` runs on the driver: the serving
+        kernel of :meth:`search_local` (tombstones honoured), returned as an
+        Arrow LocalRelation, so collecting it launches no Spark job.
+        Everything else (ephemeral indexes, SQL filters, match sets, large
+        volumes) runs the per-shard kernel on the executors. Both
+        placements return bit-identical ``(doc_id, score)`` rows.
+
         ``_plan`` is an internal (idfw, buckets) override for compound
         queries that compute their own per-term weights driver-side
         (fuzzy_like_this): the kernel path then scores exactly those
@@ -616,12 +672,31 @@ class Index:
         analyzed term count.
         """
         min_should_match = self._msm(min_should_match, query_text)
-        idfw, buckets = _plan if _plan is not None else self._plan_terms(query_text)
+        if _plan is not None:
+            (idfw, buckets), volume = _plan, None
+        else:
+            idfw, buckets, volume = self._plan_terms(query_text, with_volume=True)
         if not idfw:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         if mode == "intersect" and len(idfw) < len(set(self._analyze(query_text))):
             # a query term is absent from the corpus → conjunction is empty
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
+        if (
+            self.wh is not None
+            and volume is not None
+            and volume <= DRIVER_MAX_POSTINGS
+            and where is None
+            and min_should_match <= 1
+            and _allowed_docs is None
+            and _blocked_docs is None
+        ):
+            d, s = self._local_topk(
+                query_text, k, mode, None, self._local_blocked(), plan=(idfw, buckets)
+            )
+            if min_score is not None:
+                keep = s >= float(min_score)
+                d, s = d[keep], s[keep]
+            return self._frame(TOPK_SCHEMA, {"doc_id": d, "score": s})
         meta = self.meta
         hits = self.postings.filter(
             F.col("term_bucket").isin(buckets) & F.col("term").isin(list(idfw))
@@ -672,7 +747,7 @@ class Index:
         if min_should_match > 1:
             terms = sorted(set(self._analyze(query_text)))
             if min_should_match > len(terms):
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return self._frame(TOPK_SCHEMA)
             ms = self._match_set(terms, min_should_match)
             allowed_docs = (
                 ms if allowed_docs is None
@@ -1353,7 +1428,8 @@ class Index:
 
         Why it exists: a distributed ``search().collect()`` pays ~0.4 s of
         Spark job scheduling regardless of data volume — the right trade
-        for analytics, the wrong one for point-query serving. This path
+        for analytics, the wrong one for point-query serving (``search()``
+        itself now places small unfiltered queries here). This path
         reads exactly the bytes the executors would (term_bucket partition
         dirs pruned by the hive filter, then term row-group pruning inside
         the bucket-sorted files), so its cost is |q|·n_shards posting runs
@@ -1386,11 +1462,19 @@ class Index:
             if blocked is not None:
                 allowed = np.setdiff1d(allowed, blocked)
             blocked = None  # allowed mask subsumes the tombstones
+        d, s = self._local_topk(query_text, k, mode, allowed, blocked)
+        return list(zip(d.tolist(), s.tolist()))
+
+    def _local_topk(
+        self, query_text, k, mode, allowed, blocked, plan=None
+    ) -> tuple["np.ndarray", "np.ndarray"]:
+        """The serving-path global top-k, (score desc, doc_id asc) — the
+        order of search()'s ``orderBy(desc(score), asc(doc_id)).limit(k)``."""
         dd, ss = self._local_term_scores(
-            query_text, allowed, blocked, per_shard_k=k, mode=mode
+            query_text, allowed, blocked, per_shard_k=k, mode=mode, plan=plan
         )
         top = np.lexsort((dd, -ss))[:k]
-        return [(int(dd[i]), float(ss[i])) for i in top]
+        return dd[top], ss[top]
 
     def search_terminate_after_local(
         self,
@@ -1519,11 +1603,8 @@ class Index:
         blocked = self._local_blocked()
         if blocked is not None:
             allowed = np.setdiff1d(allowed, blocked)
-        dd, ss = self._local_term_scores(
-            query_text, allowed, None, per_shard_k=k, mode=mode
-        )
-        top = np.lexsort((dd, -ss))[:k]
-        return [(int(dd[i]), float(ss[i])) for i in top]
+        d, s = self._local_topk(query_text, k, mode, allowed, None)
+        return list(zip(d.tolist(), s.tolist()))
 
     def search_geo_shape_local(
         self,
@@ -1855,13 +1936,15 @@ class Index:
         blocked: "np.ndarray | None",
         per_shard_k: int | None = None,
         mode: str = "bmw",
+        plan: tuple[dict[str, float], list[int]] | None = None,
     ) -> tuple["np.ndarray", "np.ndarray"]:
         """(doc_ids, scores) of a term clause on the serving path — the
         kernel body shared by :meth:`search_local` (top-k per shard) and
         :meth:`search_bool_local` (``per_shard_k=None`` + mode='exact'
-        keeps the COMPLETE score set for bool-should summation)."""
+        keeps the COMPLETE score set for bool-should summation). ``plan``
+        is an (idfw, buckets) the caller already computed."""
         empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-        idfw, buckets = self._plan_terms(query_text)
+        idfw, buckets = plan if plan is not None else self._plan_terms(query_text)
         if not idfw:
             return empty
         meta = self.meta
@@ -2387,7 +2470,7 @@ class Index:
             ", positions array<long>" if positions else ""
         )
         if not ids:
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         rows = (
             self._tokens_full_df()
             .filter(F.col("doc_id").isin(ids))
@@ -2396,7 +2479,7 @@ class Index:
         )
         terms = sorted({r["term"] for r in rows})
         if not terms:
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         stats = self._lookup_terms_arrow(terms)
         if stats is None:
             stats = self._lookup_terms_spark(terms)
@@ -2452,7 +2535,7 @@ class Index:
             ", positions array<long>" if positions else ""
         )
         if not terms:
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         stats = self._lookup_terms_arrow(terms)
         if stats is None:
             stats = self._lookup_terms_spark(terms)
@@ -2551,7 +2634,7 @@ class Index:
                 "the whole term dictionary (ES discourages it for the same reason)"
             )
         if len(term) < prefix_length:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         cand = self._expand_prefix(
             term[:prefix_length],
             1 << 20,
@@ -2610,7 +2693,7 @@ class Index:
         tokens scan → distinct doc ids → filter/tombstone masks → first k
         by doc_id."""
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         matched = self._match_set(terms, min_should_match)
         if where is not None:
             matched = matched.join(
@@ -2630,7 +2713,7 @@ class Index:
         literal pushed into the doc-store scan (``isin`` reaches parquet
         min/max pruning), so cost is the pruned scan — never a shuffle."""
         if not ids:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         docs = self._docs_df().filter(
             F.col("doc_id").isin([int(i) for i in ids])
         ).select("doc_id")
@@ -2751,7 +2834,7 @@ class Index:
                 clause_plans.append(idfw_c)
                 buckets.update(buckets_c)
         if not clause_plans:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         all_terms = sorted({t for c in clause_plans for t in c})
         meta = self.meta
         docs_per_shard = int(meta["docs_per_shard"])
@@ -2844,13 +2927,13 @@ class Index:
             .collect()
         )
         if not row:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         selected = self._mlt_select(
             Counter(self._analyze(row[0]["text"])),
             max_query_terms, min_term_freq, min_doc_freq,
         )
         if not selected:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         out = self.search(" ".join(selected), k + 1)
         return (
             out.filter(F.col("doc_id") != int(doc_id))
@@ -2907,7 +2990,7 @@ class Index:
             max_query_terms, min_term_freq, min_doc_freq,
         )
         if not selected:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         return self.search(" ".join(selected), k)
 
     def fuzzy_like_this(
@@ -2961,7 +3044,7 @@ class Index:
                     groups.setdefault(t, {})[v] = 1.0 - d / min(len(t), len(v))
         allvars = sorted({v for g in groups.values() for v in g})
         if not allvars:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         rows = self._lookup_terms_arrow(allvars)
         if rows is None:
             rows = self._lookup_terms_spark(allvars)
@@ -2983,7 +3066,7 @@ class Index:
         sel.sort(key=lambda x: (-x[0], x[1], x[2]))
         sel = sel[:max_query_terms]
         if not sel:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         idfw: dict[str, float] = {}
         for w, v, _t in sel:
             idfw[v] = idfw.get(v, 0.0) + w
@@ -3073,7 +3156,7 @@ class Index:
         """
         slots, offsets = self._analyze_phrase(phrase)
         if not slots:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         # every slot must be present for an exact phrase to exist
         return self._phrase_topk([[t] for t in slots], k, where, slop, offsets)
 
@@ -3094,10 +3177,10 @@ class Index:
         wider term predicate on the postings scan, not extra jobs."""
         slots, offsets = self._analyze_phrase(phrase)
         if not slots:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         exp = self._expand_prefix(slots[-1], max_expansions)
         if not exp:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         return self._phrase_topk(
             [[t] for t in slots[:-1]] + [exp], k, where, 0, offsets
         )
@@ -3119,7 +3202,7 @@ class Index:
         statistics stay global). Requires ``positions=True``."""
         toks = self._analyze(term)
         if not toks:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         return self._phrase_topk(
             [[toks[0]]], k, where, 0, span=("first", int(end))
         )
@@ -3179,10 +3262,10 @@ class Index:
         for t in terms:
             slot = self._span_clause(t)
             if not slot:
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return self._frame(TOPK_SCHEMA)
             slots.append(slot)
         if not slots:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         flat = [t for s in slots for t in s]
         if not in_order and len(set(flat)) != len(flat):
             # Lucene's unordered SpanNear requires DISTINCT occurrences
@@ -3208,7 +3291,7 @@ class Index:
         Requires ``positions=True``."""
         slot = self._span_clause(list(terms))
         if not slot:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         return self._phrase_topk([slot], k, where, 0, span=("near", 0, False))
 
     def _span_contain_topk(
@@ -3228,15 +3311,15 @@ class Index:
         the containment kernel (`query/kernels.py:shard_span_contain`)."""
         lit = self._span_clause(little)
         if not lit:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         slots = []
         for t in big:
             slot = self._span_clause(t)
             if not slot:
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return self._frame(TOPK_SCHEMA)
             slots.append(slot)
         if not slots:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         flat = [t for s in slots for t in s]
         if not in_order and len(set(flat)) != len(flat):
             raise ValueError(
@@ -3311,7 +3394,7 @@ class Index:
         the span family. Requires ``positions=True``."""
         inc = self._span_clause(include)
         if not inc:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         exc = self._span_clause(exclude)
         return self._phrase_topk(
             [inc, exc] if exc else [inc], k, where, 0,
@@ -3347,7 +3430,7 @@ class Index:
         # exclude slot simply excludes nothing
         required = slot_terms[:1] if span and span[0] == "not" else slot_terms
         if any(not (set(slot) & present) for slot in required):
-            return self.spark.createDataFrame([], TOPK_SCHEMA)  # a slot is absent
+            return self._frame(TOPK_SCHEMA)  # a slot is absent
         slots = slot_terms
         buckets = sorted({int(b) for _, _, b in rows})
         meta = self.meta
@@ -3447,7 +3530,7 @@ class Index:
         ) or 0
         if df_phrase == 0:
             partials.unpersist()
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         n = float(meta["n_docs"])
         idf = math.log(1.0 + (n - df_phrase + 0.5) / (df_phrase + 0.5))
         scored = partials.filter(F.col("doc_id") >= 0).select(
@@ -3470,7 +3553,7 @@ class Index:
         returns the full unranked score set (clause composition)."""
         slots, offsets = self._analyze_phrase(phrase)
         if not slots:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         return self._phrase_oracle_slots([[t] for t in slots], k, where, slop, offsets)
 
     def search_phrase_prefix_oracle(
@@ -3485,10 +3568,10 @@ class Index:
         position join as :meth:`search_phrase_oracle`."""
         slots, offsets = self._analyze_phrase(phrase)
         if not slots:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         exp = self._expand_prefix(slots[-1], max_expansions)
         if not exp:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         return self._phrase_oracle_slots(
             [[t] for t in slots[:-1]] + [exp], k, where, 0, offsets
         )
@@ -3547,7 +3630,7 @@ class Index:
         df_phrase = matches.count()
         if df_phrase == 0:
             matches.unpersist()
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         if where is not None:
             matches = matches.join(
                 self._docs_df().filter(where).select("doc_id"), "doc_id", "left_semi"
@@ -3587,22 +3670,27 @@ class Index:
         shares the term (the _Run block cache), so Q queries cost far less
         than Q× one query — the shape that matters when the reference
         query set (or a training-data scoring sweep) runs as a batch.
+
+        Placement follows :meth:`search`: on a warehouse-backed index, a
+        batch whose summed planned posting volume is at most
+        ``DRIVER_MAX_POSTINGS`` runs the same per-shard closure on the
+        driver over one pruned pyarrow read, ranks per qid in NumPy (score
+        desc, doc_id asc — the Window's order) and returns an Arrow
+        LocalRelation: zero Spark jobs. Larger batches and ephemeral
+        indexes run as the one Spark job. Rows are identical either way.
         """
         if isinstance(queries, list):
             queries = {str(i): q for i, q in enumerate(queries)}
-        per_q = {qid: self._plan_terms(q) for qid, q in queries.items()}
-        all_terms = sorted({t for idfw, _ in per_q.values() for t in idfw})
-        all_buckets = sorted({b for _, bs in per_q.values() for b in bs})
+        per_q = {qid: self._plan_terms(q, with_volume=True) for qid, q in queries.items()}
+        all_terms = sorted({t for idfw, _, _ in per_q.values() for t in idfw})
+        all_buckets = sorted({b for _, bs, _ in per_q.values() for b in bs})
         if not all_terms:
-            return self.spark.createDataFrame([], "qid string, " + TOPK_SCHEMA + ", rank int")
+            return self._frame(MANY_SCHEMA)
         meta = self.meta
         docs_per_shard = int(meta["docs_per_shard"])
         avgdl = float(meta["avgdl"]) or 1e-9
         k1, b = float(meta["k1"]), float(meta["b"])
-        plans = {qid: idfw for qid, (idfw, _bs) in per_q.items() if idfw}
-        hits = self.postings.filter(
-            F.col("term_bucket").isin(all_buckets) & F.col("term").isin(all_terms)
-        )
+        plans = {qid: idfw for qid, (idfw, _bs, _v) in per_q.items() if idfw}
 
         def per_shard(pdf: pd.DataFrame, blocked=None) -> pd.DataFrame:
             shard = int(pdf["shard"].iloc[0])
@@ -3638,8 +3726,17 @@ class Index:
                 }
             )
 
+        volume = sum(v for _, _, v in per_q.values())
+        if self.wh is not None and volume <= DRIVER_MAX_POSTINGS:
+            return self._search_many_on_driver(
+                per_shard, all_buckets, all_terms, list(plans), k
+            )
+
         from pyspark.sql.window import Window
 
+        hits = self.postings.filter(
+            F.col("term_bucket").isin(all_buckets) & F.col("term").isin(all_terms)
+        )
         mask_df, _kind = self._mask_plan(None, docs_per_shard)  # tombstones only
         if mask_df is None:
             # NB: applyInPandas dispatches on arity — a 2-param function
@@ -3666,6 +3763,40 @@ class Index:
         return (
             partials.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
+        )
+
+    def _search_many_on_driver(self, per_shard, buckets, terms, qids, k) -> DataFrame:
+        """search_many's driver placement: ONE pruned pyarrow postings read
+        for the whole batch, fed shard by shard to the same ``per_shard``
+        closure the executors run (one shared block-decode cache per
+        shard), then ranked per qid in the Window's order (score desc,
+        doc_id asc)."""
+        pdf = self._local_postings(buckets, terms)
+        if pdf is None:
+            return self._frame(MANY_SCHEMA)
+        blocked = self._local_blocked()
+        parts = [per_shard(g, blocked=blocked) for _, g in pdf.groupby("shard", sort=False)]
+        out = pd.concat(parts, ignore_index=True)
+        if not len(out):
+            return self._frame(MANY_SCHEMA)
+        code = {qid: i for i, qid in enumerate(qids)}
+        q = out["qid"].map(code).to_numpy(dtype=np.int64)
+        d = out["doc_id"].to_numpy(dtype=np.int64)
+        sc = out["score"].to_numpy(dtype=np.float64)
+        order = np.lexsort((d, -sc, q))
+        q, d, sc = q[order], d[order], sc[order]
+        pos = np.arange(len(q))
+        first = np.r_[True, q[1:] != q[:-1]]
+        rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
+        keep = rank <= k
+        return self._frame(
+            MANY_SCHEMA,
+            {
+                "qid": np.asarray(qids, dtype=object)[q[keep]],
+                "doc_id": d[keep],
+                "score": sc[keep],
+                "rank": rank[keep],
+            },
         )
 
     def facets(
@@ -3698,7 +3829,7 @@ class Index:
         handles the pushdown; no kernels."""
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], f"{by} string, n long")
+            return self._frame(f"{by} string, n long")
         if include is not None:
             scoped = scoped.filter(F.col(by).rlike(f"^(?:{include})$"))
         if exclude is not None:
@@ -3760,8 +3891,7 @@ class Index:
             key_t = dict(
                 (f.name, f.dataType.simpleString()) for f in self._docs_df().schema
             ).get(key_field, "string")
-            return self.spark.createDataFrame(
-                [],
+            return self._frame(
                 f"{key_field} {key_t}, n long, total double, "
                 "min_v double, max_v double, mean_v double",
             )
@@ -3873,7 +4003,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "bucket double, n long")
+            return self._frame("bucket double, n long")
         return aggs.histogram(scoped, by, interval, min_doc_count, extended_bounds)
 
     def range_agg(
@@ -3890,7 +4020,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "range_label string, n long")
+            return self._frame("range_label string, n long")
         return aggs.range_counts(scoped, by, bounds)
 
     def stats_agg(
@@ -3906,8 +4036,8 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame(
-                [], "n long, min_v double, max_v double, sum_v double, avg_v double"
+            return self._frame(
+                "n long, min_v double, max_v double, sum_v double, avg_v double"
             )
         return aggs.stats_summary(scoped, by)
 
@@ -3925,7 +4055,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "bucket string, n long")
+            return self._frame("bucket string, n long")
         return aggs.date_histogram(scoped, by, unit)
 
     def percentiles_agg(
@@ -3944,7 +4074,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "pct double, value double")
+            return self._frame("pct double, value double")
         return aggs.percentiles(scoped, by, pcts, exact=exact)
 
     def extended_stats_agg(
@@ -3962,8 +4092,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame(
-                [],
+            return self._frame(
                 "n long, min_v double, max_v double, sum_v double, "
                 "avg_v double, sum_sq double, variance double, "
                 "std_dev double, std_upper double, std_lower double",
@@ -3985,7 +4114,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "value double, pct double")
+            return self._frame("value double, pct double")
         return aggs.percentile_ranks(scoped, by, values)
 
     def date_range_agg(
@@ -4003,7 +4132,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "range_label string, n long")
+            return self._frame("range_label string, n long")
         return aggs.date_range_counts(scoped, by, bounds)
 
     def cardinality_agg(
@@ -4021,7 +4150,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "n_distinct long")
+            return self._frame("n_distinct long")
         return aggs.cardinality(scoped, by, exact=exact)
 
     def top_hits_agg(
@@ -4041,8 +4170,8 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame(
-                [], f"{bucket_by} string, doc_id long, sort_value double, rank_in_bucket long"
+            return self._frame(
+                f"{bucket_by} string, doc_id long, sort_value double, rank_in_bucket long"
             )
         return aggs.top_hits(scoped, bucket_by, sort_by, k, ascending=ascending)
 
@@ -4070,7 +4199,7 @@ class Index:
             schema = f"{bucket_by} string, n long, " + ", ".join(
                 f"{m}_v double" for m in metrics
             )
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         return aggs.terms_metric(
             scoped, bucket_by, metric_field, metrics, size, order_by, ascending
         )
@@ -4181,7 +4310,7 @@ class Index:
             schema = "parent string, child string, n long, " + "".join(
                 f"{m}_v double, " for m in metrics
             ) + "parent_n long"
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         return aggs.nested_terms(
             scoped, parent_by, child_by, metric_field, metrics, size, child_size
         )
@@ -4201,7 +4330,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "bucket string, n long")
+            return self._frame("bucket string, n long")
         return aggs.filters_counts(scoped, filters, other_bucket)
 
     def composite_agg(
@@ -4226,7 +4355,7 @@ class Index:
             schema = ", ".join(f"{n} string" for n, _ in sources) + ", n long" + "".join(
                 f", {m}_v double" for m in metrics
             )
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         return aggs.composite_buckets(
             scoped, sources, size, after, metric_field, metrics
         )
@@ -4280,7 +4409,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "n_missing long")
+            return self._frame("n_missing long")
         return aggs.missing_count(scoped, field)
 
     def value_count_agg(
@@ -4295,7 +4424,7 @@ class Index:
         one conditional count over the scoped set."""
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "n_values long")
+            return self._frame("n_values long")
         return scoped.agg(F.count(F.col(field)).cast("long").alias("n_values"))
 
     def filter_agg(
@@ -4314,8 +4443,8 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame(
-                [], "n long, min_v double, max_v double, sum_v double, avg_v double"
+            return self._frame(
+                "n long, min_v double, max_v double, sum_v double, avg_v double"
             )
         return aggs.stats_summary(scoped.filter(filter_where), field)
 
@@ -4334,7 +4463,7 @@ class Index:
 
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "value double")
+            return self._frame("value double")
         return aggs.scripted_metric(scoped, map_script, reduce_script)
 
     def explain_score(self, query_text: str, doc_id: int) -> DataFrame:
@@ -4358,7 +4487,7 @@ class Index:
             query_text, self.meta.get("analyzer", "standard")
         )
         if not weights:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
         terms = sorted(weights)
         rows = self._lookup_terms_arrow(terms)
         if rows is None:
@@ -4377,7 +4506,7 @@ class Index:
             .collect()
         )
         if not doc_tf:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
         dl = float(doc_tf[0]["dl"])
         out = []
         for r in sorted(doc_tf, key=lambda r: r["term"]):
@@ -4420,7 +4549,7 @@ class Index:
         out_schema = "input string, suggestion string, dist int, freq long"
         toks = sorted(set(self._analyze(text)))
         if not toks:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
         present_rows = self._lookup_terms_arrow(toks)
         if present_rows is None:
             present_rows = self._lookup_terms_spark(toks)
@@ -4510,7 +4639,7 @@ class Index:
         else:
             cand = self._expand_prefix(prefix, 1 << 20)
         if not cand:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
         rows = self._lookup_terms_arrow(cand)
         if rows is None:
             rows = self._lookup_terms_spark(cand)
@@ -4547,7 +4676,7 @@ class Index:
         out_schema = "suggestion string, freq long"
         cand = self._expand_prefix(prefix, 1 << 20)
         if not cand:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
         rows = self._lookup_terms_arrow(cand)
         if rows is None:
             raise ValueError(
@@ -4560,7 +4689,7 @@ class Index:
         terms = sorted({t for t, _, _ in rows})
         pdf = self._local_postings(buckets, terms)
         if pdf is None:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
         docs_per_shard = int(self.meta["docs_per_shard"])
         per_term: dict[str, list] = {}
         for row in pdf.itertuples(index=False):
@@ -4634,7 +4763,7 @@ class Index:
         out_schema = "suggestion string, score double"
         toks = self._analyze(text)
         if not toks or prefix_length < 1:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
 
         # per-slot candidates: original always kept; near terms ranked
         # (dist asc, df desc, term asc) top gen_size — suggest_terms' rule
@@ -5230,7 +5359,7 @@ class Index:
             rows += [(name, t, float(w)) for t, w in sorted(idfw_c.items())]
         schema = "doc_id long, score double, matched_queries string"
         if not rows:
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         tokens, doc_stats = self._oracle_tokens()
         qmap = self.spark.createDataFrame(rows, "qname string, term string, idfw double")
         all_terms = sorted({t for _, t, _ in rows})
@@ -5436,8 +5565,8 @@ class Index:
         conv_id; the doc-store scan is column-pruned and never widens."""
         scoped = self._agg_scope(query_text, where, 1)
         if scoped is None:
-            return self.spark.createDataFrame(
-                [], f"doc_id long, {group_col} string, score double"
+            return self._frame(
+                f"doc_id long, {group_col} string, score double"
             )
         groups = scoped.select(group_col).distinct()
         docs = self._docs_df()
@@ -5483,7 +5612,7 @@ class Index:
         )
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         joined = scoped.join(
             parents.select(
                 parent_key, F.col(bucket_by).cast("string").alias("bucket")
@@ -5677,7 +5806,7 @@ class Index:
         )
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         arr = (
             f"filter({nested_col}, x -> ({inner_where}))"
             if inner_where is not None
@@ -5731,7 +5860,7 @@ class Index:
         schema = "bucket string, n_parents long, avg_parent_v double"
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         arr = (
             f"filter({nested_col}, x -> ({inner_where}))"
             if inner_where is not None
@@ -5871,7 +6000,7 @@ class Index:
         runs inside codegen, never a UDF."""
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "range_label string, n long")
+            return self._frame("range_label string, n long")
         dist = F.expr(self._haversine_sql(lat_col, lon_col, *origin))
         bounds = [float(b) for b in bounds_km]
         label = F.when(dist < bounds[0], F.lit(f"*-{bounds[0]}"))
@@ -5955,7 +6084,7 @@ class Index:
         cell count — the canonical map-tile heat-map query."""
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "geohash string, n long")
+            return self._frame("geohash string, n long")
         out = (
             scoped.select(
                 self.geohash_col(lat_col, lon_col, precision).alias("geohash")
@@ -6393,7 +6522,7 @@ class Index:
         )
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], schema)
+            return self._frame(schema)
         # explicit DOUBLE: a decimal-typed geo column would otherwise make
         # round() return DECIMAL (Spark's literal-typing trap) and the
         # box would surface as decimals instead of doubles
@@ -6430,7 +6559,7 @@ class Index:
         k-row merge, never a global sort)."""
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "doc_id long, dist_km double")
+            return self._frame("doc_id long, dist_km double")
         dist = F.round(
             F.expr(self._haversine_sql(lat_col, lon_col, *origin)), 4
         ).alias("dist_km")
@@ -6472,7 +6601,7 @@ class Index:
             raise ValueError(f"unknown nested sort mode: {mode}")
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "doc_id long, sort_v double")
+            return self._frame("doc_id long, sort_v double")
         matched = f"filter({nested_col}, x -> ({inner_where or 'true'}))"
         vals = f"transform({matched}, x -> CAST({sort_expr} AS DOUBLE))"
         total = f"aggregate({vals}, CAST(0 AS DOUBLE), (a, v) -> a + v)"
@@ -6516,7 +6645,7 @@ class Index:
         a k-row merge on the driver side of the exchange."""
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([], "doc_id long, sort_value double")
+            return self._frame("doc_id long, sort_value double")
         proj = scoped.select(
             "doc_id", F.expr(sort_by).cast("double").alias("sort_value")
         )
@@ -6545,7 +6674,7 @@ class Index:
         With no low-frequency term, ES scores everything: plain BM25."""
         terms = sorted(set(self._analyze(query_text)))
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         n_docs = float(self.meta["n_docs"]) or 1.0
         dfs = {
             r["term"]: float(r["df"])
@@ -6681,7 +6810,7 @@ class Index:
         terms = sorted(set(self._analyze(query_text)))
         out_schema = "term string, fg_n long, bg_n long, score_r double"
         if not terms:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
         live = self._docs_df().select("doc_id")
         deletes = self._deletes_df()
         if deletes is not None:
@@ -6766,7 +6895,7 @@ class Index:
         terms = sorted(set(self._analyze(query_text)))
         out_schema = "term string, fg_n long, bg_n long, score_r double"
         if not terms:
-            return self.spark.createDataFrame([], out_schema)
+            return self._frame(out_schema)
         live = self._docs_df().select("doc_id", F.col(field).cast("string").alias("v"))
         deletes = self._deletes_df()
         if deletes is not None:
@@ -6865,7 +6994,7 @@ class Index:
         if min_should_match > 1:
             terms = sorted(set(self._analyze(query_text)))
             if min_should_match > len(terms):
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return self._frame(TOPK_SCHEMA)
             scores = scores.join(
                 self._match_set(terms, min_should_match), "doc_id", "left_semi"
             )
@@ -6925,7 +7054,7 @@ class Index:
         tokens, doc_stats = self._oracle_tokens()
         terms = sorted(set(self._analyze(query_text)))
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return self._frame(TOPK_SCHEMA)
         nq = float(len(terms))
         matched = tokens.filter(F.col("term").isin(terms)).select(
             "doc_id", "term", F.col("tf").cast("double").alias("tf")

@@ -11,6 +11,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# JDK 14+ throws a SPURIOUS OutOfMemoryError ("Retried waiting for GCLocker
+# too often") when allocation retries race JNI critical regions (Arrow/netty
+# buffers) under co-tenant CPU starvation — observed intermittently on
+# 4x-scale builds with plenty of free heap. Raising the retry count is the
+# documented mitigation; it changes nothing when allocations succeed first
+# try. IgnoreUnrecognizedVMOptions comes first so that a JDK which dropped
+# the flag still starts. KESC_DRIVER_JAVA_OPTS replaces the whole string.
+DEFAULT_DRIVER_JAVA_OPTS = (
+    "-XX:+IgnoreUnrecognizedVMOptions -XX:+UnlockDiagnosticVMOptions "
+    "-XX:GCLockerRetryAllocationCount=128"
+)
+
 
 def get_spark(
     app_name: str = "kesc-spark",
@@ -33,18 +45,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("KESC_DRIVER_MEM", "12g"))
-        # JDK 14+ throws a SPURIOUS OutOfMemoryError ("Retried waiting for
-        # GCLocker too often") when allocation retries race JNI critical
-        # regions (Arrow/netty buffers) under co-tenant CPU starvation —
-        # observed intermittently on 4x-scale builds with plenty of free
-        # heap. Raising the retry count is the documented mitigation; it
-        # changes nothing when allocations succeed first try.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "KESC_DRIVER_JAVA_OPTS",
-                "-XX:+UnlockDiagnosticVMOptions -XX:GCLockerRetryAllocationCount=128",
-            ),
+            os.environ.get("KESC_DRIVER_JAVA_OPTS", DEFAULT_DRIVER_JAVA_OPTS),
         )
         .config("spark.ui.enabled", "false")
     )

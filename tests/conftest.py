@@ -31,3 +31,22 @@ def built_index(spark, transcripts, tmp_path_factory):
     # small shards so multi-shard paths are exercised at test scale
     build_index(spark, transcripts, path, docs_per_shard=256, n_buckets=8)
     return Index(spark, path), path
+
+
+@pytest.fixture
+def placements(monkeypatch):
+    """Iterate the placements of search() / search_many(), each forced in
+    turn: 'driver' lifts the posting-volume threshold out of reach,
+    'executor' sets it to 0 so every query takes the Spark job path.
+    Identity tests loop over it so both paths stay compared with the
+    serving kernel (the default threshold sends test-sized queries to the
+    driver, where search() and search_local share the kernel)."""
+    from kafka_elasticsearch_standalone_consumer_spark.query import engine
+
+    def each():
+        for name, limit in (("driver", 1 << 62), ("executor", 0)):
+            monkeypatch.setattr(engine, "DRIVER_MAX_POSTINGS", limit)
+            yield name
+        monkeypatch.undo()
+
+    return each

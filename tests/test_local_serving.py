@@ -26,17 +26,18 @@ def _loc(idx, q, mode):
     return [(d, round(s, 10)) for d, s in idx.search_local(q, 10, mode=mode)]
 
 
-def test_local_identical_to_distributed(spark, built_index):
+def test_local_identical_to_distributed(spark, built_index, placements):
     idx, _ = built_index
-    for mode in ("bmw", "exact", "intersect"):
-        dist = _dist(idx, Q, mode)
-        assert _loc(idx, Q, mode) == dist, mode
-        assert dist, mode  # all three modes must actually match docs
+    for placement in placements():
+        for mode in ("bmw", "exact", "intersect"):
+            dist = _dist(idx, Q, mode)
+            assert _loc(idx, Q, mode) == dist, (placement, mode)
+            assert dist, mode  # all three modes must actually match docs
     assert idx.search_local("zzabsent", 10) == []
     assert idx.search_local("", 10) == []
 
 
-def test_local_with_segments_and_deletes(spark, transcripts, tmp_path):
+def test_local_with_segments_and_deletes(spark, transcripts, tmp_path, placements):
     wh = str(tmp_path / "idx")
     build_index(spark, transcripts, wh, docs_per_shard=256, n_buckets=8)
     append_segment(
@@ -44,13 +45,15 @@ def test_local_with_segments_and_deletes(spark, transcripts, tmp_path):
     )
     idx = Index(spark, wh)
     top = idx.search_local(Q, 10)
-    assert _loc(idx, Q, "bmw") == _dist(idx, Q, "bmw")
+    for placement in placements():
+        assert _loc(idx, Q, "bmw") == _dist(idx, Q, "bmw"), placement
     # tombstone the current best hit: both paths must drop it, scores frozen
     delete_docs(spark, wh, f"doc_id = {top[0][0]}")
     idx = Index(spark, wh)
-    loc, dist = _loc(idx, Q, "bmw"), _dist(idx, Q, "bmw")
-    assert loc == dist
-    assert top[0][0] not in {d for d, _ in loc}
+    for placement in placements():
+        loc, dist = _loc(idx, Q, "bmw"), _dist(idx, Q, "bmw")
+        assert loc == dist, placement
+        assert top[0][0] not in {d for d, _ in loc}
 
 
 def test_local_rejects_ephemeral(spark, transcripts):
@@ -401,7 +404,7 @@ def test_highlight_local_identical(spark, local_pos_wh):
     assert all(r["snippet"] is None for r in idx.highlight_local(hits, ""))
 
 
-def test_bit_identity_across_all_paths_on_documents_corpus(spark, tmp_path):
+def test_bit_identity_across_all_paths_on_documents_corpus(spark, tmp_path, placements):
     """Regression (round 4): BM25 float sums are not associative, and the
     distributed/local/batch kernels used to consume posting runs in
     different orders — off by one ULP on THIS corpus shape (the
@@ -423,14 +426,15 @@ def test_bit_identity_across_all_paths_on_documents_corpus(spark, tmp_path):
     build_index(spark, docs, wh, docs_per_shard=128, n_buckets=16)
     idx = Index(spark, wh)
     q = "join hash filter"
-    dist = [(r["doc_id"], r["score"]) for r in idx.search(q, 10, mode="bmw").collect()]
     loc = idx.search_local(q, 10)
-    many = [
-        (r["doc_id"], r["score"])
-        for r in idx.search_many([q], 10).filter("qid = '0'").orderBy("rank").collect()
-    ]
     oracle = [(r["doc_id"], r["score"]) for r in idx.search_oracle(q, 10).collect()]
-    assert dist == loc == many == oracle and dist
+    for placement in placements():
+        dist = [(r["doc_id"], r["score"]) for r in idx.search(q, 10, mode="bmw").collect()]
+        many = [
+            (r["doc_id"], r["score"])
+            for r in idx.search_many([q], 10).filter("qid = '0'").orderBy("rank").collect()
+        ]
+        assert dist == loc == many == oracle and dist, placement
 
 
 def test_geo_distance_local_identical_to_distributed(spark, tmp_path):

@@ -1,0 +1,139 @@
+"""Cost-based placement of search() / search_many(): small unmasked
+queries on a warehouse index run on the driver and return an Arrow
+LocalRelation (zero Spark jobs to collect), everything else runs on the
+executors, and both placements return bit-identical rows. Also: empty
+results are zero-job frames with unchanged schemas, and an open Index is a
+snapshot even though its Spark views are built lazily."""
+
+from __future__ import annotations
+
+import pytest
+
+from kafka_elasticsearch_standalone_consumer_spark.corpus import (
+    generate_transcripts,
+    reference_queries,
+)
+from kafka_elasticsearch_standalone_consumer_spark.pipeline.builder import build_index
+from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
+    append_segment,
+    delete_docs,
+)
+from kafka_elasticsearch_standalone_consumer_spark.query.engine import (
+    MANY_SCHEMA,
+    TOPK_SCHEMA,
+    Index,
+)
+
+Q = "w00000 w00003 w00015"
+
+
+def _jobs(spark) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_driver_placement_launches_zero_jobs(spark, built_index):
+    idx, _ = built_index
+    idx.search(Q, 10).collect()  # warm the term-dictionary reads
+    before = _jobs(spark)
+    hits = idx.search(Q, 10).collect()
+    many = idx.search_many([Q, "w00001 w00002", "zzabsent"], 10).collect()
+    absent = idx.search("zzabsent", 10).collect()
+    assert _jobs(spark) == before
+    assert hits and many and absent == []
+    assert {r["qid"] for r in many} == {"0", "1"}
+
+
+def test_ineligible_queries_stay_on_executors(spark, built_index):
+    """SQL filters and min_should_match > 1 keep the Spark job path (their
+    masks are DataFrames)."""
+    idx, _ = built_index
+    for kw in ({"where": "role = 'user'"}, {"min_should_match": 2}):
+        before = _jobs(spark)
+        assert idx.search(Q, 10, **kw).collect()
+        assert _jobs(spark) > before, kw
+
+
+@pytest.fixture(scope="module")
+def deleted_wh(spark, transcripts, tmp_path_factory):
+    """Two segments plus tombstones on three of the best hits."""
+    wh = str(tmp_path_factory.mktemp("placement") / "idx")
+    build_index(spark, transcripts, wh, docs_per_shard=256, n_buckets=8)
+    append_segment(
+        spark, generate_transcripts(spark, n_convs=30, seed=7), wh, idempotency_key="s1"
+    )
+    top = Index(spark, wh).search_local(Q, 10, mode="exact")
+    dead = ", ".join(str(d) for d, _ in top[:3])
+    delete_docs(spark, wh, f"doc_id IN ({dead})")
+    return wh
+
+
+def test_placements_bit_identical(spark, deleted_wh, placements):
+    """Exact equality (no rounding) of (doc_id, score) across placements,
+    for every mode, with tombstones present and with min_score set."""
+    idx = Index(spark, deleted_wh)
+    assert idx._local_blocked() is not None
+    queries = [Q] + [q["query"] for q in reference_queries(8)]
+    floor = idx.search_local(Q, 10, mode="exact")[4][1]
+    runs = {}
+    for placement in placements():
+        out = {}
+        for q in queries:
+            for mode in ("bmw", "exact", "intersect"):
+                for min_score in (None, floor):
+                    out[q, mode, min_score] = [
+                        (r["doc_id"], r["score"])
+                        for r in idx.search(q, 10, mode=mode, min_score=min_score).collect()
+                    ]
+        out["many"] = sorted(
+            (r["qid"], r["rank"], r["doc_id"], r["score"])
+            for r in idx.search_many(queries, 10).collect()
+        )
+        runs[placement] = out
+    assert runs["driver"] == runs["executor"]
+    assert runs["driver"][Q, "bmw", floor] and len(runs["driver"][Q, "bmw", floor]) < 10
+    assert runs["driver"]["many"]
+
+
+def test_empty_results_are_zero_job_frames_with_unchanged_schemas(spark, built_index):
+    idx, _ = built_index
+    cases = [
+        (idx.search("zzabsent", 10), TOPK_SCHEMA),
+        (idx.search("", 10, mode="intersect"), TOPK_SCHEMA),
+        (idx.search_many(["zzabsent"], 10), MANY_SCHEMA),
+        (idx.facets("", by="role"), "role string, n long"),
+        (idx.stats_agg("", by="turn_idx"),
+         "n long, min_v double, max_v double, sum_v double, avg_v double"),
+    ]
+    before = _jobs(spark)
+    for df, ddl in cases:
+        assert df.collect() == []
+        assert df.schema == spark.createDataFrame([], ddl).schema, ddl
+    assert _jobs(spark) == before
+
+
+def test_index_open_is_a_snapshot(spark, transcripts, tmp_path, placements):
+    """postings / term_stats are built on first use, yet an Index opened
+    before an append_segment keeps answering with the pre-append corpus."""
+    wh = str(tmp_path / "idx")
+    build_index(spark, transcripts, wh, docs_per_shard=256, n_buckets=8)
+    old = Index(spark, wh)
+    want = old.search_local(Q, 10)
+    append_segment(
+        spark, generate_transcripts(spark, n_convs=30, seed=7), wh, idempotency_key="s1"
+    )
+    assert "postings" not in vars(old)  # nothing built yet
+    for placement in placements():
+        got = [(r["doc_id"], r["score"]) for r in old.search(Q, 10).collect()]
+        assert got == want, placement
+    new = Index(spark, wh)
+    assert new.meta["n_docs"] > old.meta["n_docs"]
+    assert new.search_local(Q, 10) != want
+
+
+def test_postings_stays_assignable(spark, built_index):
+    _, wh = built_index
+    idx = Index(spark, wh)
+    idx.postings = idx.postings.persist()
+    assert idx.postings.is_cached
+    idx.postings.unpersist()
+

@@ -51,7 +51,7 @@ def _queries(rng: random.Random) -> list[str]:
 
 
 @pytest.mark.parametrize("seed", [101, 202])
-def test_all_paths_rank_identical_on_quirky_corpora(spark, tmp_path, seed):
+def test_all_paths_rank_identical_on_quirky_corpora(spark, tmp_path, seed, placements):
     from kafka_elasticsearch_standalone_consumer_spark.pipeline.builder import build_index
 
     rng = random.Random(seed)
@@ -83,13 +83,15 @@ def test_all_paths_rank_identical_on_quirky_corpora(spark, tmp_path, seed):
                 for r in eph.search(q, 10, mode=mode).collect()
             ]
             assert got == oracle, (seed, q, mode)
-        # serving path on the persisted twin: identical to ITS distributed run
-        dist = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in per.search(q, 10, mode="bmw").collect()
-        ]
+        # serving path on the persisted twin: identical to ITS distributed
+        # run, in both placements
         loc = [(d, round(s, 9)) for d, s in per.search_local(q, 10)]
-        assert loc == dist, (seed, q)
+        for placement in placements():
+            dist = [
+                (r["doc_id"], round(r["score"], 9))
+                for r in per.search(q, 10, mode="bmw").collect()
+            ]
+            assert loc == dist, (seed, q, placement)
 
     # phrase kernel vs m-way-join oracle on a bigram that actually occurs
     source = next(

@@ -9,19 +9,20 @@ from kafka_elasticsearch_standalone_consumer_spark.corpus import reference_queri
 K = 10
 
 
-def test_search_many_matches_single_query_path(spark, built_index):
+def test_search_many_matches_single_query_path(spark, built_index, placements):
     idx, _ = built_index
     qs = {str(q["qid"]): q["query"] for q in reference_queries(12)}
-    batched = idx.search_many(qs, K).collect()
-    got = {}
-    for r in batched:
-        got.setdefault(r["qid"], []).append((r["rank"], r["doc_id"], round(r["score"], 9)))
-    for qid, q in qs.items():
-        want = [
-            (i + 1, r["doc_id"], round(r["score"], 9))
-            for i, r in enumerate(idx.search(q, K, mode="bmw").collect())
-        ]
-        assert sorted(got.get(qid, [])) == want, (qid, q)
+    for placement in placements():
+        batched = idx.search_many(qs, K).collect()
+        got = {}
+        for r in batched:
+            got.setdefault(r["qid"], []).append((r["rank"], r["doc_id"], round(r["score"], 9)))
+        for qid, q in qs.items():
+            want = [
+                (i + 1, r["doc_id"], round(r["score"], 9))
+                for i, r in enumerate(idx.search(q, K, mode="bmw").collect())
+            ]
+            assert sorted(got.get(qid, [])) == want, (placement, qid, q)
 
 
 def test_search_many_fetch_roundtrip(spark, built_index):
