@@ -10,8 +10,12 @@
       │        → partition-pruned by the term_bucket directory column,
       │          row-group-pruned by the term predicate (both visible as
       │          PartitionFilters / PushedFilters in .explain)
-      ├─ applyInPandas per shard: decode → block-max WAND → bounded top-k
-      │        (with an allowed-doc mask cogrouped in when a filter is set)
+      ├─ per shard: decode → block-max WAND → bounded top-k
+      │        (kernels.term_shard / kernels.positional_shard — one seam,
+      │        run on executors by ONE grouped-pandas wrapper,
+      │        Index._shard_partials, with an allowed/blocked doc mask
+      │        cogrouped in when one applies, or on the driver over a
+      │        pyarrow read of the same pruned postings)
       └─ global merge: orderBy(score desc, doc_id) limit k   [1 shuffle]
 
 The per-shard kernel sees ONLY the query terms' posting runs (with doc
@@ -612,6 +616,43 @@ class Index:
             return with_shard(blocked, docs_per_shard), "blocked"
         return None, None
 
+    @staticmethod
+    def _shard_partials(hits, mask_df, mask_kind, fn, schema: str) -> DataFrame:
+        """The executor wrapper of the per-shard seam: ``fn(pdf, allowed,
+        blocked)`` runs once per shard group of ``hits`` and returns a
+        pandas frame of ``schema``. With a mask from :meth:`_mask_plan`
+        the shard's sorted mask ids ride a cogroup: an allowed-kind shard
+        with no mask rows gets an EMPTY allowed array (nothing to emit,
+        but positional kernels still count unmasked matches for the global
+        df); a blocked-kind shard with none gets None."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import DataType
+
+        if mask_df is None:
+            # NB: applyInPandas dispatches on arity — a 2-param function
+            # would be called as (key, pdf); keep the lambda single-param
+            return hits.groupBy("shard").applyInPandas(
+                lambda pdf: fn(pdf, None, None), schema=schema
+            )
+        empty = to_arrow_schema(DataType.fromDDL(schema)).empty_table().to_pandas()
+
+        def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            if not len(left):
+                return empty
+            ids = (
+                np.sort(right["doc_id"].to_numpy(dtype=np.int64))
+                if len(right) else np.empty(0, dtype=np.int64)
+            )
+            if mask_kind == "allowed":
+                return fn(left, ids, None)
+            return fn(left, None, ids if len(ids) else None)
+
+        return (
+            hits.groupBy("shard")
+            .cogroup(mask_df.groupBy("shard"))
+            .applyInPandas(cg, schema=schema)
+        )
+
     def search(
         self,
         query_text: str,
@@ -707,40 +748,9 @@ class Index:
         k1, b = float(meta["k1"]), float(meta["b"])
 
         def score_shard(pdf: pd.DataFrame, allowed, blocked) -> pd.DataFrame:
-            shard = int(pdf["shard"].iloc[0])
-            shard_lo = shard * docs_per_shard
-            # term-sorted run order: float accumulation across terms is not
-            # associative, so every execution path (this one, search_local,
-            # search_many) must add per-term contributions in the SAME order
-            # for bit-identical scores (runs of one term are doc-disjoint,
-            # so order within a term cannot matter)
-            pdf = pdf.sort_values("term", kind="stable")
-            runs = [
-                kernels._Run(
-                    row, idfw[row.term], shard_lo, query_avgdl=avgdl, k1=k1, b=b
-                )
-                for row in pdf.itertuples(index=False)
-            ]
-            if mode == "exact":
-                d, s = kernels.shard_topk_exact(
-                    runs, k, avgdl, k1, b, allowed=allowed, blocked=blocked
-                )
-            elif mode == "intersect":
-                by_term: dict[str, list] = {}
-                for row, r in zip(pdf.itertuples(index=False), runs):
-                    by_term.setdefault(row.term, []).append(r)
-                if len(by_term) < len(idfw):
-                    return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                        {"doc_id": np.int64, "score": np.float64}
-                    )
-                d, s = kernels.shard_topk_intersect(
-                    by_term, k, avgdl, k1, b, allowed=allowed, blocked=blocked
-                )
-            else:
-                d, s = kernels.shard_topk_bmw(
-                    runs, k, avgdl, shard_lo, docs_per_shard, k1, b,
-                    allowed=allowed, blocked=blocked,
-                )
+            d, s = kernels.term_shard(
+                pdf, idfw, mode, k, avgdl, k1, b, docs_per_shard, allowed, blocked
+            )
             return pd.DataFrame({"doc_id": d, "score": s})
 
         allowed_docs = _allowed_docs
@@ -756,30 +766,7 @@ class Index:
         mask_df, mask_kind = self._mask_plan(
             where, docs_per_shard, allowed_docs, _blocked_docs
         )
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": np.int64, "score": np.float64}
-        )
-        if mask_df is None:
-            partials = hits.groupBy("shard").applyInPandas(
-                lambda pdf: score_shard(pdf, None, None), schema=TOPK_SCHEMA
-            )
-        else:
-
-            def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                if not len(left):
-                    return empty.copy()
-                ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64)) if len(right) else None
-                if mask_kind == "allowed":
-                    if ids is None:
-                        return empty.copy()  # nothing allowed in this shard
-                    return score_shard(left, ids, None)
-                return score_shard(left, None, ids)  # blocked; ids may be None
-
-            partials = (
-                hits.groupBy("shard")
-                .cogroup(mask_df.groupBy("shard"))
-                .applyInPandas(cg, schema=TOPK_SCHEMA)
-            )
+        partials = self._shard_partials(hits, mask_df, mask_kind, score_shard, TOPK_SCHEMA)
         out = partials.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         if min_score is not None:
             out = out.filter(F.col("score") >= float(min_score))
@@ -870,6 +857,20 @@ class Index:
             return np.empty(0, dtype=np.int64)
         return np.unique(np.concatenate(parts))
 
+    def _local_mask(
+        self, where: list[tuple] | None
+    ) -> tuple["np.ndarray | None", "np.ndarray | None"]:
+        """(allowed, blocked) doc masks of the serving path: the
+        tombstones alone, or with ``where`` the allowed set minus the
+        tombstones (the allowed mask then subsumes them)."""
+        blocked = self._local_blocked()
+        if where is None:
+            return None, blocked
+        allowed = self._local_allowed(where)
+        if blocked is not None:
+            allowed = np.setdiff1d(allowed, blocked)
+        return allowed, None
+
     def get_docs_local(self, doc_ids: list[int]) -> list[dict]:
         """ES ``_mget`` on the zero-Spark-job serving path: pyarrow point
         reads of the doc store with the doc_id set pushed into the
@@ -957,32 +958,11 @@ class Index:
         ts = sorted({str(t) for t in terms})
         if not ts:
             return []
-        rows = self._lookup_terms_arrow(ts)
-        if rows is None:
-            raise ValueError(
-                "legacy warehouse layout without term buckets — use search_terms()"
-            )
-        present = sorted({t for t, _, _ in rows})
-        if not present:
+        per_term = self._local_term_docs(ts, "search_terms()")
+        if not per_term:
             return []
-        buckets = sorted({int(bk) for _, _, bk in rows})
-        pdf = self._local_postings(buckets, present)
-        if pdf is None:
-            return []
-        docs_per_shard = int(self.meta["docs_per_shard"])
-        parts = []
-        for row in pdf.itertuples(index=False):
-            run = kernels._Run(row, 0.0, int(row.shard) * docs_per_shard)
-            d, _t, _l = run.decode_all()
-            parts.append(d)
-        uniq = np.unique(np.concatenate(parts))
-        blocked = self._local_blocked()
-        allowed = None
-        if where is not None:
-            allowed = self._local_allowed(where)
-            if blocked is not None:
-                allowed = np.setdiff1d(allowed, blocked)
-            blocked = None
+        uniq = np.unique(np.concatenate(list(per_term.values())))
+        allowed, blocked = self._local_mask(where)
         keep = kernels._apply_doc_masks(uniq, allowed, blocked)
         if keep is not None:
             uniq = uniq[keep]
@@ -1009,10 +989,7 @@ class Index:
             raise ValueError(
                 "constant_score_local serves from warehouse files — use constant_score()"
             )
-        allowed = self._local_allowed(where)
-        blocked = self._local_blocked()
-        if blocked is not None:
-            allowed = np.setdiff1d(allowed, blocked)
+        allowed, _ = self._local_mask(where)
         return [(int(d), float(boost)) for d in allowed[:k]]
 
     def search_prefix_local(
@@ -1130,22 +1107,10 @@ class Index:
         matches across shards, so filters/tombstones never shift idf).
         ``where`` is the serving-path filter surface (see
         :meth:`_local_allowed`)."""
-        import math
-
-        if self.wh is None:
-            raise ValueError("search_phrase_local serves from warehouse files")
-        if not self.meta.get("positions"):
-            raise ValueError("index built without positions=True — no phrase support")
-        blocked = self._local_blocked()
-        allowed = None
-        if where is not None:
-            allowed = self._local_allowed(where)
-            if blocked is not None:
-                allowed = np.setdiff1d(allowed, blocked)
-            blocked = None  # allowed mask subsumes the tombstones
-        dd, ss = self._phrase_scores_local(phrase, slop, allowed, blocked, per_shard_k=k)
-        top = np.lexsort((dd, -ss))[:k]
-        return [(int(dd[i]), float(ss[i])) for i in top]
+        slots, offsets = self._analyze_phrase(phrase)
+        return self._positional_topk_local(
+            [[t] for t in slots], None, k, where, slop=slop, offsets=offsets
+        )
 
     def _phrase_scores_local(
         self,
@@ -1153,29 +1118,62 @@ class Index:
         slop: int,
         allowed: "np.ndarray | None",
         blocked: "np.ndarray | None",
-        per_shard_k: int | None = None,
     ) -> tuple["np.ndarray", "np.ndarray"]:
-        """Full (doc_ids, scores) of one phrase clause on the serving
-        path — the kernel body shared by :meth:`search_phrase_local`
-        (which cuts top-k) and :meth:`search_bool_local` (which needs the
-        COMPLETE clause score set for ES bool-should summation;
-        ``per_shard_k=None`` keeps every match: shards hold at most
-        docs_per_shard docs). Phrase df counts UNMASKED matches."""
+        """Full (doc_ids, scores) of one match_phrase clause on the
+        serving path (bool-should summation needs the COMPLETE set)."""
+        slots, offsets = self._analyze_phrase(phrase)
+        return self._positional_scores_local(
+            [[t] for t in slots], None, allowed, blocked, slop=slop, offsets=offsets
+        )
+
+    def _positional_topk_local(
+        self,
+        slot_terms: list[list[str]],
+        span: tuple | None,
+        k: int,
+        where: list[tuple] | None,
+        slop: int = 0,
+        offsets: list[int] | None = None,
+    ) -> list[tuple[int, float]]:
+        """Zero-Spark-job top-k of a phrase (``span=None``) or span query:
+        the serving-path masks, then :meth:`_positional_scores_local` with
+        a per-shard cut at k."""
+        what = "phrase" if span is None else "span"
+        if self.wh is None:
+            raise ValueError(f"{what} *_local twins serve from warehouse files")
+        if not self.meta.get("positions"):
+            raise ValueError(f"index built without positions=True — no {what} support")
+        allowed, blocked = self._local_mask(where)
+        dd, ss = self._positional_scores_local(
+            slot_terms, span, allowed, blocked, per_shard_k=k, slop=slop, offsets=offsets
+        )
+        top = np.lexsort((dd, -ss))[:k]
+        return [(int(dd[i]), float(ss[i])) for i in top]
+
+    def _positional_scores_local(
+        self,
+        slot_terms: list[list[str]],
+        span: tuple | None,
+        allowed: "np.ndarray | None",
+        blocked: "np.ndarray | None",
+        per_shard_k: int | None = None,
+        slop: int = 0,
+        offsets: list[int] | None = None,
+    ) -> tuple["np.ndarray", "np.ndarray"]:
+        """(doc_ids, scores) of a phrase/span clause on the serving path:
+        the pruned postings read of :meth:`_phrase_topk`, the same
+        :func:`kernels.positional_shard` per shard, and the same
+        synthetic-term BM25 finish — df aggregated over UNMASKED matches
+        across shards, so filters/tombstones never shift idf.
+        ``per_shard_k=None`` keeps every match (shards hold at most
+        docs_per_shard docs)."""
         import math
 
         empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-        slots, offsets = self._analyze_phrase(phrase)
-        if not slots:
+        plan = self._positional_plan(slot_terms, span)
+        if plan is None:
             return empty
-        all_terms = sorted(set(slots))
-        rows = self._lookup_terms_arrow(all_terms)
-        if rows is None:
-            rows = self._lookup_terms_spark(all_terms)
-        present = {term for term, _, _ in rows}
-        if any(t not in present for t in slots):
-            return empty
-        buckets = sorted({int(b) for _, _, b in rows})
-        pdf = self._local_postings(buckets, sorted(present))
+        pdf = self._local_postings(*plan)
         if pdf is None:
             return empty
         meta = self.meta
@@ -1185,17 +1183,10 @@ class Index:
         kk = int(per_shard_k) if per_shard_k is not None else docs_per_shard
         out_d, out_t, out_l = [], [], []
         n_total = 0
-        for shard, g in pdf.groupby("shard", sort=False):
-            shard_lo = int(shard) * docs_per_shard
-            by_term: dict[str, list] = {}
-            for row in g.itertuples(index=False):
-                by_term.setdefault(row.term, []).append(
-                    kernels._Run(row, 1.0, shard_lo, query_avgdl=avgdl, k1=k1, b=b)
-                )
-            runs_by_slot = [by_term.get(t, []) for t in slots]
-            d, tfp, dl, n = kernels.shard_phrase_matches(
-                runs_by_slot, kk, avgdl, k1, b,
-                allowed=allowed, blocked=blocked, slop=slop, offsets=offsets,
+        for _shard, g in pdf.groupby("shard", sort=False):
+            d, tfp, dl, n = kernels.positional_shard(
+                g, slot_terms, span, slop, offsets, kk, avgdl, k1, b,
+                docs_per_shard, allowed, blocked,
             )
             n_total += int(n)
             if len(d):
@@ -1208,104 +1199,7 @@ class Index:
         dd = np.concatenate(out_d)
         tf = np.concatenate(out_t)
         dl = np.concatenate(out_l)
-        ss = idf * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        return dd, ss
-
-    def _span_topk_local(
-        self,
-        slot_terms: list[list[str]],
-        span: tuple,
-        k: int,
-        where: list[tuple] | None,
-    ) -> list[tuple[int, float]]:
-        """Zero-Spark-job serving core for the span family: the same
-        pruned postings read as :meth:`_phrase_scores_local` dispatched
-        into the SAME span kernels ``_phrase_topk`` runs on executors
-        (`kernels.shard_span_first/near/not/contain`), so results are
-        rank- and score-identical to the distributed span queries —
-        including the global-df policy (span df aggregated over UNMASKED
-        matches; filters/tombstones never shift idf)."""
-        import math
-
-        if self.wh is None:
-            raise ValueError("span *_local twins serve from warehouse files")
-        if not self.meta.get("positions"):
-            raise ValueError("index built without positions=True — no span support")
-        blocked = self._local_blocked()
-        allowed = None
-        if where is not None:
-            allowed = self._local_allowed(where)
-            if blocked is not None:
-                allowed = np.setdiff1d(allowed, blocked)
-            blocked = None  # allowed mask subsumes the tombstones
-        all_terms = sorted({t for slot in slot_terms for t in slot})
-        if not all_terms:
-            return []
-        rows = self._lookup_terms_arrow(all_terms)
-        if rows is None:
-            rows = self._lookup_terms_spark(all_terms)
-        present = {term for term, _, _ in rows}
-        required = slot_terms[:1] if span[0] == "not" else slot_terms
-        if any(not (set(slot) & present) for slot in required):
-            return []
-        buckets = sorted({int(b) for _, _, b in rows})
-        pdf = self._local_postings(buckets, sorted(present))
-        if pdf is None:
-            return []
-        meta = self.meta
-        docs_per_shard = int(meta["docs_per_shard"])
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
-        out_d, out_t, out_l = [], [], []
-        n_total = 0
-        for shard, g in pdf.groupby("shard", sort=False):
-            shard_lo = int(shard) * docs_per_shard
-            by_term: dict[str, list] = {}
-            for row in g.itertuples(index=False):
-                by_term.setdefault(row.term, []).append(
-                    kernels._Run(row, 1.0, shard_lo, query_avgdl=avgdl, k1=k1, b=b)
-                )
-            runs_by_slot = [
-                [r for t in slot for r in by_term.get(t, [])] for slot in slot_terms
-            ]
-            if span[0] == "first":
-                d, tfp, dl, n = kernels.shard_span_first(
-                    runs_by_slot[0], span[1], k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked,
-                )
-            elif span[0] == "not":
-                d, tfp, dl, n = kernels.shard_span_not(
-                    runs_by_slot[0],
-                    runs_by_slot[1] if len(runs_by_slot) > 1 else [],
-                    span[1], span[2], k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked,
-                )
-            elif span[0] in ("containing", "within"):
-                d, tfp, dl, n = kernels.shard_span_contain(
-                    runs_by_slot[0], runs_by_slot[1:],
-                    span[1], span[2], span[0], k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked,
-                )
-            else:
-                d, tfp, dl, n = kernels.shard_span_near(
-                    runs_by_slot, k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked,
-                    slop=span[1], in_order=span[2],
-                )
-            n_total += int(n)
-            if len(d):
-                out_d.append(np.asarray(d, dtype=np.int64))
-                out_t.append(np.asarray(tfp, dtype=np.float64))
-                out_l.append(np.asarray(dl, dtype=np.float64))
-        if n_total == 0 or not out_d:
-            return []
-        idf = math.log(1.0 + (float(meta["n_docs"]) - n_total + 0.5) / (n_total + 0.5))
-        dd = np.concatenate(out_d)
-        tf = np.concatenate(out_t)
-        dl = np.concatenate(out_l)
-        ss = idf * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        top = np.lexsort((dd, -ss))[:k]
-        return [(int(dd[i]), float(ss[i])) for i in top]
+        return dd, idf * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
     def search_span_first_local(
         self, term: str, end: int, k: int = 10,
@@ -1316,7 +1210,7 @@ class Index:
         toks = self._analyze(term)
         if not toks:
             return []
-        return self._span_topk_local([[toks[0]]], ("first", int(end)), k, where)
+        return self._positional_topk_local([[toks[0]]], ("first", int(end)), k, where)
 
     def search_span_near_local(
         self,
@@ -1329,20 +1223,10 @@ class Index:
         """Zero-job twin of :meth:`search_span_near` — same clause
         grammar (str | span_or list | ``{"prefix": ...}`` span_multi)
         and the same repeated-terms guard."""
-        slots = []
-        for t in terms:
-            slot = self._span_clause(t)
-            if not slot:
-                return []
-            slots.append(slot)
-        if not slots:
+        slots = self._span_near_slots(terms, in_order)
+        if slots is None:
             return []
-        flat = [t for s in slots for t in s]
-        if not in_order and len(set(flat)) != len(flat):
-            raise ValueError(
-                "span_near with repeated terms requires in_order=True"
-            )
-        return self._span_topk_local(
+        return self._positional_topk_local(
             slots, ("near", int(slop), bool(in_order)), k, where
         )
 
@@ -1354,7 +1238,7 @@ class Index:
         slot = self._span_clause(list(terms))
         if not slot:
             return []
-        return self._span_topk_local([slot], ("near", 0, False), k, where)
+        return self._positional_topk_local([slot], ("near", 0, False), k, where)
 
     def search_span_not_local(
         self,
@@ -1371,7 +1255,7 @@ class Index:
         if not inc:
             return []
         exc = self._span_clause(exclude)
-        return self._span_topk_local(
+        return self._positional_topk_local(
             [inc, exc] if exc else [inc], ("not", int(pre), int(post)), k, where
         )
 
@@ -1381,20 +1265,10 @@ class Index:
         lit = self._span_clause(little)
         if not lit:
             return []
-        slots = []
-        for t in big:
-            slot = self._span_clause(t)
-            if not slot:
-                return []
-            slots.append(slot)
-        if not slots:
+        slots = self._span_near_slots(big, in_order)
+        if slots is None:
             return []
-        flat = [t for s in slots for t in s]
-        if not in_order and len(set(flat)) != len(flat):
-            raise ValueError(
-                "span_near with repeated terms requires in_order=True"
-            )
-        return self._span_topk_local(
+        return self._positional_topk_local(
             [lit] + slots, (mode, int(slop), bool(in_order)), k, where
         )
 
@@ -1451,18 +1325,13 @@ class Index:
                 "search_local serves from warehouse files; ephemeral indexes "
                 "have no pruned postings layout to read — use search()"
             )
+        plan = None
         if mode == "intersect":
-            idfw, _ = self._plan_terms(query_text)
-            if len(idfw) < len(set(self._analyze(query_text))):
+            plan = self._plan_terms(query_text)
+            if len(plan[0]) < len(set(self._analyze(query_text))):
                 return []
-        blocked = self._local_blocked()
-        allowed = None
-        if where is not None:
-            allowed = self._local_allowed(where)
-            if blocked is not None:
-                allowed = np.setdiff1d(allowed, blocked)
-            blocked = None  # allowed mask subsumes the tombstones
-        d, s = self._local_topk(query_text, k, mode, allowed, blocked)
+        allowed, blocked = self._local_mask(where)
+        d, s = self._local_topk(query_text, k, mode, allowed, blocked, plan=plan)
         return list(zip(d.tolist(), s.tolist()))
 
     def _local_topk(
@@ -1500,13 +1369,7 @@ class Index:
                 "search_terminate_after_local serves from warehouse files — "
                 "use search_terminate_after() on ephemeral indexes"
             )
-        blocked = self._local_blocked()
-        allowed = None
-        if where is not None:
-            allowed = self._local_allowed(where)
-            if blocked is not None:
-                allowed = np.setdiff1d(allowed, blocked)
-            blocked = None
+        allowed, blocked = self._local_mask(where)
         dd, ss = self._local_term_scores(
             query_text, allowed, blocked, per_shard_k=None, mode=mode
         )
@@ -1957,39 +1820,39 @@ class Index:
             return empty
         out_d: list[np.ndarray] = []
         out_s: list[np.ndarray] = []
-        for shard, g in pdf.groupby("shard", sort=False):
-            shard_lo = int(shard) * docs_per_shard
-            # same term-sorted accumulation order as search()'s score_shard
-            # — keeps local scores bit-identical to the distributed path
-            rows_it = list(g.sort_values("term", kind="stable").itertuples(index=False))
-            runs = [
-                kernels._Run(row, idfw[row.term], shard_lo, query_avgdl=avgdl, k1=k1, b=b)
-                for row in rows_it
-            ]
-            if mode == "exact":
-                d, s = kernels.shard_topk_exact(
-                    runs, kk, avgdl, k1, b, allowed=allowed, blocked=blocked
-                )
-            elif mode == "intersect":
-                by_term: dict[str, list] = {}
-                for row, r in zip(rows_it, runs):
-                    by_term.setdefault(row.term, []).append(r)
-                if len(by_term) < len(idfw):
-                    continue
-                d, s = kernels.shard_topk_intersect(
-                    by_term, kk, avgdl, k1, b, allowed=allowed, blocked=blocked
-                )
-            else:
-                d, s = kernels.shard_topk_bmw(
-                    runs, kk, avgdl, shard_lo, docs_per_shard, k1, b,
-                    allowed=allowed, blocked=blocked,
-                )
+        for _shard, g in pdf.groupby("shard", sort=False):
+            d, s = kernels.term_shard(
+                g, idfw, mode, kk, avgdl, k1, b, docs_per_shard, allowed, blocked
+            )
             if len(d):
                 out_d.append(np.asarray(d, dtype=np.int64))
                 out_s.append(np.asarray(s, dtype=np.float64))
         if not out_d:
             return empty
         return np.concatenate(out_d), np.concatenate(out_s)
+
+    def _local_term_docs(self, terms: list[str], surface: str) -> dict[str, "np.ndarray"]:
+        """{term: sorted unique doc_ids} for the dictionary-present
+        ``terms`` — one pruned postings read, runs decoded to doc ids
+        (no scoring). A legacy layout without term buckets raises,
+        naming ``surface``, the distributed method to use instead."""
+        rows = self._lookup_terms_arrow(terms)
+        if rows is None:
+            raise ValueError(
+                f"legacy warehouse layout without term buckets — use {surface}"
+            )
+        present = sorted({t for t, _, _ in rows})
+        if not present:
+            return {}
+        pdf = self._local_postings(sorted({int(bk) for _, _, bk in rows}), present)
+        if pdf is None:
+            return {}
+        docs_per_shard = int(self.meta["docs_per_shard"])
+        parts: dict[str, list] = {}
+        for row in pdf.itertuples(index=False):
+            run = kernels._Run(row, 0.0, int(row.shard) * docs_per_shard)
+            parts.setdefault(row.term, []).append(run.decode_all()[0])
+        return {t: np.unique(np.concatenate(v)) for t, v in parts.items()}
 
     def _local_match_set(self, terms: list[str], min_count: int) -> "np.ndarray":
         """doc_ids containing ≥ ``min_count`` of the DISTINCT ``terms`` —
@@ -1999,28 +1862,12 @@ class Index:
         ts = sorted(set(terms))
         if not ts:
             return np.empty(0, dtype=np.int64)
-        rows = self._lookup_terms_arrow(ts)
-        if rows is None:
-            raise ValueError(
-                "legacy warehouse layout without term buckets — use search_bool()"
-            )
-        present = sorted({t for t, _, _ in rows})
-        if min_count > len(present):
+        per_term = self._local_term_docs(ts, "search_bool()")
+        if not per_term or min_count > len(per_term):
             return np.empty(0, dtype=np.int64)
-        buckets = sorted({int(bk) for _, _, bk in rows})
-        pdf = self._local_postings(buckets, present)
-        if pdf is None:
-            return np.empty(0, dtype=np.int64)
-        docs_per_shard = int(self.meta["docs_per_shard"])
-        per_term: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            run = kernels._Run(row, 0.0, int(row.shard) * docs_per_shard)
-            d, _t, _l = run.decode_all()
-            per_term.setdefault(row.term, []).append(d)
-        arrs = [np.unique(np.concatenate(v)) for v in per_term.values()]
-        if min_count > len(arrs):
-            return np.empty(0, dtype=np.int64)
-        uniq, counts = np.unique(np.concatenate(arrs), return_counts=True)
+        uniq, counts = np.unique(
+            np.concatenate(list(per_term.values())), return_counts=True
+        )
         return uniq[counts >= min_count]
 
     def search_bool_local(
@@ -2847,8 +2694,9 @@ class Index:
         )
 
         def score_shard(pdf: pd.DataFrame, allowed, blocked) -> pd.DataFrame:
-            shard = int(pdf["shard"].iloc[0])
-            shard_lo = shard * docs_per_shard
+            if allowed is not None and not len(allowed):
+                return pd.DataFrame({"doc_id": np.empty(0, np.int64), "score": np.empty(0)})
+            shard_lo = int(pdf["shard"].iloc[0]) * docs_per_shard
             base_by_term: dict[str, list] = {}
             for row in pdf.itertuples(index=False):
                 base_by_term.setdefault(row.term, []).append(
@@ -2869,30 +2717,7 @@ class Index:
             return pd.DataFrame({"doc_id": d, "score": s})
 
         mask_df, mask_kind = self._mask_plan(where, docs_per_shard)
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": np.int64, "score": np.float64}
-        )
-        if mask_df is None:
-            partials = hits.groupBy("shard").applyInPandas(
-                lambda pdf: score_shard(pdf, None, None), schema=TOPK_SCHEMA
-            )
-        else:
-
-            def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                if not len(left):
-                    return empty.copy()
-                ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64)) if len(right) else None
-                if mask_kind == "allowed":
-                    if ids is None:
-                        return empty.copy()
-                    return score_shard(left, ids, None)
-                return score_shard(left, None, ids)
-
-            partials = (
-                hits.groupBy("shard")
-                .cogroup(mask_df.groupBy("shard"))
-                .applyInPandas(cg, schema=TOPK_SCHEMA)
-            )
+        partials = self._shard_partials(hits, mask_df, mask_kind, score_shard, TOPK_SCHEMA)
         return partials.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def more_like_this(
@@ -3232,6 +3057,27 @@ class Index:
                 out.append(toks[0])
         return out
 
+    def _span_near_slots(self, clauses: list, in_order: bool) -> "list[list[str]] | None":
+        """The analyzed slots of span_near clauses (:meth:`_span_clause`),
+        or None when there are none or one analyzes to nothing."""
+        slots = []
+        for c in clauses:
+            slot = self._span_clause(c)
+            if not slot:
+                return None
+            slots.append(slot)
+        if not slots:
+            return None
+        flat = [t for s in slots for t in s]
+        if not in_order and len(set(flat)) != len(flat):
+            # Lucene's unordered SpanNear requires DISTINCT occurrences
+            # per repeated clause; the windowed membership test would
+            # accept one occurrence for both — refuse rather than deviate
+            raise ValueError(
+                "span_near with repeated terms requires in_order=True"
+            )
+        return slots
+
     def search_span_near(
         self,
         terms: list[str | list[str] | dict],
@@ -3258,22 +3104,9 @@ class Index:
         same synthetic-term BM25 as :meth:`search_phrase` (tf = spans per
         doc, globally aggregated span df → idf). Requires
         ``positions=True``."""
-        slots = []
-        for t in terms:
-            slot = self._span_clause(t)
-            if not slot:
-                return self._frame(TOPK_SCHEMA)
-            slots.append(slot)
-        if not slots:
+        slots = self._span_near_slots(terms, in_order)
+        if slots is None:
             return self._frame(TOPK_SCHEMA)
-        flat = [t for s in slots for t in s]
-        if not in_order and len(set(flat)) != len(flat):
-            # Lucene's unordered SpanNear requires DISTINCT occurrences
-            # per repeated clause; the windowed membership test would
-            # accept one occurrence for both — refuse rather than deviate
-            raise ValueError(
-                "span_near with repeated terms requires in_order=True"
-            )
         return self._phrase_topk(
             slots, k, where, 0, span=("near", int(slop), bool(in_order))
         )
@@ -3312,19 +3145,9 @@ class Index:
         lit = self._span_clause(little)
         if not lit:
             return self._frame(TOPK_SCHEMA)
-        slots = []
-        for t in big:
-            slot = self._span_clause(t)
-            if not slot:
-                return self._frame(TOPK_SCHEMA)
-            slots.append(slot)
-        if not slots:
+        slots = self._span_near_slots(big, in_order)
+        if slots is None:
             return self._frame(TOPK_SCHEMA)
-        flat = [t for s in slots for t in s]
-        if not in_order and len(set(flat)) != len(flat):
-            raise ValueError(
-                "span_near with repeated terms requires in_order=True"
-            )
         return self._phrase_topk(
             [lit] + slots, k, where, 0,
             span=(mode, int(slop), bool(in_order)),
@@ -3401,6 +3224,24 @@ class Index:
             span=("not", int(pre), int(post)),
         )
 
+    def _positional_plan(
+        self, slot_terms: list[list[str]], span: tuple | None
+    ) -> "tuple[list[int], list[str]] | None":
+        """(buckets, present terms) of a phrase/span clause, or None when
+        a required slot has no term in the dictionary. span_not requires
+        only its include slot (0): an absent exclude excludes nothing."""
+        all_terms = sorted({t for slot in slot_terms for t in slot})
+        if not all_terms:
+            return None
+        rows = self._lookup_terms_arrow(all_terms)
+        if rows is None:
+            rows = self._lookup_terms_spark(all_terms)
+        present = {term for term, _, _ in rows}
+        required = slot_terms[:1] if span and span[0] == "not" else slot_terms
+        if any(not (set(slot) & present) for slot in required):
+            return None
+        return sorted({int(b) for _, _, b in rows}), sorted(present)
+
     def _phrase_topk(
         self,
         slot_terms: list[list[str]],
@@ -3421,67 +3262,25 @@ class Index:
 
         if not self.meta.get("positions"):
             raise ValueError("index built without positions=True — no phrase support")
-        all_terms = sorted({t for slot in slot_terms for t in slot})
-        rows = self._lookup_terms_arrow(all_terms)
-        if rows is None:
-            rows = self._lookup_terms_spark(all_terms)
-        present = {term for term, _, _ in rows}
-        # span_not: only the include slot (0) is required — an absent
-        # exclude slot simply excludes nothing
-        required = slot_terms[:1] if span and span[0] == "not" else slot_terms
-        if any(not (set(slot) & present) for slot in required):
-            return self._frame(TOPK_SCHEMA)  # a slot is absent
-        slots = slot_terms
-        buckets = sorted({int(b) for _, _, b in rows})
+        plan = self._positional_plan(slot_terms, span)
+        if plan is None:
+            return self._frame(TOPK_SCHEMA)
+        buckets, present = plan
         meta = self.meta
         docs_per_shard = int(meta["docs_per_shard"])
         avgdl = float(meta["avgdl"]) or 1e-9
         k1, b = float(meta["k1"]), float(meta["b"])
         hits = self.postings.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(sorted(present))
+            F.col("term_bucket").isin(buckets) & F.col("term").isin(present)
         )
         out_schema = "doc_id long, tfp int, dl int, shard long, n_shard_matches long"
 
         def score_shard(pdf: pd.DataFrame, allowed, blocked) -> pd.DataFrame:
+            d, tfp, dl, n = kernels.positional_shard(
+                pdf, slot_terms, span, slop, offsets, k, avgdl, k1, b,
+                docs_per_shard, allowed, blocked,
+            )
             shard = int(pdf["shard"].iloc[0])
-            shard_lo = shard * docs_per_shard
-            by_term: dict[str, list] = {}
-            for row in pdf.itertuples(index=False):
-                by_term.setdefault(row.term, []).append(
-                    kernels._Run(row, 1.0, shard_lo, query_avgdl=avgdl, k1=k1, b=b)
-                )
-            runs_by_slot = [
-                [r for t in slot for r in by_term.get(t, [])] for slot in slots
-            ]
-            if span is None:
-                d, tfp, dl, n = kernels.shard_phrase_matches(
-                    runs_by_slot, k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked, slop=slop, offsets=offsets,
-                )
-            elif span[0] == "first":
-                d, tfp, dl, n = kernels.shard_span_first(
-                    runs_by_slot[0], span[1], k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked,
-                )
-            elif span[0] == "not":
-                d, tfp, dl, n = kernels.shard_span_not(
-                    runs_by_slot[0],
-                    runs_by_slot[1] if len(runs_by_slot) > 1 else [],
-                    span[1], span[2], k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked,
-                )
-            elif span[0] in ("containing", "within"):
-                d, tfp, dl, n = kernels.shard_span_contain(
-                    runs_by_slot[0], runs_by_slot[1:],
-                    span[1], span[2], span[0], k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked,
-                )
-            else:
-                d, tfp, dl, n = kernels.shard_span_near(
-                    runs_by_slot, k, avgdl, k1, b,
-                    allowed=allowed, blocked=blocked,
-                    slop=span[1], in_order=span[2],
-                )
             if n and len(d) == 0:
                 # every match masked out — emit a sentinel row so the
                 # shard's UNMASKED match count still reaches the global
@@ -3496,33 +3295,7 @@ class Index:
             )
 
         mask_df, mask_kind = self._mask_plan(where, docs_per_shard)
-        p_empty = pd.DataFrame(
-            {"doc_id": [], "tfp": [], "dl": [], "shard": [], "n_shard_matches": []}
-        ).astype({"doc_id": np.int64, "tfp": np.int32, "dl": np.int32,
-                  "shard": np.int64, "n_shard_matches": np.int64})
-        if mask_df is None:
-            partials = hits.groupBy("shard").applyInPandas(
-                lambda pdf: score_shard(pdf, None, None), schema=out_schema
-            )
-        else:
-
-            def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                if not len(left):
-                    return p_empty.copy()
-                ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64)) if len(right) else None
-                if mask_kind == "allowed":
-                    if ids is None:
-                        # no allowed docs here, but the shard's unmasked
-                        # matches still count toward the global phrase df
-                        ids = np.empty(0, dtype=np.int64)
-                    return score_shard(left, ids, None)
-                return score_shard(left, None, ids)
-
-            partials = (
-                hits.groupBy("shard")
-                .cogroup(mask_df.groupBy("shard"))
-                .applyInPandas(cg, schema=out_schema)
-            )
+        partials = self._shard_partials(hits, mask_df, mask_kind, score_shard, out_schema)
         partials = partials.persist()
         df_phrase = (
             partials.select("shard", "n_shard_matches").distinct()
@@ -3692,7 +3465,7 @@ class Index:
         k1, b = float(meta["k1"]), float(meta["b"])
         plans = {qid: idfw for qid, (idfw, _bs, _v) in per_q.items() if idfw}
 
-        def per_shard(pdf: pd.DataFrame, blocked=None) -> pd.DataFrame:
+        def per_shard(pdf: pd.DataFrame, allowed=None, blocked=None) -> pd.DataFrame:
             shard = int(pdf["shard"].iloc[0])
             shard_lo = shard * docs_per_shard
             # one _Run per posting row; block decode cache shared across queries
@@ -3737,28 +3510,10 @@ class Index:
         hits = self.postings.filter(
             F.col("term_bucket").isin(all_buckets) & F.col("term").isin(all_terms)
         )
-        mask_df, _kind = self._mask_plan(None, docs_per_shard)  # tombstones only
-        if mask_df is None:
-            # NB: applyInPandas dispatches on arity — a 2-param function
-            # would be called as (key, pdf); keep the lambda single-param
-            partials = hits.groupBy("shard").applyInPandas(
-                lambda pdf: per_shard(pdf), schema="qid string, " + TOPK_SCHEMA
-            )
-        else:
-
-            def cg_many(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-                if not len(left):
-                    return pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
-                        {"qid": str, "doc_id": np.int64, "score": np.float64}
-                    )
-                ids = np.sort(right["doc_id"].to_numpy(dtype=np.int64)) if len(right) else None
-                return per_shard(left, blocked=ids)
-
-            partials = (
-                hits.groupBy("shard")
-                .cogroup(mask_df.groupBy("shard"))
-                .applyInPandas(cg_many, schema="qid string, " + TOPK_SCHEMA)
-            )
+        mask_df, mask_kind = self._mask_plan(None, docs_per_shard)  # tombstones only
+        partials = self._shard_partials(
+            hits, mask_df, mask_kind, per_shard, "qid string, " + TOPK_SCHEMA
+        )
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             partials.withColumn("rank", F.row_number().over(w))
@@ -4677,28 +4432,13 @@ class Index:
         cand = self._expand_prefix(prefix, 1 << 20)
         if not cand:
             return self._frame(out_schema)
-        rows = self._lookup_terms_arrow(cand)
-        if rows is None:
-            raise ValueError(
-                "legacy warehouse layout without term buckets — "
-                "use suggest_complete() or rebuild"
-            )
+        per_term = self._local_term_docs(cand, "suggest_complete() or rebuild")
         allowed = self._local_allowed(context) if context else None
         blocked = self._local_blocked()
-        buckets = sorted({int(bk) for _, _, bk in rows})
-        terms = sorted({t for t, _, _ in rows})
-        pdf = self._local_postings(buckets, terms)
-        if pdf is None:
+        if not per_term:
             return self._frame(out_schema)
-        docs_per_shard = int(self.meta["docs_per_shard"])
-        per_term: dict[str, list] = {}
-        for row in pdf.itertuples(index=False):
-            run = kernels._Run(row, 0.0, int(row.shard) * docs_per_shard)
-            d, _t, _l = run.decode_all()
-            per_term.setdefault(row.term, []).append(d)
         ranked = []
-        for term, parts in per_term.items():
-            d = np.unique(np.concatenate(parts))
+        for term, d in per_term.items():
             if allowed is not None:
                 d = d[np.isin(d, allowed)]
             if blocked is not None and len(d):

@@ -1,9 +1,13 @@
 """Per-shard top-k scoring kernels over compressed posting runs.
 
-These NumPy kernels run inside ``applyInPandas`` on executors — each shard
-(a contiguous doc_id range, the ES-shard analogue) is scored independently
-and emits at most k candidates; the driver-side plan unions the partials
-and takes the global top-k (SURVEY §3.3 "coordinator merge").
+Each shard (a contiguous doc_id range, the ES-shard analogue) is scored
+independently and emits at most k candidates; the plan unions the partials
+and takes the global top-k (SURVEY §3.3 "coordinator merge"). The kernels
+run in both placements through one seam: :func:`term_shard` and
+:func:`positional_shard` turn a shard's posting rows into kernel input,
+and the engine calls them per shard either on the executors (one
+grouped-pandas wrapper, ``Index._shard_partials``) or on the driver over a
+pyarrow read.
 
 Three modes:
   * ``exact``  — decode every posting of every query term, term-at-a-time
@@ -628,7 +632,7 @@ def _span_near_intervals(
 
     Feeds span_containing / span_within, where the enclosing ("big")
     span's extent — not just its start — is what matters. Each slot's
-    keys must be sorted (``_phrase_topk`` sorts them)."""
+    keys must be sorted (:func:`shard_span_contain` sorts them)."""
     mask = (np.int64(1) << POS_BITS) - 1
     n = len(keys_by_slot)
     win = np.int64(n - 1 + slop)
@@ -786,3 +790,85 @@ def shard_topk_dismax(
     if keep is not None:
         uniq, combined = uniq[keep], combined[keep]
     return _select_topk(uniq, combined, k)
+
+
+# -- the per-shard seam (see the module docstring) -----------------------
+# Plain-scalar arguments only, never the Index (it holds the SparkSession):
+# executor closures then pickle these functions by reference to this module.
+
+
+def term_shard(
+    pdf, idfw: dict, mode: str, k: int, avgdl: float, k1: float, b: float,
+    docs_per_shard: int, allowed: np.ndarray | None, blocked: np.ndarray | None,
+):
+    """One shard of a BM25 term query: (doc_ids, scores), top-k by mode
+    (bmw | exact | intersect). An empty ``allowed`` array returns empty
+    without decoding."""
+    empty = np.empty(0, np.int64), np.empty(0, np.float64)
+    if allowed is not None and not len(allowed):
+        return empty
+    shard_lo = int(pdf["shard"].iloc[0]) * docs_per_shard
+    # term-sorted run order: float accumulation across terms is not
+    # associative, so every execution path (both placements, search_many)
+    # must add per-term contributions in the SAME order for bit-identical
+    # scores (runs of one term are doc-disjoint, so order within a term
+    # cannot matter)
+    rows = list(pdf.sort_values("term", kind="stable").itertuples(index=False))
+    runs = [
+        _Run(row, idfw[row.term], shard_lo, query_avgdl=avgdl, k1=k1, b=b)
+        for row in rows
+    ]
+    if mode == "exact":
+        return shard_topk_exact(runs, k, avgdl, k1, b, allowed=allowed, blocked=blocked)
+    if mode == "intersect":
+        by_term: dict[str, list] = {}
+        for row, r in zip(rows, runs):
+            by_term.setdefault(row.term, []).append(r)
+        if len(by_term) < len(idfw):
+            return empty
+        return shard_topk_intersect(
+            by_term, k, avgdl, k1, b, allowed=allowed, blocked=blocked
+        )
+    return shard_topk_bmw(
+        runs, k, avgdl, shard_lo, docs_per_shard, k1, b,
+        allowed=allowed, blocked=blocked,
+    )
+
+
+def positional_shard(
+    pdf, slot_terms: list[list[str]], span: tuple | None, slop: int,
+    offsets: list[int] | None, k: int, avgdl: float, k1: float, b: float,
+    docs_per_shard: int, allowed: np.ndarray | None, blocked: np.ndarray | None,
+):
+    """One shard of a positional query: (doc_ids, tf, dl, n_matching_docs).
+    Slot i takes the runs of every term in ``slot_terms[i]`` (a span_or).
+    ``span=None`` is match_phrase (``slop``/``offsets`` apply); otherwise
+    ``('first', end)``, ``('near', slop, in_order)``, ``('not', pre,
+    post)`` or ``('containing' | 'within', slop, in_order)`` with the
+    little clause in slot 0."""
+    shard_lo = int(pdf["shard"].iloc[0]) * docs_per_shard
+    by_term: dict[str, list] = {}
+    for row in pdf.itertuples(index=False):
+        by_term.setdefault(row.term, []).append(
+            _Run(row, 1.0, shard_lo, query_avgdl=avgdl, k1=k1, b=b)
+        )
+    slots = [[r for t in slot for r in by_term.get(t, [])] for slot in slot_terms]
+    masks = {"allowed": allowed, "blocked": blocked}
+    if span is None:
+        return shard_phrase_matches(
+            slots, k, avgdl, k1, b, slop=slop, offsets=offsets, **masks
+        )
+    if span[0] == "first":
+        return shard_span_first(slots[0], span[1], k, avgdl, k1, b, **masks)
+    if span[0] == "not":
+        return shard_span_not(
+            slots[0], slots[1] if len(slots) > 1 else [], span[1], span[2],
+            k, avgdl, k1, b, **masks,
+        )
+    if span[0] in ("containing", "within"):
+        return shard_span_contain(
+            slots[0], slots[1:], span[1], span[2], span[0], k, avgdl, k1, b, **masks
+        )
+    return shard_span_near(
+        slots, k, avgdl, k1, b, slop=span[1], in_order=span[2], **masks
+    )

@@ -62,6 +62,43 @@ def test_deletes_compose_with_filters_and_batch(spark, deleted_wh):
     assert "tool" not in roles
 
 
+def test_dis_max_one_clause_equals_search_under_tombstones(spark, deleted_wh, placements):
+    """dis_max always runs on the executors, through the blocked mask
+    (tombstones only) or the allowed mask (a filter); one clause scores
+    exactly like search in either placement."""
+    path, before, _n = deleted_wh
+    idx = Index(spark, path)
+    tool_ids = {r["doc_id"] for r in idx._docs_df().filter("role = 'tool'").collect()}
+    assert {d for d, _ in before["bmw"]} & tool_ids  # the mask has work to do
+    for placement in placements():
+        for where in (None, "role <> 'user'"):
+            got = _rows(idx.search_dis_max([Q], k=50, where=where))
+            assert got and not {d for d, _ in got} & tool_ids, (placement, where)
+            assert got == _rows(idx.search(Q, 50, where=where)), (placement, where)
+
+
+def test_phrase_excludes_tombstones(spark, deleted_wh):
+    """A phrase that occurs in deleted tool turns AND in live turns: the
+    position kernel drops the tombstoned matches (df stays frozen), equal
+    to the oracle and to the serving twin."""
+    from kafka_elasticsearch_standalone_consumer_spark.analysis import tokenize_text
+
+    path, _before, _n = deleted_wh
+    idx = Index(spark, path)
+    rows = idx._docs_df().select("doc_id", "text", "role").collect()
+    tool_ids = {r["doc_id"] for r in rows if r["role"] == "tool"}
+    roles_by_bigram: dict[str, set] = {}
+    for r in sorted(rows, key=lambda r: r["doc_id"]):
+        toks = tokenize_text(r["text"])
+        for a, b in zip(toks, toks[1:]):
+            roles_by_bigram.setdefault(f"{a} {b}", set()).add(r["role"] == "tool")
+    phrase = next(p for p, kinds in roles_by_bigram.items() if kinds == {True, False})
+    got = _rows(idx.search_phrase(phrase, K))
+    assert got and not {d for d, _ in got} & tool_ids
+    assert got == _rows(idx.search_phrase_oracle(phrase, K))
+    assert got == [(d, round(s, 9)) for d, s in idx.search_phrase_local(phrase, K)]
+
+
 def test_compact_purges_tombstones(spark, deleted_wh, tmp_path):
     path, _before, _n = deleted_wh
     idx0 = Index(spark, path)

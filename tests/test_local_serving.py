@@ -37,6 +37,22 @@ def test_local_identical_to_distributed(spark, built_index, placements):
     assert idx.search_local("", 10) == []
 
 
+def test_local_intersect_plans_once(spark, built_index, monkeypatch):
+    """search_local(mode='intersect') reads the term dictionary once: the
+    plan its conjunction check made is the plan the kernel scores."""
+    idx, _ = built_index
+    calls = []
+    orig = Index._plan_terms
+
+    def counted(self, *a, **kw):
+        calls.append(a)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(Index, "_plan_terms", counted)
+    assert idx.search_local(Q, 10, mode="intersect")
+    assert len(calls) == 1
+
+
 def test_local_with_segments_and_deletes(spark, transcripts, tmp_path, placements):
     wh = str(tmp_path / "idx")
     build_index(spark, transcripts, wh, docs_per_shard=256, n_buckets=8)
