@@ -547,6 +547,122 @@ def tokens_from(
     return exploded.groupBy(*id_cols, "term").agg(F.count("*").alias("tf"))
 
 
+def term_freqs_schema(id_col: str = "doc_id", positions: bool = False) -> str:
+    """DDL of the rows :func:`term_freqs` returns — the forward index
+    (``tokens`` table) layout."""
+    schema = f"{id_col} long, term string, tf int, dl int"
+    return schema + ", positions array<int>" if positions else schema
+
+
+def term_freqs(
+    pdf: pd.DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    positions: bool = False,
+    analyzer: str = "standard",
+) -> pd.DataFrame | None:
+    """(id, term, tf, dl[, positions]) rows of one pandas batch of
+    documents, or None when the batch yields no token — the one analyzer
+    body behind :func:`doc_term_freqs` (run per Arrow batch inside
+    ``mapInPandas``) and the driver-side segment build, which calls it on
+    a whole collected batch. Rows never depend on the batching: a
+    (doc, term) group never spans documents."""
+    from itertools import chain
+
+    import numpy as np
+
+    char_filter, analyzer = split_char_filter(analyzer)
+    _st = _stops_of(analyzer)
+    stop_arr = np.array(sorted(_st), dtype=object) if _st is not None else None
+    if not len(pdf):
+        return None
+    txt = pdf[text_col].fillna("")
+    if char_filter == "html_strip":
+        txt = txt.str.replace(_HTML_TAG_RE, " ", regex=True)
+        for ent, rep in _HTML_ENTITIES:
+            txt = txt.str.replace(ent, rep, regex=False)
+    if analyzer == "whitespace":
+        toks = txt.str.findall(_WS_RE)
+    elif analyzer == "keyword":
+        toks = txt.map(lambda x: [x] if x else [])
+    elif analyzer == "simple":
+        toks = txt.str.lower().str.findall(_SIMPLE_RE)
+    elif analyzer.startswith("pattern"):
+        pat = _pattern_re(analyzer)
+        toks = txt.str.lower().map(lambda x: [t for t in pat.split(x) if t])
+    else:
+        toks = txt.str.lower().str.findall(_TOKEN_RE)
+    lens = toks.str.len().to_numpy(dtype=np.int64)
+    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    total = int(lens.sum())
+    if total == 0:
+        return None
+    flat = np.fromiter(chain.from_iterable(toks), dtype=object, count=total)
+    rep_ids = np.repeat(ids, lens)
+    if stop_arr is not None:
+        # original in-doc offsets BEFORE filtering (Lucene position
+        # increments), then drop stopped tokens everywhere
+        orig_pos = (
+            np.arange(total, dtype=np.int64)
+            - np.repeat(np.cumsum(lens) - lens, lens)
+        ).astype(np.int32)
+        keep = ~np.isin(flat, stop_arr)
+        flat, rep_ids, orig_pos = flat[keep], rep_ids[keep], orig_pos[keep]
+        total = int(flat.shape[0])
+        if total == 0:
+            return None
+        kept_ids, kept_counts = np.unique(rep_ids, return_counts=True)
+        dl_map = pd.Series(kept_counts, index=kept_ids)
+    else:
+        orig_pos = None
+        dl_map = pd.Series(lens, index=ids)
+    if analyzer in ("porter", "english"):
+        codes, uniq = pd.factorize(flat, sort=False)
+        stemmed = np.array([porter_stem(t) for t in uniq], dtype=object)
+        flat = stemmed[codes]
+    if positions:
+        # fully vectorized (doc, term) grouping: factorize terms to
+        # int codes, lexsort (doc, code, pos), then group boundaries
+        # by change detection and position lists via np.split — no
+        # pandas .agg(list) (per-group Python list building was the
+        # dominant cost of the positions build)
+        if orig_pos is not None:
+            pos = orig_pos
+        else:
+            pos = (
+                np.arange(total, dtype=np.int64)
+                - np.repeat(np.cumsum(lens) - lens, lens)
+            ).astype(np.int32)
+        codes, uniq_terms = pd.factorize(flat, sort=False)
+        order = np.lexsort((pos, codes, rep_ids))
+        ids_s, codes_s, pos_s = rep_ids[order], codes[order], pos[order]
+        change = np.empty(total, dtype=bool)
+        change[0] = True
+        change[1:] = (ids_s[1:] != ids_s[:-1]) | (codes_s[1:] != codes_s[:-1])
+        starts = np.flatnonzero(change)
+        tf = np.diff(np.append(starts, total))
+        g = pd.DataFrame(
+            {
+                id_col: ids_s[starts],
+                "term": uniq_terms[codes_s[starts]],
+                "tf": tf,
+                "positions": pd.Series(np.split(pos_s, starts[1:])),
+            }
+        )
+    else:
+        g = (
+            pd.DataFrame({id_col: rep_ids, "term": flat})
+            .groupby([id_col, "term"], sort=False, observed=True)
+            .size()
+            .reset_index(name="tf")
+        )
+    g["dl"] = g[id_col].map(dl_map).astype(np.int32)
+    g["tf"] = g["tf"].astype(np.int32)
+    if positions:
+        g = g[[id_col, "term", "tf", "dl", "positions"]]
+    return g
+
+
 def doc_term_freqs(
     df: DataFrame,
     text_col: str = "text",
@@ -590,109 +706,14 @@ def doc_term_freqs(
     term (dl=1, position [0]; empty/null fields emit nothing) — both
     reuse the same count/positions machinery unchanged.
     """
-    from itertools import chain
-
-    import numpy as np
-
     _check_analyzer(analyzer)
-    char_filter, analyzer = split_char_filter(analyzer)
-    _st = _stops_of(analyzer)
-    stop_arr = np.array(sorted(_st), dtype=object) if _st is not None else None
-
-    schema = f"{id_col} long, term string, tf int, dl int"
-    if positions:
-        schema += ", positions array<int>"
 
     def fused(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            txt = pdf[text_col].fillna("")
-            if char_filter == "html_strip":
-                txt = txt.str.replace(_HTML_TAG_RE, " ", regex=True)
-                for ent, rep in _HTML_ENTITIES:
-                    txt = txt.str.replace(ent, rep, regex=False)
-            if analyzer == "whitespace":
-                toks = txt.str.findall(_WS_RE)
-            elif analyzer == "keyword":
-                toks = txt.map(lambda x: [x] if x else [])
-            elif analyzer == "simple":
-                toks = txt.str.lower().str.findall(_SIMPLE_RE)
-            elif analyzer.startswith("pattern"):
-                pat = _pattern_re(analyzer)
-                toks = txt.str.lower().map(
-                    lambda x: [t for t in pat.split(x) if t]
-                )
-            else:
-                toks = txt.str.lower().str.findall(_TOKEN_RE)
-            lens = toks.str.len().to_numpy(dtype=np.int64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            total = int(lens.sum())
-            if total == 0:
-                continue
-            flat = np.fromiter(chain.from_iterable(toks), dtype=object, count=total)
-            rep_ids = np.repeat(ids, lens)
-            if stop_arr is not None:
-                # original in-doc offsets BEFORE filtering (Lucene position
-                # increments), then drop stopped tokens everywhere
-                orig_pos = (
-                    np.arange(total, dtype=np.int64)
-                    - np.repeat(np.cumsum(lens) - lens, lens)
-                ).astype(np.int32)
-                keep = ~np.isin(flat, stop_arr)
-                flat, rep_ids, orig_pos = flat[keep], rep_ids[keep], orig_pos[keep]
-                total = int(flat.shape[0])
-                if total == 0:
-                    continue
-                kept_ids, kept_counts = np.unique(rep_ids, return_counts=True)
-                dl_map = pd.Series(kept_counts, index=kept_ids)
-            else:
-                orig_pos = None
-                dl_map = pd.Series(lens, index=ids)
-            if analyzer in ("porter", "english"):
-                codes, uniq = pd.factorize(flat, sort=False)
-                stemmed = np.array([porter_stem(t) for t in uniq], dtype=object)
-                flat = stemmed[codes]
-            if positions:
-                # fully vectorized (doc, term) grouping: factorize terms to
-                # int codes, lexsort (doc, code, pos), then group boundaries
-                # by change detection and position lists via np.split — no
-                # pandas .agg(list) (per-group Python list building was the
-                # dominant cost of the positions build)
-                if orig_pos is not None:
-                    pos = orig_pos
-                else:
-                    pos = (
-                        np.arange(total, dtype=np.int64)
-                        - np.repeat(np.cumsum(lens) - lens, lens)
-                    ).astype(np.int32)
-                codes, uniq_terms = pd.factorize(flat, sort=False)
-                order = np.lexsort((pos, codes, rep_ids))
-                ids_s, codes_s, pos_s = rep_ids[order], codes[order], pos[order]
-                change = np.empty(total, dtype=bool)
-                change[0] = True
-                change[1:] = (ids_s[1:] != ids_s[:-1]) | (codes_s[1:] != codes_s[:-1])
-                starts = np.flatnonzero(change)
-                tf = np.diff(np.append(starts, total))
-                g = pd.DataFrame(
-                    {
-                        id_col: ids_s[starts],
-                        "term": uniq_terms[codes_s[starts]],
-                        "tf": tf,
-                        "positions": pd.Series(np.split(pos_s, starts[1:])),
-                    }
-                )
-            else:
-                g = (
-                    pd.DataFrame({id_col: rep_ids, "term": flat})
-                    .groupby([id_col, "term"], sort=False, observed=True)
-                    .size()
-                    .reset_index(name="tf")
-                )
-            g["dl"] = g[id_col].map(dl_map).astype(np.int32)
-            g["tf"] = g["tf"].astype(np.int32)
-            if positions:
-                g = g[[id_col, "term", "tf", "dl", "positions"]]
-            yield g
+            g = term_freqs(pdf, text_col, id_col, positions, analyzer)
+            if g is not None:
+                yield g
 
-    return df.select(id_col, text_col).mapInPandas(fused, schema=schema)
+    return df.select(id_col, text_col).mapInPandas(
+        fused, schema=term_freqs_schema(id_col, positions)
+    )

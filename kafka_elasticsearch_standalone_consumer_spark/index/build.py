@@ -176,6 +176,53 @@ def _pack_stream(batches, avgdl: float, block_size: int, positions: bool):
         yield _pack_arrow(carry, avgdl, block_size, positions)
 
 
+def pack_postings_arrow(
+    tokens,
+    term_buckets,
+    avgdl: float,
+    docs_per_shard: int = DEFAULT_DOCS_PER_SHARD,
+    block_size: int = BLOCK_SIZE,
+    positions: bool = False,
+):
+    """Driver-side twin of :func:`build_postings` for a batch that fits in
+    memory: an Arrow table of token rows (doc_id, term, tf, dl[,
+    positions]) and its terms' buckets (a table of term, term_bucket
+    covering every term) → the postings rows, term_bucket last. Sorted
+    the way one range partition of the Spark form is (term_bucket, term,
+    shard, doc_id) and packed by the same :func:`_pack_stream`, so rows
+    are equal to the Spark form's: a (term, shard) run never spans range
+    partitions (it is the partitioning key)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = _postings_arrow_schema(positions)
+    if not tokens.num_rows:
+        return schema.empty_table()
+    pick = pc.index_in(tokens.column("term"), value_set=term_buckets.column("term"))
+    shard = tokens.column("doc_id").to_numpy() // int(docs_per_shard)
+    arranged = tokens.append_column("shard", pa.array(shard)).append_column(
+        "term_bucket", term_buckets.column("term_bucket").take(pick)
+    ).sort_by(
+        [(c, "ascending") for c in ("term_bucket", "term", "shard", "doc_id")]
+    )
+    packed = pa.Table.from_batches(
+        _pack_stream(arranged.to_batches(), avgdl, block_size, positions)
+    )
+    pick = pc.index_in(packed.column("term"), value_set=term_buckets.column("term"))
+    packed = packed.append_column("term_bucket", term_buckets.column("term_bucket").take(pick))
+    return packed.cast(schema)
+
+
+def _postings_arrow_schema(positions: bool):
+    """Arrow form of the postings rows as Spark writes them (term_bucket
+    last, the column ``partitionBy`` appends)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    ddl = (POSTINGS_SCHEMA_POS if positions else POSTINGS_SCHEMA) + ", term_bucket int"
+    return to_arrow_schema(DataType.fromDDL(ddl))
+
+
 def build_postings(
     tokens_with_dl: DataFrame,
     avgdl: float,

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from kafka_elasticsearch_standalone_consumer_spark import B, BLOCK_SIZE, K1
 from kafka_elasticsearch_standalone_consumer_spark.analysis import doc_term_freqs, tokens_from
-from kafka_elasticsearch_standalone_consumer_spark.ids import assign_dense_ids
+from kafka_elasticsearch_standalone_consumer_spark.ids import dense_ids
 from kafka_elasticsearch_standalone_consumer_spark.index.build import (
     DEFAULT_DOCS_PER_SHARD,
     DEFAULT_TERM_BUCKETS,
@@ -83,9 +83,8 @@ def build_index(
     runner = StepRunner(log, fail_after=fail_after, max_retries=max_retries)
 
     if dry_run:
-        docs = assign_dense_ids(transcripts, num_partitions=num_partitions)
-        runner.dry_run_rows = tokens_from(docs, method=tokenizer, analyzer=analyzer).count()
-        spark.catalog.clearCache()
+        with dense_ids(transcripts, num_partitions=num_partitions) as docs:
+            runner.dry_run_rows = tokens_from(docs, method=tokenizer, analyzer=analyzer).count()
         return runner
 
     def step_docs():
@@ -94,14 +93,17 @@ def build_index(
         # generator; on a cluster: a view over decoded Kafka batches) is
         # computed twice. Persist for the step's duration — on a real
         # deployment the input is a table scan and this is a cheap no-op
-        # class of cache; it never outlives the step.
-        tr = transcripts.persist()
+        # class of cache; it never outlives the step. An input the caller
+        # already cached is used as is and stays cached.
+        lvl = transcripts.storageLevel
+        owned = not (lvl.useMemory or lvl.useDisk)
+        tr = transcripts.persist() if owned else transcripts
         try:
-            docs = assign_dense_ids(tr, num_partitions=num_partitions)
-            wh.write(docs, "docs")
+            with dense_ids(tr, num_partitions=num_partitions) as docs:
+                wh.write(docs, "docs")
         finally:
-            tr.unpersist()
-        spark.catalog.clearCache()  # release the range-sort cache from id assignment
+            if owned:
+                tr.unpersist()
         return wh.count_rows("docs")
 
     def _tokens_df():

@@ -15,6 +15,18 @@ public Lucene behavior). This module owns those semantics Spark-side:
   commit, ``jobs/IndexerJob.java:377-415``), and an ``idempotency_key``
   makes replays no-ops (the streaming ``foreachBatch`` caller passes the
   batch id — same contract as committing a Kafka offset).
+
+  The segment build is placed like ``search()``: a batch whose optimized
+  plan size estimate is at most ``DRIVER_MAX_SEGMENT_BYTES`` is collected
+  once (``toArrow()``) and every segment table is built on the driver
+  with pyarrow and the same kernels — the analyzer body of
+  ``doc_term_freqs``, Spark's own term-bucket hash (folded over a
+  LocalRelation, no job) and the postings pack — so the refresh of a
+  micro-batch runs one Spark job instead of ~27. Larger or unknown-size
+  batches (no statistics, or a plan that can multiply rows) run the same
+  steps as Spark jobs. Both placements write equal rows and Spark schemas
+  under the same checkpointed steps; ``optimize()``'s merge goes through
+  the same builder.
 * ``Index`` (query/engine.py) unions base + segment postings; global stats
   (N, avgdl, df) are re-aggregated at plan time so scores stay EXACT after
   appends — only the baked block-max bounds are per-segment, and the
@@ -39,9 +51,18 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_elasticsearch_standalone_consumer_spark.analysis import doc_term_freqs
-from kafka_elasticsearch_standalone_consumer_spark.ids import assign_dense_ids
-from kafka_elasticsearch_standalone_consumer_spark.index.build import build_postings, with_shard
+from kafka_elasticsearch_standalone_consumer_spark.analysis import (
+    doc_term_freqs,
+    term_freqs,
+    term_freqs_schema,
+)
+from kafka_elasticsearch_standalone_consumer_spark.ids import dense_ids
+from kafka_elasticsearch_standalone_consumer_spark.index.build import (
+    build_postings,
+    pack_postings_arrow,
+    term_bucket_col,
+    with_shard,
+)
 from kafka_elasticsearch_standalone_consumer_spark.pipeline.builder import build_index
 from kafka_elasticsearch_standalone_consumer_spark.pipeline.checkpoint import (
     CheckpointLog,
@@ -55,6 +76,11 @@ from kafka_elasticsearch_standalone_consumer_spark.tables import Warehouse
 
 SEGMENTS_TABLE = "sys_segments"
 RETIRED_KEYS_TABLE = "sys_retired_keys"
+
+# Largest batch (optimized-plan size estimate, bytes) whose segment is
+# built on the driver; larger or unknown-size batches run as Spark jobs.
+# Set below the measured wall crossover of the two placements.
+DRIVER_MAX_SEGMENT_BYTES = 8 << 20
 
 
 def _retired_schema():
@@ -151,6 +177,257 @@ def _ensure_base_segment_row(wh: Warehouse) -> list[dict]:
     return list_segments(wh)
 
 
+# Plan nodes (logical or physical, by node name) that can emit more rows
+# than they read. Spark's size-only estimator gives them their child's
+# size: ``generate_transcripts(spark, n)``, a ``spark.range(n)`` under
+# ``mapInPandas``, estimates at 8·n bytes for ~11·n turns. A plan holding
+# one has no size bound, so its batch counts as unknown-size.
+_ROW_MULTIPLYING = (
+    "Generate", "MapInPandas", "MapInArrow", "FlatMapGroups", "FlatMapCoGroups",
+    "MapPartitions", "MapGroups", "CoGroup", "UDTF",
+)
+
+
+def _multiplies_rows(plan) -> bool:
+    """Whether any node under ``plan`` is in ``_ROW_MULTIPLYING``. A cached
+    frame not yet filled is looked at through the plan it caches, since
+    its estimate is that plan's until then (a filled one reports its real
+    size). Walks the JVM tree; no job."""
+    name = plan.nodeName()
+    if any(s in name for s in _ROW_MULTIPLYING):
+        return True
+    kids = plan.children()
+    kids = [kids.apply(i) for i in range(kids.size())]
+    if name == "InMemoryRelation":
+        if not plan.cacheBuilder().isCachedColumnBuffersLoaded():
+            kids.append(plan.cacheBuilder().cachedPlan())
+    elif name == "InMemoryTableScan":
+        kids.append(plan.relation())
+    return any(_multiplies_rows(k) for k in kids)
+
+
+def _on_driver(batch: DataFrame) -> bool:
+    """Placement of a segment build: on the driver when the batch's
+    optimized-plan size estimate — the statistic Spark picks broadcast
+    joins by; reading it runs no job — is at most
+    ``DRIVER_MAX_SEGMENT_BYTES``. An unknown size (Long.MAX_VALUE, or a
+    plan that can multiply rows) stays on the executors."""
+    plan = batch._jdf.queryExecution().optimizedPlan()
+    if _multiplies_rows(plan):
+        return False
+    return int(plan.stats().sizeInBytes()) <= DRIVER_MAX_SEGMENT_BYTES
+
+
+def _build_segment(
+    spark: SparkSession,
+    batch: DataFrame,
+    swh: Warehouse,
+    runner: StepRunner,
+    meta: dict,
+    base: int | None,
+    totals: tuple[int, int] | None = None,
+    num_partitions: int | None = None,
+) -> None:
+    """Write one segment's tables (docs, tokens, doc_stats, term_stats,
+    seg_meta, postings) under ``swh``, one checkpointed step each, with
+    the index's analyzer / positions / layout knobs from ``meta``.
+
+    ``base`` is the first doc_id: the batch's turns get dense ids from
+    it in (conv_id, turn_idx) order. ``base=None`` keeps the batch's own
+    doc_ids (a merge of segments). ``totals`` = (n_docs, sum_dl) are
+    recorded as seg_meta instead of being summed from doc_stats.
+
+    Both placements write the same rows with the same Spark schemas; see
+    :func:`_on_driver` for the choice."""
+    steps = _driver_steps if _on_driver(batch) else _executor_steps
+    knobs = dict(
+        positions=bool(meta.get("positions", False)),
+        analyzer=str(meta.get("analyzer", "standard")),
+        docs_per_shard=int(meta["docs_per_shard"]),
+        n_buckets=int(meta["n_buckets"]),
+    )
+    for name, fn in steps(spark, batch, swh, base, totals, num_partitions, **knobs):
+        runner.step(name, fn)
+
+
+def _baked_avgdl(swh: Warehouse) -> float:
+    seg = swh.read_meta("seg_meta")
+    return (seg["sum_dl"] / seg["n_docs"]) if seg["n_docs"] else 0.0
+
+
+def _executor_steps(
+    spark, batch, swh, base, totals, num_partitions,
+    positions, analyzer, docs_per_shard, n_buckets,
+):
+    """The segment steps as Spark jobs, each reading the tables the steps
+    before it wrote."""
+
+    def step_docs():
+        if base is None:
+            swh.write(batch, "docs")
+        else:
+            with dense_ids(batch, num_partitions=num_partitions) as docs:
+                swh.write(docs.withColumn("doc_id", F.col("doc_id") + F.lit(base)), "docs")
+        return swh.count_rows("docs")
+
+    def step_tokens():
+        # positions parity with the base build: a segment of a positions
+        # index must pack positions too, or the query-time unionByName of
+        # base + segment postings throws on the missing pos columns
+        toks = doc_term_freqs(swh.read(spark, "docs"), positions=positions, analyzer=analyzer)
+        swh.write(toks, "tokens")
+        return swh.count_rows("tokens")
+
+    def step_doc_stats():
+        docs = swh.read(spark, "docs")
+        toks = swh.read(spark, "tokens")
+        swh.write(with_shard(build_doc_stats(docs, toks), docs_per_shard), "doc_stats")
+        return swh.count_rows("doc_stats")
+
+    def step_term_stats():
+        swh.write(build_term_stats(swh.read(spark, "tokens"), n_buckets=n_buckets), "term_stats")
+        return swh.count_rows("term_stats")
+
+    def step_seg_meta():
+        if totals is None:
+            row = (
+                swh.read(spark, "doc_stats")
+                .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
+                .collect()[0]
+            )
+            n, sum_dl = row["n"], int(row["sum_dl"] or 0)
+        else:
+            n, sum_dl = totals
+        swh.write_meta("seg_meta", {"n_docs": n, "sum_dl": sum_dl})
+        return 1
+
+    def step_postings():
+        # materialize-then-pack scratch, the full-build path's trick
+        # (byte-identical output; deleted after the table commits)
+        scratch = swh.path("_postings_sort_scratch")
+        try:
+            postings = build_postings(
+                swh.read(spark, "tokens"),
+                avgdl=_baked_avgdl(swh) or 1e-9,
+                docs_per_shard=docs_per_shard,
+                n_buckets=n_buckets,
+                num_partitions=num_partitions,
+                positions=positions,
+                scratch_dir=scratch,
+            )
+            swh.write(postings, "postings", partition_by=("term_bucket",))
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
+        return swh.count_rows("postings")
+
+    return [
+        ("docs", step_docs), ("tokens", step_tokens), ("doc_stats", step_doc_stats),
+        ("term_stats", step_term_stats), ("seg_meta", step_seg_meta),
+        ("postings", step_postings),
+    ]
+
+
+def _driver_steps(
+    spark, batch, swh, base, totals, num_partitions,
+    positions, analyzer, docs_per_shard, n_buckets,
+):
+    """The segment steps on the driver: one ``toArrow()`` collect of the
+    batch, then pyarrow/NumPy over the same kernels the Spark steps run —
+    :func:`term_freqs` (the tokenizer body of ``doc_term_freqs``), the
+    term-bucket Column evaluated over a LocalRelation, and the postings
+    pack. Each step reads the tables before it back with pyarrow, so a
+    resumed build needs nothing held in memory."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    def read(name, columns=None):
+        return pq.read_table(swh.path(name), columns=columns)
+
+    def step_docs():
+        tbl = batch.toArrow()
+        if base is None:
+            tbl = tbl.sort_by("doc_id")
+        else:
+            tbl = tbl.sort_by(
+                [("conv_id", "ascending"), ("turn_idx", "ascending")], null_placement="at_start"
+            )
+            ids = np.arange(base, base + tbl.num_rows, dtype=np.int64)
+            tbl = tbl.append_column("doc_id", pa.array(ids))
+        swh.write_arrow(tbl, "docs")
+        return tbl.num_rows
+
+    def step_tokens():
+        schema = to_arrow_schema(DataType.fromDDL(term_freqs_schema(positions=positions)))
+        g = term_freqs(read("docs", ["doc_id", "text"]).to_pandas(), positions=positions,
+                       analyzer=analyzer)
+        tbl = schema.empty_table() if g is None else pa.Table.from_pandas(
+            g, schema=schema, preserve_index=False
+        )
+        swh.write_arrow(tbl, "tokens")
+        return tbl.num_rows
+
+    def step_doc_stats():
+        ids = read("docs", ["doc_id"]).column("doc_id").to_numpy()
+        dl = read("tokens", ["doc_id", "dl"]).to_pandas().groupby("doc_id")["dl"].min()
+        tbl = pa.table({
+            "doc_id": pa.array(ids, pa.int64()),
+            "dl": pa.array(dl.reindex(ids, fill_value=0).to_numpy(np.int32)),
+            "shard": pa.array(ids // docs_per_shard, pa.int64()),
+        })
+        swh.write_arrow(tbl, "doc_stats")
+        return tbl.num_rows
+
+    def step_term_stats():
+        ts = read("tokens", ["term", "tf"]).group_by("term").aggregate(
+            [("tf", "count"), ("tf", "max")]
+        )
+        ts = pa.table({"term": ts["term"], "df": ts["tf_count"], "max_tf": ts["tf_max"]})
+        # bucket and length by Spark's own expressions: projected over a
+        # LocalRelation, the optimizer folds them on the driver (collect
+        # runs no job) and the hash is Spark's by construction
+        rows = (
+            spark.createDataFrame(ts.select(["term"]))
+            .select(
+                term_bucket_col("term", n_buckets).alias("term_bucket"),
+                F.length("term").cast("int").alias("term_len"),
+            )
+            .collect()
+        ) if ts.num_rows else []
+        ts = ts.append_column(
+            "term_bucket", pa.array([r[0] for r in rows], pa.int32())
+        ).append_column("term_len", pa.array([r[1] for r in rows], pa.int32()))
+        swh.write_arrow(ts.sort_by("term"), "term_stats")
+        return ts.num_rows
+
+    def step_seg_meta():
+        if totals is None:
+            dl = read("doc_stats", ["dl"]).column("dl")
+            n, sum_dl = len(dl), int(pc.sum(dl).as_py() or 0)
+        else:
+            n, sum_dl = totals
+        swh.write_meta("seg_meta", {"n_docs": n, "sum_dl": sum_dl})
+        return 1
+
+    def step_postings():
+        tbl = pack_postings_arrow(
+            read("tokens"), read("term_stats", ["term", "term_bucket"]),
+            avgdl=_baked_avgdl(swh) or 1e-9, docs_per_shard=docs_per_shard,
+            positions=positions,
+        )
+        swh.write_arrow(tbl, "postings", partition_by="term_bucket")
+        return tbl.num_rows
+
+    return [
+        ("docs", step_docs), ("tokens", step_tokens), ("doc_stats", step_doc_stats),
+        ("term_stats", step_term_stats), ("seg_meta", step_seg_meta),
+        ("postings", step_postings),
+    ]
+
+
 def append_segment(
     spark: SparkSession,
     new_transcripts: DataFrame,
@@ -173,83 +450,14 @@ def append_segment(
         # registry commit and its meta refresh (the replay is the retry).
         _sync_meta_totals(wh, meta)
         return None
-    positions = bool(meta.get("positions", False))
     seg_id = segs[-1]["seg_id"] + 1
     base = int(segs[-1]["doc_id_hi"])
     swh = seg_warehouse(wh, seg_id)
     log = CheckpointLog(spark, swh, run_id)
-    runner = StepRunner(log)
-
-    def step_docs():
-        docs = assign_dense_ids(new_transcripts, num_partitions=num_partitions)
-        docs = docs.withColumn("doc_id", F.col("doc_id") + F.lit(base))
-        swh.write(docs, "docs")
-        spark.catalog.clearCache()
-        return swh.count_rows("docs")
-
-    def step_tokens():
-        # positions parity with the base build: a segment of a positions
-        # index must pack positions too, or the query-time unionByName of
-        # base + segment postings throws on the missing pos columns
-        toks = doc_term_freqs(
-            swh.read(spark, "docs"), positions=positions,
-            analyzer=str(meta.get("analyzer", "standard")),
-        )
-        swh.write(toks, "tokens")
-        return swh.count_rows("tokens")
-
-    def step_doc_stats():
-        docs = swh.read(spark, "docs")
-        toks = swh.read(spark, "tokens")
-        ds = with_shard(build_doc_stats(docs, toks), int(meta["docs_per_shard"]))
-        swh.write(ds, "doc_stats")
-        return swh.count_rows("doc_stats")
-
-    def step_term_stats():
-        ts = build_term_stats(swh.read(spark, "tokens"), n_buckets=int(meta["n_buckets"]))
-        swh.write(ts, "term_stats")
-        return swh.count_rows("term_stats")
-
-    def step_seg_meta():
-        row = (
-            swh.read(spark, "doc_stats")
-            .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
-            .collect()[0]
-        )
-        swh.write_meta(
-            "seg_meta", {"n_docs": row["n"], "sum_dl": int(row["sum_dl"] or 0)}
-        )
-        return 1
-
-    def step_postings():
-        import shutil
-
-        seg = swh.read_meta("seg_meta")
-        baked_avgdl = (seg["sum_dl"] / seg["n_docs"]) if seg["n_docs"] else 0.0
-        # materialize-then-pack scratch, the full-build path's trick
-        # (byte-identical output; deleted after the table commits)
-        scratch = swh.path("_postings_sort_scratch")
-        try:
-            postings = build_postings(
-                swh.read(spark, "tokens"),
-                avgdl=baked_avgdl or 1e-9,
-                docs_per_shard=int(meta["docs_per_shard"]),
-                n_buckets=int(meta["n_buckets"]),
-                num_partitions=num_partitions,
-                positions=positions,
-                scratch_dir=scratch,
-            )
-            swh.write(postings, "postings", partition_by=("term_bucket",))
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
-        return swh.count_rows("postings")
-
-    runner.step("docs", step_docs)
-    runner.step("tokens", step_tokens)
-    runner.step("doc_stats", step_doc_stats)
-    runner.step("term_stats", step_term_stats)
-    runner.step("seg_meta", step_seg_meta)
-    runner.step("postings", step_postings)
+    _build_segment(
+        spark, new_transcripts, swh, StepRunner(log), meta, base=base,
+        num_partitions=num_partitions,
+    )
 
     # COMMIT: register the segment (last write — at-least-once ordering),
     # then refresh global meta so new Index instances see the new corpus.
@@ -479,46 +687,21 @@ def optimize(
     keep, merge = segs[: max_num_segments - 1], segs[max_num_segments - 1 :]
     assert merge[0]["seg_id"] != 0, "base segment is never in the merge tail"
     meta = wh.read_meta("sys_meta")
-    positions = bool(meta.get("positions", False))
     new_id = segs[-1]["seg_id"] + 1
     tmp_root = os.path.join(wh.root, "_optimize_tmp")
     shutil.rmtree(tmp_root, ignore_errors=True)
-    swh = Warehouse(tmp_root)
     docs = seg_warehouse(wh, merge[0]["seg_id"]).read(spark, "docs")
     for s in merge[1:]:
         docs = docs.unionByName(seg_warehouse(wh, s["seg_id"]).read(spark, "docs"))
-    swh.write(docs, "docs")
-    toks = doc_term_freqs(
-        swh.read(spark, "docs"), positions=positions,
-        analyzer=str(meta.get("analyzer", "standard")),
-    )
-    swh.write(toks, "tokens")
-    ds = with_shard(
-        build_doc_stats(swh.read(spark, "docs"), swh.read(spark, "tokens")),
-        int(meta["docs_per_shard"]),
-    )
-    swh.write(ds, "doc_stats")
-    ts = build_term_stats(swh.read(spark, "tokens"), n_buckets=int(meta["n_buckets"]))
-    swh.write(ts, "term_stats")
     # registry integers are exact — reuse them so totals stay bit-identical
     n_m = sum(int(s["n_docs"]) for s in merge)
     dl_m = sum(int(s["sum_dl"]) for s in merge)
     baked = (dl_m / n_m) if n_m else 0.0
-    swh.write_meta("seg_meta", {"n_docs": n_m, "sum_dl": dl_m})
-    scratch = swh.path("_postings_sort_scratch")
-    try:
-        postings = build_postings(
-            swh.read(spark, "tokens"),
-            avgdl=baked or 1e-9,
-            docs_per_shard=int(meta["docs_per_shard"]),
-            n_buckets=int(meta["n_buckets"]),
-            num_partitions=num_partitions,
-            positions=positions,
-            scratch_dir=scratch,
-        )
-        swh.write(postings, "postings", partition_by=("term_bucket",))
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    swh = Warehouse(tmp_root)
+    _build_segment(
+        spark, docs, swh, StepRunner(CheckpointLog(spark, swh, run_id)), meta,
+        base=None, totals=(n_m, dl_m), num_partitions=num_partitions,
+    )
     # retire the merged batches' idempotency keys FIRST: a replay of one of
     # them must stay a no-op whether or not the swap below has happened yet
     wh.append_rows(

@@ -87,6 +87,50 @@ class Warehouse:
         with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
             return sum(ex.map(lambda p: pq.read_metadata(p).num_rows, paths))
 
+    def write_arrow(self, table, name: str, partition_by: str | None = None) -> None:
+        """Overwrite a table with a driver-held Arrow table — the same
+        layout :meth:`write` leaves: ``part-*`` parquet files, one
+        ``col=value`` directory per value of ``partition_by`` with the
+        column left out of its file, and one schema-bearing file (column
+        kept) for an empty table. No Arrow schema is stored, and
+        timestamps go out as Spark's default writer sends them: TIMESTAMP
+        (tz-aware) as INT96, so pyarrow readers see the same types in
+        every segment, and TIMESTAMP_NTZ (naive) as INT64, so Spark reads
+        it back as NTZ. A table holding both kinds writes both as INT64.
+        The table lands in a temp directory that is renamed into place,
+        so a crash never leaves a half-written table under ``name``."""
+        import shutil
+
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        int96 = all(
+            f.type.tz is not None for f in table.schema if pa.types.is_timestamp(f.type)
+        )
+
+        def put(tbl, path):
+            pq.write_table(
+                tbl, path, use_deprecated_int96_timestamps=int96, store_schema=False
+            )
+
+        tmp = self.path(f"_tmp-{name}-{uuid.uuid4().hex}")
+        os.makedirs(tmp)
+        if partition_by is None or not table.num_rows:
+            put(table, os.path.join(tmp, "part-00000.parquet"))
+        else:
+            table = table.sort_by(partition_by)
+            keys = table.column(partition_by).to_numpy()
+            starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+            rest = table.drop_columns([partition_by])
+            for lo, hi in zip(starts, np.r_[starts[1:], len(keys)]):
+                d = os.path.join(tmp, f"{partition_by}={keys[lo]}")
+                os.makedirs(d)
+                put(rest.slice(lo, hi - lo), os.path.join(d, "part-00000.parquet"))
+        dst = self.path(name)
+        shutil.rmtree(dst, ignore_errors=True)
+        os.rename(tmp, dst)
+
     def append_rows(self, name: str, rows: list[tuple], arrow_schema) -> None:
         """Append a few control rows as one parquet file (atomic rename)."""
         import pyarrow as pa

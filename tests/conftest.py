@@ -50,3 +50,22 @@ def placements(monkeypatch):
         monkeypatch.undo()
 
     return each
+
+
+@pytest.fixture
+def segment_placements(monkeypatch):
+    """Iterate the placements of append_segment's segment build, each
+    forced in turn: 'driver' lifts the size threshold to just below an
+    unknown size (Long.MAX_VALUE, and a plan that can multiply rows,
+    still go to the executors),
+    'executor' sets it below zero so even an empty batch runs as Spark
+    jobs."""
+    from kafka_elasticsearch_standalone_consumer_spark.pipeline import incremental
+
+    def each():
+        for name, limit in (("driver", 1 << 62), ("executor", -1)):
+            monkeypatch.setattr(incremental, "DRIVER_MAX_SEGMENT_BYTES", limit)
+            yield name
+        monkeypatch.undo()
+
+    return each

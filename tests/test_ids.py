@@ -1,5 +1,6 @@
 """Dense doc_id assignment: dense, stable, order-correct, partition-proof."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_elasticsearch_standalone_consumer_spark.ids import assign_dense_ids
@@ -42,3 +43,18 @@ def test_invariant_per_turn_text_equality(spark, transcripts):
     assert rejoined.filter(F.col("text") != F.col("text2")).count() == 0
     assert rejoined.count() == transcripts.count()
     spark.catalog.clearCache()
+
+
+def test_partition_at_the_row_field_limit_raises(spark, monkeypatch):
+    """A range partition of MAX_PARTITION_ROWS rows or more would wrap
+    monotonically_increasing_id's 33-bit row field into the partition
+    id; the assignment refuses instead of returning colliding ids."""
+    from kafka_elasticsearch_standalone_consumer_spark import ids
+
+    df = spark.range(40).selectExpr("format_string('c%03d', id) AS conv_id", "0 AS turn_idx")
+    monkeypatch.setattr(ids, "MAX_PARTITION_ROWS", 40)
+    with pytest.raises(ValueError, match="wrap"):
+        ids.assign_dense_ids(df, num_partitions=1)
+    monkeypatch.setattr(ids, "MAX_PARTITION_ROWS", 41)
+    got = ids.assign_dense_ids(df, num_partitions=1).select("doc_id").collect()
+    assert sorted(r["doc_id"] for r in got) == list(range(40))

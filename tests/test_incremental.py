@@ -570,3 +570,28 @@ def test_streaming_quarantine_routes_bad_rows(spark, corpora, tmp_path):
             spark, Index(spark, want_path), query
         ), query
     assert Index(spark, wh).meta["n_docs"] == Index(spark, want_path).meta["n_docs"]
+
+
+def test_ingest_keeps_callers_cache(spark, corpora, tmp_path, monkeypatch):
+    """build_index and a forced-executor append_segment release only the
+    range sort they persisted: a frame the caller cached — the build's
+    own input included — stays cached."""
+    from kafka_elasticsearch_standalone_consumer_spark.pipeline import incremental
+
+    full, a, b, _ = corpora
+    mine = full.filter("conv_id < 'conv0000000010'").persist()
+    other = spark.range(50).persist()
+    assert mine.count() and other.count() == 50
+
+    def cached(df):
+        lvl = df.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    wh = str(tmp_path / "cache")
+    build_index(spark, mine, wh, docs_per_shard=256, n_buckets=8)
+    assert cached(mine) and cached(other) and cached(full)
+    monkeypatch.setattr(incremental, "DRIVER_MAX_SEGMENT_BYTES", -1)
+    assert append_segment(spark, b, wh, idempotency_key="b1") == 1
+    assert cached(mine) and cached(other) and cached(full)
+    mine.unpersist()
+    other.unpersist()
