@@ -58,6 +58,83 @@ def term_bucket_col(term_col="term", n_buckets: int = DEFAULT_TERM_BUCKETS):
     return F.pmod(F.xxhash64(F.col(term_col)), F.lit(n_buckets)).cast("int")
 
 
+_P1, _P2, _P3, _P4, _P5 = (np.uint64(p) for p in (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+))
+
+
+def _rotl(x, r: int):
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def xxhash64_utf8(strings, seed: int = 42) -> np.ndarray:
+    """Spark's ``xxhash64`` of each string of an Arrow string array, as
+    int64: XXH64 over the UTF-8 bytes with Spark's default seed 42
+    (``XXH64.hashUnsafeBytes``), computed column-wise in NumPy. Each
+    stage — 32-byte stripes, then the tail's 8-byte words, 4-byte word
+    and single bytes — runs over the strings that have those bytes left.
+    Nulls are not supported."""
+    import pyarrow as pa
+
+    strings = strings.cast(pa.large_string())
+    if isinstance(strings, pa.ChunkedArray):
+        strings = strings.combine_chunks()
+    off = np.frombuffer(strings.buffers()[1], np.int64, len(strings) + 1, strings.offset * 8)
+    lo, ln = off[:-1], np.diff(off)
+    # zero padding lets an 8-byte read start at any byte of a string
+    data = np.zeros(int(off[-1]) + 8, np.uint8)
+    if off[-1]:
+        data[: off[-1]] = np.frombuffer(strings.buffers()[2], np.uint8, int(off[-1]))
+
+    def word(at):  # the little-endian uint64 at each byte offset
+        return np.ascontiguousarray(data[at[:, None] + np.arange(8)]).view("<u8").ravel()
+
+    h = np.full(len(ln), seed + int(_P5), np.uint64)
+    stripes = ln // 32
+    big = np.flatnonzero(stripes)
+    if big.size:
+        v = [
+            np.full(big.size, x % (1 << 64), np.uint64)
+            for x in (seed + int(_P1) + int(_P2), seed + int(_P2), seed, seed - int(_P1))
+        ]
+        for s in range(int(stripes.max())):
+            on = stripes[big] > s
+            at = lo[big[on]] + 32 * s
+            for j in range(4):
+                v[j][on] = _rotl(v[j][on] + word(at + 8 * j) * _P2, 31) * _P1
+        acc = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        for x in v:
+            acc = (acc ^ (_rotl(x * _P2, 31) * _P1)) * _P1 + _P4
+        h[big] = acc
+    h += ln.astype(np.uint64)
+    pos, end = lo + 32 * stripes, lo + ln
+    for _ in range(3):  # under 32 bytes left: at most three 8-byte words
+        i = np.flatnonzero(pos + 8 <= end)
+        h[i] = _rotl(h[i] ^ (_rotl(word(pos[i]) * _P2, 31) * _P1), 27) * _P1 + _P4
+        pos[i] += 8
+    i = np.flatnonzero(pos + 4 <= end)
+    h[i] = _rotl(h[i] ^ ((word(pos[i]) & np.uint64(0xFFFFFFFF)) * _P1), 23) * _P2 + _P3
+    pos[i] += 4
+    for _ in range(3):
+        i = np.flatnonzero(pos < end)
+        h[i] = _rotl(h[i] ^ (data[pos[i]].astype(np.uint64) * _P5), 11) * _P1
+        pos[i] += 1
+    h ^= h >> np.uint64(33)
+    h *= _P2
+    h ^= h >> np.uint64(29)
+    h *= _P3
+    h ^= h >> np.uint64(32)
+    return h.view(np.int64)
+
+
+def term_buckets(terms, n_buckets: int = DEFAULT_TERM_BUCKETS) -> np.ndarray:
+    """:func:`term_bucket_col` on the driver: int32 buckets of an Arrow
+    string array, equal to Spark's ``pmod(xxhash64(term), n_buckets)``
+    (a floored modulo, as NumPy's ``%`` is for a positive divisor)."""
+    return (xxhash64_utf8(terms) % np.int64(n_buckets)).astype(np.int32)
+
+
 def _run_changes(terms, shards: np.ndarray) -> np.ndarray:
     """Boolean run-start flags over a sorted batch: True where the
     (term, shard) key differs from the previous row. ``terms`` is an

@@ -16,17 +16,20 @@ public Lucene behavior). This module owns those semantics Spark-side:
   makes replays no-ops (the streaming ``foreachBatch`` caller passes the
   batch id — same contract as committing a Kafka offset).
 
-  The segment build is placed like ``search()``: a batch whose optimized
-  plan size estimate is at most ``DRIVER_MAX_SEGMENT_BYTES`` is collected
-  once (``toArrow()``) and every segment table is built on the driver
-  with pyarrow and the same kernels — the analyzer body of
-  ``doc_term_freqs``, Spark's own term-bucket hash (folded over a
-  LocalRelation, no job) and the postings pack — so the refresh of a
-  micro-batch runs one Spark job instead of ~27. Larger or unknown-size
-  batches (no statistics, or a plan that can multiply rows) run the same
-  steps as Spark jobs. Both placements write equal rows and Spark schemas
-  under the same checkpointed steps; ``optimize()``'s merge goes through
-  the same builder.
+  One step chain builds every index fragment (:func:`_build_segment`):
+  the full build (``build_index``, and through it ``compact()`` and
+  ``reindex()``), an appended segment and ``optimize()``'s merge. It is
+  placed like ``search()``: a batch whose optimized plan size estimate
+  is at most ``DRIVER_MAX_SEGMENT_BYTES`` is collected once
+  (``toArrow()``) and every table is built on the driver with pyarrow
+  and the same kernels — the analyzer body of ``doc_term_freqs``,
+  Spark's term-bucket hash in NumPy and the postings pack — so the
+  refresh of a micro-batch, or a small full build, runs one Spark job
+  instead of ~27. Larger or unknown-size batches (no statistics, or a
+  plan that can multiply rows) and the build options only Spark serves
+  (another ``tokenizer``, ``materialize_tokens=False``) run the same
+  steps as Spark jobs. Both placements write equal rows and Spark
+  schemas under the same checkpointed steps.
 * ``Index`` (query/engine.py) unions base + segment postings; global stats
   (N, avgdl, df) are re-aggregated at plan time so scores stay EXACT after
   appends — only the baked block-max bounds are per-segment, and the
@@ -44,6 +47,7 @@ no merge work at read time.
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
@@ -55,16 +59,18 @@ from kafka_elasticsearch_standalone_consumer_spark.analysis import (
     doc_term_freqs,
     term_freqs,
     term_freqs_schema,
+    tokens_from,
 )
 from kafka_elasticsearch_standalone_consumer_spark.ids import dense_ids
 from kafka_elasticsearch_standalone_consumer_spark.index.build import (
     build_postings,
     pack_postings_arrow,
-    term_bucket_col,
+    term_buckets,
     with_shard,
 )
-from kafka_elasticsearch_standalone_consumer_spark.pipeline.builder import build_index
 from kafka_elasticsearch_standalone_consumer_spark.pipeline.checkpoint import (
+    CHECKPOINT_TABLE,
+    METRICS_TABLE,
     CheckpointLog,
     StepRunner,
 )
@@ -206,16 +212,26 @@ def _multiplies_rows(plan) -> bool:
     return any(_multiplies_rows(k) for k in kids)
 
 
-def _on_driver(batch: DataFrame) -> bool:
-    """Placement of a segment build: on the driver when the batch's
-    optimized-plan size estimate — the statistic Spark picks broadcast
-    joins by; reading it runs no job — is at most
-    ``DRIVER_MAX_SEGMENT_BYTES``. An unknown size (Long.MAX_VALUE, or a
-    plan that can multiply rows) stays on the executors."""
+# Spark's size estimate of a plan without statistics (Long.MAX_VALUE)
+UNKNOWN_BYTES = (1 << 63) - 1
+
+
+def _plan_bytes(batch: DataFrame) -> int:
+    """The batch's optimized-plan size estimate in bytes — the statistic
+    Spark picks broadcast joins by; reading it runs no job. A plan that
+    can multiply rows has no size bound and reads ``UNKNOWN_BYTES``, as
+    a plan without statistics does."""
     plan = batch._jdf.queryExecution().optimizedPlan()
     if _multiplies_rows(plan):
-        return False
-    return int(plan.stats().sizeInBytes()) <= DRIVER_MAX_SEGMENT_BYTES
+        return UNKNOWN_BYTES
+    return int(plan.stats().sizeInBytes())
+
+
+def _on_driver(batch: DataFrame) -> bool:
+    """Placement of a segment build by size: on the driver when the
+    batch's plan size estimate is at most ``DRIVER_MAX_SEGMENT_BYTES``;
+    an unknown size stays on the executors."""
+    return _plan_bytes(batch) <= DRIVER_MAX_SEGMENT_BYTES
 
 
 def _build_segment(
@@ -227,27 +243,96 @@ def _build_segment(
     base: int | None,
     totals: tuple[int, int] | None = None,
     num_partitions: int | None = None,
+    tokenizer: str = "fused",
+    materialize_tokens: bool = True,
+    stats_steps=None,
+    avgdl=None,
 ) -> None:
-    """Write one segment's tables (docs, tokens, doc_stats, term_stats,
-    seg_meta, postings) under ``swh``, one checkpointed step each, with
-    the index's analyzer / positions / layout knobs from ``meta``.
+    """Write one index fragment's tables under ``swh`` — docs, tokens,
+    doc_stats, term_stats, the ``stats_steps``, postings — one
+    checkpointed step each, with the analyzer / positions / layout knobs
+    of ``meta``. Every build runs here: :func:`build_index` (so
+    :func:`compact` and :func:`reindex`), :func:`append_segment` and
+    :func:`optimize`'s merge.
 
     ``base`` is the first doc_id: the batch's turns get dense ids from
     it in (conv_id, turn_idx) order. ``base=None`` keeps the batch's own
-    doc_ids (a merge of segments). ``totals`` = (n_docs, sum_dl) are
-    recorded as seg_meta instead of being summed from doc_stats.
+    doc_ids (a merge of segments). ``stats_steps(on_driver)`` and
+    ``avgdl()`` (the value the postings bake in) default to a segment's:
+    a ``seg_meta`` step recording ``totals`` = (n_docs, sum_dl), or the
+    sums of doc_stats, and their ratio.
 
-    Both placements write the same rows with the same Spark schemas; see
-    :func:`_on_driver` for the choice."""
-    steps = _driver_steps if _on_driver(batch) else _executor_steps
+    On the driver when :func:`_on_driver` says so and the tokens are the
+    fused analyzer's materialized rows; else as Spark jobs. Both write
+    the same rows with the same Spark schemas. The placement and the
+    size estimate behind it go to ``sys_metrics`` (phase ``docs``, keys
+    ``on_driver`` and ``plan_bytes``)."""
     knobs = dict(
         positions=bool(meta.get("positions", False)),
         analyzer=str(meta.get("analyzer", "standard")),
         docs_per_shard=int(meta["docs_per_shard"]),
         n_buckets=int(meta["n_buckets"]),
     )
-    for name, fn in steps(spark, batch, swh, base, totals, num_partitions, **knobs):
+    on_driver = (
+        materialize_tokens and (tokenizer == "fused" or knobs["positions"]) and _on_driver(batch)
+    )
+    runner.log.metric("docs", "on_driver", float(on_driver))
+    runner.log.metric("docs", "plan_bytes", float(_plan_bytes(batch)))
+    if stats_steps is None:
+
+        def step_seg_meta():
+            n, sum_dl = totals if totals is not None else _dl_totals(spark, swh, on_driver)
+            swh.write_meta("seg_meta", {"n_docs": n, "sum_dl": sum_dl})
+            return 1
+
+        stats, avgdl = [("seg_meta", step_seg_meta)], functools.partial(_baked_avgdl, swh)
+    else:
+        stats = stats_steps(on_driver)
+    if on_driver:
+        *head, postings = _driver_steps(batch, swh, base, avgdl, **knobs)
+    else:
+        *head, postings = _executor_steps(
+            spark, batch, swh, base, avgdl, num_partitions, tokenizer, materialize_tokens,
+            **knobs,
+        )
+    for name, fn in [*head, *stats, postings]:
         runner.step(name, fn)
+
+
+def build_placement(wh: Warehouse) -> dict | None:
+    """``{"on_driver": bool, "plan_bytes": int}`` as recorded by the run
+    that wrote the docs table under ``wh`` (see :func:`_build_segment`),
+    or None when that run recorded none."""
+    if not (wh.exists(CHECKPOINT_TABLE) and wh.exists(METRICS_TABLE)):
+        return None
+    runs = {
+        r["run_id"] for r in wh.read_rows(CHECKPOINT_TABLE)
+        if r["step_id"] == "docs" and r["status"] == "ok"
+    }
+    got = {
+        r["key"]: r["value"] for r in wh.read_rows(METRICS_TABLE)
+        if r["run_id"] in runs and r["phase"] == "docs" and r["key"] in ("on_driver", "plan_bytes")
+    }
+    if len(got) < 2:
+        return None
+    # a float64 row holds Long.MAX_VALUE as 2^63
+    return {"on_driver": bool(got["on_driver"]), "plan_bytes": min(int(got["plan_bytes"]), UNKNOWN_BYTES)}
+
+
+def _dl_totals(spark: SparkSession, swh: Warehouse, on_driver: bool) -> tuple[int, int]:
+    """(n_docs, sum_dl) of the doc_stats table under ``swh``."""
+    if on_driver:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        dl = pq.read_table(swh.path("doc_stats"), columns=["dl"]).column("dl")
+        return len(dl), int(pc.sum(dl).as_py() or 0)
+    row = (
+        swh.read(spark, "doc_stats")
+        .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
+        .collect()[0]
+    )
+    return row["n"], int(row["sum_dl"] or 0)
 
 
 def _baked_avgdl(swh: Warehouse) -> float:
@@ -256,59 +341,73 @@ def _baked_avgdl(swh: Warehouse) -> float:
 
 
 def _executor_steps(
-    spark, batch, swh, base, totals, num_partitions,
+    spark, batch, swh, base, avgdl, num_partitions, tokenizer, materialize_tokens,
     positions, analyzer, docs_per_shard, n_buckets,
 ):
-    """The segment steps as Spark jobs, each reading the tables the steps
-    before it wrote."""
+    """The build steps as Spark jobs, each reading the tables the steps
+    before it wrote: (name, fn) for docs, tokens (unless
+    ``materialize_tokens`` is off), doc_stats, term_stats, postings."""
 
     def step_docs():
         if base is None:
             swh.write(batch, "docs")
-        else:
-            with dense_ids(batch, num_partitions=num_partitions) as docs:
+            return swh.count_rows("docs")
+        # The id assignment's range partitioner SAMPLES its input before
+        # the shuffle consumes it, so an unmaterialized source (the
+        # generator; on a cluster: a view over decoded Kafka batches) is
+        # computed twice. Persist it for the step's duration; on a table
+        # scan this is a cheap no-op class of cache. An input the caller
+        # already cached is used as is and stays cached.
+        lvl = batch.storageLevel
+        owned = not (lvl.useMemory or lvl.useDisk)
+        src = batch.persist() if owned else batch
+        try:
+            with dense_ids(src, num_partitions=num_partitions) as docs:
                 swh.write(docs.withColumn("doc_id", F.col("doc_id") + F.lit(base)), "docs")
+        finally:
+            if owned:
+                src.unpersist()
         return swh.count_rows("docs")
 
+    def tokenize():
+        docs = swh.read(spark, "docs")
+        if tokenizer == "fused" or positions:
+            # zero-shuffle, with dl packed per row; positions parity: a
+            # segment of a positions index must pack positions too, or
+            # the query-time unionByName of base + segment postings throws
+            return doc_term_freqs(docs, positions=positions, analyzer=analyzer)
+        return tokens_from(docs, method=tokenizer, analyzer=analyzer)
+
+    def tokens():
+        # without a tokens table every step re-runs the narrow tokenize
+        # pass over docs instead of reading the forward index
+        return swh.read(spark, "tokens") if swh.exists("tokens") else tokenize()
+
     def step_tokens():
-        # positions parity with the base build: a segment of a positions
-        # index must pack positions too, or the query-time unionByName of
-        # base + segment postings throws on the missing pos columns
-        toks = doc_term_freqs(swh.read(spark, "docs"), positions=positions, analyzer=analyzer)
-        swh.write(toks, "tokens")
+        swh.write(tokenize(), "tokens")
         return swh.count_rows("tokens")
 
     def step_doc_stats():
         docs = swh.read(spark, "docs")
-        toks = swh.read(spark, "tokens")
-        swh.write(with_shard(build_doc_stats(docs, toks), docs_per_shard), "doc_stats")
+        swh.write(with_shard(build_doc_stats(docs, tokens()), docs_per_shard), "doc_stats")
         return swh.count_rows("doc_stats")
 
     def step_term_stats():
-        swh.write(build_term_stats(swh.read(spark, "tokens"), n_buckets=n_buckets), "term_stats")
+        swh.write(build_term_stats(tokens(), n_buckets=n_buckets), "term_stats")
         return swh.count_rows("term_stats")
 
-    def step_seg_meta():
-        if totals is None:
-            row = (
-                swh.read(spark, "doc_stats")
-                .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
-                .collect()[0]
-            )
-            n, sum_dl = row["n"], int(row["sum_dl"] or 0)
-        else:
-            n, sum_dl = totals
-        swh.write_meta("seg_meta", {"n_docs": n, "sum_dl": sum_dl})
-        return 1
-
     def step_postings():
-        # materialize-then-pack scratch, the full-build path's trick
-        # (byte-identical output; deleted after the table commits)
+        toks = tokens()
+        if "dl" not in toks.columns:  # a tokenizer that packs no dl
+            toks = toks.join(swh.read(spark, "doc_stats").select("doc_id", "dl"), "doc_id")
+        # materialize-then-pack scratch (leading "_" = hadoop-hidden, so a
+        # crashed build's leftover never reads as a table); deleted after
+        # the postings table commits
         scratch = swh.path("_postings_sort_scratch")
         try:
             postings = build_postings(
-                swh.read(spark, "tokens"),
-                avgdl=_baked_avgdl(swh) or 1e-9,
+                toks,
+                avgdl=avgdl() or 1e-9,
                 docs_per_shard=docs_per_shard,
                 n_buckets=n_buckets,
                 num_partitions=num_partitions,
@@ -321,22 +420,19 @@ def _executor_steps(
         return swh.count_rows("postings")
 
     return [
-        ("docs", step_docs), ("tokens", step_tokens), ("doc_stats", step_doc_stats),
-        ("term_stats", step_term_stats), ("seg_meta", step_seg_meta),
+        ("docs", step_docs), *([("tokens", step_tokens)] if materialize_tokens else []),
+        ("doc_stats", step_doc_stats), ("term_stats", step_term_stats),
         ("postings", step_postings),
     ]
 
 
-def _driver_steps(
-    spark, batch, swh, base, totals, num_partitions,
-    positions, analyzer, docs_per_shard, n_buckets,
-):
-    """The segment steps on the driver: one ``toArrow()`` collect of the
+def _driver_steps(batch, swh, base, avgdl, positions, analyzer, docs_per_shard, n_buckets):
+    """The build steps on the driver: one ``toArrow()`` collect of the
     batch, then pyarrow/NumPy over the same kernels the Spark steps run —
-    :func:`term_freqs` (the tokenizer body of ``doc_term_freqs``), the
-    term-bucket Column evaluated over a LocalRelation, and the postings
-    pack. Each step reads the tables before it back with pyarrow, so a
-    resumed build needs nothing held in memory."""
+    :func:`term_freqs` (the tokenizer body of ``doc_term_freqs``),
+    :func:`term_buckets` (Spark's term-bucket hash in NumPy) and the
+    postings pack. Each step reads the tables before it back with
+    pyarrow, so a resumed build needs nothing held in memory."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -385,37 +481,19 @@ def _driver_steps(
         ts = read("tokens", ["term", "tf"]).group_by("term").aggregate(
             [("tf", "count"), ("tf", "max")]
         )
-        ts = pa.table({"term": ts["term"], "df": ts["tf_count"], "max_tf": ts["tf_max"]})
-        # bucket and length by Spark's own expressions: projected over a
-        # LocalRelation, the optimizer folds them on the driver (collect
-        # runs no job) and the hash is Spark's by construction
-        rows = (
-            spark.createDataFrame(ts.select(["term"]))
-            .select(
-                term_bucket_col("term", n_buckets).alias("term_bucket"),
-                F.length("term").cast("int").alias("term_len"),
-            )
-            .collect()
-        ) if ts.num_rows else []
-        ts = ts.append_column(
-            "term_bucket", pa.array([r[0] for r in rows], pa.int32())
-        ).append_column("term_len", pa.array([r[1] for r in rows], pa.int32()))
+        terms = ts["term"]
+        ts = pa.table({
+            "term": terms, "df": ts["tf_count"], "max_tf": ts["tf_max"],
+            "term_bucket": pa.array(term_buckets(terms, n_buckets)),
+            "term_len": pc.utf8_length(terms).cast(pa.int32()),  # code points, as F.length
+        })
         swh.write_arrow(ts.sort_by("term"), "term_stats")
         return ts.num_rows
-
-    def step_seg_meta():
-        if totals is None:
-            dl = read("doc_stats", ["dl"]).column("dl")
-            n, sum_dl = len(dl), int(pc.sum(dl).as_py() or 0)
-        else:
-            n, sum_dl = totals
-        swh.write_meta("seg_meta", {"n_docs": n, "sum_dl": sum_dl})
-        return 1
 
     def step_postings():
         tbl = pack_postings_arrow(
             read("tokens"), read("term_stats", ["term", "term_bucket"]),
-            avgdl=_baked_avgdl(swh) or 1e-9, docs_per_shard=docs_per_shard,
+            avgdl=avgdl() or 1e-9, docs_per_shard=docs_per_shard,
             positions=positions,
         )
         swh.write_arrow(tbl, "postings", partition_by="term_bucket")
@@ -423,8 +501,7 @@ def _driver_steps(
 
     return [
         ("docs", step_docs), ("tokens", step_tokens), ("doc_stats", step_doc_stats),
-        ("term_stats", step_term_stats), ("seg_meta", step_seg_meta),
-        ("postings", step_postings),
+        ("term_stats", step_term_stats), ("postings", step_postings),
     ]
 
 
@@ -622,6 +699,8 @@ def reindex(
     Same distributed shape as :func:`compact` (which is reindex-in-place):
     one union of the per-segment doc stores, one filter, one build — no
     per-doc driver work."""
+    from kafka_elasticsearch_standalone_consumer_spark.pipeline.builder import build_index
+
     src = Warehouse(src_warehouse)
     meta = src.read_meta("sys_meta")
     segs = list_segments(src)
@@ -754,6 +833,8 @@ def compact(
     semantics to a one-shot build over the post-delete corpus. Returns the
     number of segments retired.
     """
+    from kafka_elasticsearch_standalone_consumer_spark.pipeline.builder import build_index
+
     wh = Warehouse(warehouse_path)
     segs = list_segments(wh)
     has_deletes = wh.exists(DELETES_TABLE) and wh.count_rows(DELETES_TABLE) > 0

@@ -375,9 +375,13 @@ class Index:
     def stats(self) -> dict:
         """Index-level stats (the ES ``_stats`` surface), driver-side:
         corpus scalars from sys_meta, per-step rows/wall from the
-        checkpoint lineage, segment registry summary."""
+        checkpoint lineage, segment registry summary, and per segment id
+        the placement its tables were built with (``on_driver`` and the
+        ``plan_bytes`` estimate behind it; None where unrecorded)."""
         from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
+            build_placement,
             list_segments,
+            seg_warehouse,
         )
 
         out = {"meta": dict(self.meta)}
@@ -391,6 +395,10 @@ class Index:
             segs = list_segments(self.wh)
             out["n_segments"] = max(len(segs), 1)
             out["doc_id_hi"] = segs[-1]["doc_id_hi"] if segs else self.meta["n_docs"]
+            out["placement"] = {0: build_placement(self.wh)} | {
+                s["seg_id"]: build_placement(seg_warehouse(self.wh, s["seg_id"]))
+                for s in segs[1:]
+            }
             from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
                 DELETES_TABLE,
             )

@@ -109,9 +109,19 @@ class Warehouse:
             f.type.tz is not None for f in table.schema if pa.types.is_timestamp(f.type)
         )
 
+        # no min/max statistics for binary columns: pyarrow would copy
+        # whole blobs (posting runs) into the footers, and nothing prunes
+        # on them
+        stats = [
+            f.name + (".list.element" if pa.types.is_list(f.type) else "")
+            for f in table.schema
+            if not pa.types.is_binary(f.type)
+        ]
+
         def put(tbl, path):
             pq.write_table(
-                tbl, path, use_deprecated_int96_timestamps=int96, store_schema=False
+                tbl, path, use_deprecated_int96_timestamps=int96, store_schema=False,
+                write_statistics=stats,
             )
 
         tmp = self.path(f"_tmp-{name}-{uuid.uuid4().hex}")

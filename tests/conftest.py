@@ -4,6 +4,31 @@ import pytest
 
 from kafka_elasticsearch_standalone_consumer_spark.session import get_spark
 
+# incremental.DRIVER_MAX_SEGMENT_BYTES per --segment-placement: just below
+# an unknown size (Long.MAX_VALUE, or a plan that can multiply rows, still
+# goes to the executors), or below zero (even an empty batch runs as Spark
+# jobs)
+SEGMENT_LIMITS = {"driver": 1 << 62, "executor": -1}
+
+
+def pytest_addoption(parser):
+    parser.addoption(
+        "--segment-placement",
+        choices=sorted(SEGMENT_LIMITS),
+        default=None,
+        help="force the placement of every index build in the run (build_index, "
+        "append_segment, compact, reindex, optimize) by setting "
+        "incremental.DRIVER_MAX_SEGMENT_BYTES for the whole session",
+    )
+
+
+def pytest_configure(config):
+    placement = config.getoption("--segment-placement")
+    if placement is not None:
+        from kafka_elasticsearch_standalone_consumer_spark.pipeline import incremental
+
+        incremental.DRIVER_MAX_SEGMENT_BYTES = SEGMENT_LIMITS[placement]
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -54,16 +79,13 @@ def placements(monkeypatch):
 
 @pytest.fixture
 def segment_placements(monkeypatch):
-    """Iterate the placements of append_segment's segment build, each
-    forced in turn: 'driver' lifts the size threshold to just below an
-    unknown size (Long.MAX_VALUE, and a plan that can multiply rows,
-    still go to the executors),
-    'executor' sets it below zero so even an empty batch runs as Spark
-    jobs."""
+    """Iterate the placements of the index build (build_index,
+    append_segment and the merges), each forced in turn through
+    ``SEGMENT_LIMITS``."""
     from kafka_elasticsearch_standalone_consumer_spark.pipeline import incremental
 
     def each():
-        for name, limit in (("driver", 1 << 62), ("executor", -1)):
+        for name, limit in SEGMENT_LIMITS.items():
             monkeypatch.setattr(incremental, "DRIVER_MAX_SEGMENT_BYTES", limit)
             yield name
         monkeypatch.undo()
