@@ -327,12 +327,25 @@ def _dl_totals(spark: SparkSession, swh: Warehouse, on_driver: bool) -> tuple[in
 
         dl = pq.read_table(swh.path("doc_stats"), columns=["dl"]).column("dl")
         return len(dl), int(pc.sum(dl).as_py() or 0)
-    row = (
-        swh.read(spark, "doc_stats")
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl"))
-        .collect()[0]
-    )
+    return _doc_stats_totals(swh.read(spark, "doc_stats"))
+
+
+def _doc_stats_totals(doc_stats: DataFrame) -> tuple[int, int]:
+    """(n_docs, sum_dl) of a doc_stats frame: the exact long sum every
+    build divides by n for its avgdl."""
+    row = doc_stats.agg(F.count("*").alias("n"), F.sum("dl").alias("sum_dl")).collect()[0]
     return row["n"], int(row["sum_dl"] or 0)
+
+
+def _tokenize_docs(docs: DataFrame, tokenizer: str, positions: bool, analyzer: str) -> DataFrame:
+    """The tokens table of ``docs`` as the Spark build writes it: the
+    fused tokenizer (zero-shuffle, dl packed per row) for ``"fused"`` or
+    with positions — a segment of a positions index must pack positions
+    too, or the query-time unionByName of base + segment postings throws
+    — else ``tokenizer``'s rows, which carry no dl."""
+    if tokenizer == "fused" or positions:
+        return doc_term_freqs(docs, positions=positions, analyzer=analyzer)
+    return tokens_from(docs, method=tokenizer, analyzer=analyzer)
 
 
 def _baked_avgdl(swh: Warehouse) -> float:
@@ -370,13 +383,7 @@ def _executor_steps(
         return swh.count_rows("docs")
 
     def tokenize():
-        docs = swh.read(spark, "docs")
-        if tokenizer == "fused" or positions:
-            # zero-shuffle, with dl packed per row; positions parity: a
-            # segment of a positions index must pack positions too, or
-            # the query-time unionByName of base + segment postings throws
-            return doc_term_freqs(docs, positions=positions, analyzer=analyzer)
-        return tokens_from(docs, method=tokenizer, analyzer=analyzer)
+        return _tokenize_docs(swh.read(spark, "docs"), tokenizer, positions, analyzer)
 
     def tokens():
         # without a tokens table every step re-runs the narrow tokenize

@@ -63,6 +63,48 @@ MANY_SCHEMA = "qid string, " + TOPK_SCHEMA + ", rank int"
 # So the wall crossover is ~2M postings; the constant sits below it.
 DRIVER_MAX_POSTINGS = 1_500_000
 
+# The ops of the (col, op, value) filter surface: op → (pyarrow.compute
+# function, SQL spelling). The pc function takes a dataset field expression
+# (pushed into the doc-store scan) or an Arrow array alike; the SQL
+# spelling is what _filters_to_sql renders for the distributed surfaces.
+_FILTER_OPS = {
+    "=": ("equal", "="),
+    "!=": ("not_equal", "<>"),
+    "<": ("less", "<"),
+    "<=": ("less_equal", "<="),
+    ">": ("greater", ">"),
+    ">=": ("greater_equal", ">="),
+    "in": ("is_in", "IN"),
+    "isnull": ("is_null", "IS NULL"),
+    "notnull": ("is_valid", "IS NOT NULL"),
+}
+_NULL_OPS = ("isnull", "notnull")  # the ops that take no literal
+
+
+def _filter_op(op: str, val, surface: str = "") -> tuple[str, str]:
+    """The :data:`_FILTER_OPS` row of one filter, after the checks both
+    front ends share. A ``None`` literal is refused, alone or in an
+    ``in`` list: SQL's ``= NULL`` / ``IN (NULL)`` never match, where
+    Arrow's ``is_in`` matches null rows — use ``isnull`` instead."""
+    if op not in _FILTER_OPS:
+        raise ValueError(f"unsupported {surface}filter op {op!r} (use {tuple(_FILTER_OPS)})")
+    if op not in _NULL_OPS and (val is None or (op == "in" and None in list(val))):
+        raise ValueError("unsupported filter literal None")
+    return _FILTER_OPS[op]
+
+
+def _filter_predicate(x, op: str, val, surface: str = ""):
+    """``x op val`` through the op table — a dataset expression for a
+    field expression ``x``, a BooleanArray (null where SQL gives NULL)
+    for an Arrow array ``x``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    fn = getattr(pc, _filter_op(op, val, surface)[0])
+    if op in _NULL_OPS:
+        return fn(x)
+    return fn(x, pa.array(list(val)) if op == "in" else val)
+
 
 def _boost_combine(score: "F.Column", fv: "F.Column", boost_mode: str) -> "F.Column":
     """ES function_score ``boost_mode``: combine the query score with the
@@ -236,27 +278,23 @@ class Index:
         doc_stats are kept).
         """
         from kafka_elasticsearch_standalone_consumer_spark import B, BLOCK_SIZE, K1
-        from kafka_elasticsearch_standalone_consumer_spark.analysis import (
-            doc_term_freqs,
-            tokens_from,
-        )
         from kafka_elasticsearch_standalone_consumer_spark.index.build import build_postings
+        from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
+            _doc_stats_totals,
+            _tokenize_docs,
+        )
         from kafka_elasticsearch_standalone_consumer_spark.stats import (
-            build_corpus_stats,
             build_doc_stats,
             build_term_stats,
         )
 
         spark = docs.sparkSession
-        if tokenizer == "fused" or positions:
-            tokens = doc_term_freqs(docs, positions=positions, analyzer=analyzer).persist()
-        else:
-            tokens = tokens_from(docs, method=tokenizer, analyzer=analyzer).persist()
+        tokens = _tokenize_docs(docs, tokenizer, positions, analyzer).persist()
         doc_stats = build_doc_stats(docs, tokens).persist()
-        row = build_corpus_stats(doc_stats).collect()[0]
+        n, sum_dl = _doc_stats_totals(doc_stats)
         meta = {
-            "n_docs": row["n_docs"],
-            "avgdl": row["avgdl"] or 0.0,
+            "n_docs": n,
+            "avgdl": sum_dl / n if n else 0.0,
             "docs_per_shard": docs_per_shard,
             "n_buckets": n_buckets,
             "block_size": BLOCK_SIZE,
@@ -740,7 +778,7 @@ class Index:
             and _blocked_docs is None
         ):
             d, s = self._local_topk(
-                query_text, k, mode, None, self._local_blocked(), plan=(idfw, buckets)
+                query_text, k, mode, *self._local_mask(), plan=(idfw, buckets)
             )
             if min_score is not None:
                 keep = s >= float(min_score)
@@ -780,12 +818,10 @@ class Index:
             out = out.filter(F.col("score") >= float(min_score))
         return out
 
-    # conjunction ops supported by the serving-path filter surface
-    _LOCAL_OPS = ("=", "!=", "<", "<=", ">", ">=", "in", "isnull", "notnull")
-
     def _local_blocked(self) -> "np.ndarray | None":
         """Tombstoned doc_ids as a sorted int64 array (driver-side read
-        of the small tombstone table), or None."""
+        of the small tombstone table), or None. Called only by
+        :meth:`_local_mask`."""
         from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
             DELETES_TABLE,
         )
@@ -821,38 +857,19 @@ class Index:
         return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
 
     def _local_allowed(self, where: list[tuple]) -> "np.ndarray":
-        """doc_ids satisfying a conjunction of ``(col, op, value)``
+        """Sorted doc_ids satisfying a conjunction of ``(col, op, value)``
         filters — a driver-side pyarrow read of the doc store pruned to
-        the doc_id column with the predicate pushed into the scan. The
-        serving-path filter surface: meant for SELECTIVE predicates (the
-        allowed set is materialized driver-side); broad analytical
-        filters belong on :meth:`search`'s SQL ``where=``, which stays
-        distributed."""
+        the doc_id column, each filter pushed into the scan as its
+        :data:`_FILTER_OPS` expression (the row set equals
+        ``_docs_df().filter(_filters_to_sql(where))``). Called only by
+        :meth:`_local_mask`. Meant for SELECTIVE predicates (the allowed
+        set is materialized driver-side); broad analytical filters belong
+        on :meth:`search`'s SQL ``where=``, which stays distributed."""
         import pyarrow.dataset as pads
 
         expr = None
         for col, op, val in where:
-            f = pads.field(col)
-            if op == "=":
-                e = f == val
-            elif op == "!=":
-                e = f != val
-            elif op == "<":
-                e = f < val
-            elif op == "<=":
-                e = f <= val
-            elif op == ">":
-                e = f > val
-            elif op == ">=":
-                e = f >= val
-            elif op == "in":
-                e = f.isin(list(val))
-            elif op == "isnull":
-                e = f.is_null()
-            elif op == "notnull":
-                e = f.is_valid()
-            else:
-                raise ValueError(f"unsupported local filter op {op!r} (use {self._LOCAL_OPS})")
+            e = _filter_predicate(pads.field(col), op, val, "local ")
             expr = e if expr is None else expr & e
         parts = []
         for w in self._seg_whs:
@@ -866,18 +883,28 @@ class Index:
         return np.unique(np.concatenate(parts))
 
     def _local_mask(
-        self, where: list[tuple] | None
+        self,
+        where: list[tuple] | None = None,
+        allowed: "np.ndarray | None" = None,
+        blocked: "np.ndarray | None" = None,
     ) -> tuple["np.ndarray | None", "np.ndarray | None"]:
-        """(allowed, blocked) doc masks of the serving path: the
-        tombstones alone, or with ``where`` the allowed set minus the
-        tombstones (the allowed mask then subsumes them)."""
-        blocked = self._local_blocked()
-        if where is None:
-            return None, blocked
-        allowed = self._local_allowed(where)
-        if blocked is not None:
-            allowed = np.setdiff1d(allowed, blocked)
-        return allowed, None
+        """(allowed, blocked) sorted doc masks of the driver placement —
+        the twin of :meth:`_mask_plan`, and the only mask builder of the
+        serving path (apply it with ``kernels._apply_doc_masks`` or hand
+        it to a kernel). ``where`` (:meth:`_local_allowed`) and
+        ``allowed`` intersect; ``blocked`` unions with the delete
+        tombstones; an allowed set absorbs the blocked ones, so at most
+        one of the two comes back non-None. Corpus statistics never see
+        either mask."""
+        if where is not None:
+            wa = self._local_allowed(where)
+            allowed = wa if allowed is None else np.intersect1d(allowed, wa)
+        tombs = self._local_blocked()
+        if tombs is not None:
+            blocked = tombs if blocked is None else np.union1d(blocked, tombs)
+        if allowed is not None and blocked is not None:
+            return np.setdiff1d(allowed, blocked), None
+        return allowed, blocked
 
     def get_docs_local(self, doc_ids: list[int]) -> list[dict]:
         """ES ``_mget`` on the zero-Spark-job serving path: pyarrow point
@@ -890,15 +917,9 @@ class Index:
 
         if self.wh is None:
             raise ValueError("get_docs_local serves from warehouse files — use get_docs()")
-        ids = sorted({int(d) for d in doc_ids})
-        if not ids:
+        ids, _ = self._local_mask(allowed=np.unique(np.asarray(list(doc_ids), dtype=np.int64)))
+        if not len(ids):
             return []
-        blocked = self._local_blocked()
-        if blocked is not None:
-            dead = set(blocked.tolist())
-            ids = [d for d in ids if d not in dead]
-            if not ids:
-                return []
         out: list[dict] = []
         for w in self._seg_whs:
             tbl = pads.dataset(w.path("docs"), format="parquet").to_table(
@@ -985,7 +1006,7 @@ class Index:
         """Filter-context queries (ids / exists / missing / filtered
         match_all) on the zero-Spark-job serving path: the (col, op,
         value) conjunction resolves to an allowed-doc set via ONE pruned
-        pyarrow doc-store read (:meth:`_local_allowed` — doc_id column +
+        pyarrow doc-store read (:meth:`_local_mask` — doc_id column +
         pushed predicate only), tombstones drop, first k by doc_id at
         constant score ``boost``. The ES surfaces map directly:
         ids → ``[("doc_id", "in", ids)]``, exists → ``[(f, "notnull",
@@ -1114,7 +1135,7 @@ class Index:
         path (same synthetic-term BM25: df aggregated over UNMASKED
         matches across shards, so filters/tombstones never shift idf).
         ``where`` is the serving-path filter surface (see
-        :meth:`_local_allowed`)."""
+        :meth:`_local_mask`)."""
         slots, offsets = self._analyze_phrase(phrase)
         return self._positional_topk_local(
             [[t] for t in slots], None, k, where, slop=slop, offsets=offsets
@@ -1320,7 +1341,7 @@ class Index:
         (driver-side read of the small tombstone table). ``where`` is the
         serving-path filter surface — a conjunction of ``(col, op, value)``
         tuples resolved to an allowed-doc set by a pruned pyarrow read of
-        the doc store (see :meth:`_local_allowed`); scores are identical
+        the doc store (see :meth:`_local_mask`); scores are identical
         to the unfiltered ranks of surviving docs, exactly like
         ``search(where=...)`` (ES keeps corpus statistics global under a
         filter clause). For broad analytical predicates or
@@ -1418,15 +1439,17 @@ class Index:
         the distributed path; set membership at the EXACT radius boundary
         may differ by a trig ulp between libm implementations — pick radii
         off the boundary (every real query does). ``where`` tuples narrow
-        the set further, like the serving-path filter surface."""
+        the set further; :meth:`_local_mask` intersects the two and drops
+        the tombstones."""
         ids, lat_deg, lon_deg = self._local_geo_coords(
             lat_col, lon_col, "search_geo_distance_local"
         )
         if ids is None:
             return []
         dist = self._np_haversine_km(lat_deg, lon_deg, origin)
-        allowed = np.unique(ids[dist <= float(radius_km)])
-        return self._local_geo_finish(query_text, k, allowed, where, mode)
+        allowed, blocked = self._local_mask(where, np.unique(ids[dist <= float(radius_km)]))
+        d, s = self._local_topk(query_text, k, mode, allowed, blocked)
+        return list(zip(d.tolist(), s.tolist()))
 
     def _local_geo_coords(self, lat_col: str, lon_col: str, caller: str):
         """(doc_ids, lat_deg, lon_deg) float64 arrays from a pruned pyarrow
@@ -1465,17 +1488,6 @@ class Index:
             + np.cos(lat) * np.cos(lat0) * np.sin((lon - lon0) / 2) ** 2
         )
         return 2 * 6371.0088 * np.arcsin(np.sqrt(a))
-
-    def _local_geo_finish(self, query_text, k, allowed, where, mode):
-        """Shared tail of the geo serving twins: filters + tombstones, the
-        shared local kernel, (score desc, id asc) top-k."""
-        if where is not None:
-            allowed = np.intersect1d(allowed, self._local_allowed(where))
-        blocked = self._local_blocked()
-        if blocked is not None:
-            allowed = np.setdiff1d(allowed, blocked)
-        d, s = self._local_topk(query_text, k, mode, allowed, None)
-        return list(zip(d.tolist(), s.tolist()))
 
     def search_geo_shape_local(
         self,
@@ -1551,8 +1563,9 @@ class Index:
             raise ValueError(
                 f"unsupported geo_shape relation for point fields: {relation!r}"
             )
-        allowed = np.unique(ids[mask])
-        return self._local_geo_finish(query_text, k, allowed, where, mode)
+        allowed, blocked = self._local_mask(where, np.unique(ids[mask]))
+        d, s = self._local_topk(query_text, k, mode, allowed, blocked)
+        return list(zip(d.tolist(), s.tolist()))
 
     def _local_shape_coords(self, shape_col: str):
         """(doc_ids, lons (n,V), lats (n,V)) from a pruned pyarrow read of
@@ -1652,10 +1665,9 @@ class Index:
                 f"unsupported geo_shape relation for a point query against "
                 f"polygon docs: {relation!r}"
             )
-        allowed = np.unique(ids[mask])
-        return self._local_geo_finish(query_text, k, allowed, where, mode)
-
-    _NESTED_LOCAL_OPS = ("=", "!=", "<", "<=", ">", ">=", "in", "isnull", "notnull")
+        allowed, blocked = self._local_mask(where, np.unique(ids[mask]))
+        d, s = self._local_topk(query_text, k, mode, allowed, blocked)
+        return list(zip(d.tolist(), s.tolist()))
 
     def _local_nested_scores(
         self, nested_col: str, inner: list[tuple], inner_score: str | None
@@ -1663,38 +1675,15 @@ class Index:
         """(doc_ids with ≥1 matching object, per-mode clause scores) from a
         driver-side pyarrow read of (doc_id, ``nested_col``) — the nested
         counterpart of :meth:`_local_allowed`. Per-object predicates are a
-        conjunction of ``(field, op, value)`` tuples evaluated vectorized
-        over the FLATTENED struct children; per-doc rollups come from one
+        conjunction of ``(field, op, value)`` tuples, each the
+        :data:`_FILTER_OPS` function over a FLATTENED struct child (a NULL
+        comparison drops the object, as in SQL); per-doc rollups come from one
         ``bincount``/``maximum.at`` pass over the list offsets. The sum
         accumulates in array order — the same left-fold order as the
         distributed ``aggregate()`` — so scores stay bit-identical."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
-
-        def cmp(vals, op, val):
-            if op == "isnull":
-                return pd.isna(vals)
-            if op == "notnull":
-                return ~pd.isna(vals)
-            if op == "in":
-                return np.isin(vals, list(val))
-            with np.errstate(invalid="ignore"):
-                if op == "=":
-                    return vals == val
-                if op == "!=":
-                    return (vals != val) & ~pd.isna(vals)
-                if op == "<":
-                    return vals < val
-                if op == "<=":
-                    return vals <= val
-                if op == ">":
-                    return vals > val
-                if op == ">=":
-                    return vals >= val
-            raise ValueError(
-                f"unsupported nested filter op {op!r} (use {self._NESTED_LOCAL_OPS})"
-            )
 
         out_ids, out = [], {m: [] for m in ("sum", "avg", "max", "min")}
         for w in self._seg_whs:
@@ -1714,8 +1703,8 @@ class Index:
             n = len(ids)
             mask = np.ones(len(flat), dtype=bool)
             for field, op, val in inner:
-                vals = flat.field(field).to_numpy(zero_copy_only=False)
-                mask &= np.asarray(cmp(vals, op, val), dtype=bool)
+                hit = _filter_predicate(flat.field(field), op, val, "nested ")
+                mask &= hit.fill_null(False).to_numpy(zero_copy_only=False)
             if inner_score is not None:
                 scores = flat.field(inner_score).to_numpy(
                     zero_copy_only=False
@@ -1760,11 +1749,11 @@ class Index:
         condition as ``(field, op, value)`` tuples (the serving-path
         filter surface) instead of SQL — equivalent tuples produce
         score-identical results. The doc store's (doc_id, array) columns
-        are read driver-side (like :meth:`_local_allowed`, meant for
+        are read driver-side (like :meth:`_local_mask`, meant for
         serving-sized corpora — the distributed path is the 100-TB
         shape); the text clause rides the shared local kernel with the
         COMPLETE score set so adding the nested score cannot reorder a
-        truncated list. Ordering-comparison ops require numeric fields.
+        truncated list. Tombstones drop through :meth:`_local_mask`.
         """
         if self.wh is None:
             raise ValueError(
@@ -1781,9 +1770,8 @@ class Index:
             if score_mode == "none"
             else rolls[score_mode]
         )
-        blocked = self._local_blocked()
-        if blocked is not None:
-            keep = ~np.isin(nids, blocked)
+        keep = kernels._apply_doc_masks(nids, *self._local_mask())
+        if keep is not None:
             nids, nsc = nids[keep], nsc[keep]
         order = np.argsort(nids, kind="stable")
         nids, nsc = nids[order], nsc[order]
@@ -1888,69 +1876,22 @@ class Index:
         k: int = 10,
     ) -> list[tuple[int, float]]:
         """ES ``bool`` on the zero-Spark-job serving path — the serving
-        twin of :meth:`search_bool` / ``run_parsed`` with identical
-        semantics: should+must terms score (BM25 sum, global stats), must
-        restricts to docs containing ALL its analyzed terms, must_not
-        excludes docs containing ANY of its terms, ``phrases`` are
-        (text, slop) match_phrase clauses summed bool-should style, and
-        ``where`` is the serving-path (col, op, value) filter surface.
-        Tombstones honored; corpus statistics never shift under any
-        restriction (phrase df counts unmasked matches).
-
-        Execution: must/must_not doc sets come from the same pruned
-        postings decode the terms query uses; each scoring clause
-        produces its COMPLETE driver-side score set (exact kernel /
-        phrase kernel over the one pruned postings read), summed per doc
-        with NumPy. Everything is |q|-proportional pyarrow point reads —
-        zero Spark jobs, same contract as :meth:`search_local`."""
+        twin of :meth:`search_bool`: the same :class:`ParsedQuery`, run by
+        :meth:`_run_parsed_local`. should+must terms score (BM25 sum,
+        global stats), must restricts to docs containing ALL its analyzed
+        terms, must_not excludes docs containing ANY of its terms,
+        ``phrases`` are (text, slop) match_phrase clauses summed
+        bool-should style, and ``where`` is the serving-path (col, op,
+        value) filter surface. Tombstones honored; corpus statistics
+        never shift under any restriction (phrase df counts unmasked
+        matches)."""
         if self.wh is None:
             raise ValueError(
                 "search_bool_local serves from warehouse files — use search_bool()"
             )
-        should_toks = [t for s in (should or []) for t in self._analyze(s)]
-        must_toks = [t for s in (must or []) for t in self._analyze(s)]
-        not_toks = sorted({t for s in (must_not or []) for t in self._analyze(s)})
-        allowed = None
-        if must_toks:
-            allowed = self._local_match_set(must_toks, len(set(must_toks)))
-            if not len(allowed):
-                return []
-        if where is not None:
-            wa = self._local_allowed(where)
-            allowed = wa if allowed is None else np.intersect1d(allowed, wa)
-            if not len(allowed):
-                return []
-        blocked = self._local_blocked()
-        if not_toks:
-            ns = self._local_match_set(not_toks, 1)
-            blocked = ns if blocked is None else np.union1d(blocked, ns)
-        if allowed is not None and blocked is not None:
-            allowed = np.setdiff1d(allowed, blocked)
-            blocked = None  # allowed mask subsumes the exclusions
-        score_terms = should_toks + must_toks
-        parts: list[tuple[np.ndarray, np.ndarray]] = []
-        if score_terms:
-            parts.append(
-                self._local_term_scores(
-                    " ".join(score_terms), allowed, blocked, per_shard_k=None,
-                    mode="exact",
-                )
-            )
-        for phrase, slop in phrases or []:
-            parts.append(
-                self._phrase_scores_local(phrase, int(slop), allowed, blocked)
-            )
-        parts = [(d, s) for d, s in parts if len(d)]
-        if not parts:
-            return []
-        dd = np.concatenate([d for d, _ in parts])
-        ss = np.concatenate([s for _, s in parts])
-        # ES bool should: per-doc sum over the union of clause matches
-        uniq, inv = np.unique(dd, return_inverse=True)
-        summed = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(summed, inv, ss)
-        top = np.lexsort((uniq, -summed))[:k]
-        return [(int(uniq[i]), float(summed[i])) for i in top]
+        return self._run_parsed_local(
+            self._bool_query(must, should, must_not, phrases), k, where
+        )
 
     def simple_query_string_local(
         self,
@@ -1960,18 +1901,11 @@ class Index:
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
         """ES ``simple_query_string`` on the zero-Spark-job serving path
-        — the serving twin of :meth:`simple_query_string` (same parser,
-        same clause semantics as ``run_parsed``): should/must terms score
-        together (BM25 sum, global stats), must restricts to docs holding
-        ALL its terms, must_not excludes, phrases sum bool-should style,
-        and trailing-* prefixes add constant-score 1.0 per matching doc
-        (Lucene's CONSTANT_SCORE rewrite) — additionally restricting when
-        the query is conjunctive ('+'), exactly like the distributed
-        executor. ``where`` is the serving-path (col, op, value) tuple
-        surface; tombstones honored; stats never shift under masks.
-
-        Everything is |q|-proportional pyarrow point reads — the
-        dictionary expansion is the SAME pruned term_stats range read the
+        — the serving twin of :meth:`simple_query_string`: the same
+        parser, run by :meth:`_run_parsed_local`. ``where`` is the
+        serving-path (col, op, value) tuple surface; tombstones honored;
+        stats never shift under masks. The dictionary expansion of
+        trailing-* prefixes is the SAME pruned term_stats range read the
         distributed path uses (:meth:`_expand_prefix`), so the whole
         lenient end-user language serves without a Spark job."""
         from kafka_elasticsearch_standalone_consumer_spark.query.querystring import (
@@ -1986,7 +1920,24 @@ class Index:
         parsed = parse_simple_query_string(
             q, self.meta.get("analyzer", "standard"), default_operator
         )
-        score_terms = parsed.should + parsed.must
+        return self._run_parsed_local(parsed, k, where)
+
+    def _run_parsed_local(
+        self, parsed, k: int, where: list[tuple] | None
+    ) -> list[tuple[int, float]]:
+        """Execute the should / must / must_not / phrases / prefixes of a
+        :class:`ParsedQuery` on the driver — the mirror of
+        ``querystring.run_parsed``, with the same clause semantics:
+        should+must terms score together, must restricts to docs holding
+        ALL its terms, must_not excludes, phrases sum bool-should style,
+        and trailing-* prefixes add constant-score 1.0 per matching doc
+        (Lucene's CONSTANT_SCORE rewrite), restricting too when the query
+        has must terms. The must / must_not / prefix doc sets come from
+        the pruned postings decode (:meth:`_local_match_set`) and ONE
+        :meth:`_local_mask` with ``where`` and the tombstones; each
+        scoring clause produces its COMPLETE score set (exact kernel /
+        phrase kernel), summed per doc with NumPy. Everything is
+        |q|-proportional pyarrow point reads — zero Spark jobs."""
         must_toks = sorted(set(parsed.must))
         not_toks = sorted(set(parsed.must_not))
         prefix_sets: list[np.ndarray | None] = []
@@ -2008,18 +1959,12 @@ class Index:
                 allowed = ms if allowed is None else np.intersect1d(allowed, ms)
             if not len(allowed):
                 return []
-        if where is not None:
-            wa = self._local_allowed(where)
-            allowed = wa if allowed is None else np.intersect1d(allowed, wa)
-            if not len(allowed):
-                return []
-        blocked = self._local_blocked()
-        if not_toks:
-            ns = self._local_match_set(not_toks, 1)
-            blocked = ns if blocked is None else np.union1d(blocked, ns)
-        if allowed is not None and blocked is not None:
-            allowed = np.setdiff1d(allowed, blocked)
-            blocked = None  # allowed mask subsumes the exclusions
+        allowed, blocked = self._local_mask(
+            where, allowed, self._local_match_set(not_toks, 1) if not_toks else None
+        )
+        if allowed is not None and not len(allowed):
+            return []
+        score_terms = parsed.should + parsed.must
         parts: list[tuple[np.ndarray, np.ndarray]] = []
         if score_terms:
             parts.append(
@@ -2033,22 +1978,17 @@ class Index:
                 self._phrase_scores_local(phrase, int(slop), allowed, blocked)
             )
         for ms in prefix_sets:
-            # CONSTANT_SCORE prefix rewrite: matching docs add 1.0
             if ms is None:
                 continue
-            d = ms
-            if allowed is not None:
-                d = np.intersect1d(d, allowed)
-            if blocked is not None:
-                d = np.setdiff1d(d, blocked)
-            parts.append(
-                (d.astype(np.int64), np.ones(len(d), dtype=np.float64))
-            )
+            keep = kernels._apply_doc_masks(ms, allowed, blocked)
+            d = ms if keep is None else ms[keep]
+            parts.append((d, np.ones(len(d), dtype=np.float64)))
         parts = [(d, s) for d, s in parts if len(d)]
         if not parts:
             return []
         dd = np.concatenate([d for d, _ in parts])
         ss = np.concatenate([s for _, s in parts])
+        # ES bool should: per-doc sum over the union of clause matches
         uniq, inv = np.unique(dd, return_inverse=True)
         summed = np.zeros(len(uniq), dtype=np.float64)
         np.add.at(summed, inv, ss)
@@ -2643,19 +2583,22 @@ class Index:
         clauses summed ES-bool-should style with the term clause,
         ``filters`` are (column, value) metadata filter clauses. Corpus
         statistics stay global under every restriction."""
-        from kafka_elasticsearch_standalone_consumer_spark.query.querystring import (
-            ParsedQuery,
-            run_parsed,
-        )
+        from kafka_elasticsearch_standalone_consumer_spark.query.querystring import run_parsed
 
-        parsed = ParsedQuery(
+        return run_parsed(self, self._bool_query(must, should, must_not, phrases, filters), k)
+
+    def _bool_query(self, must, should, must_not, phrases, filters=None):
+        """The :class:`ParsedQuery` of a structured bool query: each
+        clause string analyzed with the index's analyzer."""
+        from kafka_elasticsearch_standalone_consumer_spark.query.querystring import ParsedQuery
+
+        return ParsedQuery(
             should=[t for s in (should or []) for t in self._analyze(s)],
             must=[t for s in (must or []) for t in self._analyze(s)],
             must_not=[t for s in (must_not or []) for t in self._analyze(s)],
             phrases=[(p, int(slop)) for p, slop in (phrases or [])],
             filters=list(filters or []),
         )
-        return run_parsed(self, parsed, k)
 
     def search_dis_max(
         self,
@@ -3537,8 +3480,8 @@ class Index:
         pdf = self._local_postings(buckets, terms)
         if pdf is None:
             return self._frame(MANY_SCHEMA)
-        blocked = self._local_blocked()
-        parts = [per_shard(g, blocked=blocked) for _, g in pdf.groupby("shard", sort=False)]
+        allowed, blocked = self._local_mask()
+        parts = [per_shard(g, allowed, blocked) for _, g in pdf.groupby("shard", sort=False)]
         out = pd.concat(parts, ignore_index=True)
         if not len(out):
             return self._frame(MANY_SCHEMA)
@@ -4430,7 +4373,7 @@ class Index:
         Zero Spark jobs, like the rest of the serving path: prefix
         expansion over the term-sorted dictionary (bounded by
         MAX_EXPANSION_SCAN), the context doc set from one pyarrow
-        doc-store read (:meth:`_local_allowed`), ONE pruned postings
+        doc-store read (:meth:`_local_mask`), ONE pruned postings
         decode for the candidate terms, and an ``np.isin`` per term.
         Tombstones excluded — this is a live doc COUNT inside the
         context, not a corpus statistic, so unlike idf it must not count
@@ -4441,20 +4384,20 @@ class Index:
         if not cand:
             return self._frame(out_schema)
         per_term = self._local_term_docs(cand, "suggest_complete() or rebuild")
-        allowed = self._local_allowed(context) if context else None
-        blocked = self._local_blocked()
         if not per_term:
             return self._frame(out_schema)
+        allowed, blocked = self._local_mask(context or None)
         ranked = []
         for term, d in per_term.items():
-            if allowed is not None:
-                d = d[np.isin(d, allowed)]
-            if blocked is not None and len(d):
-                d = d[~np.isin(d, blocked)]
-            if len(d):
-                ranked.append((term, int(len(d))))
+            keep = kernels._apply_doc_masks(d, allowed, blocked)
+            n = len(d) if keep is None else int(keep.sum())
+            if n:
+                ranked.append((term, n))
         ranked.sort(key=lambda tf: (-tf[1], tf[0]))
-        return self.spark.createDataFrame(ranked[: int(size)], out_schema)
+        top = ranked[: int(size)]
+        return self._frame(
+            out_schema, {"suggestion": [t for t, _ in top], "freq": [n for _, n in top]}
+        )
 
     def suggest_phrase(
         self,
@@ -4638,14 +4581,13 @@ class Index:
             # persisted layouts, the distributed match set on ephemeral
             # ones). Walk the LM ranking until `size` suggestions survive.
             kept = []
+            allowed, blocked = self._local_mask()
             for phrase, sc in scored:
                 terms = phrase.split()
                 if self.wh is not None:
                     d = self._local_match_set(terms, len(set(terms)))
-                    blocked = self._local_blocked()
-                    if blocked is not None and len(d):
-                        d = d[~np.isin(d, blocked)]
-                    hit = len(d) > 0
+                    keep = kernels._apply_doc_masks(d, allowed, blocked)
+                    hit = bool(len(d) if keep is None else keep.any())
                 else:
                     hit = self._match_set(terms, len(set(terms))).limit(1).count() > 0
                 if hit:
@@ -6977,27 +6919,19 @@ class Index:
         min_should_match: int = 1,
     ) -> int:
         """Zero-Spark-job twin of :meth:`count`: pruned postings decode
-        for the match set, pyarrow doc-store read for the filter, NumPy
-        set algebra for tombstones — same semantics, returns the bare
-        int. ``where`` is the serving-path ``(col, op, value)`` tuple
-        surface (see :meth:`_local_allowed`)."""
-        import numpy as np
-
+        for the match set, then :meth:`_local_mask` with the filter and
+        the tombstones — same semantics, returns the bare int. ``where``
+        is the serving-path ``(col, op, value)`` tuple surface."""
         if self.wh is None:
             raise ValueError("count_local serves from warehouse files")
         terms = sorted(set(self._analyze(query_text)))
-        if terms:
-            if min_should_match > len(terms):
-                return 0
-            d = self._local_match_set(terms, min_should_match)
-            if where is not None:
-                d = np.intersect1d(d, self._local_allowed(where))
-        else:
-            d = self._local_allowed(where or [])
-        blocked = self._local_blocked()
-        if blocked is not None:
-            d = np.setdiff1d(d, blocked)
-        return int(d.size)
+        if not terms:  # match_all: every doc the filter keeps
+            allowed, _ = self._local_mask(where or [])
+            return int(allowed.size)
+        if min_should_match > len(terms):
+            return 0
+        allowed, _ = self._local_mask(where, self._local_match_set(terms, min_should_match))
+        return int(allowed.size)
 
     def search_terminate_after(
         self,
@@ -7047,9 +6981,11 @@ class Index:
 
 def _filters_to_sql(filters: list[tuple]) -> str:
     """Compile a conjunction of ``(col, op, value)`` tuples — the same
-    surface :meth:`Index._local_allowed` takes — into a Spark SQL boolean.
-    One filter definition serves BOTH execution paths: tuples go verbatim
-    to the pyarrow serving twins, and through here to every distributed
+    surface :meth:`Index._local_allowed` takes — into a Spark SQL boolean,
+    each op spelled as in :data:`_FILTER_OPS` and checked by
+    :func:`_filter_op`. One filter definition serves BOTH execution paths:
+    tuples go verbatim to the pyarrow serving twins (through
+    :meth:`Index._local_mask`), and through here to every distributed
     ``where=`` surface."""
     def lit(v):
         if isinstance(v, bool):
@@ -7060,21 +6996,16 @@ def _filters_to_sql(filters: list[tuple]) -> str:
             return repr(v)
         raise ValueError(f"unsupported filter literal {v!r}")
 
-    ops = {"=": "=", "!=": "<>", "<": "<", "<=": "<=", ">": ">", ">=": ">="}
     parts = []
     for col, op, val in filters:
         if not col.replace("_", "").isalnum():
             raise ValueError(f"bad filter column {col!r}")
-        if op == "isnull":
-            parts.append(f"{col} IS NULL")
-        elif op == "notnull":
-            parts.append(f"{col} IS NOT NULL")
-        elif op == "in":
-            parts.append(f"{col} IN (" + ", ".join(lit(v) for v in val) + ")")
-        elif op in ops:
-            parts.append(f"{col} {ops[op]} {lit(val)}")
-        else:
-            raise ValueError(f"unsupported filter op {op!r}")
+        sql = f"{col} {_filter_op(op, val)[1]}"
+        if op == "in":
+            sql += " (" + ", ".join(lit(v) for v in val) + ")"
+        elif op not in _NULL_OPS:
+            sql += f" {lit(val)}"
+        parts.append(sql)
     return " AND ".join(parts)
 
 

@@ -357,8 +357,14 @@ def run_parsed(index, parsed: ParsedQuery, k: int = 10):
     match set reads only the clause terms' token rows, where an RLIKE
     filter would regex-scan every document's text. must terms still
     score together with should (ES bool must + should); must_not only
-    excludes. Field filters stay a ``where=`` predicate."""
+    excludes. Field filters stay a ``where=`` predicate. An empty result
+    is a zero-job frame (``Index._frame``).
+
+    :meth:`Index._run_parsed_local` is the driver mirror of this
+    executor (``search_bool_local``, ``simple_query_string_local``)."""
     from pyspark.sql import functions as F
+
+    from kafka_elasticsearch_standalone_consumer_spark.query.engine import TOPK_SCHEMA
 
     terms = parsed.should + parsed.must
     where = compile_field_filter(parsed)
@@ -395,7 +401,7 @@ def run_parsed(index, parsed: ParsedQuery, k: int = 10):
         # AND semantics: a conjunctive query requires the prefix clauses too
         for ms in prefix_sets:
             if ms is None:
-                return index.spark.createDataFrame([], "doc_id long, score double")
+                return index._frame(TOPK_SCHEMA)
             allowed = ms if allowed is None else allowed.join(ms, "doc_id", "left_semi")
     if parsed.boosts:
         # ES term^boost: a weighted disjunction — per-term weight =
@@ -417,7 +423,7 @@ def run_parsed(index, parsed: ParsedQuery, k: int = 10):
             wmap[t] = wmap.get(t, 0.0) + b
         idfw1, buckets = index._plan_terms(" ".join(sorted(wmap)))
         if not idfw1:
-            return index.spark.createDataFrame([], "doc_id long, score double")
+            return index._frame(TOPK_SCHEMA)
         idfw = {t: wmap[t] * idfw1[t] for t in sorted(idfw1)}
         return index.search(
             " ".join(sorted(wmap)), k, mode="bmw", where=where,
@@ -434,8 +440,8 @@ def run_parsed(index, parsed: ParsedQuery, k: int = 10):
             _allowed_docs=allowed, _blocked_docs=blocked,
         )
     # mixed clauses — ES bool should composition: sum each clause's full
-    # score set per doc over the UNION of matching docs, then top-k;
-    # must/must_not masks apply to the summed set
+    # score set per doc over the UNION of matching docs, then top-k; one
+    # _mask_plan (where, must, must_not, tombstones) applies to the sums
     parts = []
     if terms:
         parts.append(index.search_oracle(" ".join(terms), k=None, where=where))
@@ -444,24 +450,19 @@ def run_parsed(index, parsed: ParsedQuery, k: int = 10):
     for ms in prefix_sets:
         # Lucene CONSTANT_SCORE prefix rewrite: matching docs add 1.0
         if ms is not None:
-            part = ms.select("doc_id", F.lit(1.0).alias("score"))
-            if where is not None:
-                part = part.join(
-                    index._docs_df().filter(where).select("doc_id"),
-                    "doc_id", "left_semi",
-                )
-            deletes = index._deletes_df()
-            if deletes is not None:
-                part = part.join(deletes, "doc_id", "left_anti")
-            parts.append(part)
+            parts.append(ms.select("doc_id", F.lit(1.0).alias("score")))
     if not parts:
-        return index.spark.createDataFrame([], "doc_id long, score double")
+        return index._frame(TOPK_SCHEMA)
     allp = parts[0]
     for p in parts[1:]:
         allp = allp.unionByName(p)
     scores = allp.groupBy("doc_id").agg(F.sum("score").alias("score"))
-    if allowed is not None:
-        scores = scores.join(allowed, "doc_id", "left_semi")
-    if blocked is not None:
-        scores = scores.join(blocked, "doc_id", "left_anti")
+    mask, kind = index._mask_plan(
+        where, int(index.meta["docs_per_shard"]), allowed, blocked
+    )
+    if kind is not None:
+        scores = scores.join(
+            mask.select("doc_id"), "doc_id",
+            "left_semi" if kind == "allowed" else "left_anti",
+        )
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

@@ -6,7 +6,9 @@ reference's Elasticsearch (behind ``MessageHandler.java:135-139``):
 * ``term_stats(term, df, max_tf)`` — document frequency per term,
 * ``doc_stats(doc_id, dl)``        — document length in tokens (0 for
                                      empty docs — they must still exist),
-* ``corpus(n_docs, avgdl)``        — global scalars.
+* ``corpus(n_docs, avgdl)``        — global scalars, avgdl as the exact
+                                     long Σ dl over n_docs
+                                     (``incremental._doc_stats_totals``).
 
 All pure DataFrame aggregations: map-side partial aggregation + one
 shuffle each; Catalyst prunes to exactly the needed columns.
@@ -65,12 +67,4 @@ def build_doc_stats(docs: DataFrame, tokens: DataFrame) -> DataFrame:
         docs.select("doc_id")
         .join(dl, "doc_id", "left")
         .select("doc_id", F.coalesce(F.col("dl"), F.lit(0)).cast("int").alias("dl"))
-    )
-
-
-def build_corpus_stats(doc_stats: DataFrame) -> DataFrame:
-    """corpus(n_docs, avgdl) — single row."""
-    return doc_stats.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
     )

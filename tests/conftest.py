@@ -32,7 +32,14 @@ def pytest_configure(config):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="kesc-tests", master="local[4]", shuffle_partitions=8)
+    # Job-count assertions read statusTracker().getJobIdsForGroup(None),
+    # which keeps spark.ui.retainedJobs ids (default 1000) and drops 100
+    # at once past that: late in a session the count can fall while jobs
+    # run. Retain every job of a test session so the count only grows.
+    s = get_spark(
+        app_name="kesc-tests", master="local[4]", shuffle_partitions=8,
+        extra_conf={"spark.ui.retainedJobs": str(1 << 20)},
+    )
     yield s
 
 

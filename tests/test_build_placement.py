@@ -215,6 +215,21 @@ def test_spark_only_options_keep_the_spark_steps(spark, corpus, tmp_path):
         assert Index(spark, lazy).search_local(q, K) == want
 
 
+@pytest.mark.parametrize(
+    "knobs", [{}, {"tokenizer": "sql"}, {"positions": True}], ids=["fused", "sql", "positions"]
+)
+def test_ephemeral_avgdl_equals_the_build(spark, corpus, tmp_path, knobs):
+    """Index.ephemeral tokenizes like the build and takes its avgdl the
+    same way (the exact long sum of dl over n): for the same texts its
+    meta equals build_index's sys_meta to the bit."""
+    wh = str(tmp_path / "idx")
+    build_index(spark, corpus, wh, **KW, **knobs)
+    built = Warehouse(wh).read_meta("sys_meta")
+    eph = Index.ephemeral(Index(spark, wh)._docs_df().select("doc_id", "text"), **KW, **knobs)
+    assert eph.meta["n_docs"] == built["n_docs"] > 0
+    assert float(eph.meta["avgdl"]).hex() == float(built["avgdl"]).hex()
+
+
 def test_driver_tables_carry_no_blob_statistics(spark, corpus, tmp_path):
     """Warehouse.write_arrow writes min/max statistics for every column
     but the binary ones: the posting blobs would otherwise be copied whole

@@ -100,6 +100,9 @@ def test_empty_results_are_zero_job_frames_with_unchanged_schemas(spark, built_i
         (idx.search("zzabsent", 10), TOPK_SCHEMA),
         (idx.search("", 10, mode="intersect"), TOPK_SCHEMA),
         (idx.search_many(["zzabsent"], 10), MANY_SCHEMA),
+        (idx.simple_query_string("zzq*"), TOPK_SCHEMA),  # prefix expands to nothing
+        (idx.simple_query_string("w00000 + zzq*"), TOPK_SCHEMA),  # ... conjunctively
+        (idx.query_string("zzabsent^2"), TOPK_SCHEMA),  # boosted, no term planned
         (idx.facets("", by="role"), "role string, n long"),
         (idx.stats_agg("", by="turn_idx"),
          "n long, min_v double, max_v double, sum_v double, avg_v double"),
@@ -109,6 +112,17 @@ def test_empty_results_are_zero_job_frames_with_unchanged_schemas(spark, built_i
         assert df.collect() == []
         assert df.schema == spark.createDataFrame([], ddl).schema, ddl
     assert _jobs(spark) == before
+
+
+def test_context_suggestions_are_a_zero_job_frame(spark, built_index):
+    """The context suggester ranks on the driver; building and collecting
+    its rows launches no Spark job."""
+    idx, _ = built_index
+    ctx = [("role", "=", "user")]
+    want = idx.suggest_complete_context("w000", ctx, 5).collect()  # warm the reads
+    before = _jobs(spark)
+    assert idx.suggest_complete_context("w000", ctx, 5).collect() == want
+    assert want and _jobs(spark) == before
 
 
 def test_index_open_is_a_snapshot(spark, transcripts, tmp_path, placements):
