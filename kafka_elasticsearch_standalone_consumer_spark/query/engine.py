@@ -11,7 +11,9 @@
       │          row-group-pruned by the term predicate (both visible as
       │          PartitionFilters / PushedFilters in .explain)
       ├─ per shard: decode → block-max WAND → bounded top-k
-      │        (kernels.term_shard / kernels.positional_shard — one seam,
+      │        (kernels.term_shard — a batch of term plans, so search
+      │        is search_many's batch of one — / kernels.dismax_shard /
+      │        kernels.positional_shard — one seam,
       │        run on executors by ONE grouped-pandas wrapper,
       │        Index._shard_partials, with an allowed/blocked doc mask
       │        cogrouped in when one applies, or on the driver over a
@@ -332,12 +334,15 @@ class Index:
         collecting it launches no Spark job, where a createDataFrame over
         Python rows launches one even when empty (~0.4 s wall, ~1.3 CPU s
         on local[4]). ``columns`` maps each ``schema`` column to an
-        array-like; None gives the empty result."""
+        array-like, or is a list of row tuples in ``schema`` column order;
+        None or no rows gives the empty result."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import DataType
 
         struct = DataType.fromDDL(schema)
+        if isinstance(columns, list):
+            columns = dict(zip(struct.names, map(list, zip(*columns)))) or None
         arrow = to_arrow_schema(struct)
         tbl = arrow.empty_table() if columns is None else pa.table(columns, schema=arrow)
         return self.spark.createDataFrame(tbl, struct)
@@ -543,15 +548,7 @@ class Index:
         )
         if not weights:
             return ({}, [], 0) if with_volume else ({}, [])
-        terms = sorted(weights)
-        rows = self._lookup_terms_arrow(terms)
-        if rows is None:
-            rows = self._lookup_terms_spark(terms)
-        df_by: dict[str, int] = {}
-        bucket_by: dict[str, int] = {}
-        for term, df, bucket in rows:  # sum df across segments
-            df_by[term] = df_by.get(term, 0) + int(df)
-            bucket_by[term] = int(bucket)
+        df_by, bucket_by = self._term_dfs(sorted(weights))
         n = float(self.meta["n_docs"])
         # term-sorted dict order: downstream kernels iterate idfw to build
         # runs (search_many), and float accumulation order must agree with
@@ -564,6 +561,20 @@ class Index:
         if with_volume:
             return idfw, buckets, sum(df_by.values())
         return idfw, buckets
+
+    def _term_dfs(self, terms: list[str]) -> tuple[dict[str, int], dict[str, int]]:
+        """({term: df summed over segments}, {term: term_bucket}) for the
+        dictionary-present ``terms``: the footer-pruned pyarrow lookup,
+        or one filtered Spark collect on ephemeral / legacy layouts."""
+        rows = self._lookup_terms_arrow(terms)
+        if rows is None:
+            rows = self._lookup_terms_spark(terms)
+        df_by: dict[str, int] = {}
+        bucket_by: dict[str, int] = {}
+        for term, df, bucket in rows:
+            df_by[term] = df_by.get(term, 0) + int(df)
+            bucket_by[term] = int(bucket)
+        return df_by, bucket_by
 
     def _lookup_terms_arrow(self, terms: list[str]):
         """(term, df, bucket) rows via footer-pruned pyarrow reads, or None
@@ -605,6 +616,15 @@ class Index:
         return [(r["term"], r["df"], r["term_bucket"]) for r in rows]
 
     # -- execution --------------------------------------------------------
+    def _bm25(self) -> tuple[int, float, float, float]:
+        """(docs_per_shard, avgdl, k1, b) of this snapshot — the one read
+        of the BM25 parameters from ``meta`` (avgdl 0 becomes 1e-9)."""
+        meta = self.meta
+        return (
+            int(meta["docs_per_shard"]), float(meta["avgdl"]) or 1e-9,
+            float(meta["k1"]), float(meta["b"]),
+        )
+
     def _docs_df(self) -> DataFrame:
         if self.wh is None:
             return self._docs
@@ -614,15 +634,11 @@ class Index:
         return docs
 
     def _deletes_df(self) -> DataFrame | None:
-        """Delete tombstones (Lucene live-docs complement), or None."""
-        from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
-            DELETES_TABLE,
-        )
-
-        if self.wh is None or not self.wh.exists(DELETES_TABLE):
-            return None
-        d = self.wh.read(self.spark, DELETES_TABLE)
-        return d if not d.isEmpty() else None
+        """Delete tombstones (Lucene live-docs complement) as a zero-job
+        ``doc_id long`` frame over :meth:`_local_blocked`'s array, or
+        None. Every caller joins on doc_id."""
+        tombs = self._local_blocked()
+        return None if tombs is None else self._frame("doc_id long", {"doc_id": tombs})
 
     def _mask_plan(
         self,
@@ -722,7 +738,10 @@ class Index:
         Arrow LocalRelation, so collecting it launches no Spark job.
         Everything else (ephemeral indexes, SQL filters, match sets, large
         volumes) runs the per-shard kernel on the executors. Both
-        placements return bit-identical ``(doc_id, score)`` rows.
+        placements return bit-identical ``(doc_id, score)`` rows. Either
+        way the query is a batch of one: :meth:`_local_topk` on the
+        driver and :meth:`_term_partials` on the executors are
+        :meth:`search_many`'s bodies too, and only the finish differs.
 
         ``_plan`` is an internal (idfw, buckets) override for compound
         queries that compute their own per-term weights driver-side
@@ -777,28 +796,13 @@ class Index:
             and _allowed_docs is None
             and _blocked_docs is None
         ):
-            d, s = self._local_topk(
-                query_text, k, mode, *self._local_mask(), plan=(idfw, buckets)
+            [(d, s)] = self._local_topk(
+                [(idfw, buckets)], k, mode, *self._local_mask()
             )
             if min_score is not None:
                 keep = s >= float(min_score)
                 d, s = d[keep], s[keep]
             return self._frame(TOPK_SCHEMA, {"doc_id": d, "score": s})
-        meta = self.meta
-        hits = self.postings.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(list(idfw))
-        )
-
-        docs_per_shard = int(meta["docs_per_shard"])
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
-
-        def score_shard(pdf: pd.DataFrame, allowed, blocked) -> pd.DataFrame:
-            d, s = kernels.term_shard(
-                pdf, idfw, mode, k, avgdl, k1, b, docs_per_shard, allowed, blocked
-            )
-            return pd.DataFrame({"doc_id": d, "score": s})
-
         allowed_docs = _allowed_docs
         if min_should_match > 1:
             terms = sorted(set(self._analyze(query_text)))
@@ -809,29 +813,65 @@ class Index:
                 ms if allowed_docs is None
                 else allowed_docs.join(ms, "doc_id", "left_semi")
             )
-        mask_df, mask_kind = self._mask_plan(
-            where, docs_per_shard, allowed_docs, _blocked_docs
+        mask = self._mask_plan(where, self._bm25()[0], allowed_docs, _blocked_docs)
+        partials = self._term_partials({"": (idfw, buckets)}, mode, k, mask)
+        out = (
+            partials.select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         )
-        partials = self._shard_partials(hits, mask_df, mask_kind, score_shard, TOPK_SCHEMA)
-        out = partials.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
         if min_score is not None:
             out = out.filter(F.col("score") >= float(min_score))
         return out
 
+    def _term_partials(self, plans: dict, mode: str, k: int, mask) -> DataFrame:
+        """The executor placement of the batched term seam, shared by
+        :meth:`search` and :meth:`search_many`: one pruned postings scan
+        over the union of the plans' buckets and terms, then ONE
+        :func:`kernels.term_shard` call per shard for every plan.
+        ``plans`` maps qid → (idfw, buckets); ``mask`` is a
+        :meth:`_mask_plan` pair. Rows (qid, doc_id, score), at most k per
+        shard and qid."""
+        qids = np.asarray(list(plans), dtype=object)
+        idfws = [idfw for idfw, _ in plans.values()]
+        buckets = sorted({bk for _, bs in plans.values() for bk in bs})
+        terms = sorted({t for idfw in idfws for t in idfw})
+        dps, avgdl, k1, b = self._bm25()
+        hits = self.postings.filter(
+            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
+        )
+
+        def score_shard(pdf: pd.DataFrame, allowed, blocked) -> pd.DataFrame:
+            outs = kernels.term_shard(
+                pdf, idfws, mode, k, avgdl, k1, b, dps, allowed, blocked
+            )
+            return pd.DataFrame({
+                "qid": np.repeat(qids, [len(d) for d, _ in outs]),
+                "doc_id": np.concatenate([d for d, _ in outs]),
+                "score": np.concatenate([s for _, s in outs]),
+            })
+
+        return self._shard_partials(
+            hits, *mask, score_shard, "qid string, " + TOPK_SCHEMA
+        )
+
     def _local_blocked(self) -> "np.ndarray | None":
-        """Tombstoned doc_ids as a sorted int64 array (driver-side read
-        of the small tombstone table), or None. Called only by
-        :meth:`_local_mask`."""
+        """Tombstoned doc_ids as a sorted int64 array (a driver-side
+        pyarrow read of the small tombstone table's doc_id column), or
+        None. The one tombstone reader: :meth:`_local_mask` masks with it
+        and :meth:`_deletes_df` ships it to Spark."""
+        import pyarrow.dataset as pads
+
         from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
             DELETES_TABLE,
         )
 
         if self.wh is None or not self.wh.exists(DELETES_TABLE):
             return None
-        rows = self.wh.read_rows(DELETES_TABLE)
-        if not rows:
+        ds = pads.dataset(self.wh.path(DELETES_TABLE), format="parquet")
+        if not ds.files:
             return None
-        return np.unique(np.array([r["doc_id"] for r in rows], dtype=np.int64))
+        ids = ds.to_table(columns=["doc_id"]).column("doc_id")
+        return np.unique(np.asarray(ids, dtype=np.int64)) if len(ids) else None
 
     def _local_postings(self, buckets: list[int], terms: list[str]) -> pd.DataFrame | None:
         """Pruned postings rows for (buckets, terms) via cached pyarrow
@@ -1205,10 +1245,7 @@ class Index:
         pdf = self._local_postings(*plan)
         if pdf is None:
             return empty
-        meta = self.meta
-        docs_per_shard = int(meta["docs_per_shard"])
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
+        docs_per_shard, avgdl, k1, b = self._bm25()
         kk = int(per_shard_k) if per_shard_k is not None else docs_per_shard
         out_d, out_t, out_l = [], [], []
         n_total = 0
@@ -1224,7 +1261,7 @@ class Index:
                 out_l.append(np.asarray(dl, dtype=np.float64))
         if n_total == 0 or not out_d:
             return empty
-        idf = math.log(1.0 + (float(meta["n_docs"]) - n_total + 0.5) / (n_total + 0.5))
+        idf = math.log(1.0 + (float(self.meta["n_docs"]) - n_total + 0.5) / (n_total + 0.5))
         dd = np.concatenate(out_d)
         tf = np.concatenate(out_t)
         dl = np.concatenate(out_l)
@@ -1354,25 +1391,24 @@ class Index:
                 "search_local serves from warehouse files; ephemeral indexes "
                 "have no pruned postings layout to read — use search()"
             )
-        plan = None
-        if mode == "intersect":
-            plan = self._plan_terms(query_text)
-            if len(plan[0]) < len(set(self._analyze(query_text))):
-                return []
-        allowed, blocked = self._local_mask(where)
-        d, s = self._local_topk(query_text, k, mode, allowed, blocked, plan=plan)
+        plan = self._plan_terms(query_text)
+        if mode == "intersect" and len(plan[0]) < len(set(self._analyze(query_text))):
+            return []
+        [(d, s)] = self._local_topk([plan], k, mode, *self._local_mask(where))
         return list(zip(d.tolist(), s.tolist()))
 
     def _local_topk(
-        self, query_text, k, mode, allowed, blocked, plan=None
-    ) -> tuple["np.ndarray", "np.ndarray"]:
-        """The serving-path global top-k, (score desc, doc_id asc) — the
-        order of search()'s ``orderBy(desc(score), asc(doc_id)).limit(k)``."""
-        dd, ss = self._local_term_scores(
-            query_text, allowed, blocked, per_shard_k=k, mode=mode, plan=plan
-        )
-        top = np.lexsort((dd, -ss))[:k]
-        return dd[top], ss[top]
+        self, plans: list[tuple], k: int, mode: str, allowed, blocked
+    ) -> list[tuple["np.ndarray", "np.ndarray"]]:
+        """The serving-path global top-k of each (idfw, buckets) plan,
+        (score desc, doc_id asc) — the order of search()'s
+        ``orderBy(desc(score), asc(doc_id)).limit(k)`` and of
+        search_many()'s Window."""
+        out = []
+        for dd, ss in self._local_term_scores(plans, allowed, blocked, k, mode):
+            top = np.lexsort((dd, -ss))[:k]
+            out.append((dd[top], ss[top]))
+        return out
 
     def search_terminate_after_local(
         self,
@@ -1398,13 +1434,12 @@ class Index:
                 "search_terminate_after_local serves from warehouse files — "
                 "use search_terminate_after() on ephemeral indexes"
             )
-        allowed, blocked = self._local_mask(where)
-        dd, ss = self._local_term_scores(
-            query_text, allowed, blocked, per_shard_k=None, mode=mode
+        [(dd, ss)] = self._local_term_scores(
+            [self._plan_terms(query_text)], *self._local_mask(where), mode=mode
         )
         if not len(dd):
             return [], False
-        dps = int(self.meta["docs_per_shard"])
+        dps = self._bm25()[0]
         order = np.argsort(dd)
         d_sorted, s_sorted = dd[order], ss[order]
         shard = d_sorted // dps
@@ -1448,7 +1483,9 @@ class Index:
             return []
         dist = self._np_haversine_km(lat_deg, lon_deg, origin)
         allowed, blocked = self._local_mask(where, np.unique(ids[dist <= float(radius_km)]))
-        d, s = self._local_topk(query_text, k, mode, allowed, blocked)
+        [(d, s)] = self._local_topk(
+            [self._plan_terms(query_text)], k, mode, allowed, blocked
+        )
         return list(zip(d.tolist(), s.tolist()))
 
     def _local_geo_coords(self, lat_col: str, lon_col: str, caller: str):
@@ -1564,7 +1601,9 @@ class Index:
                 f"unsupported geo_shape relation for point fields: {relation!r}"
             )
         allowed, blocked = self._local_mask(where, np.unique(ids[mask]))
-        d, s = self._local_topk(query_text, k, mode, allowed, blocked)
+        [(d, s)] = self._local_topk(
+            [self._plan_terms(query_text)], k, mode, allowed, blocked
+        )
         return list(zip(d.tolist(), s.tolist()))
 
     def _local_shape_coords(self, shape_col: str):
@@ -1666,7 +1705,9 @@ class Index:
                 f"polygon docs: {relation!r}"
             )
         allowed, blocked = self._local_mask(where, np.unique(ids[mask]))
-        d, s = self._local_topk(query_text, k, mode, allowed, blocked)
+        [(d, s)] = self._local_topk(
+            [self._plan_terms(query_text)], k, mode, allowed, blocked
+        )
         return list(zip(d.tolist(), s.tolist()))
 
     def _local_nested_scores(
@@ -1778,8 +1819,8 @@ class Index:
         if not self._analyze(query_text or ""):
             top = np.lexsort((nids, -nsc))[:k]
             return [(int(nids[i]), float(nsc[i])) for i in top]
-        dd, ss = self._local_term_scores(
-            query_text, nids, None, per_shard_k=None, mode="exact"
+        [(dd, ss)] = self._local_term_scores(
+            [self._plan_terms(query_text)], nids, None, mode="exact"
         )
         if not len(dd):
             return []
@@ -1790,42 +1831,42 @@ class Index:
 
     def _local_term_scores(
         self,
-        query_text: str,
+        plans: list[tuple],
         allowed: "np.ndarray | None",
         blocked: "np.ndarray | None",
         per_shard_k: int | None = None,
         mode: str = "bmw",
-        plan: tuple[dict[str, float], list[int]] | None = None,
-    ) -> tuple["np.ndarray", "np.ndarray"]:
-        """(doc_ids, scores) of a term clause on the serving path — the
-        kernel body shared by :meth:`search_local` (top-k per shard) and
-        :meth:`search_bool_local` (``per_shard_k=None`` + mode='exact'
-        keeps the COMPLETE score set for bool-should summation). ``plan``
-        is an (idfw, buckets) the caller already computed."""
-        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-        idfw, buckets = plan if plan is not None else self._plan_terms(query_text)
-        if not idfw:
-            return empty
-        meta = self.meta
-        docs_per_shard = int(meta["docs_per_shard"])
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
-        kk = int(per_shard_k) if per_shard_k is not None else docs_per_shard
-        pdf = self._local_postings(buckets, sorted(idfw))
-        if pdf is None:
-            return empty
-        out_d: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
-        for _shard, g in pdf.groupby("shard", sort=False):
-            d, s = kernels.term_shard(
-                g, idfw, mode, kk, avgdl, k1, b, docs_per_shard, allowed, blocked
+    ) -> list[tuple["np.ndarray", "np.ndarray"]]:
+        """(doc_ids, scores) of each (idfw, buckets) term plan on the
+        serving path — the driver body of the batched term seam: ONE
+        pruned postings read for the union of the plans' buckets and
+        terms, then one :func:`kernels.term_shard` call per shard for the
+        whole batch (a single query is the batch of one). It serves
+        :meth:`search_local`, the driver branches of :meth:`search` and
+        :meth:`search_many` (through :meth:`_local_topk`) and
+        :meth:`_run_parsed_local` (``per_shard_k=None`` + mode='exact'
+        keeps the COMPLETE score set for bool-should summation)."""
+        idfws = [idfw for idfw, _ in plans]
+        terms = sorted({t for idfw in idfws for t in idfw})
+        buckets = sorted({bk for _, bs in plans for bk in bs})
+        pdf = self._local_postings(buckets, terms) if terms else None
+        parts: list[list] = [[] for _ in plans]
+        if pdf is not None:
+            dps, avgdl, k1, b = self._bm25()
+            kk = int(per_shard_k) if per_shard_k is not None else dps
+            for _shard, g in pdf.groupby("shard", sort=False):
+                outs = kernels.term_shard(
+                    g, idfws, mode, kk, avgdl, k1, b, dps, allowed, blocked
+                )
+                for part, ds in zip(parts, outs):
+                    part.append(ds)
+        return [
+            (
+                np.concatenate([d for d, _ in part] or [np.empty(0, np.int64)]),
+                np.concatenate([s for _, s in part] or [np.empty(0, np.float64)]),
             )
-            if len(d):
-                out_d.append(np.asarray(d, dtype=np.int64))
-                out_s.append(np.asarray(s, dtype=np.float64))
-        if not out_d:
-            return empty
-        return np.concatenate(out_d), np.concatenate(out_s)
+            for part in parts
+        ]
 
     def _local_term_docs(self, terms: list[str], surface: str) -> dict[str, "np.ndarray"]:
         """{term: sorted unique doc_ids} for the dictionary-present
@@ -1843,7 +1884,7 @@ class Index:
         pdf = self._local_postings(sorted({int(bk) for _, _, bk in rows}), present)
         if pdf is None:
             return {}
-        docs_per_shard = int(self.meta["docs_per_shard"])
+        docs_per_shard = self._bm25()[0]
         parts: dict[str, list] = {}
         for row in pdf.itertuples(index=False):
             run = kernels._Run(row, 0.0, int(row.shard) * docs_per_shard)
@@ -1967,11 +2008,9 @@ class Index:
         score_terms = parsed.should + parsed.must
         parts: list[tuple[np.ndarray, np.ndarray]] = []
         if score_terms:
-            parts.append(
-                self._local_term_scores(
-                    " ".join(score_terms), allowed, blocked, per_shard_k=None,
-                    mode="exact",
-                )
+            parts += self._local_term_scores(
+                [self._plan_terms(" ".join(score_terms))], allowed, blocked,
+                mode="exact",
             )
         for phrase, slop in parsed.phrases:
             parts.append(
@@ -2213,7 +2252,7 @@ class Index:
         filter/tombstone masks). Returns a single (n) row."""
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            return self.spark.createDataFrame([(0,)], "n long")
+            return self._frame("n long", [(0,)])
         return scoped.agg(F.count("*").cast("long").alias("n"))
 
     def scan_scroll(
@@ -2275,18 +2314,13 @@ class Index:
         terms = sorted({r["term"] for r in rows})
         if not terms:
             return self._frame(schema)
-        stats = self._lookup_terms_arrow(terms)
-        if stats is None:
-            stats = self._lookup_terms_spark(terms)
-        df_by: dict[str, int] = {}
-        for term, df, _b in stats:
-            df_by[term] = df_by.get(term, 0) + int(df)
+        df_by = self._term_dfs(terms)[0]
         if not positions:
             out = sorted(
                 (int(r["doc_id"]), r["term"], int(r["tf"]), int(df_by.get(r["term"], 0)))
                 for r in rows
             )
-            return self.spark.createDataFrame(out, schema)
+            return self._frame(schema, out)
         texts = {
             r["doc_id"]: r["text"]
             for r in self._docs_df()
@@ -2304,7 +2338,7 @@ class Index:
              sorted(pos_by.get((int(r["doc_id"]), r["term"]), [])))
             for r in rows
         )
-        return self.spark.createDataFrame(out, schema)
+        return self._frame(schema, out)
 
     def term_vectors(self, doc_id: int, positions: bool = False) -> DataFrame:
         """ES ``_termvectors`` API: one document's (term, tf, df) rows,
@@ -2331,17 +2365,12 @@ class Index:
         )
         if not terms:
             return self._frame(schema)
-        stats = self._lookup_terms_arrow(terms)
-        if stats is None:
-            stats = self._lookup_terms_spark(terms)
-        df_by: dict[str, int] = {}
-        for term, df, _b in stats:
-            df_by[term] = df_by.get(term, 0) + int(df)
+        df_by = self._term_dfs(terms)[0]
         if not positions:
             out = sorted(
                 (r["term"], int(r["tf"]), int(df_by.get(r["term"], 0))) for r in rows
             )
-            return self.spark.createDataFrame(out, schema)
+            return self._frame(schema, out)
         doc = (
             self._docs_df().filter(F.col("doc_id") == int(doc_id)).select("text").first()
         )
@@ -2355,7 +2384,7 @@ class Index:
              sorted(pos_by.get(r["term"], [])))
             for r in rows
         )
-        return self.spark.createDataFrame(out, schema)
+        return self._frame(schema, out)
 
     def analyze(self, text: str, analyzer: str | None = None) -> DataFrame:
         """ES ``_analyze`` API: the token stream the analysis chain emits
@@ -2373,9 +2402,7 @@ class Index:
             slots, offsets = self._analyze_phrase(text)
         else:
             slots, offsets = analyze_positions(text, analyzer)
-        return self.spark.createDataFrame(
-            list(zip(offsets, slots)), "position long, token string"
-        )
+        return self._frame("position long, token string", list(zip(offsets, slots)))
 
     def search_wildcard(
         self,
@@ -2620,10 +2647,11 @@ class Index:
         Plan shape: clause term plans are resolved driver-side once
         (shared idf), the postings scan covers the UNION of clause terms
         (one pruned scan, not one per clause), each shard computes every
-        clause's exact score set over shared decoded postings (_RunView —
-        a term in several clauses is decoded once) and combines per doc;
-        the coordinator unions per-shard top-k partials. Exact, because
-        shards partition docs. ``where`` filters like :meth:`search`."""
+        clause's exact score set over shared decoded postings
+        (:func:`kernels.dismax_shard` — a term in several clauses is
+        decoded once) and combines per doc; the coordinator unions
+        per-shard top-k partials. Exact, because shards partition docs.
+        ``where`` filters like :meth:`search`."""
         clause_plans = []
         buckets: set[int] = set()
         for q in queries:
@@ -2634,41 +2662,20 @@ class Index:
         if not clause_plans:
             return self._frame(TOPK_SCHEMA)
         all_terms = sorted({t for c in clause_plans for t in c})
-        meta = self.meta
-        docs_per_shard = int(meta["docs_per_shard"])
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
-        tb = float(tie_breaker)
+        dps, avgdl, k1, b = self._bm25()
+        args = (clause_plans, float(tie_breaker), k, avgdl, k1, b, dps)
         hits = self.postings.filter(
             F.col("term_bucket").isin(sorted(buckets))
             & F.col("term").isin(all_terms)
         )
-
-        def score_shard(pdf: pd.DataFrame, allowed, blocked) -> pd.DataFrame:
-            if allowed is not None and not len(allowed):
-                return pd.DataFrame({"doc_id": np.empty(0, np.int64), "score": np.empty(0)})
-            shard_lo = int(pdf["shard"].iloc[0]) * docs_per_shard
-            base_by_term: dict[str, list] = {}
-            for row in pdf.itertuples(index=False):
-                base_by_term.setdefault(row.term, []).append(
-                    kernels._Run(row, 1.0, shard_lo, query_avgdl=avgdl, k1=k1, b=b)
-                )
-            runs_by_clause = [
-                [
-                    kernels._RunView(r, w)
-                    for t, w in c.items()
-                    for r in base_by_term.get(t, [])
-                ]
-                for c in clause_plans
-            ]
-            d, s = kernels.shard_topk_dismax(
-                runs_by_clause, k, avgdl, k1, b,
-                tie_breaker=tb, allowed=allowed, blocked=blocked,
-            )
-            return pd.DataFrame({"doc_id": d, "score": s})
-
-        mask_df, mask_kind = self._mask_plan(where, docs_per_shard)
-        partials = self._shard_partials(hits, mask_df, mask_kind, score_shard, TOPK_SCHEMA)
+        partials = self._shard_partials(
+            hits, *self._mask_plan(where, dps),
+            lambda pdf, allowed, blocked: pd.DataFrame(dict(zip(
+                ("doc_id", "score"),
+                kernels.dismax_shard(pdf, *args, allowed, blocked),
+            ))),
+            TOPK_SCHEMA,
+        )
         return partials.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     def more_like_this(
@@ -2729,12 +2736,7 @@ class Index:
         cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
         if not cand:
             return []
-        rows = self._lookup_terms_arrow(cand)
-        if rows is None:
-            rows = self._lookup_terms_spark(cand)
-        df_by: dict[str, int] = {}
-        for term, df, _bucket in rows:
-            df_by[term] = df_by.get(term, 0) + int(df)
+        df_by = self._term_dfs(cand)[0]
         n = float(self.meta["n_docs"])
         mlt = [
             (
@@ -2821,14 +2823,7 @@ class Index:
         allvars = sorted({v for g in groups.values() for v in g})
         if not allvars:
             return self._frame(TOPK_SCHEMA)
-        rows = self._lookup_terms_arrow(allvars)
-        if rows is None:
-            rows = self._lookup_terms_spark(allvars)
-        df_by: dict[str, int] = {}
-        bucket_by: dict[str, int] = {}
-        for term, df, bucket in rows:
-            df_by[term] = df_by.get(term, 0) + int(df)
-            bucket_by[term] = int(bucket)
+        df_by, bucket_by = self._term_dfs(allvars)
         n = float(self.meta["n_docs"])
         sel: list[tuple[float, str, str]] = []
         for t, variants in groups.items():
@@ -2875,9 +2870,9 @@ class Index:
         clauses += [f"#_exists_:{f}" for f in parsed.exists]
         clauses += [f"#_missing_:{f}" for f in parsed.missing]
         valid = bool(clauses)
-        return self.spark.createDataFrame(
-            [(bool(valid), " ".join(clauses) if valid else None)],
+        return self._frame(
             "valid boolean, explanation string",
+            [(bool(valid), " ".join(clauses) if valid else None)],
         )
 
     def query_string(self, q: str, k: int = 10) -> DataFrame:
@@ -3184,14 +3179,11 @@ class Index:
         all_terms = sorted({t for slot in slot_terms for t in slot})
         if not all_terms:
             return None
-        rows = self._lookup_terms_arrow(all_terms)
-        if rows is None:
-            rows = self._lookup_terms_spark(all_terms)
-        present = {term for term, _, _ in rows}
+        _df_by, bucket_by = self._term_dfs(all_terms)
         required = slot_terms[:1] if span and span[0] == "not" else slot_terms
-        if any(not (set(slot) & present) for slot in required):
+        if any(not (set(slot) & bucket_by.keys()) for slot in required):
             return None
-        return sorted({int(b) for _, _, b in rows}), sorted(present)
+        return sorted(set(bucket_by.values())), sorted(bucket_by)
 
     def _phrase_topk(
         self,
@@ -3217,10 +3209,7 @@ class Index:
         if plan is None:
             return self._frame(TOPK_SCHEMA)
         buckets, present = plan
-        meta = self.meta
-        docs_per_shard = int(meta["docs_per_shard"])
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
+        docs_per_shard, avgdl, k1, b = self._bm25()
         hits = self.postings.filter(
             F.col("term_bucket").isin(buckets) & F.col("term").isin(present)
         )
@@ -3255,7 +3244,7 @@ class Index:
         if df_phrase == 0:
             partials.unpersist()
             return self._frame(TOPK_SCHEMA)
-        n = float(meta["n_docs"])
+        n = float(self.meta["n_docs"])
         idf = math.log(1.0 + (n - df_phrase + 0.5) / (df_phrase + 0.5))
         scored = partials.filter(F.col("doc_id") >= 0).select(
             "doc_id",
@@ -3368,10 +3357,8 @@ class Index:
             ds = self._seg_whs[0].read(self.spark, "doc_stats").select("doc_id", "dl")
             for w in self._seg_whs[1:]:
                 ds = ds.unionByName(w.read(self.spark, "doc_stats").select("doc_id", "dl"))
-        meta = self.meta
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
-        idf = math.log(1.0 + (meta["n_docs"] - df_phrase + 0.5) / (df_phrase + 0.5))
+        _dps, avgdl, k1, b = self._bm25()
+        idf = math.log(1.0 + (self.meta["n_docs"] - df_phrase + 0.5) / (df_phrase + 0.5))
         scored = matches.join(ds, "doc_id").select(
             "doc_id",
             (
@@ -3389,120 +3376,47 @@ class Index:
     ) -> DataFrame:
         """Batched top-k BM25 (OR semantics) for a whole query set in ONE
         Spark job: (qid, doc_id, score, rank). Planning is one driver-side
-        term-dictionary lookup over the union of query terms; per shard,
-        posting blocks are decoded once and reused by every query that
-        shares the term (the _Run block cache), so Q queries cost far less
-        than Q× one query — the shape that matters when the reference
-        query set (or a training-data scoring sweep) runs as a batch.
+        term-dictionary lookup over the union of query terms; the batch
+        then runs the batched term seam — per shard ONE
+        :func:`kernels.term_shard` call for every query, whose posting
+        blocks are decoded once and reused by every query that shares the
+        term (the _Run block cache), so Q queries cost far less than Q×
+        one query — the shape that matters when the reference query set
+        (or a training-data scoring sweep) runs as a batch. Each query's
+        rows equal ``search(q, k, mode="bmw")``'s: :meth:`search` is the
+        batch of one.
 
         Placement follows :meth:`search`: on a warehouse-backed index, a
         batch whose summed planned posting volume is at most
-        ``DRIVER_MAX_POSTINGS`` runs the same per-shard closure on the
-        driver over one pruned pyarrow read, ranks per qid in NumPy (score
-        desc, doc_id asc — the Window's order) and returns an Arrow
-        LocalRelation: zero Spark jobs. Larger batches and ephemeral
-        indexes run as the one Spark job. Rows are identical either way.
+        ``DRIVER_MAX_POSTINGS`` runs on the driver (:meth:`_local_topk`,
+        one pruned pyarrow read, ranked per qid in NumPy in the Window's
+        order, score desc, doc_id asc) and returns an Arrow LocalRelation:
+        zero Spark jobs. Larger batches and ephemeral indexes run as the
+        one Spark job. Rows are identical either way.
         """
         if isinstance(queries, list):
             queries = {str(i): q for i, q in enumerate(queries)}
         per_q = {qid: self._plan_terms(q, with_volume=True) for qid, q in queries.items()}
-        all_terms = sorted({t for idfw, _, _ in per_q.values() for t in idfw})
-        all_buckets = sorted({b for _, bs, _ in per_q.values() for b in bs})
-        if not all_terms:
+        plans = {qid: (idfw, bs) for qid, (idfw, bs, _v) in per_q.items() if idfw}
+        if not plans:
             return self._frame(MANY_SCHEMA)
-        meta = self.meta
-        docs_per_shard = int(meta["docs_per_shard"])
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
-        plans = {qid: idfw for qid, (idfw, _bs, _v) in per_q.items() if idfw}
-
-        def per_shard(pdf: pd.DataFrame, allowed=None, blocked=None) -> pd.DataFrame:
-            shard = int(pdf["shard"].iloc[0])
-            shard_lo = shard * docs_per_shard
-            # one _Run per posting row; block decode cache shared across queries
-            runs_by_term: dict[str, list] = {}
-            for row in pdf.itertuples(index=False):
-                r = kernels._Run(row, 1.0, shard_lo, query_avgdl=avgdl, k1=k1, b=b)
-                runs_by_term.setdefault(row.term, []).append(r)
-            out_q, out_d, out_s = [], [], []
-            for qid, idfw in plans.items():
-                runs = []
-                for t, w in idfw.items():
-                    for r in runs_by_term.get(t, []):
-                        runs.append(kernels._RunView(r, w))
-                if not runs:
-                    continue
-                d, s = kernels.shard_topk_bmw(
-                    runs, k, avgdl, shard_lo, docs_per_shard, k1, b, blocked=blocked
-                )
-                out_q.extend([qid] * len(d))
-                out_d.append(d)
-                out_s.append(s)
-            if not out_q:
-                return pd.DataFrame({"qid": [], "doc_id": [], "score": []}).astype(
-                    {"qid": str, "doc_id": np.int64, "score": np.float64}
-                )
-            return pd.DataFrame(
-                {
-                    "qid": out_q,
-                    "doc_id": np.concatenate(out_d),
-                    "score": np.concatenate(out_s),
-                }
-            )
-
         volume = sum(v for _, _, v in per_q.values())
         if self.wh is not None and volume <= DRIVER_MAX_POSTINGS:
-            return self._search_many_on_driver(
-                per_shard, all_buckets, all_terms, list(plans), k
-            )
+            outs = self._local_topk(list(plans.values()), k, "bmw", *self._local_mask())
+            n = [len(d) for d, _ in outs]
+            return self._frame(MANY_SCHEMA, {
+                "qid": np.repeat(np.asarray(list(plans), dtype=object), n),
+                "doc_id": np.concatenate([d for d, _ in outs]),
+                "score": np.concatenate([s for _, s in outs]),
+                "rank": np.concatenate([np.arange(1, m + 1) for m in n]),
+            })
 
-        from pyspark.sql.window import Window
-
-        hits = self.postings.filter(
-            F.col("term_bucket").isin(all_buckets) & F.col("term").isin(all_terms)
-        )
-        mask_df, mask_kind = self._mask_plan(None, docs_per_shard)  # tombstones only
-        partials = self._shard_partials(
-            hits, mask_df, mask_kind, per_shard, "qid string, " + TOPK_SCHEMA
-        )
+        mask = self._mask_plan(None, self._bm25()[0])  # tombstones only
+        partials = self._term_partials(plans, "bmw", k, mask)
         w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             partials.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-        )
-
-    def _search_many_on_driver(self, per_shard, buckets, terms, qids, k) -> DataFrame:
-        """search_many's driver placement: ONE pruned pyarrow postings read
-        for the whole batch, fed shard by shard to the same ``per_shard``
-        closure the executors run (one shared block-decode cache per
-        shard), then ranked per qid in the Window's order (score desc,
-        doc_id asc)."""
-        pdf = self._local_postings(buckets, terms)
-        if pdf is None:
-            return self._frame(MANY_SCHEMA)
-        allowed, blocked = self._local_mask()
-        parts = [per_shard(g, allowed, blocked) for _, g in pdf.groupby("shard", sort=False)]
-        out = pd.concat(parts, ignore_index=True)
-        if not len(out):
-            return self._frame(MANY_SCHEMA)
-        code = {qid: i for i, qid in enumerate(qids)}
-        q = out["qid"].map(code).to_numpy(dtype=np.int64)
-        d = out["doc_id"].to_numpy(dtype=np.int64)
-        sc = out["score"].to_numpy(dtype=np.float64)
-        order = np.lexsort((d, -sc, q))
-        q, d, sc = q[order], d[order], sc[order]
-        pos = np.arange(len(q))
-        first = np.r_[True, q[1:] != q[:-1]]
-        rank = pos - np.maximum.accumulate(np.where(first, pos, 0)) + 1
-        keep = rank <= k
-        return self._frame(
-            MANY_SCHEMA,
-            {
-                "qid": np.asarray(qids, dtype=object)[q[keep]],
-                "doc_id": d[keep],
-                "score": sc[keep],
-                "rank": rank[keep],
-            },
         )
 
     def facets(
@@ -3948,7 +3862,7 @@ class Index:
 
         if shard_size < 1:
             raise ValueError("shard_size must be ≥ 1")
-        dps = int(self.meta["docs_per_shard"])
+        dps = self._bm25()[0]
         live = self._docs_df().select("doc_id")
         deletes = self._deletes_df()
         if deletes is not None:
@@ -4195,16 +4109,9 @@ class Index:
         if not weights:
             return self._frame(out_schema)
         terms = sorted(weights)
-        rows = self._lookup_terms_arrow(terms)
-        if rows is None:
-            rows = self._lookup_terms_spark(terms)
-        df_by: dict[str, int] = {}
-        for term, df, _bucket in rows:
-            df_by[term] = df_by.get(term, 0) + int(df)
-        meta = self.meta
-        n = float(meta["n_docs"])
-        avgdl = float(meta["avgdl"]) or 1e-9
-        k1, b = float(meta["k1"]), float(meta["b"])
+        df_by = self._term_dfs(terms)[0]
+        n = float(self.meta["n_docs"])
+        _dps, avgdl, k1, b = self._bm25()
         doc_tf = (
             self._tokens_full_df()
             .filter((F.col("doc_id") == int(doc_id)) & F.col("term").isin(terms))
@@ -4222,7 +4129,7 @@ class Index:
             w = float(weights[t])
             contrib = w * idf * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
             out.append((t, w, tf, df, idf, contrib))
-        return self.spark.createDataFrame(out, out_schema)
+        return self._frame(out_schema, out)
 
     def suggest_terms(
         self,
@@ -4256,16 +4163,10 @@ class Index:
         toks = sorted(set(self._analyze(text)))
         if not toks:
             return self._frame(out_schema)
-        present_rows = self._lookup_terms_arrow(toks)
-        if present_rows is None:
-            present_rows = self._lookup_terms_spark(toks)
-        present = {t for t, _, _ in present_rows}
-        own_df: dict[str, int] = {}
-        for t, d, _b in present_rows:
-            own_df[t] = own_df.get(t, 0) + int(d)
+        own_df = self._term_dfs(toks)[0]
         out = []
         for tok in toks:
-            if suggest_mode == "missing" and tok in present:
+            if suggest_mode == "missing" and tok in own_df:
                 continue
             if len(tok) < prefix_length:
                 continue
@@ -4282,19 +4183,14 @@ class Index:
             near = [(t, d) for t, d in near if d <= max_edits]
             if not near:
                 continue
-            rows = self._lookup_terms_arrow([t for t, _ in near])
-            if rows is None:
-                rows = self._lookup_terms_spark([t for t, _ in near])
-            df_by: dict[str, int] = {}
-            for term, df, _bucket in rows:
-                df_by[term] = df_by.get(term, 0) + int(df)
+            df_by = self._term_dfs([t for t, _ in near])[0]
             if suggest_mode == "popular":
                 floor = own_df.get(tok, 0)
                 near = [(t, d) for t, d in near if df_by.get(t, 0) > floor]
             ranked = sorted(near, key=lambda td: (td[1], -df_by.get(td[0], 0), td[0]))
             for t, d in ranked[:size]:
                 out.append((tok, t, int(d), int(df_by.get(t, 0))))
-        return self.spark.createDataFrame(out, out_schema)
+        return self._frame(out_schema, out)
 
     def suggest_complete(
         self,
@@ -4346,16 +4242,9 @@ class Index:
             cand = self._expand_prefix(prefix, 1 << 20)
         if not cand:
             return self._frame(out_schema)
-        rows = self._lookup_terms_arrow(cand)
-        if rows is None:
-            rows = self._lookup_terms_spark(cand)
-        df_by: dict[str, int] = {}
-        for term, df, _bucket in rows:
-            df_by[term] = df_by.get(term, 0) + int(df)
+        df_by = self._term_dfs(cand)[0]
         ranked = sorted(df_by.items(), key=lambda tf: (-tf[1], tf[0]))[:size]
-        return self.spark.createDataFrame(
-            [(t, int(f)) for t, f in ranked], out_schema
-        )
+        return self._frame(out_schema, [(t, int(f)) for t, f in ranked])
 
     def suggest_complete_context(
         self,
@@ -4473,12 +4362,7 @@ class Index:
                 ]
                 near = [(t, d) for t, d in near if d <= max_edits]
                 if near:
-                    rows = self._lookup_terms_arrow([t for t, _ in near])
-                    if rows is None:
-                        rows = self._lookup_terms_spark([t for t, _ in near])
-                    df_by: dict[str, int] = {}
-                    for term, df, _b in rows:
-                        df_by[term] = df_by.get(term, 0) + int(df)
+                    df_by = self._term_dfs([t for t, _ in near])[0]
                     near.sort(key=lambda td: (td[1], -df_by.get(td[0], 0), td[0]))
                     cands += near[:gen_size]
             slot_cands[tok] = cands
@@ -4594,8 +4478,8 @@ class Index:
                     kept.append((phrase, sc))
                     if len(kept) >= size:
                         break
-            return self.spark.createDataFrame(kept, out_schema)
-        return self.spark.createDataFrame(scored[:size], out_schema)
+            return self._frame(out_schema, kept)
+        return self._frame(out_schema, scored[:size])
 
     def search_after(
         self,
@@ -4635,8 +4519,8 @@ class Index:
                 if len(nxt) >= k or len(top) < kk or kk >= n:
                     break
                 kk *= 4
-            return self.spark.createDataFrame(
-                [(int(r["doc_id"]), float(r["score"])) for r in nxt[:k]], TOPK_SCHEMA
+            return self._frame(
+                TOPK_SCHEMA, [(int(r["doc_id"]), float(r["score"])) for r in nxt[:k]]
             )
         scored = self.search_oracle(query_text, None, where=where)
         nxt = scored.filter(
@@ -5053,8 +4937,7 @@ class Index:
         tokens, doc_stats = self._oracle_tokens()
         qmap = self.spark.createDataFrame(rows, "qname string, term string, idfw double")
         all_terms = sorted({t for _, t, _ in rows})
-        k1, b = float(self.meta["k1"]), float(self.meta["b"])
-        avgdl = float(self.meta["avgdl"]) or 1e-9
+        _dps, avgdl, k1, b = self._bm25()
         matched = (
             tokens.select("doc_id", "term", "tf")
             .filter(F.col("term").isin(all_terms))
@@ -6665,15 +6548,16 @@ class Index:
         min_should_match = self._msm(min_should_match, query_text)
         tokens, doc_stats = self._oracle_tokens()
         idfw, _buckets = self._plan_terms(query_text)
+        _dps, avgdl, k1, b = self._bm25()
         scores = bm25.bm25_scores_oracle(
             tokens,
             self.term_stats,
             doc_stats,
             query_text,
             n_docs=self.meta["n_docs"],
-            avgdl=self.meta["avgdl"] or 1e-9,
-            k1=self.meta["k1"],
-            b=self.meta["b"],
+            avgdl=avgdl,
+            k1=k1,
+            b=b,
             idfw=idfw or None,
             analyzer=self.meta.get("analyzer", "standard"),
         )
@@ -6871,7 +6755,7 @@ class Index:
             doc_stats,
             query_text,
             n_docs=self.meta["n_docs"],
-            avgdl=self.meta["avgdl"] or 1e-9,
+            avgdl=self._bm25()[1],
             k1=float(k1),
             b=float(b),
             analyzer=self.meta.get("analyzer", "standard"),
@@ -6960,7 +6844,7 @@ class Index:
             raise ValueError("terminate_after must be ≥ 1")
         from pyspark.sql import Window
 
-        dps = int(self.meta["docs_per_shard"])
+        dps = self._bm25()[0]
         scores = self.search_oracle(
             query_text, None, where=where, min_should_match=min_should_match
         ).withColumn("shard", F.expr(f"doc_id DIV {dps}"))

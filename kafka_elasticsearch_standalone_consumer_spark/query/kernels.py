@@ -3,11 +3,12 @@
 Each shard (a contiguous doc_id range, the ES-shard analogue) is scored
 independently and emits at most k candidates; the plan unions the partials
 and takes the global top-k (SURVEY §3.3 "coordinator merge"). The kernels
-run in both placements through one seam: :func:`term_shard` and
-:func:`positional_shard` turn a shard's posting rows into kernel input,
-and the engine calls them per shard either on the executors (one
-grouped-pandas wrapper, ``Index._shard_partials``) or on the driver over a
-pyarrow read.
+run in both placements through one seam: :func:`term_shard` (a batch
+of term plans; a single query is the batch of one), :func:`dismax_shard`
+and :func:`positional_shard` turn a shard's posting rows into kernel
+input through one run builder (:func:`shard_runs`), and the engine calls
+them per shard either on the executors (one grouped-pandas wrapper,
+``Index._shard_partials``) or on the driver over a pyarrow read.
 
 Three modes:
   * ``exact``  — decode every posting of every query term, term-at-a-time
@@ -115,20 +116,15 @@ class _Run:
         p = np.concatenate(flats) if flats else np.empty(0, np.int64)
         return d, t, l, p
 
-
-class _RunView:
-    """A _Run re-weighted for a different query: shares the underlying
-    buffers AND the per-block decode cache (batched multi-query execution
-    decodes each block once no matter how many queries touch the term)."""
-
-    __slots__ = ("base", "idfw")
-
-    def __init__(self, base: _Run, idfw: float):
-        self.base = base
-        self.idfw = idfw
-
-    def __getattr__(self, name):
-        return getattr(self.base, name)
+    def reweighted(self, idfw: float) -> "_Run":
+        """A shallow copy at another query weight: it shares the buffers
+        AND the per-block decode cache, so every plan of a batch that
+        touches the term decodes each block once."""
+        r = _Run.__new__(_Run)
+        for name in _Run.__slots__:
+            setattr(r, name, getattr(self, name))
+        r.idfw = idfw
+        return r
 
 
 def _contrib(idfw, tfs, dls, avgdl, k1, b):
@@ -759,10 +755,10 @@ def shard_topk_dismax(
     """ES ``dis_max`` compound: per-doc score = best clause score +
     tie_breaker × (sum of the other clauses' scores). Each clause is a
     disjunctive BM25 score set computed exactly (term-at-a-time, like
-    shard_topk_exact); clauses share posting decode through _RunView, so
-    a term used by several clauses is decoded once. Exact per shard —
-    shards partition docs, so the coordinator's union + global top-k is
-    the exact dis_max order."""
+    shard_topk_exact); clauses share posting decode through
+    :meth:`_Run.reweighted`, so a term used by several clauses is decoded
+    once. Exact per shard — shards partition docs, so the coordinator's
+    union + global top-k is the exact dis_max order."""
     all_docs, all_scores = [], []
     for runs in runs_by_clause:
         docs_c, contrib_c = [], []
@@ -797,41 +793,88 @@ def shard_topk_dismax(
 # executor closures then pickle these functions by reference to this module.
 
 
+def shard_runs(
+    pdf, docs_per_shard: int, avgdl: float, k1: float, b: float
+) -> tuple[int, dict[str, list[_Run]]]:
+    """(shard_lo, {term: [_Run]}) of one shard's posting rows: one run per
+    row at weight 1.0, in pdf row order within each term (runs of one term
+    are doc-disjoint, so that order never changes a score)."""
+    shard_lo = int(pdf["shard"].iloc[0]) * docs_per_shard
+    by_term: dict[str, list[_Run]] = {}
+    for row in pdf.itertuples(index=False):
+        by_term.setdefault(row.term, []).append(
+            _Run(row, 1.0, shard_lo, query_avgdl=avgdl, k1=k1, b=b)
+        )
+    return shard_lo, by_term
+
+
+def _plan_runs(by_term: dict[str, list[_Run]], idfw: dict) -> dict[str, list[_Run]]:
+    """The runs of one term plan, re-weighted, in TERM-SORTED order: float
+    accumulation across terms is not associative, so every execution path
+    (both placements, every batch) must add per-term contributions in the
+    same order for bit-identical scores."""
+    return {
+        t: [r.reweighted(idfw[t]) for r in by_term[t]]
+        for t in sorted(idfw)
+        if t in by_term
+    }
+
+
 def term_shard(
-    pdf, idfw: dict, mode: str, k: int, avgdl: float, k1: float, b: float,
+    pdf, plans: list[dict], mode: str, k: int, avgdl: float, k1: float, b: float,
     docs_per_shard: int, allowed: np.ndarray | None, blocked: np.ndarray | None,
-):
-    """One shard of a BM25 term query: (doc_ids, scores), top-k by mode
-    (bmw | exact | intersect). An empty ``allowed`` array returns empty
-    without decoding."""
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """One shard of a batch of BM25 term queries: one (doc_ids, scores)
+    top-k per term plan (an idfw dict), by mode (bmw | exact | intersect).
+    A single query is the batch of one. The runs are built once per
+    posting row; every plan scores re-weighted copies that share the
+    buffers and the block-decode cache, so a block that several plans
+    reach is decoded once. An empty ``allowed`` array returns empty
+    without decoding; under intersect, a plan with a term missing from
+    the shard returns empty."""
     empty = np.empty(0, np.int64), np.empty(0, np.float64)
     if allowed is not None and not len(allowed):
-        return empty
-    shard_lo = int(pdf["shard"].iloc[0]) * docs_per_shard
-    # term-sorted run order: float accumulation across terms is not
-    # associative, so every execution path (both placements, search_many)
-    # must add per-term contributions in the SAME order for bit-identical
-    # scores (runs of one term are doc-disjoint, so order within a term
-    # cannot matter)
-    rows = list(pdf.sort_values("term", kind="stable").itertuples(index=False))
-    runs = [
-        _Run(row, idfw[row.term], shard_lo, query_avgdl=avgdl, k1=k1, b=b)
-        for row in rows
+        return [empty for _ in plans]
+    shard_lo, by_term = shard_runs(pdf, docs_per_shard, avgdl, k1, b)
+    masks = {"allowed": allowed, "blocked": blocked}
+    out = []
+    for idfw in plans:
+        runs = _plan_runs(by_term, idfw)
+        if mode == "intersect":
+            out.append(
+                empty if len(runs) < len(idfw)
+                else shard_topk_intersect(runs, k, avgdl, k1, b, **masks)
+            )
+            continue
+        flat = [r for rs in runs.values() for r in rs]
+        if mode == "exact":
+            out.append(shard_topk_exact(flat, k, avgdl, k1, b, **masks))
+        else:
+            out.append(shard_topk_bmw(
+                flat, k, avgdl, shard_lo, docs_per_shard, k1, b, **masks
+            ))
+    return out
+
+
+def dismax_shard(
+    pdf, clause_plans: list[dict], tie_breaker: float, k: int, avgdl: float,
+    k1: float, b: float, docs_per_shard: int,
+    allowed: np.ndarray | None, blocked: np.ndarray | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One shard of an ES ``dis_max`` query: (doc_ids, scores) top-k of
+    :func:`shard_topk_dismax` over one term plan (an idfw dict) per
+    clause. The clauses share one set of runs, so a term used by several
+    clauses is decoded once. An empty ``allowed`` array returns empty
+    without decoding."""
+    if allowed is not None and not len(allowed):
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    _lo, by_term = shard_runs(pdf, docs_per_shard, avgdl, k1, b)
+    runs_by_clause = [
+        [r for rs in _plan_runs(by_term, c).values() for r in rs] for c in clause_plans
     ]
-    if mode == "exact":
-        return shard_topk_exact(runs, k, avgdl, k1, b, allowed=allowed, blocked=blocked)
-    if mode == "intersect":
-        by_term: dict[str, list] = {}
-        for row, r in zip(rows, runs):
-            by_term.setdefault(row.term, []).append(r)
-        if len(by_term) < len(idfw):
-            return empty
-        return shard_topk_intersect(
-            by_term, k, avgdl, k1, b, allowed=allowed, blocked=blocked
-        )
-    return shard_topk_bmw(
-        runs, k, avgdl, shard_lo, docs_per_shard, k1, b,
-        allowed=allowed, blocked=blocked,
+    return shard_topk_dismax(
+        runs_by_clause, k, avgdl, k1, b,
+        tie_breaker=tie_breaker, allowed=allowed, blocked=blocked,
     )
 
 
@@ -846,12 +889,7 @@ def positional_shard(
     ``('first', end)``, ``('near', slop, in_order)``, ``('not', pre,
     post)`` or ``('containing' | 'within', slop, in_order)`` with the
     little clause in slot 0."""
-    shard_lo = int(pdf["shard"].iloc[0]) * docs_per_shard
-    by_term: dict[str, list] = {}
-    for row in pdf.itertuples(index=False):
-        by_term.setdefault(row.term, []).append(
-            _Run(row, 1.0, shard_lo, query_avgdl=avgdl, k1=k1, b=b)
-        )
+    _lo, by_term = shard_runs(pdf, docs_per_shard, avgdl, k1, b)
     slots = [[r for t in slot for r in by_term.get(t, [])] for slot in slot_terms]
     masks = {"allowed": allowed, "blocked": blocked}
     if span is None:

@@ -89,11 +89,8 @@ class MultiIndex:
         n_total = 0.0
         dl_total = 0.0
         for index in self.indexes:
-            rows = index._lookup_terms_arrow(terms)
-            if rows is None:
-                rows = index._lookup_terms_spark(terms)
-            for term, df, _b in rows:
-                df_by[term] = df_by.get(term, 0) + int(df)
+            for term, df in index._term_dfs(terms)[0].items():
+                df_by[term] = df_by.get(term, 0) + df
             n = float(index.meta["n_docs"])
             n_total += n
             dl_total += n * float(index.meta["avgdl"] or 0.0)

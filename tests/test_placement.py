@@ -84,10 +84,12 @@ def test_placements_bit_identical(spark, deleted_wh, placements):
                         (r["doc_id"], r["score"])
                         for r in idx.search(q, 10, mode=mode, min_score=min_score).collect()
                     ]
-        out["many"] = sorted(
-            (r["qid"], r["rank"], r["doc_id"], r["score"])
-            for r in idx.search_many(queries, 10).collect()
-        )
+        many = idx.search_many(queries, 10).collect()
+        out["many"] = sorted((r["qid"], r["rank"], r["doc_id"], r["score"]) for r in many)
+        for i, q in enumerate(queries):
+            # search is the batch of one: no rounding between the two
+            got = sorted((r["rank"], r["doc_id"], r["score"]) for r in many if r["qid"] == str(i))
+            assert [(d, s) for _, d, s in got] == out[q, "bmw", None], (placement, q)
         runs[placement] = out
     assert runs["driver"] == runs["executor"]
     assert runs["driver"][Q, "bmw", floor] and len(runs["driver"][Q, "bmw", floor]) < 10
@@ -111,6 +113,53 @@ def test_empty_results_are_zero_job_frames_with_unchanged_schemas(spark, built_i
     for df, ddl in cases:
         assert df.collect() == []
         assert df.schema == spark.createDataFrame([], ddl).schema, ddl
+    assert _jobs(spark) == before
+
+
+def test_driver_held_results_are_zero_job_frames(spark, built_index):
+    """Surfaces that compute their rows on the driver return them as one
+    Arrow LocalRelation: collecting each runs no Spark job, and each
+    schema is the DDL it always had."""
+    idx, _ = built_index
+    top = idx.search(Q, 3).collect()
+    doc, cursor = top[0]["doc_id"], (top[0]["score"], top[0]["doc_id"])
+    vec = "term string, tf long, df long"
+    cases = [
+        (idx.count_matches(""), "n long"),
+        (idx.mterm_vectors([doc, top[1]["doc_id"]]), "doc_id long, " + vec),
+        (idx.mterm_vectors([doc], positions=True),
+         "doc_id long, " + vec + ", positions array<long>"),
+        (idx.term_vectors(doc), vec),
+        (idx.term_vectors(doc, positions=True), vec + ", positions array<long>"),
+        (idx.analyze("The quick w00000"), "position long, token string"),
+        (idx.validate_query("w00000 +w00003"), "valid boolean, explanation string"),
+        (idx.explain_score(Q, doc),
+         "term string, w double, tf double, df double, idf double, contribution double"),
+        (idx.suggest_terms("w00000 w0000x"),
+         "input string, suggestion string, dist int, freq long"),
+        (idx.suggest_complete("w000"), "suggestion string, freq long"),
+        (idx.suggest_phrase("w00000 w0001"), "suggestion string, score double"),
+        (idx.suggest_phrase("w00000 w0001", collate=True), "suggestion string, score double"),
+        (idx.search_after(Q, cursor, 5, mode="bmw"), TOPK_SCHEMA),
+    ]
+    before = _jobs(spark)
+    for df, ddl in cases:
+        assert df.collect(), ddl
+        assert df.schema == spark.createDataFrame([], ddl).schema, ddl
+    assert _jobs(spark) == before
+
+
+def test_tombstone_mask_builds_without_a_job(spark, deleted_wh):
+    """The tombstones reach Spark from the driver's pyarrow read of the
+    tombstone table, so building a per-shard mask runs no Spark job."""
+    idx = Index(spark, deleted_wh)
+    dps = idx.meta["docs_per_shard"]
+    before = _jobs(spark)
+    mask_df, kind = idx._mask_plan(None, dps)
+    assert _jobs(spark) == before
+    assert kind == "blocked"
+    got = sorted(r["doc_id"] for r in mask_df.collect())
+    assert got == idx._local_blocked().tolist() and len(got) == 3
     assert _jobs(spark) == before
 
 

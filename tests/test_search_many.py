@@ -25,6 +25,47 @@ def test_search_many_matches_single_query_path(spark, built_index, placements):
             assert sorted(got.get(qid, [])) == want, (placement, qid, q)
 
 
+def test_batched_term_shard_decodes_each_block_once(built_index, monkeypatch):
+    """Two plans sharing a dominant term in one term_shard call: every
+    (run, block) is decoded at most once, the batch decodes less than the
+    two single-plan calls together, and each plan's rows equal its
+    single-plan rows."""
+    from kafka_elasticsearch_standalone_consumer_spark.index import codec
+    from kafka_elasticsearch_standalone_consumer_spark.query import kernels
+
+    idx, _ = built_index
+    plans = [idx._plan_terms(q) for q in ("w00000 w00003", "w00000 w00015")]
+    idfws = [idfw for idfw, _ in plans]
+    pdf = idx._local_postings(
+        sorted({bk for _, bs in plans for bk in bs}), sorted(set(idfws[0]) | set(idfws[1]))
+    )
+    dps, avgdl, k1, b = idx._bm25()
+    calls: list[tuple[int, int]] = []
+    decode = codec.decode_doc_blocks
+
+    def counting(buf, offs, block_idx):
+        calls.extend((id(buf), int(i)) for i in block_idx)
+        return decode(buf, offs, block_idx)
+
+    monkeypatch.setattr(codec, "decode_doc_blocks", counting)
+
+    def run(pdf, batch):
+        calls.clear()
+        out = kernels.term_shard(pdf, batch, "bmw", K, avgdl, k1, b, dps, None, None)
+        return out, list(calls)
+
+    batched = singles = 0
+    for _shard, g in pdf.groupby("shard", sort=False):
+        both, seen = run(g, idfws)
+        assert len(seen) == len(set(seen))
+        batched += len(seen)
+        for idfw, (d, s) in zip(idfws, both):
+            [(want_d, want_s)], alone = run(g, [idfw])
+            singles += len(alone)
+            assert d.tolist() == want_d.tolist() and s.tolist() == want_s.tolist()
+    assert 0 < batched < singles
+
+
 def test_search_many_fetch_roundtrip(spark, built_index):
     idx, _ = built_index
     hits = idx.search_many(["w00000 w00002"], 5)
