@@ -224,12 +224,13 @@ class Index:
             self._seg_baked = [float(s["baked_avgdl"]) for s in segs]
         self._pads_cache: dict = {}
 
-    # postings / term_stats are the executor-side views of the open-time
-    # segment snapshot (_seg_whs). They are built on first use: a Spark
-    # parquet read lists partitions and infers the schema (~1-2 s per
-    # open with a few segments), which the driver-side serving path never
-    # needs. Plain attributes once built, so callers may replace them
-    # (idx.postings = idx.postings.persist()); ephemeral() assigns both.
+    # postings / _docs / term_stats are the executor-side views of the
+    # open-time segment snapshot (_seg_whs). They are built on first use:
+    # a Spark parquet read lists partitions and infers the schema (one
+    # Spark job, ~1-2 s per open with a few segments), which the
+    # driver-side serving path never needs. Plain attributes once built,
+    # so callers may replace them (idx.postings = idx.postings.persist());
+    # ephemeral() assigns all three.
     @functools.cached_property
     def postings(self) -> DataFrame:
         """Postings of every segment in the open-time snapshot, each row
@@ -247,6 +248,13 @@ class Index:
         # parallelism and regressed ~30% (0.86–0.98 s → 1.13–1.36 s,
         # interleaved A/B). The near-empty-task overhead the coalesce
         # targeted is already absorbed by local-mode scheduling.
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    @functools.cached_property
+    def _docs(self) -> DataFrame:
+        """The doc store of every segment in the open-time snapshot — the
+        one frame every ``_docs_df()`` caller shares."""
+        parts = [w.read(self.spark, "docs") for w in self._seg_whs]
         return functools.reduce(DataFrame.unionByName, parts)
 
     @functools.cached_property
@@ -626,12 +634,7 @@ class Index:
         )
 
     def _docs_df(self) -> DataFrame:
-        if self.wh is None:
-            return self._docs
-        docs = self._seg_whs[0].read(self.spark, "docs")
-        for w in self._seg_whs[1:]:
-            docs = docs.unionByName(w.read(self.spark, "docs"))
-        return docs
+        return self._docs
 
     def _deletes_df(self) -> DataFrame | None:
         """Delete tombstones (Lucene live-docs complement) as a zero-job
@@ -1014,17 +1017,35 @@ class Index:
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
         """ES ``terms`` query on the zero-Spark-job serving path: docs
-        containing ≥1 of the verbatim ``terms`` at constant score
+        containing ≥1 of the lowercased ``terms`` at constant score
         ``boost``, first k by doc_id — same contract as
-        :meth:`search_terms`. The postings read is the identical pruned
+        :meth:`search_terms`, served by
+        :meth:`_constant_score_multi_term_local`. ``where`` takes the
+        serving-path (col, op, value) tuples."""
+        return self._constant_score_multi_term_local(
+            [str(t).lower() for t in terms], k, where, boost
+        )
+
+    def _constant_score_multi_term_local(
+        self,
+        terms: list[str],
+        k: int,
+        where: list[tuple] | None,
+        boost: float = 1.0,
+    ) -> list[tuple[int, float]]:
+        """The driver twin of :meth:`_constant_score_multi_term`: docs
+        containing ≥1 of the verbatim ``terms`` at constant score
+        ``boost``, first k by doc_id. The postings read is the pruned
         pyarrow scan :meth:`search_local` uses; doc ids are decoded and
-        unioned (no scoring kernel), then filter/tombstone masks apply.
-        ``where`` takes the serving-path (col, op, value) tuples."""
+        unioned (no scoring kernel), then :meth:`_local_mask` applies.
+        Every multi-term ``*_local`` twin is this body over its rewrite,
+        so whitespace/keyword indexes (which keep case) still match."""
         if self.wh is None:
             raise ValueError(
-                "search_terms_local serves from warehouse files — use search_terms()"
+                "multi-term *_local twins serve from warehouse files — "
+                "use the distributed surface"
             )
-        ts = sorted({str(t) for t in terms})
+        ts = sorted(set(terms))
         if not ts:
             return []
         per_term = self._local_term_docs(ts, "search_terms()")
@@ -1061,6 +1082,10 @@ class Index:
         allowed, _ = self._local_mask(where)
         return [(int(d), float(boost)) for d in allowed[:k]]
 
+    # The multi-term and positional *_local twins below are the second
+    # finish of their distributed surface: the same rewrite or clause
+    # compile, then the driver body (_constant_score_multi_term_local /
+    # _positional_topk_local) instead of the Spark one.
     def search_prefix_local(
         self,
         prefix: str,
@@ -1068,13 +1093,9 @@ class Index:
         max_expansions: int = 50,
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
-        """ES ``prefix`` query on the zero-Spark-job serving path: the
-        SAME pruned term-dictionary range read as the distributed rewrite
-        (:meth:`_expand_prefix`), then the terms-local constant-score
-        path — identical results to :meth:`search_prefix` (score 1.0,
-        first k by doc_id)."""
-        return self.search_terms_local(
-            self._expand_prefix(prefix, max_expansions), k, where=where
+        """Zero-job twin of :meth:`search_prefix`."""
+        return self._constant_score_multi_term_local(
+            self._expand_prefix(prefix, max_expansions), k, where
         )
 
     def search_wildcard_local(
@@ -1084,23 +1105,10 @@ class Index:
         max_expansions: int = 50,
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
-        """ES ``wildcard`` on the zero-Spark-job serving path — the same
-        literal-prefix-pruned expansion as :meth:`search_wildcard`
-        (leading wildcards rejected, like ES), served through the
-        terms-local path."""
-        import fnmatch
-        import re as _re
-
-        lit = _re.split(r"[*?]", pattern, maxsplit=1)[0]
-        if not lit:
-            raise ValueError(
-                "leading-wildcard patterns are rejected (no literal prefix to "
-                "prune the term dictionary with) — same default as ES"
-            )
-        cand = self._expand_prefix(lit, 1 << 20)
-        rx = _re.compile(fnmatch.translate(pattern))
-        terms = [t for t in cand if rx.match(t)][:max_expansions]
-        return self.search_terms_local(terms, k, where=where)
+        """Zero-job twin of :meth:`search_wildcard`."""
+        return self._constant_score_multi_term_local(
+            self._wildcard_terms(pattern, max_expansions), k, where
+        )
 
     def search_fuzzy_local(
         self,
@@ -1111,31 +1119,10 @@ class Index:
         max_expansions: int = 50,
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
-        """ES ``fuzzy`` on the zero-Spark-job serving path — the same
-        prefix+length-band pruned dictionary read and Damerau-Levenshtein
-        filter as :meth:`search_fuzzy` (``prefix_length≥1`` enforced for
-        the same dictionary-scale reason), served through the terms-local
-        path. Result-identical to the distributed rewrite."""
-        if prefix_length < 1:
-            raise ValueError(
-                "prefix_length must be ≥1: an unpruned fuzzy expansion scans "
-                "the whole term dictionary (ES discourages it for the same reason)"
-            )
-        if len(term) < prefix_length:
-            return []
-        cand = self._expand_prefix(
-            term[:prefix_length],
-            1 << 20,
-            length_band=(len(term) - fuzziness, len(term) + fuzziness),
-        )
-        near = [
-            t
-            for t in cand
-            if abs(len(t) - len(term)) <= fuzziness
-            and _damerau_levenshtein(term, t, fuzziness) <= fuzziness
-        ]
-        return self.search_terms_local(
-            sorted(near)[:max_expansions], k, where=where
+        """Zero-job twin of :meth:`search_fuzzy`."""
+        return self._constant_score_multi_term_local(
+            list(self._fuzzy_variants(term, fuzziness, prefix_length))[:max_expansions],
+            k, where,
         )
 
     def search_regexp_local(
@@ -1145,41 +1132,23 @@ class Index:
         max_expansions: int = 50,
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
-        """ES ``regexp`` on the zero-Spark-job serving path — the same
-        literal-prefix-pruned, implicitly-anchored expansion as
-        :meth:`search_regexp`, served through the terms-local path."""
-        import re as _re
-
-        m = _re.match(r"[a-z0-9]+", pattern)
-        lit = m.group(0) if m else ""
-        if lit and len(lit) < len(pattern) and pattern[len(lit)] in "*?{":
-            lit = lit[:-1]  # the quantifier applies to the last literal char
-        if not lit:
-            raise ValueError(
-                "regexp patterns must start with a literal prefix (no leading "
-                "metacharacters) so the term-dictionary read can be pruned — "
-                "the same scale guard as search_regexp"
-            )
-        cand = self._expand_prefix(lit, 1 << 20)
-        rx = _re.compile(pattern)
-        terms = [t for t in cand if rx.fullmatch(t)][:max_expansions]
-        return self.search_terms_local(terms, k, where=where)
+        """Zero-job twin of :meth:`search_regexp`."""
+        return self._constant_score_multi_term_local(
+            self._regexp_terms(pattern, max_expansions), k, where
+        )
 
     def search_phrase_local(
         self, phrase: str, k: int = 10, slop: int = 0,
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
-        """match_phrase on the zero-Spark-job serving path: the same
-        pruned postings read and position kernel as :meth:`search_phrase`
-        executed driver-side — rank/score-identical to the distributed
-        path (same synthetic-term BM25: df aggregated over UNMASKED
-        matches across shards, so filters/tombstones never shift idf).
-        ``where`` is the serving-path filter surface (see
+        """Zero-job twin of :meth:`search_phrase`: the same pruned
+        postings read and position kernel executed driver-side —
+        rank/score-identical (same synthetic-term BM25: df aggregated over
+        UNMASKED matches across shards, so filters/tombstones never shift
+        idf). ``where`` is the serving-path filter surface (see
         :meth:`_local_mask`)."""
         slots, offsets = self._analyze_phrase(phrase)
-        return self._positional_topk_local(
-            [[t] for t in slots], None, k, where, slop=slop, offsets=offsets
-        )
+        return self._positional_topk_local([[t] for t in slots], k, where, slop, offsets)
 
     def _phrase_scores_local(
         self,
@@ -1197,31 +1166,29 @@ class Index:
 
     def _positional_topk_local(
         self,
-        slot_terms: list[list[str]],
-        span: tuple | None,
+        slot_terms: list[list[str]] | None,
         k: int,
         where: list[tuple] | None,
         slop: int = 0,
         offsets: list[int] | None = None,
+        span: tuple | None = None,
     ) -> list[tuple[int, float]]:
-        """Zero-Spark-job top-k of a phrase (``span=None``) or span query:
-        the serving-path masks, then :meth:`_positional_scores_local` with
-        a per-shard cut at k."""
-        what = "phrase" if span is None else "span"
+        """Zero-Spark-job top-k of a phrase (``span=None``) or span query —
+        the driver finish of :meth:`_phrase_topk`, same arguments: the
+        serving-path masks, then :meth:`_positional_scores_local` with a
+        per-shard cut at k."""
         if self.wh is None:
-            raise ValueError(f"{what} *_local twins serve from warehouse files")
-        if not self.meta.get("positions"):
-            raise ValueError(f"index built without positions=True — no {what} support")
-        allowed, blocked = self._local_mask(where)
+            raise ValueError("phrase/span *_local twins serve from warehouse files")
         dd, ss = self._positional_scores_local(
-            slot_terms, span, allowed, blocked, per_shard_k=k, slop=slop, offsets=offsets
+            slot_terms, span, *self._local_mask(where),
+            per_shard_k=k, slop=slop, offsets=offsets,
         )
         top = np.lexsort((dd, -ss))[:k]
         return [(int(dd[i]), float(ss[i])) for i in top]
 
     def _positional_scores_local(
         self,
-        slot_terms: list[list[str]],
+        slot_terms: list[list[str]] | None,
         span: tuple | None,
         allowed: "np.ndarray | None",
         blocked: "np.ndarray | None",
@@ -1271,12 +1238,10 @@ class Index:
         self, term: str, end: int, k: int = 10,
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
-        """Zero-job twin of :meth:`search_span_first` (rank/score
-        identical; ``where`` is the serving-path tuple surface)."""
-        toks = self._analyze(term)
-        if not toks:
-            return []
-        return self._positional_topk_local([[toks[0]]], ("first", int(end)), k, where)
+        """Zero-job twin of :meth:`search_span_first`."""
+        return self._positional_topk_local(
+            [self._analyze(term)[:1]], k, where, span=("first", int(end))
+        )
 
     def search_span_near_local(
         self,
@@ -1286,25 +1251,19 @@ class Index:
         k: int = 10,
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
-        """Zero-job twin of :meth:`search_span_near` — same clause
-        grammar (str | span_or list | ``{"prefix": ...}`` span_multi)
-        and the same repeated-terms guard."""
-        slots = self._span_near_slots(terms, in_order)
-        if slots is None:
-            return []
+        """Zero-job twin of :meth:`search_span_near`."""
         return self._positional_topk_local(
-            slots, ("near", int(slop), bool(in_order)), k, where
+            self._span_near_slots(terms, in_order), k, where,
+            span=("near", int(slop), bool(in_order)),
         )
 
     def search_span_or_local(
         self, terms: list[str], k: int = 10, where: list[tuple] | None = None
     ) -> list[tuple[int, float]]:
-        """Zero-job twin of :meth:`search_span_or` (a single-slot
-        span_near, window checks vacuous for n=1)."""
-        slot = self._span_clause(list(terms))
-        if not slot:
-            return []
-        return self._positional_topk_local([slot], ("near", 0, False), k, where)
+        """Zero-job twin of :meth:`search_span_or`."""
+        return self._positional_topk_local(
+            [self._span_clause(list(terms))], k, where, span=("near", 0, False)
+        )
 
     def search_span_not_local(
         self,
@@ -1315,27 +1274,19 @@ class Index:
         k: int = 10,
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
-        """Zero-job twin of :meth:`search_span_not` (absent exclude
-        excludes nothing, same as the distributed path)."""
-        inc = self._span_clause(include)
-        if not inc:
-            return []
-        exc = self._span_clause(exclude)
+        """Zero-job twin of :meth:`search_span_not`."""
         return self._positional_topk_local(
-            [inc, exc] if exc else [inc], ("not", int(pre), int(post)), k, where
+            self._span_not_slots(include, exclude), k, where,
+            span=("not", int(pre), int(post)),
         )
 
     def _span_contain_local(
         self, little, big, slop, in_order, mode, k, where
     ) -> list[tuple[int, float]]:
-        lit = self._span_clause(little)
-        if not lit:
-            return []
-        slots = self._span_near_slots(big, in_order)
-        if slots is None:
-            return []
+        """Zero-job twin of :meth:`_span_contain_topk`."""
         return self._positional_topk_local(
-            [lit] + slots, (mode, int(slop), bool(in_order)), k, where
+            self._span_contain_slots(little, big, in_order), k, where,
+            span=(mode, int(slop), bool(in_order)),
         )
 
     def search_span_containing_local(
@@ -2112,6 +2063,78 @@ class Index:
             out = {t for t in out if lo_l <= len(t) <= hi_l}
         return sorted(out)[:max_expansions]
 
+    def _fuzzy_variants(
+        self, term: str, fuzziness: int, prefix_length: int
+    ) -> dict[str, int]:
+        """{dictionary term: Damerau-Levenshtein distance ≤ ``fuzziness``}
+        of ``term``, in term order — ES's fuzzy rewrite, written once for
+        :meth:`search_fuzzy` and its twin, query_string ``term~n``,
+        :meth:`fuzzy_like_this` and the term/phrase suggesters (each keeps
+        its own cap or weight on the result). The dictionary read
+        (:meth:`_expand_prefix`) is pruned to terms sharing the first
+        ``prefix_length`` characters (ES's knob — its docs recommend ≥1 so
+        the walk never touches the whole dictionary) and to the length band
+        ``len(term) ± fuzziness`` (a term outside it is never within
+        distance). ``prefix_length < 1`` raises; a term shorter than
+        ``prefix_length`` has no variants."""
+        if prefix_length < 1:
+            raise ValueError(
+                "prefix_length must be ≥1: an unpruned fuzzy expansion scans "
+                "the whole term dictionary (ES discourages it for the same reason)"
+            )
+        if len(term) < prefix_length:
+            return {}
+        cand = self._expand_prefix(
+            term[:prefix_length],
+            1 << 20,
+            length_band=(len(term) - fuzziness, len(term) + fuzziness),
+        )
+        dist = {t: _damerau_levenshtein(term, t, fuzziness) for t in cand}
+        return {t: d for t, d in dist.items() if d <= fuzziness}
+
+    def _wildcard_terms(self, pattern: str, max_expansions: int) -> list[str]:
+        """The ES ``wildcard`` rewrite: dictionary terms matching
+        ``pattern`` (``*`` and ``?``), first ``max_expansions`` in term
+        order. The literal prefix before the first wildcard prunes the
+        dictionary read, then the full pattern filters it; a leading
+        wildcard raises (ES forbids it by default — an unanchored scan of
+        a 10^8-term dictionary is the anti-pattern both engines refuse)."""
+        import fnmatch
+        import re as _re
+
+        lit = _re.split(r"[*?]", pattern, maxsplit=1)[0]
+        if not lit:
+            raise ValueError(
+                "leading-wildcard patterns are rejected (no literal prefix to "
+                "prune the term dictionary with) — same default as ES"
+            )
+        rx = _re.compile(fnmatch.translate(pattern))
+        terms = [t for t in self._expand_prefix(lit, 1 << 20) if rx.match(t)]
+        return terms[:max_expansions]
+
+    def _regexp_terms(self, pattern: str, max_expansions: int) -> list[str]:
+        """The ES ``regexp`` rewrite: dictionary terms fully matching
+        ``pattern`` (ES regexps are implicitly anchored), first
+        ``max_expansions`` in term order. The pattern must open with ≥1
+        literal character, which prunes the dictionary read like
+        :meth:`_wildcard_terms`; a literal immediately followed by a
+        quantifier (``ab*``) keeps only the unquantified part (``a``)."""
+        import re as _re
+
+        m = _re.match(r"[a-z0-9]+", pattern)
+        lit = m.group(0) if m else ""
+        if lit and len(lit) < len(pattern) and pattern[len(lit)] in "*?{":
+            lit = lit[:-1]  # the quantifier applies to the last literal char
+        if not lit:
+            raise ValueError(
+                "regexp patterns must start with a literal prefix (no leading "
+                "metacharacters) so the term-dictionary read can be pruned — "
+                "the same scale guard as search_wildcard"
+            )
+        rx = _re.compile(pattern)
+        terms = [t for t in self._expand_prefix(lit, 1 << 20) if rx.fullmatch(t)]
+        return terms[:max_expansions]
+
     def search_prefix(
         self,
         prefix: str,
@@ -2142,6 +2165,16 @@ class Index:
             sorted({t.lower() for t in values}), k, where
         )
 
+    @staticmethod
+    def _lookup_values(rows: list[dict], field: str, max_terms: int | None) -> list[str]:
+        """The value set of a terms lookup from its fetched lookup doc
+        (``rows``; empty when absent): the whitespace values of ``field``,
+        the first ``max_terms`` positions, then deduped in order."""
+        toks = str(rows[0].get(field) or "").split() if rows else []
+        if max_terms is not None:
+            toks = toks[: int(max_terms)]
+        return list(dict.fromkeys(toks))
+
     def search_terms_lookup_local(
         self,
         lookup_id: int,
@@ -2160,19 +2193,10 @@ class Index:
         local twins; rank-identical to the distributed form
         (tests/test_local_serving.py)."""
         src = lookup_index if lookup_index is not None else self
-        rows = src.get_docs_local([int(lookup_id)])
-        if not rows:
-            return []
-        toks = str(rows[0].get(lookup_field) or "").split()
-        if max_terms is not None:
-            toks = toks[: int(max_terms)]
-        vals: list[str] = []
-        for v in toks:
-            if v not in vals:
-                vals.append(v)
-        if not vals:
-            return []
-        return self.search_terms_local([t.lower() for t in vals], k, where=where)
+        vals = self._lookup_values(
+            src.get_docs_local([int(lookup_id)]), lookup_field, max_terms
+        )
+        return self.search_terms_local(vals, k, where=where)
 
     def search_terms_lookup(
         self,
@@ -2203,22 +2227,7 @@ class Index:
             rows = src.get_docs_local([int(lookup_id)])
         else:  # ephemeral index: one bounded point-fetch, still 1 row
             rows = [r.asDict() for r in src.get_docs([int(lookup_id)]).collect()]
-        if not rows:
-            return self._docs_df().select(
-                "doc_id", F.lit(1.0).alias("score")
-            ).limit(0)
-        raw = str(rows[0].get(lookup_field) or "")
-        toks = raw.split()
-        if max_terms is not None:
-            toks = toks[: int(max_terms)]
-        vals: list[str] = []
-        for v in toks:
-            if v not in vals:
-                vals.append(v)
-        if not vals:
-            return self._docs_df().select(
-                "doc_id", F.lit(1.0).alias("score")
-            ).limit(0)
+        vals = self._lookup_values(rows, lookup_field, max_terms)
         return self.search_terms(vals, k, where=where)
 
     def scan_all(
@@ -2412,24 +2421,11 @@ class Index:
         where: str | None = None,
     ) -> DataFrame:
         """ES ``wildcard`` query (constant_score rewrite): ``*`` and ``?``
-        over terms. Requires a literal prefix before the first wildcard
-        (ES itself forbids leading wildcards by default — an unanchored
-        scan of a 10^8-term dictionary is the anti-pattern both engines
-        refuse); the prefix prunes the dictionary read, then the full
-        pattern filters the expansion."""
-        import fnmatch
-        import re as _re
-
-        lit = _re.split(r"[*?]", pattern, maxsplit=1)[0]
-        if not lit:
-            raise ValueError(
-                "leading-wildcard patterns are rejected (no literal prefix to "
-                "prune the term dictionary with) — same default as ES"
-            )
-        cand = self._expand_prefix(lit, 1 << 20)  # prune by prefix first
-        rx = _re.compile(fnmatch.translate(pattern))
-        terms = [t for t in cand if rx.match(t)][:max_expansions]
-        return self._constant_score_multi_term(terms, k, where)
+        over terms, expanded by :meth:`_wildcard_terms` (a literal prefix
+        before the first wildcard is required)."""
+        return self._constant_score_multi_term(
+            self._wildcard_terms(pattern, max_expansions), k, where
+        )
 
     def search_fuzzy(
         self,
@@ -2441,34 +2437,14 @@ class Index:
         where: str | None = None,
     ) -> DataFrame:
         """ES ``fuzzy`` query (constant_score rewrite): match docs whose
-        terms are within Damerau-Levenshtein ``fuzziness`` of ``term``.
-
-        Expansion strategy: the dictionary read is pruned to terms sharing
-        the first ``prefix_length`` characters (ES's ``prefix_length``
-        knob — its own docs recommend ≥1 so the FST walk doesn't touch the
-        whole dictionary; here it bounds the pyarrow range read the same
-        way), then the candidates are distance-filtered driver-side and
-        capped at ``max_expansions`` in term order. ``prefix_length=0`` is
-        rejected for the same reason ES discourages it at scale."""
-        if prefix_length < 1:
-            raise ValueError(
-                "prefix_length must be ≥1: an unpruned fuzzy expansion scans "
-                "the whole term dictionary (ES discourages it for the same reason)"
-            )
-        if len(term) < prefix_length:
-            return self._frame(TOPK_SCHEMA)
-        cand = self._expand_prefix(
-            term[:prefix_length],
-            1 << 20,
-            length_band=(len(term) - fuzziness, len(term) + fuzziness),
+        terms are within Damerau-Levenshtein ``fuzziness`` of ``term`` —
+        the :meth:`_fuzzy_variants` expansion (prefix- and length-band
+        pruned, ``prefix_length=0`` rejected) capped at ``max_expansions``
+        in term order."""
+        return self._constant_score_multi_term(
+            list(self._fuzzy_variants(term, fuzziness, prefix_length))[:max_expansions],
+            k, where,
         )
-        near = [
-            t
-            for t in cand
-            if abs(len(t) - len(term)) <= fuzziness
-            and _damerau_levenshtein(term, t, fuzziness) <= fuzziness
-        ]
-        return self._constant_score_multi_term(sorted(near)[:max_expansions], k, where)
 
     def search_regexp(
         self,
@@ -2478,29 +2454,11 @@ class Index:
         where: str | None = None,
     ) -> DataFrame:
         """ES ``regexp`` query (constant_score rewrite): terms fully
-        matching ``pattern`` (ES regexps are implicitly anchored). The
-        pattern must open with ≥1 literal character — the literal prefix
-        prunes the term-dictionary read exactly like
-        :meth:`search_wildcard`; an unanchored regexp walks the whole
-        dictionary, the anti-pattern ES's own docs warn about. A literal
-        immediately followed by a quantifier (``ab*``) keeps only the
-        unquantified part of the prefix (``a``)."""
-        import re as _re
-
-        m = _re.match(r"[a-z0-9]+", pattern)
-        lit = m.group(0) if m else ""
-        if lit and len(lit) < len(pattern) and pattern[len(lit)] in "*?{":
-            lit = lit[:-1]  # the quantifier applies to the last literal char
-        if not lit:
-            raise ValueError(
-                "regexp patterns must start with a literal prefix (no leading "
-                "metacharacters) so the term-dictionary read can be pruned — "
-                "the same scale guard as search_wildcard"
-            )
-        cand = self._expand_prefix(lit, 1 << 20)
-        rx = _re.compile(pattern)
-        terms = [t for t in cand if rx.fullmatch(t)][:max_expansions]
-        return self._constant_score_multi_term(terms, k, where)
+        matching ``pattern``, expanded by :meth:`_regexp_terms` (the
+        pattern must open with a literal prefix)."""
+        return self._constant_score_multi_term(
+            self._regexp_terms(pattern, max_expansions), k, where
+        )
 
     def _constant_score_multi_term(
         self,
@@ -2796,30 +2754,16 @@ class Index:
         (weight desc, term asc) — the best differentiating terms.
 
         Scale shape: expansion is the same length-banded, prefix-pruned
-        driver-side dictionary read as :meth:`search_fuzzy`; scoring
+        driver-side dictionary read as :meth:`search_fuzzy`
+        (:meth:`_fuzzy_variants`); scoring
         reuses the kernel fast path via a (idfw, buckets) plan override,
         so the postings scan is pruned to exactly the selected variants."""
         import math
 
-        if prefix_length < 1:
-            raise ValueError(
-                "prefix_length must be ≥1: an unpruned fuzzy expansion scans "
-                "the whole term dictionary (same scale guard as search_fuzzy)"
-            )
-        src_terms = sorted(set(self._analyze(like_text)))
         groups: dict[str, dict[str, float]] = {}
-        for t in src_terms:
-            if len(t) < prefix_length:
-                continue
-            cand = self._expand_prefix(
-                t[:prefix_length],
-                1 << 20,
-                length_band=(len(t) - fuzziness, len(t) + fuzziness),
-            )
-            for v in cand:
-                d = _damerau_levenshtein(t, v, fuzziness)
-                if d <= fuzziness:
-                    groups.setdefault(t, {})[v] = 1.0 - d / min(len(t), len(v))
+        for t in sorted(set(self._analyze(like_text))):
+            for v, d in self._fuzzy_variants(t, fuzziness, prefix_length).items():
+                groups.setdefault(t, {})[v] = 1.0 - d / min(len(t), len(v))
         allvars = sorted({v for g in groups.values() for v in g})
         if not allvars:
             return self._frame(TOPK_SCHEMA)
@@ -2926,9 +2870,6 @@ class Index:
         Deterministic ties by doc_id. ``where`` filters like :meth:`search`.
         """
         slots, offsets = self._analyze_phrase(phrase)
-        if not slots:
-            return self._frame(TOPK_SCHEMA)
-        # every slot must be present for an exact phrase to exist
         return self._phrase_topk([[t] for t in slots], k, where, slop, offsets)
 
     def search_phrase_prefix(
@@ -2947,11 +2888,7 @@ class Index:
         unions multiple postings runs per slot, so the expansion costs one
         wider term predicate on the postings scan, not extra jobs."""
         slots, offsets = self._analyze_phrase(phrase)
-        if not slots:
-            return self._frame(TOPK_SCHEMA)
-        exp = self._expand_prefix(slots[-1], max_expansions)
-        if not exp:
-            return self._frame(TOPK_SCHEMA)
+        exp = self._expand_prefix(slots[-1], max_expansions) if slots else []
         return self._phrase_topk(
             [[t] for t in slots[:-1]] + [exp], k, where, 0, offsets
         )
@@ -2971,11 +2908,8 @@ class Index:
         across shards before scoring), BM25 impact with the configured
         k1/b/avgdl. ``where`` filters like :meth:`search` (corpus
         statistics stay global). Requires ``positions=True``."""
-        toks = self._analyze(term)
-        if not toks:
-            return self._frame(TOPK_SCHEMA)
         return self._phrase_topk(
-            [[toks[0]]], k, where, 0, span=("first", int(end))
+            [self._analyze(term)[:1]], k, where, 0, span=("first", int(end))
         )
 
     def _span_clause(self, clause: str | list[str] | dict) -> list[str]:
@@ -3024,6 +2958,22 @@ class Index:
             )
         return slots
 
+    def _span_not_slots(self, include, exclude) -> list[list[str]]:
+        """span_not's slots: the include clause, then the exclude clause
+        unless it analyzes to nothing (an absent exclude excludes
+        nothing)."""
+        inc, exc = self._span_clause(include), self._span_clause(exclude)
+        return [inc, exc] if exc else [inc]
+
+    def _span_contain_slots(self, little, big, in_order) -> "list[list[str]] | None":
+        """span_containing / span_within's slots: the little clause, then
+        the big span_near clauses (:meth:`_span_near_slots`, not compiled
+        when the little clause analyzes to nothing); None when either
+        analyzes to nothing."""
+        lit = self._span_clause(little)
+        slots = self._span_near_slots(big, in_order) if lit else None
+        return None if slots is None else [lit] + slots
+
     def search_span_near(
         self,
         terms: list[str | list[str] | dict],
@@ -3050,11 +3000,9 @@ class Index:
         same synthetic-term BM25 as :meth:`search_phrase` (tf = spans per
         doc, globally aggregated span df → idf). Requires
         ``positions=True``."""
-        slots = self._span_near_slots(terms, in_order)
-        if slots is None:
-            return self._frame(TOPK_SCHEMA)
         return self._phrase_topk(
-            slots, k, where, 0, span=("near", int(slop), bool(in_order))
+            self._span_near_slots(terms, in_order), k, where, 0,
+            span=("near", int(slop), bool(in_order)),
         )
 
     def search_span_or(
@@ -3068,10 +3016,9 @@ class Index:
         rest of the span family. For a single term this is score-identical
         to :meth:`search` (same tf, df, and length normalization).
         Requires ``positions=True``."""
-        slot = self._span_clause(list(terms))
-        if not slot:
-            return self._frame(TOPK_SCHEMA)
-        return self._phrase_topk([slot], k, where, 0, span=("near", 0, False))
+        return self._phrase_topk(
+            [self._span_clause(list(terms))], k, where, 0, span=("near", 0, False)
+        )
 
     def _span_contain_topk(
         self,
@@ -3088,14 +3035,8 @@ class Index:
         span_near clauses (same clause grammar as :meth:`search_span_near`,
         including its repeated-terms guard for unordered bigs), then run
         the containment kernel (`query/kernels.py:shard_span_contain`)."""
-        lit = self._span_clause(little)
-        if not lit:
-            return self._frame(TOPK_SCHEMA)
-        slots = self._span_near_slots(big, in_order)
-        if slots is None:
-            return self._frame(TOPK_SCHEMA)
         return self._phrase_topk(
-            [lit] + slots, k, where, 0,
+            self._span_contain_slots(little, big, in_order), k, where, 0,
             span=(mode, int(slop), bool(in_order)),
         )
 
@@ -3161,25 +3102,29 @@ class Index:
         absent from the dictionary excludes nothing. tf = surviving
         include occurrences, df = docs with ≥ 1, scored like the rest of
         the span family. Requires ``positions=True``."""
-        inc = self._span_clause(include)
-        if not inc:
-            return self._frame(TOPK_SCHEMA)
-        exc = self._span_clause(exclude)
         return self._phrase_topk(
-            [inc, exc] if exc else [inc], k, where, 0,
+            self._span_not_slots(include, exclude), k, where, 0,
             span=("not", int(pre), int(post)),
         )
 
     def _positional_plan(
-        self, slot_terms: list[list[str]], span: tuple | None
+        self, slot_terms: list[list[str]] | None, span: tuple | None
     ) -> "tuple[list[int], list[str]] | None":
-        """(buckets, present terms) of a phrase/span clause, or None when
-        a required slot has no term in the dictionary. span_not requires
-        only its include slot (0): an absent exclude excludes nothing."""
-        all_terms = sorted({t for slot in slot_terms for t in slot})
-        if not all_terms:
+        """(buckets, present terms) of a compiled phrase/span clause — the
+        one guard of the positional family, shared by both finishes. None
+        when the clause analyzed to nothing (``slot_terms`` None, empty, or
+        holding an empty slot) or a required slot has no term in the
+        dictionary; span_not requires only its include slot (0): an absent
+        exclude excludes nothing. An index built without positions raises
+        between the two checks, so an empty query stays empty there while
+        an absent term does not."""
+        if not slot_terms or not all(slot_terms):
             return None
-        _df_by, bucket_by = self._term_dfs(all_terms)
+        if not self.meta.get("positions"):
+            raise ValueError(
+                "index built without positions=True — no phrase/span support"
+            )
+        _df_by, bucket_by = self._term_dfs(sorted({t for sl in slot_terms for t in sl}))
         required = slot_terms[:1] if span and span[0] == "not" else slot_terms
         if any(not (set(slot) & bucket_by.keys()) for slot in required):
             return None
@@ -3187,7 +3132,7 @@ class Index:
 
     def _phrase_topk(
         self,
-        slot_terms: list[list[str]],
+        slot_terms: list[list[str]] | None,
         k: int,
         where: str | None,
         slop: int,
@@ -3200,11 +3145,16 @@ class Index:
         slots = the exact phrase). ``span`` selects a span kernel instead
         of the phrase kernel: ``('first', end)`` or
         ``('near', slop, in_order)`` — same (doc, tf, dl, df) contract,
-        same global-df synthetic-term scoring below."""
+        same global-df synthetic-term scoring below. The guards are
+        :meth:`_positional_plan`'s; :meth:`_positional_topk_local` is the
+        driver finish of the same arguments.
+
+        Finishes eagerly: the Spark top-k (score desc, doc_id asc) is
+        collected — at most k rows reach the driver — the persisted
+        per-shard partials are released, and the rows come back as a
+        zero-job frame (:meth:`_frame`)."""
         import math
 
-        if not self.meta.get("positions"):
-            raise ValueError("index built without positions=True — no phrase support")
         plan = self._positional_plan(slot_terms, span)
         if plan is None:
             return self._frame(TOPK_SCHEMA)
@@ -3237,24 +3187,27 @@ class Index:
         mask_df, mask_kind = self._mask_plan(where, docs_per_shard)
         partials = self._shard_partials(hits, mask_df, mask_kind, score_shard, out_schema)
         partials = partials.persist()
-        df_phrase = (
-            partials.select("shard", "n_shard_matches").distinct()
-            .agg(F.sum("n_shard_matches")).collect()[0][0]
-        ) or 0
-        if df_phrase == 0:
+        try:
+            df_phrase = (
+                partials.select("shard", "n_shard_matches").distinct()
+                .agg(F.sum("n_shard_matches")).collect()[0][0]
+            ) or 0
+            if df_phrase == 0:
+                return self._frame(TOPK_SCHEMA)
+            n = float(self.meta["n_docs"])
+            idf = math.log(1.0 + (n - df_phrase + 0.5) / (df_phrase + 0.5))
+            scored = partials.filter(F.col("doc_id") >= 0).select(
+                "doc_id",
+                (
+                    F.lit(idf)
+                    * F.col("tfp")
+                    / (F.col("tfp") + k1 * (1.0 - b + b * F.col("dl") / avgdl))
+                ).alias("score"),
+            )
+            rows = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
+        finally:
             partials.unpersist()
-            return self._frame(TOPK_SCHEMA)
-        n = float(self.meta["n_docs"])
-        idf = math.log(1.0 + (n - df_phrase + 0.5) / (df_phrase + 0.5))
-        scored = partials.filter(F.col("doc_id") >= 0).select(
-            "doc_id",
-            (
-                F.lit(idf)
-                * F.col("tfp")
-                / (F.col("tfp") + k1 * (1.0 - b + b * F.col("dl") / avgdl))
-            ).alias("score"),
-        )
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return self._frame(TOPK_SCHEMA, rows)
 
     def search_phrase_oracle(
         self, phrase: str, k: int | None = 10, where: str | None = None, slop: int = 0
@@ -4154,11 +4107,6 @@ class Index:
 
         if suggest_mode not in ("missing", "always", "popular"):
             raise ValueError(f"unknown suggest_mode: {suggest_mode!r}")
-        if prefix_length < 1:
-            raise ValueError(
-                "prefix_length must be ≥1 — an unpruned suggester scans the "
-                "whole term dictionary (same guard as search_fuzzy)"
-            )
         out_schema = "input string, suggestion string, dist int, freq long"
         toks = sorted(set(self._analyze(text)))
         if not toks:
@@ -4168,19 +4116,11 @@ class Index:
         for tok in toks:
             if suggest_mode == "missing" and tok in own_df:
                 continue
-            if len(tok) < prefix_length:
-                continue
-            cand = self._expand_prefix(
-                tok[:prefix_length],
-                1 << 20,
-                length_band=(len(tok) - max_edits, len(tok) + max_edits),
-            )
             near = [
-                (t, _damerau_levenshtein(tok, t, max_edits))
-                for t in cand
-                if t != tok and abs(len(t) - len(tok)) <= max_edits
+                (t, d)
+                for t, d in self._fuzzy_variants(tok, max_edits, prefix_length).items()
+                if t != tok
             ]
-            near = [(t, d) for t, d in near if d <= max_edits]
             if not near:
                 continue
             df_by = self._term_dfs([t for t, _ in near])[0]
@@ -4350,21 +4290,15 @@ class Index:
         slot_cands: dict[str, list[tuple[str, int]]] = {}
         for tok in dict.fromkeys(toks):
             cands = [(tok, 0)]
-            if len(tok) >= prefix_length:
-                near = [
-                    (t, _damerau_levenshtein(tok, t, max_edits))
-                    for t in self._expand_prefix(
-                        tok[:prefix_length],
-                        1 << 20,
-                        length_band=(len(tok) - max_edits, len(tok) + max_edits),
-                    )
-                    if t != tok and abs(len(t) - len(tok)) <= max_edits
-                ]
-                near = [(t, d) for t, d in near if d <= max_edits]
-                if near:
-                    df_by = self._term_dfs([t for t, _ in near])[0]
-                    near.sort(key=lambda td: (td[1], -df_by.get(td[0], 0), td[0]))
-                    cands += near[:gen_size]
+            near = [
+                (t, d)
+                for t, d in self._fuzzy_variants(tok, max_edits, prefix_length).items()
+                if t != tok
+            ]
+            if near:
+                df_by = self._term_dfs([t for t, _ in near])[0]
+                near.sort(key=lambda td: (td[1], -df_by.get(td[0], 0), td[0]))
+                cands += near[:gen_size]
             slot_cands[tok] = cands
 
         all_terms = sorted({t for cs in slot_cands.values() for t, _ in cs})

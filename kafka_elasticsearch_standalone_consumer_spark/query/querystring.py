@@ -376,27 +376,13 @@ def run_parsed(index, parsed: ParsedQuery, k: int = 10):
     for p in parsed.prefixes:
         expanded = sorted(set(index._expand_prefix(p, max_expansions=50)))
         prefix_sets.append(index._match_set(expanded, 1) if expanded else None)
-    if parsed.fuzzies:
-        # term~n — the search_fuzzy expansion rule verbatim (first-char
-        # prefix prune + length band + Damerau filter, capped at 50 in
-        # term order), contributing constant-score 1.0 per clause
-        # exactly like prefix clauses (Lucene constant_score_auto)
-        from kafka_elasticsearch_standalone_consumer_spark.query.engine import (
-            _damerau_levenshtein,
-        )
-
-        for term, fz in parsed.fuzzies:
-            cand = index._expand_prefix(
-                term[:1], 1 << 20, length_band=(len(term) - fz, len(term) + fz)
-            )
-            near = [
-                t
-                for t in cand
-                if abs(len(t) - len(term)) <= fz
-                and _damerau_levenshtein(term, t, fz) <= fz
-            ]
-            near = sorted(near)[:50]
-            prefix_sets.append(index._match_set(near, 1) if near else None)
+    for term, fz in parsed.fuzzies:
+        # term~n — search_fuzzy's expansion (Index._fuzzy_variants with
+        # prefix_length=1, capped at 50 in term order), contributing
+        # constant-score 1.0 per clause exactly like prefix clauses
+        # (Lucene constant_score_auto)
+        near = list(index._fuzzy_variants(term, fz, 1))[:50]
+        prefix_sets.append(index._match_set(near, 1) if near else None)
     if (parsed.prefixes or parsed.fuzzies) and parsed.must:
         # AND semantics: a conjunctive query requires the prefix clauses too
         for ms in prefix_sets:

@@ -147,10 +147,10 @@ def test_local_phrase_identical(spark, local_pos_wh):
     phrase = _phrase_from(idx)
     for slop in (0, 1):
         dist = [
-            (r["doc_id"], round(r["score"], 10))
+            (r["doc_id"], r["score"])
             for r in idx.search_phrase(phrase, 10, slop=slop).collect()
         ]
-        loc = [(d, round(s, 10)) for d, s in idx.search_phrase_local(phrase, 10, slop=slop)]
+        loc = idx.search_phrase_local(phrase, 10, slop=slop)
         assert loc == dist, slop
         assert dist, slop
     assert idx.search_phrase_local("zzabsent w00000", 10) == []
@@ -160,24 +160,19 @@ def test_local_phrase_filter_and_deletes(spark, local_pos_wh):
     idx = Index(spark, local_pos_wh)
     phrase = _phrase_from(idx)
     dist = [
-        (r["doc_id"], round(r["score"], 10))
+        (r["doc_id"], r["score"])
         for r in idx.search_phrase(phrase, 10, where="role IN ('user','assistant')").collect()
     ]
-    loc = [
-        (d, round(s, 10))
-        for d, s in idx.search_phrase_local(
-            phrase, 10, where=[("role", "in", ("user", "assistant"))]
-        )
-    ]
+    loc = idx.search_phrase_local(phrase, 10, where=[("role", "in", ("user", "assistant"))])
     assert loc == dist
     # tombstone the best hit: both paths drop it, scores stay frozen
     # (phrase df is counted over unmasked matches)
     top = idx.search_phrase_local(phrase, 10)
     delete_docs(spark, idx.wh.root, f"doc_id = {top[0][0]}")
     idx = Index(spark, local_pos_wh)
-    loc = [(d, round(s, 10)) for d, s in idx.search_phrase_local(phrase, 10)]
+    loc = idx.search_phrase_local(phrase, 10)
     dist = [
-        (r["doc_id"], round(r["score"], 10)) for r in idx.search_phrase(phrase, 10).collect()
+        (r["doc_id"], r["score"]) for r in idx.search_phrase(phrase, 10).collect()
     ]
     assert loc == dist
     assert top[0][0] not in {d for d, _ in loc}
@@ -208,6 +203,10 @@ def test_local_terms_and_constant_score_identical(spark, built_index):
     dist = [(r["doc_id"], r["score"]) for r in idx.search_terms(vals, 10_000).collect()]
     loc = idx.search_terms_local(vals, 10_000)
     assert loc == dist and loc
+    # values are lowercased on both sides, like the analyzed index terms
+    upper = [v.upper() for v in vals]
+    assert idx.search_terms_local(upper, 10_000) == dist
+    assert [(r["doc_id"], r["score"]) for r in idx.search_terms(upper, 10_000).collect()] == dist
     # k truncation + boost + absent terms
     assert idx.search_terms_local(vals, 3) == dist[:3]
     assert idx.search_terms_local(["zzabsent"], 10) == []
@@ -524,10 +523,10 @@ def test_span_local_twins_identical(spark, local_pos_wh):
     c = next(t for t in ("w00005", "w00007", "w00011") if t not in (a, b))
 
     def dist(df):
-        return [(r["doc_id"], round(r["score"], 10)) for r in df.collect()]
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
 
     def loc(pairs):
-        return [(d, round(s, 10)) for d, s in pairs]
+        return pairs
 
     # span_first
     for end in (2, 6):
@@ -623,3 +622,86 @@ def test_terminate_after_local_identical_to_distributed(spark, built_index):
         assert l_hits == d_hits and l_flag == d_flag, cap
     assert idx.search_terminate_after_local(q, 10, terminate_after=2)[1] is True
     assert idx.search_terminate_after_local("zzznope", 10, terminate_after=2) == ([], False)
+
+
+def _rows(out):
+    """(doc_id, score) pairs of a distributed frame or a local twin's list."""
+    if isinstance(out, list):
+        return out
+    return [(r["doc_id"], r["score"]) for r in out.collect()]
+
+
+def test_multi_term_twins_identical(spark, transcripts, tmp_path):
+    """Each multi-term twin (terms, prefix, wildcard, fuzzy, regexp,
+    terms lookup) returns exactly its distributed surface's rows — no
+    rounding — with and without a where filter, before and after a
+    tombstone."""
+    from kafka_elasticsearch_standalone_consumer_spark.query.engine import _filters_to_sql
+
+    wh = str(tmp_path / "idx")
+    build_index(spark, transcripts, wh, docs_per_shard=256, n_buckets=8)
+    surfaces = [
+        ("search_terms", (["w00000", "W00005"], 10_000)),
+        ("search_prefix", ("w0001", 10_000)),
+        ("search_wildcard", ("w0?00*", 10_000)),
+        ("search_fuzzy", ("w0000x", 10_000)),
+        ("search_regexp", ("w00*1[05]", 10_000)),
+        ("search_terms_lookup", (3, 10_000)),
+    ]
+    user = [("role", "=", "user")]
+    for deleted in (False, True):
+        idx = Index(spark, wh)
+        for name, args in surfaces:
+            for where in (None, user):
+                sql = None if where is None else _filters_to_sql(where)
+                want = _rows(getattr(idx, name)(*args, where=sql))
+                got = getattr(idx, name + "_local")(*args, where=where)
+                assert got == want and got, (name, where, deleted)
+        if not deleted:
+            first = idx.search_prefix_local("w0001", 1)[0][0]
+            delete_docs(spark, wh, f"doc_id = {first}")
+    assert first not in {d for d, _ in idx.search_prefix_local("w0001", 10_000)}
+
+
+# (surface, args from two clause inputs a, b); the twin is surface + "_local"
+_POSITIONAL = [
+    ("search_phrase", lambda a, b: (f"{a} {b}",)),
+    ("search_phrase_prefix", lambda a, b: (f"{a} {b}",)),  # no twin
+    ("search_span_first", lambda a, b: (a, 4)),
+    ("search_span_near", lambda a, b: ([a, b], 2)),
+    ("search_span_or", lambda a, b: ([a, b],)),
+    ("search_span_not", lambda a, b: (a, b, 1, 1)),
+    ("search_span_containing", lambda a, b: (a, [b, "w00005"], 3)),
+    ("search_span_within", lambda a, b: (a, [b, "w00005"], 3)),
+]
+
+
+@pytest.mark.parametrize("surface,make", _POSITIONAL, ids=[s for s, _ in _POSITIONAL])
+def test_positional_twin_guards(spark, built_index, local_pos_wh, surface, make):
+    """Every positional surface and its twin give the same outcome on the
+    guard cases: a query that analyzes to nothing is empty (on an
+    unpositioned index too — it is empty before the positions check), an
+    absent term is empty, and a present term on an unpositioned index
+    raises."""
+    pos = Index(spark, local_pos_wh)
+    unpos, _ = built_index
+    cases = [
+        (pos, "", "", "empty"),
+        (pos, "zzabsent", "zzmissing", "empty"),
+        (unpos, "w00000", "w00003", "raises"),
+        (unpos, "", "", "empty"),
+    ]
+    for idx, a, b, want in cases:
+        for name in (surface, surface + "_local"):
+            fn = getattr(idx, name, None)
+            if fn is None:
+                continue
+            if want == "raises":
+                with pytest.raises(ValueError, match="positions"):
+                    fn(*make(a, b))
+            else:
+                assert _rows(fn(*make(a, b))) == [], (name, a, b)
+    if surface in ("search_span_near", "search_span_containing", "search_span_within"):
+        for name in (surface, surface + "_local"):
+            with pytest.raises(ValueError, match="repeated terms"):
+                getattr(pos, name)(*make("w00005", "w00005"))

@@ -238,3 +238,18 @@ def test_rescore_window(spark, pos_index, corpus_texts):
     )[:10]
     assert got == [(d, round(s, 9)) for d, s in want] and got
     assert set(d for d, _ in got) <= set(base)
+
+
+def test_positional_queries_leave_nothing_persisted(spark, pos_index, corpus_texts):
+    """The positional top-k finishes eagerly and releases its per-shard
+    partials: distinct phrase, phrase_prefix and span_near queries leave
+    the persisted-RDD count where it was."""
+    jsc = spark.sparkContext._jsc
+    phrases = _pick_phrases(corpus_texts, n=3)
+    a, b = phrases[0].split()
+    before = jsc.getPersistentRDDs().size()
+    for p in phrases:
+        assert pos_index.search_phrase(p, K).collect()
+    assert pos_index.search_phrase_prefix(f"{a} {b[:3]}", K).collect()
+    assert pos_index.search_span_near([a, b], slop=2, in_order=True, k=K).collect()
+    assert jsc.getPersistentRDDs().size() == before

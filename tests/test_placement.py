@@ -163,6 +163,18 @@ def test_tombstone_mask_builds_without_a_job(spark, deleted_wh):
     assert _jobs(spark) == before
 
 
+def test_docs_frame_is_read_once_per_index(spark, deleted_wh):
+    """An Index reads its doc store frame once: a second SQL ``where``
+    mask plan on the same Index builds without a Spark job."""
+    idx = Index(spark, deleted_wh)
+    dps = idx.meta["docs_per_shard"]
+    first = idx._mask_plan("role = 'user'", dps)
+    before = _jobs(spark)
+    mask_df, kind = idx._mask_plan("role = 'user'", dps)
+    assert _jobs(spark) == before and kind == "allowed"
+    assert sorted(mask_df.collect()) == sorted(first[0].collect())
+
+
 def test_context_suggestions_are_a_zero_job_frame(spark, built_index):
     """The context suggester ranks on the driver; building and collecting
     its rows launches no Spark job."""
