@@ -72,6 +72,13 @@ ANALYZERS = (
     "pattern", "snowball",
 )
 
+
+def lowercases(analyzer: str) -> bool:
+    """Whether ``analyzer`` lowercases its terms: all of ANALYZERS but
+    ``whitespace`` and ``keyword``, with or without an ``html_strip|``
+    prefix — the case rule a terms query's verbatim values follow."""
+    return split_char_filter(analyzer)[1] not in ("whitespace", "keyword")
+
 _WS_RE = re.compile(r"\S+")
 # ES/Lucene `simple` analyzer: LetterTokenizer + lowercase — token = a
 # maximal LETTER run, so digit-bearing forms split ("sec9ref" → sec, ref)

@@ -331,8 +331,9 @@ def build_postings(
     streaming form: one task still packs exactly one sorted range
     partition, and the carry loop makes rows independent of batching.
     The caller owns ``scratch_dir`` cleanup (the builder deletes it
-    after the postings table commits). Without ``scratch_dir`` (the
-    ephemeral/small path) the pack streams through mapInArrow directly.
+    after the postings table commits). Without ``scratch_dir`` the pack
+    streams through mapInArrow directly (``tools/dump_plans.py`` shows
+    that plan shape).
     """
     num_partitions = (
         num_partitions or tokens_with_dl.sparkSession.sparkContext.defaultParallelism

@@ -88,6 +88,33 @@ def build_index(
             runner.dry_run_rows = tokens_from(docs, method=tokenizer, analyzer=analyzer).count()
         return runner
 
+    _build_tables(
+        spark, transcripts, wh, runner, 0, docs_per_shard, n_buckets, tokenizer, positions,
+        analyzer, num_partitions=num_partitions, materialize_tokens=materialize_tokens,
+    )
+    log.mark("ALL", "ok", 0, 0)
+    return runner
+
+
+def _build_tables(
+    spark: SparkSession,
+    src: DataFrame,
+    wh: Warehouse,
+    runner: StepRunner,
+    base: int | None,
+    docs_per_shard: int,
+    n_buckets: int,
+    tokenizer: str,
+    positions: bool,
+    analyzer: str,
+    num_partitions: int | None = None,
+    materialize_tokens: bool = True,
+) -> None:
+    """Write an index's tables under ``wh``: the segment step chain
+    (``incremental._build_segment``) with the index-level ``meta`` step
+    in its stats slot, plus ``doc_map`` when ``base`` assigns the ids
+    from the transcript keys. ``base=None`` keeps ``src``'s doc_ids and
+    writes no doc_map (``Index.ephemeral``)."""
     knobs = {
         "docs_per_shard": docs_per_shard,
         "n_buckets": n_buckets,
@@ -121,18 +148,16 @@ def build_index(
             wh.write(docs.join(ds, "doc_id"), "doc_map")
             return wh.count_rows("doc_map")
 
-        return [("meta", step_meta), ("doc_map", step_doc_map)]
+        return [("meta", step_meta)] + ([("doc_map", step_doc_map)] if base is not None else [])
 
     incremental._build_segment(
-        spark, transcripts, wh, runner, knobs, base=0,
+        spark, src, wh, runner, knobs, base=base,
         num_partitions=num_partitions,
         tokenizer=tokenizer,
         materialize_tokens=materialize_tokens,
         stats_steps=index_steps,
         avgdl=lambda: read_meta(spark, wh)["avgdl"],
     )
-    log.mark("ALL", "ok", 0, 0)
-    return runner
 
 
 def read_meta(spark: SparkSession, wh: Warehouse) -> dict:

@@ -78,8 +78,8 @@ def delete_warmer(registry_path: str, pattern: str) -> list[str]:
 
 def warm(index, registry_path: str, pattern: str = "*") -> list[tuple]:
     """Run every registered warmer matching ``pattern`` (name order)
-    through the engine's scored search and, when the index serves from a
-    warehouse, the zero-job local path too — priming both the
+    through the engine's scored search and, unfiltered, the zero-job
+    local path too — priming both the
     distributed caches (parquet footers / page cache along the pruned
     postings read) and the driver-side segment stats the serving twins
     use. Returns one row per hit: ``(warmer, doc_id, rank, score)`` —
@@ -92,10 +92,7 @@ def warm(index, registry_path: str, pattern: str = "*") -> list[tuple]:
         k = int(kw.pop("k", 10))
         rows = index.search(qt, k, **kw).collect()
         if not kw.get("where"):
-            try:
-                index.search_local(qt, k, mode=kw.get("mode", "bmw"))
-            except (RuntimeError, ValueError):
-                pass  # ephemeral indexes have no local serving files — fine
+            index.search_local(qt, k, mode=kw.get("mode", "bmw"))
         for rank, r in enumerate(rows, 1):
             out.append((name, int(r["doc_id"]), rank, float(r["score"])))
     return out

@@ -29,8 +29,11 @@ search_oracle / facets / fetch / highlight / stats.
 
 from __future__ import annotations
 
+import atexit
 import functools
 import inspect
+import shutil
+import tempfile
 
 import numpy as np
 import pandas as pd
@@ -195,6 +198,15 @@ def _damerau_levenshtein(a: str, b: str, cap: int) -> int:
     return prev[lb]
 
 
+@functools.cache
+def _ephemeral_root() -> str:
+    """The per-process parent directory of every ephemeral index, removed
+    at interpreter exit."""
+    root = tempfile.mkdtemp(prefix="kesc-ephemeral-")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
 class Index:
     def __init__(self, spark: SparkSession, warehouse_path: str):
         from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
@@ -224,13 +236,13 @@ class Index:
             self._seg_baked = [float(s["baked_avgdl"]) for s in segs]
         self._pads_cache: dict = {}
 
-    # postings / _docs / term_stats are the executor-side views of the
-    # open-time segment snapshot (_seg_whs). They are built on first use:
-    # a Spark parquet read lists partitions and infers the schema (one
-    # Spark job, ~1-2 s per open with a few segments), which the
-    # driver-side serving path never needs. Plain attributes once built,
-    # so callers may replace them (idx.postings = idx.postings.persist());
-    # ephemeral() assigns all three.
+    # postings / _docs / _tokens_all / _doc_lengths / term_stats are the
+    # executor-side views of the open-time segment snapshot (_seg_whs).
+    # They are built on first use: a Spark parquet read lists partitions
+    # and infers the schema (one Spark job, ~1-2 s per open with a few
+    # segments), which the driver-side serving path never needs. Plain
+    # attributes once built, so callers may replace them
+    # (idx.postings = idx.postings.persist()).
     @functools.cached_property
     def postings(self) -> DataFrame:
         """Postings of every segment in the open-time snapshot, each row
@@ -258,6 +270,28 @@ class Index:
         return functools.reduce(DataFrame.unionByName, parts)
 
     @functools.cached_property
+    def _tokens_all(self) -> DataFrame:
+        """The forward index of every segment in the open-time snapshot —
+        its tokens table, or the zero-shuffle fused pass over its docs
+        where the build kept none — over the columns all segments share."""
+        from kafka_elasticsearch_standalone_consumer_spark.analysis import doc_term_freqs
+
+        parts = [
+            w.read(self.spark, "tokens") if w.exists("tokens") else doc_term_freqs(
+                w.read(self.spark, "docs"), analyzer=self.meta.get("analyzer", "standard")
+            )
+            for w in self._seg_whs
+        ]
+        cols = [c for c in parts[0].columns if all(c in p.columns for p in parts)]
+        return functools.reduce(DataFrame.unionByName, [p.select(*cols) for p in parts])
+
+    @functools.cached_property
+    def _doc_lengths(self) -> DataFrame:
+        """(doc_id, dl) of every segment in the open-time snapshot."""
+        parts = [w.read(self.spark, "doc_stats").select("doc_id", "dl") for w in self._seg_whs]
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    @functools.cached_property
     def term_stats(self) -> DataFrame:
         """The term dictionary; with incremental segments, re-aggregated so
         df/idf stay globally exact."""
@@ -280,62 +314,32 @@ class Index:
         positions: bool = False,
         analyzer: str = "standard",
     ) -> "Index":
-        """Build an in-memory index over docs(doc_id, text) — no warehouse.
+        """Build an index over docs(doc_id, text, …) in a temporary
+        warehouse and open it — used by small corpora, tests and the
+        driver-contract queries.
 
-        Same plan as the persisted build (tokenize → stats → salted pack),
-        but tables stay cached DataFrames; used by small corpora, tests and
-        the driver-contract queries. The oracle path works too (tokens and
-        doc_stats are kept).
+        The build is :func:`build_index`'s step chain and ``meta`` step
+        with the caller's doc_ids kept (no ``doc_map``: ``docs`` need not
+        carry transcript keys), placed by size like any build, so the
+        index serves every surface a persisted one does. The directory
+        sits under one per-process temp root that is removed at
+        interpreter exit — not when the Index is collected, since a lazy
+        frame from it can outlive it — and, like every warehouse, must
+        be readable by the executors.
         """
-        from kafka_elasticsearch_standalone_consumer_spark import B, BLOCK_SIZE, K1
-        from kafka_elasticsearch_standalone_consumer_spark.index.build import build_postings
-        from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
-            _doc_stats_totals,
-            _tokenize_docs,
-        )
-        from kafka_elasticsearch_standalone_consumer_spark.stats import (
-            build_doc_stats,
-            build_term_stats,
+        from kafka_elasticsearch_standalone_consumer_spark.pipeline.builder import _build_tables
+        from kafka_elasticsearch_standalone_consumer_spark.pipeline.checkpoint import (
+            CheckpointLog,
+            StepRunner,
         )
 
         spark = docs.sparkSession
-        tokens = _tokenize_docs(docs, tokenizer, positions, analyzer).persist()
-        doc_stats = build_doc_stats(docs, tokens).persist()
-        n, sum_dl = _doc_stats_totals(doc_stats)
-        meta = {
-            "n_docs": n,
-            "avgdl": sum_dl / n if n else 0.0,
-            "docs_per_shard": docs_per_shard,
-            "n_buckets": n_buckets,
-            "block_size": BLOCK_SIZE,
-            "k1": K1,
-            "b": B,
-            "tokenizer": tokenizer,
-            "positions": positions,
-            "analyzer": analyzer,
-        }
-        tokens_with_dl = tokens if "dl" in tokens.columns else tokens.join(doc_stats, "doc_id")
-        postings = (
-            build_postings(
-                tokens_with_dl,
-                avgdl=meta["avgdl"] or 1e-9,
-                docs_per_shard=docs_per_shard,
-                n_buckets=n_buckets,
-                positions=positions,
-            )
-            .withColumn("baked_avgdl", F.lit(float(meta["avgdl"] or 1e-9)))
-            .persist()
+        wh = Warehouse(tempfile.mkdtemp(dir=_ephemeral_root()))
+        _build_tables(
+            spark, docs, wh, StepRunner(CheckpointLog(spark, wh)), None, docs_per_shard,
+            n_buckets, tokenizer, positions, analyzer,
         )
-        idx = cls.__new__(cls)
-        idx.spark = spark
-        idx.wh = None
-        idx.meta = meta
-        idx.postings = postings
-        idx.term_stats = build_term_stats(tokens, n_buckets=n_buckets).persist()
-        idx._tokens = tokens
-        idx._doc_stats = doc_stats
-        idx._docs = docs
-        return idx
+        return cls(spark, wh.root)
 
     def _frame(self, schema: str, columns: dict | None = None) -> DataFrame:
         """Driver-held rows as a DataFrame over ONE Arrow LocalRelation:
@@ -376,11 +380,7 @@ class Index:
         (doc_id, score, …) always ride along."""
         from fnmatch import fnmatch
 
-        if self.wh is None:
-            raise ValueError("ephemeral index has no document store")
-        docs = self._seg_whs[0].read(self.spark, "docs")
-        for w in self._seg_whs[1:]:
-            docs = docs.unionByName(w.read(self.spark, "docs"))
+        docs = self._docs
         # SOURCE_COLS is the transcript superset; an index built over a
         # narrower schema (e.g. documents-table fixtures) stores fewer
         src = [c for c in self.SOURCE_COLS if c in set(docs.columns)]
@@ -430,33 +430,29 @@ class Index:
         the placement its tables were built with (``on_driver`` and the
         ``plan_bytes`` estimate behind it; None where unrecorded)."""
         from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
+            DELETES_TABLE,
             build_placement,
             list_segments,
             seg_warehouse,
         )
 
         out = {"meta": dict(self.meta)}
-        if self.wh is not None:
-            if self.wh.exists("sys_checkpoint"):
-                steps = {}
-                for r in self.wh.read_rows("sys_checkpoint"):
-                    if r["step_id"] != "ALL" and r["status"] == "ok":
-                        steps[r["step_id"]] = {"rows": r["rows"], "wall_ms": r["wall_ms"]}
-                out["steps"] = steps
-            segs = list_segments(self.wh)
-            out["n_segments"] = max(len(segs), 1)
-            out["doc_id_hi"] = segs[-1]["doc_id_hi"] if segs else self.meta["n_docs"]
-            out["placement"] = {0: build_placement(self.wh)} | {
-                s["seg_id"]: build_placement(seg_warehouse(self.wh, s["seg_id"]))
-                for s in segs[1:]
-            }
-            from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
-                DELETES_TABLE,
-            )
-
-            out["n_deleted"] = (
-                self.wh.count_rows(DELETES_TABLE) if self.wh.exists(DELETES_TABLE) else 0
-            )
+        if self.wh.exists("sys_checkpoint"):
+            steps = {}
+            for r in self.wh.read_rows("sys_checkpoint"):
+                if r["step_id"] != "ALL" and r["status"] == "ok":
+                    steps[r["step_id"]] = {"rows": r["rows"], "wall_ms": r["wall_ms"]}
+            out["steps"] = steps
+        segs = list_segments(self.wh)
+        out["n_segments"] = max(len(segs), 1)
+        out["doc_id_hi"] = segs[-1]["doc_id_hi"] if segs else self.meta["n_docs"]
+        out["placement"] = {0: build_placement(self.wh)} | {
+            s["seg_id"]: build_placement(seg_warehouse(self.wh, s["seg_id"]))
+            for s in segs[1:]
+        }
+        out["n_deleted"] = (
+            self.wh.count_rows(DELETES_TABLE) if self.wh.exists(DELETES_TABLE) else 0
+        )
         return out
 
     def corpus_summary(self) -> DataFrame:
@@ -474,8 +470,7 @@ class Index:
         Plan shape: two 1-row aggregates (doc stats, term stats) joined
         by the accepted 1-row broadcast crossJoin — no window, no sort,
         no collect."""
-        _tokens, doc_stats = self._oracle_tokens()
-        ds = doc_stats.agg(
+        ds = self._doc_lengths.agg(
             F.count("*").cast("long").alias("n_docs"),
             F.sum("dl").cast("long").alias("total_tokens"),
         )
@@ -491,16 +486,7 @@ class Index:
         """(doc_id, conv_id, turn_idx) across base + segments — the stable
         user-facing identity (internal doc_ids are re-keyed by compaction,
         exactly as Lucene renumbers docs on segment merge)."""
-        if self.wh is None:
-            raise ValueError("ephemeral index has no transcript identity table")
-        out = self._seg_whs[0].read(self.spark, "docs").select(
-            "doc_id", "conv_id", "turn_idx"
-        )
-        for w in self._seg_whs[1:]:
-            out = out.unionByName(
-                w.read(self.spark, "docs").select("doc_id", "conv_id", "turn_idx")
-            )
-        return out
+        return self._docs.select("doc_id", "conv_id", "turn_idx")
 
     # -- planning ---------------------------------------------------------
     def _msm(self, min_should_match: "int | str", query_text: str) -> int:
@@ -542,10 +528,10 @@ class Index:
         placement input of search / search_many).
 
         The term→(df, bucket) resolution is the Lucene term-dictionary
-        lookup. Against a warehouse it is a driver-side pyarrow read of the
-        term-sorted ``term_stats`` files (footer min/max prunes to the row
-        groups covering the query terms — no Spark job); the ephemeral /
-        legacy-layout fallback is one filtered Spark collect. idf is then
+        lookup: a driver-side pyarrow read of the term-sorted
+        ``term_stats`` files (footer min/max prunes to the row groups
+        covering the query terms — no Spark job); the legacy-layout
+        fallback is one filtered Spark collect. idf is then
         computed once here and shared by the fast path AND the DataFrame
         oracle, so both paths score with bit-identical weights.
         """
@@ -573,7 +559,7 @@ class Index:
     def _term_dfs(self, terms: list[str]) -> tuple[dict[str, int], dict[str, int]]:
         """({term: df summed over segments}, {term: term_bucket}) for the
         dictionary-present ``terms``: the footer-pruned pyarrow lookup,
-        or one filtered Spark collect on ephemeral / legacy layouts."""
+        or one filtered Spark collect on legacy layouts."""
         rows = self._lookup_terms_arrow(terms)
         if rows is None:
             rows = self._lookup_terms_spark(terms)
@@ -586,9 +572,7 @@ class Index:
 
     def _lookup_terms_arrow(self, terms: list[str]):
         """(term, df, bucket) rows via footer-pruned pyarrow reads, or None
-        when there is no warehouse / the layout predates term_bucket."""
-        if self.wh is None:
-            return None
+        when the layout predates term_bucket."""
         import pyarrow.dataset as pads
 
         out = []
@@ -733,14 +717,14 @@ class Index:
         """Top-k BM25 (OR semantics). mode: bmw | exact | intersect.
 
         Placement is decided after planning, from the term dictionary the
-        plan already read. A warehouse-backed query with no DataFrame-valued
-        mask — no ``where``, ``min_should_match`` ≤ 1, none of the ``_``
-        hooks — whose planned posting volume (Σ df of its planned terms) is
-        at most ``DRIVER_MAX_POSTINGS`` runs on the driver: the serving
+        plan already read. A query with no DataFrame-valued mask — no
+        ``where``, ``min_should_match`` ≤ 1, none of the ``_`` hooks —
+        whose planned posting volume (Σ df of its planned terms) is at
+        most ``DRIVER_MAX_POSTINGS`` runs on the driver: the serving
         kernel of :meth:`search_local` (tombstones honoured), returned as an
         Arrow LocalRelation, so collecting it launches no Spark job.
-        Everything else (ephemeral indexes, SQL filters, match sets, large
-        volumes) runs the per-shard kernel on the executors. Both
+        Everything else (SQL filters, match sets, large volumes) runs the
+        per-shard kernel on the executors. Both
         placements return bit-identical ``(doc_id, score)`` rows. Either
         way the query is a batch of one: :meth:`_local_topk` on the
         driver and :meth:`_term_partials` on the executors are
@@ -791,8 +775,7 @@ class Index:
             # a query term is absent from the corpus → conjunction is empty
             return self._frame(TOPK_SCHEMA)
         if (
-            self.wh is not None
-            and volume is not None
+            volume is not None
             and volume <= DRIVER_MAX_POSTINGS
             and where is None
             and min_should_match <= 1
@@ -868,7 +851,7 @@ class Index:
             DELETES_TABLE,
         )
 
-        if self.wh is None or not self.wh.exists(DELETES_TABLE):
+        if not self.wh.exists(DELETES_TABLE):
             return None
         ds = pads.dataset(self.wh.path(DELETES_TABLE), format="parquet")
         if not ds.files:
@@ -958,8 +941,6 @@ class Index:
         contract as :meth:`get_docs`. Rows come back doc_id-ascending."""
         import pyarrow.dataset as pads
 
-        if self.wh is None:
-            raise ValueError("get_docs_local serves from warehouse files — use get_docs()")
         ids, _ = self._local_mask(allowed=np.unique(np.asarray(list(doc_ids), dtype=np.int64)))
         if not len(ids):
             return []
@@ -1017,14 +998,23 @@ class Index:
         where: list[tuple] | None = None,
     ) -> list[tuple[int, float]]:
         """ES ``terms`` query on the zero-Spark-job serving path: docs
-        containing ≥1 of the lowercased ``terms`` at constant score
+        containing ≥1 of ``terms`` (:meth:`_terms_values`) at constant score
         ``boost``, first k by doc_id — same contract as
         :meth:`search_terms`, served by
         :meth:`_constant_score_multi_term_local`. ``where`` takes the
         serving-path (col, op, value) tuples."""
         return self._constant_score_multi_term_local(
-            [str(t).lower() for t in terms], k, where, boost
+            self._terms_values(terms), k, where, boost
         )
+
+    def _terms_values(self, values) -> list[str]:
+        """A terms query's values under the index's case rule: lowercased
+        unless the analyzer keeps case (whitespace, keyword), then sorted
+        and deduped."""
+        from kafka_elasticsearch_standalone_consumer_spark.analysis import lowercases
+
+        low = lowercases(self.meta.get("analyzer", "standard"))
+        return sorted({str(t).lower() if low else str(t) for t in values})
 
     def _constant_score_multi_term_local(
         self,
@@ -1040,11 +1030,6 @@ class Index:
         unioned (no scoring kernel), then :meth:`_local_mask` applies.
         Every multi-term ``*_local`` twin is this body over its rewrite,
         so whitespace/keyword indexes (which keep case) still match."""
-        if self.wh is None:
-            raise ValueError(
-                "multi-term *_local twins serve from warehouse files — "
-                "use the distributed surface"
-            )
         ts = sorted(set(terms))
         if not ts:
             return []
@@ -1075,10 +1060,6 @@ class Index:
         every local filter: meant for SELECTIVE predicates (the allowed
         set materializes driver-side); broad scans belong on
         :meth:`constant_score`."""
-        if self.wh is None:
-            raise ValueError(
-                "constant_score_local serves from warehouse files — use constant_score()"
-            )
         allowed, _ = self._local_mask(where)
         return [(int(d), float(boost)) for d in allowed[:k]]
 
@@ -1177,8 +1158,6 @@ class Index:
         the driver finish of :meth:`_phrase_topk`, same arguments: the
         serving-path masks, then :meth:`_positional_scores_local` with a
         per-shard cut at k."""
-        if self.wh is None:
-            raise ValueError("phrase/span *_local twins serve from warehouse files")
         dd, ss = self._positional_scores_local(
             slot_terms, span, *self._local_mask(where),
             per_shard_k=k, slop=slop, offsets=offsets,
@@ -1337,11 +1316,6 @@ class Index:
 
         Returns ``[(doc_id, score), ...]`` best-first (len ≤ k).
         """
-        if self.wh is None:
-            raise ValueError(
-                "search_local serves from warehouse files; ephemeral indexes "
-                "have no pruned postings layout to read — use search()"
-            )
         plan = self._plan_terms(query_text)
         if mode == "intersect" and len(plan[0]) < len(set(self._analyze(query_text))):
             return []
@@ -1380,11 +1354,6 @@ class Index:
         global stats)."""
         if terminate_after < 1:
             raise ValueError("terminate_after must be ≥ 1")
-        if self.wh is None:
-            raise ValueError(
-                "search_terminate_after_local serves from warehouse files — "
-                "use search_terminate_after() on ephemeral indexes"
-            )
         [(dd, ss)] = self._local_term_scores(
             [self._plan_terms(query_text)], *self._local_mask(where), mode=mode
         )
@@ -1427,9 +1396,7 @@ class Index:
         off the boundary (every real query does). ``where`` tuples narrow
         the set further; :meth:`_local_mask` intersects the two and drops
         the tombstones."""
-        ids, lat_deg, lon_deg = self._local_geo_coords(
-            lat_col, lon_col, "search_geo_distance_local"
-        )
+        ids, lat_deg, lon_deg = self._local_geo_coords(lat_col, lon_col)
         if ids is None:
             return []
         dist = self._np_haversine_km(lat_deg, lon_deg, origin)
@@ -1439,16 +1406,11 @@ class Index:
         )
         return list(zip(d.tolist(), s.tolist()))
 
-    def _local_geo_coords(self, lat_col: str, lon_col: str, caller: str):
+    def _local_geo_coords(self, lat_col: str, lon_col: str):
         """(doc_ids, lat_deg, lon_deg) float64 arrays from a pruned pyarrow
         read of every segment's doc store — the geo serving twins' input."""
         import pyarrow.dataset as pads
 
-        if self.wh is None:
-            raise ValueError(
-                f"{caller} serves from warehouse files — "
-                "use the distributed surface on ephemeral indexes"
-            )
         ids_parts, lat_parts, lon_parts = [], [], []
         for w in self._seg_whs:
             tbl = pads.dataset(w.path("docs"), format="parquet").to_table(
@@ -1497,9 +1459,7 @@ class Index:
         :meth:`_point_in_polygon_sql` in identical operation order, so
         float results agree bit-for-bit), then the shared local kernel
         scores exactly like :meth:`search_local`."""
-        ids, lat, lon = self._local_geo_coords(
-            lat_col, lon_col, "search_geo_shape_local"
-        )
+        ids, lat, lon = self._local_geo_coords(lat_col, lon_col)
         if ids is None:
             return []
         typ = str(shape.get("type", "")).lower()
@@ -1565,11 +1525,6 @@ class Index:
         fixed-V ``ring_sql`` surface of the distributed path."""
         import pyarrow.dataset as pads
 
-        if self.wh is None:
-            raise ValueError(
-                "search_geo_shape_indexed_local serves from warehouse files — "
-                "use the distributed surface on ephemeral indexes"
-            )
         ids_parts, lon_parts, lat_parts, v_seen = [], [], [], None
         for w in self._seg_whs:
             tbl = pads.dataset(w.path("docs"), format="parquet").to_table(
@@ -1747,11 +1702,6 @@ class Index:
         COMPLETE score set so adding the nested score cannot reorder a
         truncated list. Tombstones drop through :meth:`_local_mask`.
         """
-        if self.wh is None:
-            raise ValueError(
-                "search_nested_local serves from warehouse files — use "
-                "search_nested() on ephemeral indexes"
-            )
         if score_mode not in ("avg", "sum", "max", "min", "none"):
             raise ValueError(f"unknown nested score_mode: {score_mode}")
         nids, rolls = self._local_nested_scores(nested_col, inner, inner_score)
@@ -1877,10 +1827,6 @@ class Index:
         value) filter surface. Tombstones honored; corpus statistics
         never shift under any restriction (phrase df counts unmasked
         matches)."""
-        if self.wh is None:
-            raise ValueError(
-                "search_bool_local serves from warehouse files — use search_bool()"
-            )
         return self._run_parsed_local(
             self._bool_query(must, should, must_not, phrases), k, where
         )
@@ -1904,11 +1850,6 @@ class Index:
             parse_simple_query_string,
         )
 
-        if self.wh is None:
-            raise ValueError(
-                "simple_query_string_local serves from warehouse files — "
-                "use simple_query_string()"
-            )
         parsed = parse_simple_query_string(
             q, self.meta.get("analyzer", "standard"), default_operator
         )
@@ -2018,45 +1959,31 @@ class Index:
         The materialized candidate count is capped at ``max_scan``
         (default :data:`MAX_EXPANSION_SCAN`) with an explicit error —
         never a silent driver-side OOM at vocabulary scale."""
+        import pyarrow.dataset as pads
+
         if not prefix:
             raise ValueError("prefix expansion requires ≥1 literal character")
         cap = self.MAX_EXPANSION_SCAN if max_scan is None else int(max_scan)
         hi = prefix + "￿"
         out: set[str] = set()
-        if self.wh is not None:
-            import pyarrow.dataset as pads
-
-            for w in self._seg_whs:
-                data = pads.dataset(w.path("term_stats"), format="parquet")
-                flt = (pads.field("term") >= prefix) & (pads.field("term") < hi)
-                if length_band is not None and "term_len" in data.schema.names:
-                    lo_l, hi_l = int(length_band[0]), int(length_band[1])
-                    flt = (
-                        flt
-                        & (pads.field("term_len") >= lo_l)
-                        & (pads.field("term_len") <= hi_l)
-                    )
-                tbl = data.to_table(columns=["term"], filter=flt)
-                out.update(tbl.column("term").to_pylist())
-                if len(out) > cap:
-                    raise ValueError(
-                        f"prefix expansion of {prefix!r} exceeds {cap} terms — "
-                        "narrow the query (longer prefix_length or a length "
-                        "band) instead of materializing the dictionary"
-                    )
-        else:
-            cond = (F.col("term") >= prefix) & (F.col("term") < hi)
-            if length_band is not None:
-                cond = cond & F.length("term").between(
-                    int(length_band[0]), int(length_band[1])
+        for w in self._seg_whs:
+            data = pads.dataset(w.path("term_stats"), format="parquet")
+            flt = (pads.field("term") >= prefix) & (pads.field("term") < hi)
+            if length_band is not None and "term_len" in data.schema.names:
+                lo_l, hi_l = int(length_band[0]), int(length_band[1])
+                flt = (
+                    flt
+                    & (pads.field("term_len") >= lo_l)
+                    & (pads.field("term_len") <= hi_l)
                 )
-            rows = self.term_stats.filter(cond).select("term").limit(cap + 1).collect()
-            if len(rows) > cap:
+            tbl = data.to_table(columns=["term"], filter=flt)
+            out.update(tbl.column("term").to_pylist())
+            if len(out) > cap:
                 raise ValueError(
                     f"prefix expansion of {prefix!r} exceeds {cap} terms — "
-                    "narrow the query instead of materializing the dictionary"
+                    "narrow the query (longer prefix_length or a length "
+                    "band) instead of materializing the dictionary"
                 )
-            out.update(r["term"] for r in rows)
         if length_band is not None:
             # legacy layouts without term_len: enforce the band post-read
             lo_l, hi_l = int(length_band[0]), int(length_band[1])
@@ -2161,9 +2088,7 @@ class Index:
         given literal terms, score 1.0, doc_id-asc ties — the multi-value
         keyword filter of every ES dashboard. Same pruned-match-set plan
         as prefix/wildcard, minus the dictionary expansion."""
-        return self._constant_score_multi_term(
-            sorted({t.lower() for t in values}), k, where
-        )
+        return self._constant_score_multi_term(self._terms_values(values), k, where)
 
     @staticmethod
     def _lookup_values(rows: list[dict], field: str, max_terms: int | None) -> list[str]:
@@ -2223,11 +2148,9 @@ class Index:
         :meth:`search_terms` — the lookup adds NO Spark job.
         """
         src = lookup_index if lookup_index is not None else self
-        if src.wh is not None:
-            rows = src.get_docs_local([int(lookup_id)])
-        else:  # ephemeral index: one bounded point-fetch, still 1 row
-            rows = [r.asDict() for r in src.get_docs([int(lookup_id)]).collect()]
-        vals = self._lookup_values(rows, lookup_field, max_terms)
+        vals = self._lookup_values(
+            src.get_docs_local([int(lookup_id)]), lookup_field, max_terms
+        )
         return self.search_terms(vals, k, where=where)
 
     def scan_all(
@@ -3254,12 +3177,7 @@ class Index:
 
         from kafka_elasticsearch_standalone_consumer_spark.analysis import doc_term_freqs
 
-        if self.wh is None:
-            toks = self._tokens
-        else:
-            toks = self._seg_whs[0].read(self.spark, "tokens")
-            for w in self._seg_whs[1:]:
-                toks = toks.unionByName(w.read(self.spark, "tokens"))
+        toks = self._tokens_all
         if "positions" not in toks.columns:
             toks = doc_term_freqs(
                 self._docs_df(), positions=True,
@@ -3304,12 +3222,7 @@ class Index:
         deletes = self._deletes_df()
         if deletes is not None:
             matches = matches.join(deletes, "doc_id", "left_anti")
-        if self.wh is None:
-            ds = self._doc_stats.select("doc_id", "dl")
-        else:
-            ds = self._seg_whs[0].read(self.spark, "doc_stats").select("doc_id", "dl")
-            for w in self._seg_whs[1:]:
-                ds = ds.unionByName(w.read(self.spark, "doc_stats").select("doc_id", "dl"))
+        ds = self._doc_lengths
         _dps, avgdl, k1, b = self._bm25()
         idf = math.log(1.0 + (self.meta["n_docs"] - df_phrase + 0.5) / (df_phrase + 0.5))
         scored = matches.join(ds, "doc_id").select(
@@ -3339,13 +3252,12 @@ class Index:
         rows equal ``search(q, k, mode="bmw")``'s: :meth:`search` is the
         batch of one.
 
-        Placement follows :meth:`search`: on a warehouse-backed index, a
-        batch whose summed planned posting volume is at most
-        ``DRIVER_MAX_POSTINGS`` runs on the driver (:meth:`_local_topk`,
-        one pruned pyarrow read, ranked per qid in NumPy in the Window's
-        order, score desc, doc_id asc) and returns an Arrow LocalRelation:
-        zero Spark jobs. Larger batches and ephemeral indexes run as the
-        one Spark job. Rows are identical either way.
+        Placement follows :meth:`search`: a batch whose summed planned
+        posting volume is at most ``DRIVER_MAX_POSTINGS`` runs on the
+        driver (:meth:`_local_topk`, one pruned pyarrow read, ranked per
+        qid in NumPy in the Window's order, score desc, doc_id asc) and
+        returns an Arrow LocalRelation: zero Spark jobs. Larger batches
+        run as the one Spark job. Rows are identical either way.
         """
         if isinstance(queries, list):
             queries = {str(i): q for i, q in enumerate(queries)}
@@ -3354,7 +3266,7 @@ class Index:
         if not plans:
             return self._frame(MANY_SCHEMA)
         volume = sum(v for _, _, v in per_q.values())
-        if self.wh is not None and volume <= DRIVER_MAX_POSTINGS:
+        if volume <= DRIVER_MAX_POSTINGS:
             outs = self._local_topk(list(plans.values()), k, "bmw", *self._local_mask())
             n = [len(d) for d, _ in outs]
             return self._frame(MANY_SCHEMA, {
@@ -3485,46 +3397,12 @@ class Index:
     def _tokens_df(self) -> DataFrame:
         """(doc_id, term) token stream across all segments — column-pruned
         so a downstream term predicate reaches the parquet scan."""
-        from kafka_elasticsearch_standalone_consumer_spark.analysis import doc_term_freqs
-
-        spark = self.spark
-        if self.wh is None:
-            return self._tokens.select("doc_id", "term")
-        toks = None
-        for w in self._seg_whs:
-            t = (
-                w.read(spark, "tokens")
-                if w.exists("tokens")
-                else doc_term_freqs(
-                    w.read(spark, "docs"),
-                    analyzer=self.meta.get("analyzer", "standard"),
-                )
-            )
-            t = t.select("doc_id", "term")
-            toks = t if toks is None else toks.unionByName(t)
-        return toks
+        return self._tokens_all.select("doc_id", "term")
 
     def _tokens_full_df(self) -> DataFrame:
         """(doc_id, term, tf, dl) token stream across all segments —
         the frequency-bearing variant of :meth:`_tokens_df`."""
-        from kafka_elasticsearch_standalone_consumer_spark.analysis import doc_term_freqs
-
-        spark = self.spark
-        if self.wh is None:
-            return self._tokens.select("doc_id", "term", "tf", "dl")
-        toks = None
-        for w in self._seg_whs:
-            t = (
-                w.read(spark, "tokens")
-                if w.exists("tokens")
-                else doc_term_freqs(
-                    w.read(spark, "docs"),
-                    analyzer=self.meta.get("analyzer", "standard"),
-                )
-            )
-            t = t.select("doc_id", "term", "tf", "dl")
-            toks = t if toks is None else toks.unionByName(t)
-        return toks
+        return self._tokens_all.select("doc_id", "term", "tf", "dl")
 
     def _match_set(self, terms: list[str], min_should_match: int) -> DataFrame:
         """doc_ids containing ≥ ``min_should_match`` distinct terms of
@@ -4264,7 +4142,7 @@ class Index:
         ``lm_unigrams``/``lm_bigrams`` tables when the warehouse has them
         (index/lm.py: built once, then resolved per call with driver-side
         footer-pruned pyarrow point reads — zero Spark jobs, cost
-        independent of corpus size). Without them — ephemeral indexes, or
+        independent of corpus size). Without them — no LM built, or
         a warehouse with post-LM appended segments whose counts the LM
         tables don't cover — the on-demand fallback runs ONE term-pruned
         tokens aggregation (unigrams) and ONE corpus pass producing
@@ -4313,7 +4191,7 @@ class Index:
         # materialized path is only trusted while the warehouse has no
         # appended segments beyond the base the LM was built over.
         looked = None
-        if self.wh is not None and len(self._seg_whs) == 1:
+        if len(self._seg_whs) == 1:
             from kafka_elasticsearch_standalone_consumer_spark.index import lm as lm_mod
 
             looked = lm_mod.lookup_counts(self.wh, all_terms, sorted(pair_keys))
@@ -4395,20 +4273,15 @@ class Index:
         if collate:
             # ES 1.x `collate`: prune suggestions whose collate query
             # matches nothing — here a conjunctive match on the suggested
-            # terms over live docs (the pruned postings decode on
-            # persisted layouts, the distributed match set on ephemeral
-            # ones). Walk the LM ranking until `size` suggestions survive.
+            # terms over live docs (the pruned postings decode). Walk the
+            # LM ranking until `size` suggestions survive.
             kept = []
             allowed, blocked = self._local_mask()
             for phrase, sc in scored:
                 terms = phrase.split()
-                if self.wh is not None:
-                    d = self._local_match_set(terms, len(set(terms)))
-                    keep = kernels._apply_doc_masks(d, allowed, blocked)
-                    hit = bool(len(d) if keep is None else keep.any())
-                else:
-                    hit = self._match_set(terms, len(set(terms))).limit(1).count() > 0
-                if hit:
+                d = self._local_match_set(terms, len(set(terms)))
+                keep = kernels._apply_doc_masks(d, allowed, blocked)
+                if len(d) if keep is None else keep.any():
                     kept.append((phrase, sc))
                     if len(kept) >= size:
                         break
@@ -4758,9 +4631,8 @@ class Index:
         (``GET /index/type/{id}/_percolate`` — the second percolate
         flavor the reference's ES 1.5.1 ships, ref pom.xml:22): the
         document is NOT shipped by the caller, it is the STORED
-        ``_source``, fetched here by the zero-job pyarrow point read on
-        warehouse-backed indexes (ephemeral indexes fall back to the
-        bounded :meth:`get_docs` broadcast semi-join) and then matched
+        ``_source``, fetched here by the zero-job pyarrow point read and
+        then matched
         against the registered set by the ordinary broadcast percolate
         pass. Tombstoned / missing ids percolate nothing — the
         ``_mget`` contract, same as ES after a delete. Analysis uses
@@ -4773,14 +4645,11 @@ class Index:
         )
 
         analyzer = self.meta.get("analyzer", "standard")
-        if self.wh is not None:
-            rows = self.get_docs_local(list(doc_ids))
-            docs = self.spark.createDataFrame(
-                [(int(r["doc_id"]), r.get("text")) for r in rows],
-                "doc_id long, text string",
-            )
-        else:
-            docs = self.get_docs(list(doc_ids)).select("doc_id", "text")
+        rows = self.get_docs_local(list(doc_ids))
+        docs = self.spark.createDataFrame(
+            [(int(r["doc_id"]), r.get("text")) for r in rows],
+            "doc_id long, text string",
+        )
         return percolate(
             docs,
             queries,
@@ -6440,31 +6309,8 @@ class Index:
 
     def _oracle_tokens(self) -> tuple[DataFrame, DataFrame]:
         """(tokens(doc_id, term, tf), doc_stats(doc_id, dl)) for the
-        declarative scoring paths — cached DataFrames on an ephemeral
-        index, the unioned segment tables on a warehouse one (tokens may
-        be unmaterialized: recompute the zero-shuffle fused pass)."""
-        if self.wh is None:
-            return self._tokens, self._doc_stats.select("doc_id", "dl")
-        from kafka_elasticsearch_standalone_consumer_spark.analysis import doc_term_freqs
-
-        def _toks(w):
-            if w.exists("tokens"):
-                return w.read(self.spark, "tokens")
-            return doc_term_freqs(
-                w.read(self.spark, "docs"),
-                analyzer=self.meta.get("analyzer", "standard"),
-            )
-
-        tokens = _toks(self._seg_whs[0])
-        doc_stats = self._seg_whs[0].read(self.spark, "doc_stats").select("doc_id", "dl")
-        for w in self._seg_whs[1:]:
-            tokens = tokens.select("doc_id", "term", "tf").unionByName(
-                _toks(w).select("doc_id", "term", "tf")
-            )
-            doc_stats = doc_stats.unionByName(
-                w.read(self.spark, "doc_stats").select("doc_id", "dl")
-            )
-        return tokens, doc_stats
+        declarative scoring paths: the memoized segment unions."""
+        return self._tokens_all.select("doc_id", "term", "tf"), self._doc_lengths
 
     def search_oracle(
         self,
@@ -6740,8 +6586,6 @@ class Index:
         for the match set, then :meth:`_local_mask` with the filter and
         the tombstones — same semantics, returns the bare int. ``where``
         is the serving-path ``(col, op, value)`` tuple surface."""
-        if self.wh is None:
-            raise ValueError("count_local serves from warehouse files")
         terms = sorted(set(self._analyze(query_text)))
         if not terms:  # match_all: every doc the filter keeps
             allowed, _ = self._local_mask(where or [])

@@ -9,6 +9,9 @@ from kafka_elasticsearch_standalone_consumer_spark.session import get_spark
 # goes to the executors), or below zero (even an empty batch runs as Spark
 # jobs)
 SEGMENT_LIMITS = {"driver": 1 << 62, "executor": -1}
+# engine.DRIVER_MAX_POSTINGS per --query-placement: the values the
+# ``placements`` fixture forces
+QUERY_LIMITS = {"driver": 1 << 62, "executor": 0}
 
 
 def pytest_addoption(parser):
@@ -20,6 +23,13 @@ def pytest_addoption(parser):
         "append_segment, compact, reindex, optimize) by setting "
         "incremental.DRIVER_MAX_SEGMENT_BYTES for the whole session",
     )
+    parser.addoption(
+        "--query-placement",
+        choices=sorted(QUERY_LIMITS),
+        default=None,
+        help="force the placement of every unfiltered search() / search_many() in "
+        "the run by setting engine.DRIVER_MAX_POSTINGS for the whole session",
+    )
 
 
 def pytest_configure(config):
@@ -28,6 +38,11 @@ def pytest_configure(config):
         from kafka_elasticsearch_standalone_consumer_spark.pipeline import incremental
 
         incremental.DRIVER_MAX_SEGMENT_BYTES = SEGMENT_LIMITS[placement]
+    placement = config.getoption("--query-placement")
+    if placement is not None:
+        from kafka_elasticsearch_standalone_consumer_spark.query import engine
+
+        engine.DRIVER_MAX_POSTINGS = QUERY_LIMITS[placement]
 
 
 @pytest.fixture(scope="session")
@@ -76,7 +91,7 @@ def placements(monkeypatch):
     from kafka_elasticsearch_standalone_consumer_spark.query import engine
 
     def each():
-        for name, limit in (("driver", 1 << 62), ("executor", 0)):
+        for name, limit in QUERY_LIMITS.items():
             monkeypatch.setattr(engine, "DRIVER_MAX_POSTINGS", limit)
             yield name
         monkeypatch.undo()

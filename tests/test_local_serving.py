@@ -1,9 +1,11 @@
 """Driver-side serving path (search_local): must be rank- AND
 score-identical to the distributed search() on every mode, honor delete
-tombstones and multi-segment baked-avgdl bounds, and reject ephemeral
-indexes (no pruned files to read)."""
+tombstones and multi-segment baked-avgdl bounds, and serve ephemeral
+indexes (a temporary warehouse) like any other."""
 
 from __future__ import annotations
+
+import gc
 
 import pytest
 
@@ -13,7 +15,7 @@ from kafka_elasticsearch_standalone_consumer_spark.pipeline.incremental import (
     append_segment,
     delete_docs,
 )
-from kafka_elasticsearch_standalone_consumer_spark.query.engine import Index
+from kafka_elasticsearch_standalone_consumer_spark.query.engine import Index, _filters_to_sql
 
 Q = "w00000 w00003 w00015"
 
@@ -72,14 +74,16 @@ def test_local_with_segments_and_deletes(spark, transcripts, tmp_path, placement
         assert top[0][0] not in {d for d, _ in loc}
 
 
-def test_local_rejects_ephemeral(spark, transcripts):
+def test_local_serves_ephemeral(spark, transcripts, placements):
     idx = Index.ephemeral(
         transcripts.selectExpr("row_number() OVER (ORDER BY conv_id, turn_idx) AS doc_id", "text"),
         docs_per_shard=256,
         n_buckets=8,
     )
-    with pytest.raises(ValueError, match="warehouse"):
-        idx.search_local(Q, 10)
+    for placement in placements():
+        for mode in ("bmw", "exact", "intersect"):
+            dist = _dist(idx, Q, mode)
+            assert _loc(idx, Q, mode) == dist and dist, (placement, mode)
 
 
 # -- round-3 serving surfaces: filters, phrase, mget ----------------------
@@ -310,8 +314,8 @@ def test_local_bool_tombstones_and_ephemeral(spark, transcripts, tmp_path):
         docs_per_shard=256,
         n_buckets=8,
     )
-    with pytest.raises(ValueError):
-        eph.search_bool_local(should=[Q])
+    want = [(r["doc_id"], r["score"]) for r in eph.search_bool(should=[Q], k=10).collect()]
+    assert eph.search_bool_local(should=[Q], k=10) == want and want
 
 
 def test_simple_query_string_local_identical(spark, local_pos_wh):
@@ -478,7 +482,7 @@ def test_geo_distance_local_identical_to_distributed(spark, tmp_path):
     ]
     loc = idx.search_geo_distance_local(q, 10, origin=origin, radius_km=r)
     assert loc == dist and dist
-    # ephemeral indexes reject the local path loudly
+    # an ephemeral index serves the twin like any warehouse
     eph = Index.ephemeral(
         docs.select("text", "lat", "lon").withColumn(
             "doc_id", F.monotonically_increasing_id()
@@ -486,8 +490,11 @@ def test_geo_distance_local_identical_to_distributed(spark, tmp_path):
         docs_per_shard=128,
         n_buckets=8,
     )
-    with pytest.raises(ValueError, match="warehouse"):
-        eph.search_geo_distance_local(q, 5, origin=origin, radius_km=r)
+    want = [
+        (row["doc_id"], row["score"])
+        for row in eph.search_geo_distance(q, 5, origin=origin, radius_km=r).collect()
+    ]
+    assert eph.search_geo_distance_local(q, 5, origin=origin, radius_km=r) == want and want
 
 
 def test_local_terms_lookup_identical_and_zero_job(spark, built_index):
@@ -705,3 +712,77 @@ def test_positional_twin_guards(spark, built_index, local_pos_wh, surface, make)
         for name in (surface, surface + "_local"):
             with pytest.raises(ValueError, match="repeated terms"):
                 getattr(pos, name)(*make("w00005", "w00005"))
+
+
+@pytest.fixture(scope="module")
+def eph_pos(spark, transcripts):
+    """An ephemeral positions index with a nested ``calls`` column."""
+    docs = transcripts.selectExpr(
+        "row_number() OVER (ORDER BY conv_id, turn_idx) AS doc_id", "text", "role",
+        "array(named_struct('name', role, 'ms', CAST(turn_idx AS DOUBLE))) AS calls",
+    )
+    return Index.ephemeral(docs, docs_per_shard=256, n_buckets=8, positions=True)
+
+
+def test_ephemeral_twins_equal_their_spark_forms(eph_pos, placements):
+    """Every driver twin serves an ephemeral index and equals its Spark
+    surface there, with and without ``where`` tuples."""
+    idx = eph_pos
+    phrase = _phrase_from(idx)
+
+    def rows(df):
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+    for where in (None, [("role", "=", "user")]):
+        sql = None if where is None else _filters_to_sql(where)
+        for placement in placements():
+            want = rows(idx.search(Q, 10, where=sql))
+            assert idx.search_local(Q, 10, where=where) == want and want, (placement, where)
+        filters = None if where is None else [("role", "user")]
+        want = rows(idx.search_bool(should=[Q], filters=filters, k=10))
+        assert idx.search_bool_local(should=[Q], where=where, k=10) == want and want, where
+        want = rows(idx.constant_score(where=sql, k=10))
+        assert idx.constant_score_local(where or [], k=10) == want and want, where
+        want = idx.count(Q, where=sql).collect()[0]["total"]
+        assert idx.count_local(Q, where=where) == want and want, where
+        want = rows(idx.search_phrase(phrase, 10, where=sql))
+        assert idx.search_phrase_local(phrase, 10, where=where) == want and want, where
+    for inner in ([("name", "=", "user")], [("ms", ">=", 2.0)]):
+        want = rows(idx.search_nested(
+            Q, 10, nested_col="calls", inner_where="x." + _filters_to_sql(inner)
+        ))
+        got = idx.search_nested_local(Q, 10, nested_col="calls", inner=inner)
+        assert got == want and want, inner
+    ids = [1, 3, 5, 10**9]
+    want = [(r["doc_id"], r["text"]) for r in idx.get_docs(ids).collect()]
+    assert [(r["doc_id"], r["text"]) for r in idx.get_docs_local(ids)] == want and want
+
+
+def test_ephemeral_frame_outlives_its_index(spark, transcripts):
+    """A lazy executor-path frame still collects after its ephemeral
+    Index is collected: the temporary warehouse lives until exit."""
+    idx = Index.ephemeral(
+        transcripts.selectExpr("row_number() OVER (ORDER BY conv_id, turn_idx) AS doc_id",
+                               "text", "role"),
+        docs_per_shard=256,
+        n_buckets=8,
+    )
+    frame = idx.search(Q, 10, where="role = 'user'")
+    want = frame.collect()
+    del idx
+    gc.collect()
+    assert frame.collect() == want and want
+
+
+@pytest.mark.parametrize(
+    "analyzer, texts", [("whitespace", ["Foo bar", "foo Baz"]), ("keyword", ["Foo", "foo"])]
+)
+def test_terms_values_follow_the_index_case_rule(spark, analyzer, texts):
+    """On an analyzer that keeps case, a terms query matches its values
+    verbatim: the doc search('Foo') finds, on both surfaces."""
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    idx = Index.ephemeral(docs, docs_per_shard=4, n_buckets=2, analyzer=analyzer)
+    want = [r["doc_id"] for r in idx.search("Foo", 10).collect()]
+    dist = [(r["doc_id"], r["score"]) for r in idx.search_terms(["Foo"], 10).collect()]
+    assert idx.search_terms_local(["Foo"], 10) == dist
+    assert [d for d, _ in dist] == want == [0]

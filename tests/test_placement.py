@@ -175,6 +175,26 @@ def test_docs_frame_is_read_once_per_index(spark, deleted_wh):
     assert sorted(mask_df.collect()) == sorted(first[0].collect())
 
 
+def test_segment_tables_are_read_once_per_index(spark, deleted_wh):
+    """fetch, doc_keys, the token streams and the oracle read each segment
+    table once per Index: a second call builds without a Spark job."""
+    idx = Index(spark, deleted_wh)
+    hits = idx._frame(TOPK_SCHEMA, [(1, 1.0)])
+    calls = {
+        "fetch": lambda: idx.fetch(hits),
+        "doc_keys": idx.doc_keys,
+        "_tokens_df": idx._tokens_df,
+        "_tokens_full_df": idx._tokens_full_df,
+        "_oracle_tokens": idx._oracle_tokens,
+        "search_oracle": lambda: idx.search_oracle(Q, 10),
+    }
+    for name, call in calls.items():
+        call()
+        before = _jobs(spark)
+        call()
+        assert _jobs(spark) == before, name
+
+
 def test_context_suggestions_are_a_zero_job_frame(spark, built_index):
     """The context suggester ranks on the driver; building and collecting
     its rows launches no Spark job."""
