@@ -108,12 +108,3 @@ def _dense_ids(df, order_cols, id_col, num_partitions) -> tuple[DataFrame, DataF
         F.shiftrightunsigned(mono, 33).cast("int") + 1,
     ) if offs else F.lit(0).cast("long")
     return arranged.drop("_pid").withColumn(id_col, (base + local).cast("long")), arranged
-
-
-def build_doc_map(transcripts: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """doc_map(conv_id, turn_idx, doc_id) — the stable identity table."""
-    return assign_dense_ids(
-        transcripts.select("conv_id", "turn_idx"),
-        order_cols=("conv_id", "turn_idx"),
-        num_partitions=num_partitions,
-    )

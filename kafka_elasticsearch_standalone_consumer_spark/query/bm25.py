@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from kafka_elasticsearch_standalone_consumer_spark import B, K1
 from kafka_elasticsearch_standalone_consumer_spark.analysis import tokenize_text
+from kafka_elasticsearch_standalone_consumer_spark.tables import local_frame
 
 
 def query_term_weights(query_text: str, analyzer: str = "standard") -> dict[str, int]:
@@ -59,7 +60,7 @@ def bm25_scores_oracle(
     spark = tokens.sparkSession
     weights = query_term_weights(query_text, analyzer)
     if not weights:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, "doc_id long, score double")
     if idfw is not None:
         ts = spark.createDataFrame(
             [(t, float(v)) for t, v in sorted(idfw.items())], "term string, idfw double"

@@ -46,7 +46,7 @@ from kafka_elasticsearch_standalone_consumer_spark.analysis import (
 from kafka_elasticsearch_standalone_consumer_spark.index.build import term_bucket_col
 from kafka_elasticsearch_standalone_consumer_spark.pipeline.builder import read_meta
 from kafka_elasticsearch_standalone_consumer_spark.query import bm25, kernels
-from kafka_elasticsearch_standalone_consumer_spark.tables import Warehouse
+from kafka_elasticsearch_standalone_consumer_spark.tables import Warehouse, local_frame
 
 TOPK_SCHEMA = "doc_id long, score double"
 MANY_SCHEMA = "qid string, " + TOPK_SCHEMA + ", rank int"
@@ -342,22 +342,8 @@ class Index:
         return cls(spark, wh.root)
 
     def _frame(self, schema: str, columns: dict | None = None) -> DataFrame:
-        """Driver-held rows as a DataFrame over ONE Arrow LocalRelation:
-        collecting it launches no Spark job, where a createDataFrame over
-        Python rows launches one even when empty (~0.4 s wall, ~1.3 CPU s
-        on local[4]). ``columns`` maps each ``schema`` column to an
-        array-like, or is a list of row tuples in ``schema`` column order;
-        None or no rows gives the empty result."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import DataType
-
-        struct = DataType.fromDDL(schema)
-        if isinstance(columns, list):
-            columns = dict(zip(struct.names, map(list, zip(*columns)))) or None
-        arrow = to_arrow_schema(struct)
-        tbl = arrow.empty_table() if columns is None else pa.table(columns, schema=arrow)
-        return self.spark.createDataFrame(tbl, struct)
+        """Driver-held rows as a zero-job frame (:func:`local_frame`)."""
+        return local_frame(self.spark, schema, columns)
 
     SOURCE_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
@@ -623,9 +609,37 @@ class Index:
     def _deletes_df(self) -> DataFrame | None:
         """Delete tombstones (Lucene live-docs complement) as a zero-job
         ``doc_id long`` frame over :meth:`_local_blocked`'s array, or
-        None. Every caller joins on doc_id."""
+        None."""
         tombs = self._local_blocked()
         return None if tombs is None else self._frame("doc_id long", {"doc_id": tombs})
+
+    def _live(
+        self,
+        where: "str | F.Column | None" = None,
+        frame: DataFrame | None = None,
+        allowed: DataFrame | None = None,
+        blocked: DataFrame | None = None,
+    ) -> DataFrame:
+        """The executor twin of :meth:`_local_mask`, and the only doc
+        restriction of the Spark surfaces: the doc store — or ``frame``,
+        any frame with ``doc_id`` — cut down to the docs that pass the SQL
+        ``where``, are in ``allowed`` and are in neither ``blocked`` nor
+        the delete tombstones. With no ``frame`` the predicate filters the
+        doc store itself, so it is pushed into the scan and the caller's
+        select prunes the columns; with one, ``where`` becomes a semi-join
+        against the filtered doc ids. Corpus statistics never see it."""
+        docs = self._docs if where is None else self._docs.filter(where)
+        out = docs
+        if frame is not None:
+            out = frame if where is None else frame.join(
+                docs.select("doc_id"), "doc_id", "left_semi"
+            )
+        if allowed is not None:
+            out = out.join(allowed.select("doc_id"), "doc_id", "left_semi")
+        for drop in (blocked, self._deletes_df()):
+            if drop is not None:
+                out = out.join(drop.select("doc_id"), "doc_id", "left_anti")
+        return out
 
     def _mask_plan(
         self,
@@ -635,35 +649,23 @@ class Index:
         blocked_docs: DataFrame | None = None,
     ):
         """(mask_df_with_shard, kind) for the per-shard doc mask:
-        kind='allowed' ships the filtered live set, kind='blocked' ships
-        only the exclusions (cheaper when there is no filter clause);
-        (None, None) when no mask applies. ``allowed_docs`` optionally
-        intersects an extra doc_id set (min_should_match / bool must);
-        ``blocked_docs`` unions an exclusion set (bool must_not) with the
-        delete tombstones."""
+        kind='allowed' ships the :meth:`_live` set of the filter clause
+        and ``allowed_docs`` (min_should_match / bool must), minus
+        ``blocked_docs`` (bool must_not) and the tombstones; kind='blocked'
+        ships only the exclusions (cheaper when there is no filter or
+        allowed set); (None, None) when no mask applies."""
         from kafka_elasticsearch_standalone_consumer_spark.index.build import with_shard
 
-        deletes = self._deletes_df()
-        blocked = deletes.select("doc_id") if deletes is not None else None
-        if blocked_docs is not None:
-            b = blocked_docs.select("doc_id")
-            blocked = b if blocked is None else blocked.unionByName(b).distinct()
-        allowed = None
-        if where is not None:
-            allowed = self._docs_df().filter(where).select("doc_id")
-        if allowed_docs is not None:
-            allowed = (
-                allowed_docs.select("doc_id")
-                if allowed is None
-                else allowed.join(allowed_docs, "doc_id", "left_semi")
-            )
-        if allowed is not None:
-            if blocked is not None:
-                allowed = allowed.join(blocked, "doc_id", "left_anti")
-            return with_shard(allowed, docs_per_shard), "allowed"
-        if blocked is not None:
-            return with_shard(blocked, docs_per_shard), "blocked"
-        return None, None
+        if where is not None or allowed_docs is not None:
+            live = self._live(where, frame=allowed_docs, blocked=blocked_docs)
+            return with_shard(live.select("doc_id"), docs_per_shard), "allowed"
+        drops = [d.select("doc_id") for d in (self._deletes_df(), blocked_docs) if d is not None]
+        if not drops:
+            return None, None
+        blocked = functools.reduce(DataFrame.unionByName, drops)
+        if len(drops) > 1:
+            blocked = blocked.distinct()
+        return with_shard(blocked, docs_per_shard), "blocked"
 
     @staticmethod
     def _shard_partials(hits, mask_df, mask_kind, fn, schema: str) -> DataFrame:
@@ -915,7 +917,7 @@ class Index:
         blocked: "np.ndarray | None" = None,
     ) -> tuple["np.ndarray | None", "np.ndarray | None"]:
         """(allowed, blocked) sorted doc masks of the driver placement —
-        the twin of :meth:`_mask_plan`, and the only mask builder of the
+        the twin of :meth:`_live`, and the only mask builder of the
         serving path (apply it with ``kernels._apply_doc_masks`` or hand
         it to a kernel). ``where`` (:meth:`_local_allowed`) and
         ``allowed`` intersect; ``blocked`` unions with the delete
@@ -1182,35 +1184,39 @@ class Index:
         across shards, so filters/tombstones never shift idf.
         ``per_shard_k=None`` keeps every match (shards hold at most
         docs_per_shard docs)."""
-        import math
-
-        empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
         plan = self._positional_plan(slot_terms, span)
-        if plan is None:
-            return empty
-        pdf = self._local_postings(*plan)
+        pdf = None if plan is None else self._local_postings(*plan)
         if pdf is None:
-            return empty
+            return self._positional_bm25([], [], [], 0)
         docs_per_shard, avgdl, k1, b = self._bm25()
         kk = int(per_shard_k) if per_shard_k is not None else docs_per_shard
-        out_d, out_t, out_l = [], [], []
-        n_total = 0
-        for _shard, g in pdf.groupby("shard", sort=False):
-            d, tfp, dl, n = kernels.positional_shard(
+        parts = [
+            kernels.positional_shard(
                 g, slot_terms, span, slop, offsets, kk, avgdl, k1, b,
                 docs_per_shard, allowed, blocked,
             )
-            n_total += int(n)
-            if len(d):
-                out_d.append(np.asarray(d, dtype=np.int64))
-                out_t.append(np.asarray(tfp, dtype=np.float64))
-                out_l.append(np.asarray(dl, dtype=np.float64))
-        if n_total == 0 or not out_d:
-            return empty
-        idf = math.log(1.0 + (float(self.meta["n_docs"]) - n_total + 0.5) / (n_total + 0.5))
-        dd = np.concatenate(out_d)
-        tf = np.concatenate(out_t)
-        dl = np.concatenate(out_l)
+            for _shard, g in pdf.groupby("shard", sort=False)
+        ]
+        return self._positional_bm25(
+            *(np.concatenate([p[i] for p in parts]) for i in range(3)),
+            sum(int(p[3]) for p in parts),
+        )
+
+    def _positional_bm25(self, d, tf, dl, n_matches: int) -> tuple["np.ndarray", "np.ndarray"]:
+        """The synthetic-term BM25 finish of the phrase/span family, shared
+        by both placements: (doc_ids, scores) of the per-shard match rows
+        (doc, tf, dl), with idf from ``n_matches`` — the UNMASKED match
+        count summed over shards, so filters and tombstones never shift
+        it. Empty when nothing matched."""
+        import math
+
+        dd = np.asarray(d, dtype=np.int64)
+        if n_matches == 0 or not len(dd):
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+        _dps, avgdl, k1, b = self._bm25()
+        tf = np.asarray(tf, dtype=np.float64)
+        dl = np.asarray(dl, dtype=np.float64)
+        idf = math.log(1.0 + (float(self.meta["n_docs"]) - n_matches + 0.5) / (n_matches + 0.5))
         return dd, idf * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
     def search_span_first_local(
@@ -2398,14 +2404,13 @@ class Index:
         if not terms:
             return self._frame(TOPK_SCHEMA)
         matched = self._match_set(terms, min_should_match)
-        if where is not None:
-            matched = matched.join(
-                self._docs_df().filter(where).select("doc_id"), "doc_id", "left_semi"
-            )
-        deletes = self._deletes_df()
-        if deletes is not None:
-            matched = matched.join(deletes, "doc_id", "left_anti")
-        return matched.select(
+        return self._constant_topk(self._live(where, frame=matched), k, boost)
+
+    @staticmethod
+    def _constant_topk(live: DataFrame, k: int, boost: float) -> DataFrame:
+        """The constant-score finish: (doc_id, ``boost``) of the ``live``
+        docs, first k by doc_id."""
+        return live.select(
             "doc_id", F.lit(float(boost)).alias("score")
         ).orderBy(F.asc("doc_id")).limit(k)
 
@@ -2417,15 +2422,8 @@ class Index:
         min/max pruning), so cost is the pruned scan — never a shuffle."""
         if not ids:
             return self._frame(TOPK_SCHEMA)
-        docs = self._docs_df().filter(
-            F.col("doc_id").isin([int(i) for i in ids])
-        ).select("doc_id")
-        deletes = self._deletes_df()
-        if deletes is not None:
-            docs = docs.join(deletes, "doc_id", "left_anti")
-        return docs.select(
-            "doc_id", F.lit(float(boost)).alias("score")
-        ).orderBy(F.asc("doc_id")).limit(k)
+        live = self._live(F.col("doc_id").isin([int(i) for i in ids]))
+        return self._constant_topk(live, k, boost)
 
     def constant_score(
         self,
@@ -2446,16 +2444,7 @@ class Index:
             return self._constant_score_multi_term(
                 terms, k, where, boost=boost, min_should_match=min_should_match
             )
-        docs = self._docs_df()
-        if where is not None:
-            docs = docs.filter(where)
-        matched = docs.select("doc_id")
-        deletes = self._deletes_df()
-        if deletes is not None:
-            matched = matched.join(deletes, "doc_id", "left_anti")
-        return matched.select(
-            "doc_id", F.lit(float(boost)).alias("score")
-        ).orderBy(F.asc("doc_id")).limit(k)
+        return self._constant_topk(self._live(where), k, boost)
 
     def match_all(self, k: int = 10, boost: float = 1.0) -> DataFrame:
         """ES ``match_all``: every live doc at constant score ``boost``,
@@ -3072,12 +3061,12 @@ class Index:
         :meth:`_positional_plan`'s; :meth:`_positional_topk_local` is the
         driver finish of the same arguments.
 
-        Finishes eagerly: the Spark top-k (score desc, doc_id asc) is
-        collected — at most k rows reach the driver — the persisted
-        per-shard partials are released, and the rows come back as a
-        zero-job frame (:meth:`_frame`)."""
-        import math
-
+        Finishes on the driver: the per-shard partials — at most k match
+        rows per shard, plus a ``-1`` sentinel row where a shard's
+        matches were all masked out — are collected and scored by
+        :meth:`_positional_bm25`, the driver finish's scorer; the top k
+        (score desc, doc_id asc) come back as a zero-job frame
+        (:meth:`_frame`)."""
         plan = self._positional_plan(slot_terms, span)
         if plan is None:
             return self._frame(TOPK_SCHEMA)
@@ -3097,8 +3086,8 @@ class Index:
             if n and len(d) == 0:
                 # every match masked out — emit a sentinel row so the
                 # shard's UNMASKED match count still reaches the global
-                # phrase-df aggregation (ES keeps stats global under
-                # filters; tombstone stats stay frozen until compaction)
+                # phrase df (ES keeps stats global under filters;
+                # tombstone stats stay frozen until compaction)
                 return pd.DataFrame(
                     {"doc_id": [-1], "tfp": [0], "dl": [1],
                      "shard": [shard], "n_shard_matches": [n]}
@@ -3107,30 +3096,13 @@ class Index:
                 {"doc_id": d, "tfp": tfp, "dl": dl, "shard": shard, "n_shard_matches": n}
             )
 
-        mask_df, mask_kind = self._mask_plan(where, docs_per_shard)
-        partials = self._shard_partials(hits, mask_df, mask_kind, score_shard, out_schema)
-        partials = partials.persist()
-        try:
-            df_phrase = (
-                partials.select("shard", "n_shard_matches").distinct()
-                .agg(F.sum("n_shard_matches")).collect()[0][0]
-            ) or 0
-            if df_phrase == 0:
-                return self._frame(TOPK_SCHEMA)
-            n = float(self.meta["n_docs"])
-            idf = math.log(1.0 + (n - df_phrase + 0.5) / (df_phrase + 0.5))
-            scored = partials.filter(F.col("doc_id") >= 0).select(
-                "doc_id",
-                (
-                    F.lit(idf)
-                    * F.col("tfp")
-                    / (F.col("tfp") + k1 * (1.0 - b + b * F.col("dl") / avgdl))
-                ).alias("score"),
-            )
-            rows = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-        finally:
-            partials.unpersist()
-        return self._frame(TOPK_SCHEMA, rows)
+        mask = self._mask_plan(where, docs_per_shard)
+        rows = self._shard_partials(hits, *mask, score_shard, out_schema).toPandas()
+        n_matches = int(rows.groupby("shard")["n_shard_matches"].first().sum())
+        rows = rows[rows["doc_id"] >= 0]
+        dd, ss = self._positional_bm25(rows["doc_id"], rows["tfp"], rows["dl"], n_matches)
+        top = np.lexsort((dd, -ss))[:k]
+        return self._frame(TOPK_SCHEMA, {"doc_id": dd[top], "score": ss[top]})
 
     def search_phrase_oracle(
         self, phrase: str, k: int | None = 10, where: str | None = None, slop: int = 0
@@ -3215,13 +3187,7 @@ class Index:
         if df_phrase == 0:
             matches.unpersist()
             return self._frame(TOPK_SCHEMA)
-        if where is not None:
-            matches = matches.join(
-                self._docs_df().filter(where).select("doc_id"), "doc_id", "left_semi"
-            )
-        deletes = self._deletes_df()
-        if deletes is not None:
-            matches = matches.join(deletes, "doc_id", "left_anti")
+        matches = self._live(where, frame=matches)
         ds = self._doc_lengths
         _dps, avgdl, k1, b = self._bm25()
         idf = math.log(1.0 + (self.meta["n_docs"] - df_phrase + 0.5) / (df_phrase + 0.5))
@@ -3427,14 +3393,7 @@ class Index:
         terms = sorted(set(self._analyze(query_text)))
         if not terms:
             return None
-        matched = self._match_set(terms, min_should_match)
-        docs = self._docs_df()
-        if where is not None:
-            docs = docs.filter(where)
-        deletes = self._deletes_df()
-        if deletes is not None:
-            docs = docs.join(deletes, "doc_id", "left_anti")
-        return docs.join(matched, "doc_id", "left_semi")
+        return self._live(where, allowed=self._match_set(terms, min_should_match))
 
     def histogram(
         self,
@@ -3694,16 +3653,7 @@ class Index:
         if shard_size < 1:
             raise ValueError("shard_size must be ≥ 1")
         dps = self._bm25()[0]
-        live = self._docs_df().select("doc_id")
-        deletes = self._deletes_df()
-        if deletes is not None:
-            live = live.join(deletes, "doc_id", "left_anti")
-        toksd = (
-            self._tokens_df()
-            .join(live, "doc_id", "left_semi")
-            .select("doc_id", "term")
-            .distinct()
-        )
+        toksd = self._live(frame=self._tokens_df()).distinct()
         per = (
             toksd.withColumn("shard", F.expr(f"doc_id DIV {dps}"))
             .groupBy("shard", "term")
@@ -3822,12 +3772,8 @@ class Index:
         are honored — tombstoned docs never match."""
         from kafka_elasticsearch_standalone_consumer_spark.query.percolate import percolate
 
-        docs = self._docs_df()
-        deletes = self._deletes_df()
-        if deletes is not None:
-            docs = docs.join(deletes, "doc_id", "left_anti")
         return percolate(
-            docs,
+            self._live(),
             queries,
             operator=operator,
             minimum_should_match=minimum_should_match,
@@ -3841,11 +3787,7 @@ class Index:
         resurrects tombstoned docs."""
         from kafka_elasticsearch_standalone_consumer_spark.query import aggs
 
-        docs = self._docs_df()
-        deletes = self._deletes_df()
-        if deletes is not None:
-            docs = docs.join(deletes, "doc_id", "left_anti")
-        return aggs.stats_summary(docs, field)
+        return aggs.stats_summary(self._live(), field)
 
     def missing_agg(
         self,
@@ -4294,25 +4236,28 @@ class Index:
         after: tuple[float, int],
         k: int = 10,
         where: str | None = None,
-        mode: str = "oracle",
+        mode: str = "bmw",
     ) -> DataFrame:
         """ES ``search_after`` deep pagination: the next ``k`` hits
         strictly after the cursor ``(score, doc_id)`` in the total order
-        (score desc, doc_id asc). Runs on the declarative score-all path —
-        the honest cost model for deep pagination (ES pays the same
-        deepening cost; its own docs route deep pages through
-        search_after for exactly this reason), while page one stays on the
-        pruned WAND path.
+        (score desc, doc_id asc).
 
-        ``mode='bmw'`` instead reuses the block-max WAND kernel with a
+        ``mode='bmw'`` (the default) reuses the block-max WAND kernel of
+        :meth:`search` — the scorer the cursor came from — with a
         doubling top-K: run WAND top-kk, keep the rows strictly after the
         cursor; if fewer than ``k`` survive, quadruple kk and retry. The
         result is provably the true next page — every doc outside the
         WAND top-kk ranks below ALL kk returned rows, so it cannot
         displace any kept hit. Shallow-to-moderate pages stay on the
-        pruned postings scan (cost ~pages·|q|·n_shards rows) and only
+        pruned postings scan (cost ~pages·|q|·n_shards rows, on the
+        driver when :meth:`search` places the query there) and only
         pathologically deep cursors degrade toward the score-all cost ES
-        itself pays."""
+        itself pays.
+
+        ``mode='oracle'`` runs the declarative score-all path instead —
+        every page re-scores the full match set as Spark jobs (ES pays
+        the same deepening cost; its own docs route deep pages through
+        search_after for exactly this reason)."""
         s0, d0 = float(after[0]), int(after[1])
         if mode == "bmw":
             n = int(self.meta["n_docs"]) or 1
@@ -4610,12 +4555,7 @@ class Index:
         """ES ``_mget``: fetch full documents by id, input order ignored,
         missing ids silently absent (ES marks them found=false; a left
         join would say the same). Tombstoned docs are not returned."""
-        ids_df = self.spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
-        docs = self._docs_df().join(F.broadcast(ids_df), "doc_id", "left_semi")
-        deletes = self._deletes_df()
-        if deletes is not None:
-            docs = docs.join(deletes, "doc_id", "left_anti")
-        return docs.orderBy("doc_id")
+        return self._live(F.col("doc_id").isin([int(d) for d in doc_ids])).orderBy("doc_id")
 
     def percolate_existing(
         self,
@@ -4705,9 +4645,8 @@ class Index:
         the unfiltered page."""
         scored = self.search_oracle(query_text, None, where=where)
         total = scored.agg(F.count("*").cast("long").alias("total_prefilter"))
-        allowed = self._docs_df().filter(post_filter).select("doc_id")
         hits = (
-            scored.join(allowed, "doc_id", "left_semi")
+            self._live(post_filter, frame=scored)
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
@@ -4756,15 +4695,8 @@ class Index:
         per_clause = matched.groupBy("doc_id", "qname").agg(
             F.sum("contrib").alias("cscore")
         )
-        if where is not None:
-            per_clause = per_clause.join(
-                self._docs_df().filter(where).select("doc_id"), "doc_id", "left_semi"
-            )
-        deletes = self._deletes_df()
-        if deletes is not None:
-            per_clause = per_clause.join(deletes, "doc_id", "left_anti")
         return (
-            per_clause.groupBy("doc_id")
+            self._live(where, frame=per_clause).groupBy("doc_id")
             .agg(
                 F.sum("cscore").alias("score"),
                 F.array_join(F.sort_array(F.collect_set("qname")), ",").alias(
@@ -4945,12 +4877,8 @@ class Index:
                 f"doc_id long, {group_col} string, score double"
             )
         groups = scoped.select(group_col).distinct()
-        docs = self._docs_df()
-        deletes = self._deletes_df()
-        if deletes is not None:
-            docs = docs.join(deletes, "doc_id", "left_anti")
         return (
-            docs.join(groups, group_col, "left_semi")
+            self._live().join(groups, group_col, "left_semi")
             .select("doc_id", group_col, F.lit(1.0).alias("score"))
             .orderBy(F.asc("doc_id"))
             .limit(k)
@@ -5057,18 +4985,12 @@ class Index:
             "min": f"array_min({scores})",
             "none": "CAST(0 AS DOUBLE)",
         }[score_mode]
-        docs = self._docs_df()
-        if where is not None:
-            docs = docs.filter(where)
         nested = (
-            docs.filter(F.expr(f"size({matched}) >= 1"))
+            self._live(where).filter(F.expr(f"size({matched}) >= 1"))
             .select("doc_id", F.expr(nexpr).alias("nscore"))
         )
         if not self._analyze(query_text or ""):
             # nested-only query: the clause score IS the score
-            deletes = self._deletes_df()
-            if deletes is not None:
-                nested = nested.join(deletes, "doc_id", "left_anti")
             return (
                 nested.select("doc_id", F.col("nscore").alias("score"))
                 .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -6187,28 +6109,9 @@ class Index:
         out_schema = "term string, fg_n long, bg_n long, score_r double"
         if not terms:
             return self._frame(out_schema)
-        live = self._docs_df().select("doc_id")
-        deletes = self._deletes_df()
-        if deletes is not None:
-            live = live.join(deletes, "doc_id", "left_anti")
-        fg = live.join(self._match_set(terms, min_should_match), "doc_id", "left_semi")
-        if where is not None:
-            fg = fg.join(
-                self._docs_df().filter(where).select("doc_id"), "doc_id", "left_semi"
-            )
-        bg = live
-        if background_where is not None:
-            bg = bg.join(
-                self._docs_df().filter(background_where).select("doc_id"),
-                "doc_id",
-                "left_semi",
-            )
-        toks = (
-            self._tokens_df()
-            .join(live, "doc_id", "left_semi")
-            .select("doc_id", "term")
-            .distinct()
-        )
+        fg = self._live(where, allowed=self._match_set(terms, min_should_match)).select("doc_id")
+        bg = self._live(background_where).select("doc_id")
+        toks = self._live(frame=self._tokens_df()).distinct()
         fg_counts = (
             toks.join(fg, "doc_id", "left_semi")
             .groupBy("term")
@@ -6272,16 +6175,12 @@ class Index:
         out_schema = "term string, fg_n long, bg_n long, score_r double"
         if not terms:
             return self._frame(out_schema)
-        live = self._docs_df().select("doc_id", F.col(field).cast("string").alias("v"))
-        deletes = self._deletes_df()
-        if deletes is not None:
-            live = live.join(deletes, "doc_id", "left_anti")
-        live = live.filter(F.col("v").isNotNull())
-        fg = live.join(self._match_set(terms, min_should_match), "doc_id", "left_semi")
-        if where is not None:
-            fg = fg.join(
-                self._docs_df().filter(where).select("doc_id"), "doc_id", "left_semi"
-            )
+        def values(docs: DataFrame) -> DataFrame:
+            v = F.col(field).cast("string")
+            return docs.filter(v.isNotNull()).select("doc_id", v.alias("v"))
+
+        live = values(self._live())
+        fg = values(self._live(where, allowed=self._match_set(terms, min_should_match)))
         fg_counts = fg.groupBy("v").agg(F.count("*").cast("long").alias("fg_n"))
         bg_counts = live.groupBy("v").agg(F.count("*").cast("long").alias("bg_n"))
         sizes = fg.agg(F.count("*").cast("double").alias("fg_size")).crossJoin(
@@ -6341,20 +6240,13 @@ class Index:
             idfw=idfw or None,
             analyzer=self.meta.get("analyzer", "standard"),
         )
-        if where is not None:
-            scores = scores.join(
-                self._docs_df().filter(where).select("doc_id"), "doc_id", "left_semi"
-            )
+        matched = None
         if min_should_match > 1:
             terms = sorted(set(self._analyze(query_text)))
             if min_should_match > len(terms):
                 return self._frame(TOPK_SCHEMA)
-            scores = scores.join(
-                self._match_set(terms, min_should_match), "doc_id", "left_semi"
-            )
-        deletes = self._deletes_df()
-        if deletes is not None:
-            scores = scores.join(deletes, "doc_id", "left_anti")
+            matched = self._match_set(terms, min_should_match)
+        scores = self._live(where, frame=scores, allowed=matched)
         return scores if k is None else bm25.topk(scores, k)
 
     def search_similarity(
@@ -6395,7 +6287,9 @@ class Index:
         BEFORE ordering (the geo-sort rule); ties break doc_id asc.
         avgdl is recomputed as total_tokens/n_docs — ONE IEEE division
         of two exact integers-as-doubles, bit-identical cross-engine
-        (never the meta avgdl·n product, which is ulp-off).
+        (never the meta avgdl·n product, which is ulp-off). Deleted docs
+        never rank: the score set passes :meth:`_live` before the top-k,
+        while the corpus statistics stay frozen like every surface's.
 
         Plan shape: identical to the BM25 oracle — term-pruned tokens
         scan, broadcast per-term stats (plus one term-keyed cf
@@ -6504,7 +6398,7 @@ class Index:
                     / (F.col("dl") * F.col("cf"))
                 )
                 scores = j.groupBy("doc_id").agg(F.sum(part).alias("score"))
-        return scores.orderBy(
+        return self._live(frame=scores).orderBy(
             F.desc(F.round(F.col("score"), 4)), F.asc("doc_id")
         ).limit(k)
 
@@ -6540,10 +6434,7 @@ class Index:
             b=float(b),
             analyzer=self.meta.get("analyzer", "standard"),
         )
-        deletes = self._deletes_df()
-        if deletes is not None:
-            scores = scores.join(deletes, "doc_id", "left_anti")
-        return bm25.topk(scores, k)
+        return bm25.topk(self._live(frame=scores), k)
 
     def count(
         self,
@@ -6567,13 +6458,7 @@ class Index:
         min_should_match = self._msm(min_should_match, query_text)
         scoped = self._agg_scope(query_text, where, min_should_match)
         if scoped is None:
-            docs = self._docs_df()
-            if where is not None:
-                docs = docs.filter(where)
-            deletes = self._deletes_df()
-            if deletes is not None:
-                docs = docs.join(deletes, "doc_id", "left_anti")
-            scoped = docs
+            scoped = self._live(where)
         return scoped.agg(F.count("*").cast("long").alias("total"))
 
     def count_local(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from kafka_elasticsearch_standalone_consumer_spark import B, K1
 from kafka_elasticsearch_standalone_consumer_spark.analysis import doc_term_freqs, tokenize_col
 from kafka_elasticsearch_standalone_consumer_spark.query import bm25
+from kafka_elasticsearch_standalone_consumer_spark.tables import local_frame
 
 
 def multi_field_bm25(
@@ -61,7 +62,7 @@ def multi_field_bm25(
         raise ValueError(f"unknown multi_match mode: {mode}")
     weights = bm25.query_term_weights(query_text)
     if not weights or not fields:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, "doc_id long, score double")
     qdf = F.broadcast(
         spark.createDataFrame(
             [(t, float(w)) for t, w in sorted(weights.items())], "term string, w double"
@@ -218,7 +219,7 @@ def fuzzy_like_this_field(
             "the whole field dictionary (same scale guard as search_fuzzy)"
         )
     spark = docs.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = local_frame(spark, "doc_id long, score double")
     src_terms = sorted(
         {t for t in tokenize_text(like_text) if len(t) >= prefix_length}
     )
@@ -331,7 +332,7 @@ def more_like_this_field(
     from kafka_elasticsearch_standalone_consumer_spark.analysis import tokenize_text
 
     spark = docs.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = local_frame(spark, "doc_id long, score double")
     row = docs.filter(F.col(id_col) == int(doc_id)).select(field).collect()
     if not row or row[0][0] is None:
         return empty

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_elasticsearch_standalone_consumer_spark.query import bm25
+from kafka_elasticsearch_standalone_consumer_spark.tables import local_frame
 
 MULTI_SCHEMA = "idx long, doc_id long, score double"
 
@@ -62,13 +63,7 @@ class MultiIndex:
                 b=index.meta["b"],
                 idfw=idfw,
             )
-            if where is not None:
-                scored = scored.join(
-                    index._docs_df().filter(where).select("doc_id"), "doc_id", "left_semi"
-                )
-            deletes = index._deletes_df()
-            if deletes is not None:
-                scored = scored.join(deletes, "doc_id", "left_anti")
+            scored = index._live(where, frame=scored)
         return scored.select(
             F.lit(i).cast("long").alias("idx"), "doc_id", "score"
         )
@@ -126,7 +121,7 @@ class MultiIndex:
         elif mode == "dfs_query_then_fetch":
             idfw, avgdl = self._combined_stats(query_text)
             if idfw is not None and not idfw:
-                return spark.createDataFrame([], MULTI_SCHEMA)
+                return local_frame(spark, MULTI_SCHEMA)
         else:
             raise ValueError(f"unknown multi-index search mode: {mode}")
         parts = [
@@ -175,23 +170,14 @@ class MultiIndex:
             elif no_match_query in (None, "none"):
                 continue
             elif no_match_query == "all":
-                scored = index._docs_df().select("doc_id", F.lit(1.0).alias("score"))
-                if where is not None:
-                    scored = scored.join(
-                        index._docs_df().filter(where).select("doc_id"),
-                        "doc_id",
-                        "left_semi",
-                    )
-                deletes = index._deletes_df()
-                if deletes is not None:
-                    scored = scored.join(deletes, "doc_id", "left_anti")
+                scored = index._live(where).select("doc_id", F.lit(1.0).alias("score"))
             else:
                 scored = index.search_oracle(no_match_query, None, where=where)
             parts.append(
                 scored.select(F.lit(i).cast("long").alias("idx"), "doc_id", "score")
             )
         if not parts:
-            return spark.createDataFrame([], MULTI_SCHEMA)
+            return local_frame(spark, MULTI_SCHEMA)
         allp = parts[0]
         for p in parts[1:]:
             allp = allp.unionByName(p)

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_elasticsearch_standalone_consumer_spark.analysis import tokenize_text
+from kafka_elasticsearch_standalone_consumer_spark.tables import local_frame
 
 QUERIES_SCHEMA = "query_id long, terms array<string>, required long"
 
@@ -141,7 +142,7 @@ def percolate(
     queries = _filter_queries(queries, queries_meta, query_where)
     compiled = compile_queries(queries, operator, minimum_should_match, analyzer)
     if not compiled:
-        return spark.createDataFrame([], f"{id_col} long, query_id long, n_matched long")
+        return local_frame(spark, f"{id_col} long, query_id long, n_matched long")
     qdf = spark.createDataFrame(compiled, QUERIES_SCHEMA)
     qterms = F.broadcast(
         qdf.select("query_id", "required", F.explode("terms").alias("term"))

@@ -289,11 +289,6 @@ def parse_simple_query_string(
     return out
 
 
-def _term_regex(term: str) -> str:
-    """Token-boundary regex matching the analyzer's [a-z0-9]+ alphabet."""
-    return f"(^|[^a-z0-9]){re.escape(term)}([^a-z0-9]|$)"
-
-
 def _sql_literal(v: str) -> str:
     """Numeric values pass through raw (so integer/double columns compare
     numerically); anything else is a quote-escaped string literal."""
@@ -317,23 +312,6 @@ def compile_field_filter(parsed: ParsedQuery) -> str | None:
             clauses.append(f"{f} <{'=' if hi_inc else ''} {_sql_literal(hi)}")
     clauses += [f"{f} IS NOT NULL" for f in parsed.exists]
     clauses += [f"{f} IS NULL" for f in parsed.missing]
-    return " AND ".join(clauses) if clauses else None
-
-
-def compile_filter(parsed: ParsedQuery, text_col: str = "text") -> str | None:
-    """LEGACY single-predicate compilation (field clauses + token-boundary
-    RLIKE for must/must_not). Kept for callers that want one SQL string;
-    the executor no longer uses the RLIKE forms — must/must_not now ride
-    analyzer-consistent match sets (see :func:`run_parsed`): an RLIKE on
-    the raw text scans every document's text AND disagrees with stemming
-    analyzers (the stem 'tabl' never appears literally in "tables")."""
-    clauses: list[str] = []
-    if (ff := compile_field_filter(parsed)) is not None:
-        clauses.append(ff)
-    for t in parsed.must:
-        clauses.append(f"lower({text_col}) RLIKE '{_term_regex(t)}'")
-    for t in parsed.must_not:
-        clauses.append(f"NOT lower({text_col}) RLIKE '{_term_regex(t)}'")
     return " AND ".join(clauses) if clauses else None
 
 
@@ -427,7 +405,7 @@ def run_parsed(index, parsed: ParsedQuery, k: int = 10):
         )
     # mixed clauses — ES bool should composition: sum each clause's full
     # score set per doc over the UNION of matching docs, then top-k; one
-    # _mask_plan (where, must, must_not, tombstones) applies to the sums
+    # Index._live (where, must, must_not, tombstones) applies to the sums
     parts = []
     if terms:
         parts.append(index.search_oracle(" ".join(terms), k=None, where=where))
@@ -443,12 +421,5 @@ def run_parsed(index, parsed: ParsedQuery, k: int = 10):
     for p in parts[1:]:
         allp = allp.unionByName(p)
     scores = allp.groupBy("doc_id").agg(F.sum("score").alias("score"))
-    mask, kind = index._mask_plan(
-        where, int(index.meta["docs_per_shard"]), allowed, blocked
-    )
-    if kind is not None:
-        scores = scores.join(
-            mask.select("doc_id"), "doc_id",
-            "left_semi" if kind == "allowed" else "left_anti",
-        )
+    scores = index._live(where, frame=scores, allowed=allowed, blocked=blocked)
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

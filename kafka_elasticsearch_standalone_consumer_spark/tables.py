@@ -182,3 +182,22 @@ class Warehouse:
                 if f.endswith(".parquet") or (f.startswith("part-") and not f.endswith(".crc")):
                     out.extend(pq.read_table(os.path.join(dirpath, f)).to_pylist())
         return out
+
+
+def local_frame(spark: SparkSession, schema: str, columns=None) -> DataFrame:
+    """Driver-held rows as a DataFrame over ONE Arrow LocalRelation:
+    collecting it launches no Spark job, where a createDataFrame over
+    Python rows launches one even when empty (~0.4 s wall, ~1.3 CPU s on
+    local[4]). ``columns`` maps each ``schema`` column to an array-like,
+    or is a list of row tuples in ``schema`` column order; None or no
+    rows gives the empty result."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    if isinstance(columns, list):
+        columns = dict(zip(struct.names, map(list, zip(*columns)))) or None
+    arrow = to_arrow_schema(struct)
+    tbl = arrow.empty_table() if columns is None else pa.table(columns, schema=arrow)
+    return spark.createDataFrame(tbl, struct)

@@ -77,26 +77,97 @@ def test_dis_max_one_clause_equals_search_under_tombstones(spark, deleted_wh, pl
             assert got == _rows(idx.search(Q, 50, where=where)), (placement, where)
 
 
-def test_phrase_excludes_tombstones(spark, deleted_wh):
-    """A phrase that occurs in deleted tool turns AND in live turns: the
-    position kernel drops the tombstoned matches (df stays frozen), equal
-    to the oracle and to the serving twin."""
+def _mixed_phrase(rows) -> str:
+    """A bigram that occurs in tool turns (all deleted) AND in live turns."""
     from kafka_elasticsearch_standalone_consumer_spark.analysis import tokenize_text
 
-    path, _before, _n = deleted_wh
-    idx = Index(spark, path)
-    rows = idx._docs_df().select("doc_id", "text", "role").collect()
-    tool_ids = {r["doc_id"] for r in rows if r["role"] == "tool"}
     roles_by_bigram: dict[str, set] = {}
     for r in sorted(rows, key=lambda r: r["doc_id"]):
         toks = tokenize_text(r["text"])
         for a, b in zip(toks, toks[1:]):
             roles_by_bigram.setdefault(f"{a} {b}", set()).add(r["role"] == "tool")
-    phrase = next(p for p, kinds in roles_by_bigram.items() if kinds == {True, False})
+    return next(p for p, kinds in roles_by_bigram.items() if kinds == {True, False})
+
+
+def test_phrase_excludes_tombstones(spark, deleted_wh):
+    """A phrase that occurs in deleted tool turns AND in live turns: the
+    position kernel drops the tombstoned matches (df stays frozen), equal
+    to the oracle and to the serving twin."""
+    path, _before, _n = deleted_wh
+    idx = Index(spark, path)
+    rows = idx._docs_df().select("doc_id", "text", "role").collect()
+    tool_ids = {r["doc_id"] for r in rows if r["role"] == "tool"}
+    phrase = _mixed_phrase(rows)
     got = _rows(idx.search_phrase(phrase, K))
     assert got and not {d for d, _ in got} & tool_ids
     assert got == _rows(idx.search_phrase_oracle(phrase, K))
     assert got == [(d, round(s, 9)) for d, s in idx.search_phrase_local(phrase, K)]
+
+
+def test_every_spark_surface_drops_tombstones_and_honours_where(spark, deleted_wh):
+    """Sweep of the doc-returning Spark surfaces: none returns a tombstoned
+    doc, and each ``where``-taking one, called again with ``where``,
+    returns only docs that pass it. The surfaces with no ``where`` run
+    unfiltered; search_bool takes its filter as a (column, value) clause.
+    search_has_parent's ``where`` scopes the matching parents, not the
+    returned turns, so only its tombstones are checked; search_nested
+    needs a nested column this corpus lacks and is left to test_nested."""
+    from kafka_elasticsearch_standalone_consumer_spark.query.multisearch import MultiIndex
+
+    path, _before, _n = deleted_wh
+    idx = Index(spark, path)
+    rows = idx._docs_df().select("doc_id", "text", "role").collect()
+    role = {r["doc_id"]: r["role"] for r in rows}
+    tool_ids = {d for d, ro in role.items() if ro == "tool"}
+    every = sorted(role)
+    phrase = _mixed_phrase(rows)
+    n = len(every)
+    alias = MultiIndex([idx, idx])
+    where_surfaces = {
+        "search": lambda w: idx.search(Q, n, where=w),
+        "search_oracle": lambda w: idx.search_oracle(Q, n, where=w),
+        "search_phrase": lambda w: idx.search_phrase(phrase, n, where=w),
+        "search_phrase_oracle": lambda w: idx.search_phrase_oracle(phrase, n, where=w),
+        "search_named": lambda w: idx.search_named({"a": "w00000", "b": "w00003"}, n, where=w),
+        "search_post_filter": lambda w: idx.search_post_filter(Q, "turn_idx >= 0", n, where=w),
+        "search_prefix": lambda w: idx.search_prefix("w0000", n, where=w),
+        "search_terms": lambda w: idx.search_terms(["w00000", "w00003"], n, where=w),
+        "constant_score": lambda w: idx.constant_score(where=w, k=n),
+        "constant_score_query": lambda w: idx.constant_score(Q, where=w, k=n),
+        "msearch_qtf": lambda w: alias.search(Q, n, where=w),
+        "msearch_dfs": lambda w: alias.search(Q, n, mode="dfs_query_then_fetch", where=w),
+        "indices_query": lambda w: alias.indices_query([0], Q, "all", 2 * n, where=w),
+        "search_bool": lambda w: idx.search_bool(
+            should=[Q], phrases=[(phrase, 0)],
+            filters=None if w is None else [("role", "assistant")], k=n,
+        ),
+    }
+    plain_surfaces = {
+        "search_has_parent": lambda: idx.search_has_parent(Q, n, where="role <> 'user'"),
+        "search_params": lambda: idx.search_params(Q, n, k1=1.6, b=0.25),
+        "search_ids": lambda: idx.search_ids(every, n),
+        "get_docs": lambda: idx.get_docs(every),
+        "match_all": lambda: idx.match_all(n),
+        "search_exists": lambda: idx.search_exists("tool", n),
+        "search_missing": lambda: idx.search_missing("tool", n),
+        "percolate": lambda: idx.percolate([(1, "w00000"), (2, "w00003")]),
+    } | {
+        f"search_similarity[{sim}]": (lambda sim=sim: idx.search_similarity(Q, n, similarity=sim))
+        for sim in ("classic", "lm_dirichlet", "lm_jm", "dfr_inl2", "ib_ll")
+    }
+    calls = [(name, None, f) for name, f in plain_surfaces.items()]
+    for name, f in where_surfaces.items():
+        calls += [(name, None, lambda f=f: f(None)), (name, "role <> 'user'", lambda f=f: f("role <> 'user'"))]
+    bad, returned = [], 0
+    for name, where, call in calls:
+        got = [r["doc_id"] for r in call().collect()]
+        returned += len(got)
+        dead = sorted(set(got) & tool_ids)
+        if dead:
+            bad.append((name, where, f"{len(dead)} tombstoned"))
+        if where is not None and any(role[d] == "user" for d in got):
+            bad.append((name, where, "fails the filter"))
+    assert returned and not bad, bad
 
 
 def test_compact_purges_tombstones(spark, deleted_wh, tmp_path):

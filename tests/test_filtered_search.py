@@ -735,7 +735,7 @@ def test_search_after_bmw_matches_oracle_path(spark, built_index):
     cursor = (p1[-1]["score"], p1[-1]["doc_id"])
     # pages 2 and 3: identical rows and scores on both paths
     for _ in range(2):
-        a_rows = idx.search_after(q, cursor, k).collect()
+        a_rows = idx.search_after(q, cursor, k, mode="oracle").collect()
         b_rows = idx.search_after(q, cursor, k, mode="bmw").collect()
         assert [(r["doc_id"], round(r["score"], 9)) for r in a_rows] == [
             (r["doc_id"], round(r["score"], 9)) for r in b_rows
@@ -745,12 +745,15 @@ def test_search_after_bmw_matches_oracle_path(spark, built_index):
     # deep cursor near the end: the final PARTIAL page must match too
     full = idx.search(q, 10_000).collect()
     deep = (full[-3]["score"], full[-3]["doc_id"])
-    a = [(r["doc_id"], round(r["score"], 9)) for r in idx.search_after(q, deep, k).collect()]
+    a = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in idx.search_after(q, deep, k, mode="oracle").collect()
+    ]
     b = [(r["doc_id"], round(r["score"], 9)) for r in idx.search_after(q, deep, k, mode="bmw").collect()]
     assert a == b and len(a) == 2
     # exhausted cursor: both paths return empty
     end = (full[-1]["score"], full[-1]["doc_id"])
-    assert idx.search_after(q, end, k).count() == 0
+    assert idx.search_after(q, end, k, mode="oracle").count() == 0
     assert idx.search_after(q, end, k, mode="bmw").count() == 0
 
 

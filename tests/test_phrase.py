@@ -253,3 +253,17 @@ def test_positional_queries_leave_nothing_persisted(spark, pos_index, corpus_tex
     assert pos_index.search_phrase_prefix(f"{a} {b[:3]}", K).collect()
     assert pos_index.search_span_near([a, b], slop=2, in_order=True, k=K).collect()
     assert jsc.getPersistentRDDs().size() == before
+
+
+def test_positional_topk_collects_its_partials_once(spark, pos_index, corpus_texts):
+    """The executor finish collects the per-shard partials in one pass and
+    scores them on the driver, so a warm search_phrase runs fewer Spark
+    jobs than the five of a persisted partials frame, a Spark-side df job
+    and a Spark-side top-k."""
+    tracker = spark.sparkContext.statusTracker()
+    phrase = _pick_phrases(corpus_texts, n=1)[0]
+    for where in (None, "role = 'user'"):
+        pos_index.search_phrase(phrase, K, where=where).collect()  # warm the reads
+        before = len(tracker.getJobIdsForGroup(None))
+        pos_index.search_phrase(phrase, K, where=where).collect()
+        assert len(tracker.getJobIdsForGroup(None)) - before < 5, where

@@ -97,8 +97,22 @@ def test_placements_bit_identical(spark, deleted_wh, placements):
 
 
 def test_empty_results_are_zero_job_frames_with_unchanged_schemas(spark, built_index):
+    from kafka_elasticsearch_standalone_consumer_spark.query import multifield
+    from kafka_elasticsearch_standalone_consumer_spark.query.multisearch import (
+        MULTI_SCHEMA,
+        MultiIndex,
+    )
+
     idx, _ = built_index
+    alias, docs = MultiIndex([idx, idx]), idx._docs_df()
     cases = [
+        (alias.search("zzabsent", 10, mode="dfs_query_then_fetch"), MULTI_SCHEMA),
+        (alias.indices_query([], Q, None), MULTI_SCHEMA),
+        (idx.percolate([]), "doc_id long, query_id long, n_matched long"),
+        (idx.search_oracle("", 10), TOPK_SCHEMA),  # bm25.bm25_scores_oracle
+        (multifield.multi_field_bm25(docs, "", {"text": 1.0}), TOPK_SCHEMA),
+        (multifield.fuzzy_like_this_field(docs, "", "text"), TOPK_SCHEMA),
+        (multifield.more_like_this_field(docs, -1, "text"), TOPK_SCHEMA),
         (idx.search("zzabsent", 10), TOPK_SCHEMA),
         (idx.search("", 10, mode="intersect"), TOPK_SCHEMA),
         (idx.search_many(["zzabsent"], 10), MANY_SCHEMA),
