@@ -68,6 +68,21 @@ MANY_SCHEMA = "qid string, " + TOPK_SCHEMA + ", rank int"
 # So the wall crossover is ~2M postings; the constant sits below it.
 DRIVER_MAX_POSTINGS = 1_500_000
 
+# Doc-count guard of a FILTERED search() on the driver: the compiled SQL
+# ``where`` materializes its allowed doc set there (a pyarrow read of the
+# doc store's doc_id + predicate columns), so a filtered query also needs
+# meta.n_docs at or below this. Measured forced driver vs forced executor,
+# local[4] on a 4-vCPU VM, docs_per_shard 2^14, role = 'user' on 8
+# reference queries, median wall / process-tree CPU per call:
+#   ~22k turns: 0.07 s / 0.13 CPU s vs 0.63 s / 1.38 CPU s (mask 5.5 ms);
+#   ~200k turns: 0.12 s / 0.20 CPU s vs 0.80 s / 1.71 CPU s (mask 12 ms).
+# No crossover up to ~200k: the executor's cost grows faster with the
+# corpus than the driver's. The mask read alone (doc_id + a string
+# predicate over 4 files) takes 62 ms at 2M docs and holds 4 MB of
+# allowed ids, still ~10x under the executor's fixed cost; the constant
+# stops at that measured point rather than at an extrapolated crossover.
+DRIVER_MAX_DOCS = 2_000_000
+
 # The ops of the (col, op, value) filter surface: op → (pyarrow.compute
 # function, SQL spelling). The pc function takes a dataset field expression
 # (pushed into the doc-store scan) or an Arrow array alike; the SQL
@@ -84,6 +99,21 @@ _FILTER_OPS = {
     "notnull": ("is_valid", "IS NOT NULL"),
 }
 _NULL_OPS = ("isnull", "notnull")  # the ops that take no literal
+
+# The leaves of Spark's own pushdown translation (sources.Filter class →
+# _FILTER_OPS op) that the driver compile of a SQL where evaluates; Not
+# (a <> b is NOT (a = b) after optimization), And, Or and StringStartsWith
+# are handled around them.
+_SOURCE_OPS = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+    "In": "in",
+    "IsNull": "isnull",
+    "IsNotNull": "notnull",
+}
 
 
 def _filter_op(op: str, val, surface: str = "") -> tuple[str, str]:
@@ -109,6 +139,96 @@ def _filter_predicate(x, op: str, val, surface: str = ""):
     if op in _NULL_OPS:
         return fn(x)
     return fn(x, pa.array(list(val)) if op == "in" else val)
+
+
+def _filters_expr(filters: list[tuple]):
+    """The tuple front end's driver compile: a conjunction of ``(col, op,
+    value)`` filters as one pyarrow dataset expression, each through
+    :data:`_FILTER_OPS` (no filters: every row)."""
+    import operator
+
+    import pyarrow.dataset as pads
+
+    preds = [_filter_predicate(pads.field(col), op, val, "local ") for col, op, val in filters]
+    return functools.reduce(operator.and_, preds) if preds else pads.scalar(True)
+
+
+def _arrow_literal(v, typ):
+    """A ``sources.Filter`` literal as a pyarrow scalar of the column's
+    Arrow type ``typ``, or None where it has no exact twin: a SQL NULL, a
+    Java type other than a timestamp, a float column (Arrow's IEEE order
+    and Parquet statistics that skip NaN disagree with Spark's NaN
+    rule), or a cast that would change the value. A ``TIMESTAMP``
+    literal is a ``java.sql.Timestamp``, an instant; the doc store's
+    INT96 timestamps read as naive UTC nanoseconds in pyarrow."""
+    import pyarrow as pa
+    from py4j.java_gateway import JavaObject
+
+    if isinstance(v, JavaObject):
+        if v.getClass().getName() != "java.sql.Timestamp" or not pa.types.is_timestamp(typ):
+            return None
+        micros = v.getTime() // 1000 * 1_000_000 + v.getNanos() // 1000
+        lit = pa.scalar(micros, pa.timestamp("us", tz="UTC"))
+        if typ.tz is None:
+            lit = lit.cast(pa.timestamp("us"))
+    elif v is None or not isinstance(v, (bool, int, str)) or pa.types.is_floating(typ):
+        return None
+    else:
+        lit = pa.scalar(v)
+        kinds = (
+            pa.types.is_boolean, pa.types.is_integer,
+            lambda t: pa.types.is_string(t) or pa.types.is_large_string(t),
+        )
+        if not any(kind(lit.type) and kind(typ) for kind in kinds):
+            return None
+    try:
+        return lit.cast(typ)
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError):
+        return None
+
+
+def _source_filter_expr(f, schema):
+    """A Spark ``sources.Filter`` tree (``f``, a py4j object) as a
+    pyarrow dataset expression over the doc store's Arrow ``schema``,
+    each comparison through :data:`_FILTER_OPS`; None where any node has
+    no exact Arrow twin. Arrow's Kleene ``and``/``or``/``not`` and a
+    filter that drops NULL give SQL's three-valued WHERE."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    kind = f.getClass().getSimpleName()
+    if kind in ("And", "Or"):
+        left, right = _source_filter_expr(f.left(), schema), _source_filter_expr(f.right(), schema)
+        if left is None or right is None:
+            return None
+        return left & right if kind == "And" else left | right
+    if kind == "Not":
+        inner = _source_filter_expr(f.child(), schema)
+        return None if inner is None else ~inner
+    if kind not in _SOURCE_OPS and kind != "StringStartsWith":
+        return None
+    name = f.attribute()
+    if "`" in name:  # a quoted name: a dot inside a column name
+        return None
+    path, typ = tuple(name.split(".")), pa.struct(list(schema))
+    for part in path:
+        if not pa.types.is_struct(typ) or typ.get_field_index(part) < 0:
+            return None
+        typ = typ.field(part).type
+    x = pads.field(path)
+    if kind == "StringStartsWith":
+        return pc.starts_with(x, pattern=f.value()) if pa.types.is_string(typ) else None
+    op = _SOURCE_OPS[kind]
+    if op in _NULL_OPS:
+        return _filter_predicate(x, op, None)
+    lits = [_arrow_literal(v, typ) for v in (f.values() if op == "in" else [f.value()])]
+    if any(lit is None for lit in lits):
+        return None
+    if op != "in":
+        return _filter_predicate(x, op, lits[0])
+    # Arrow's is_in gives false, not NULL, on a NULL input — so would its Not
+    return pc.if_else(pc.is_null(x), pa.scalar(None, pa.bool_()), _filter_predicate(x, op, lits))
 
 
 def _boost_combine(score: "F.Column", fv: "F.Column", boost_mode: str) -> "F.Column":
@@ -235,6 +355,7 @@ class Index:
             ]
             self._seg_baked = [float(s["baked_avgdl"]) for s in segs]
         self._pads_cache: dict = {}
+        self._where_cache: dict = {}
 
     # postings / _docs / _tokens_all / _doc_lengths / term_stats are the
     # executor-side views of the open-time segment snapshot (_seg_whs).
@@ -268,6 +389,14 @@ class Index:
         one frame every ``_docs_df()`` caller shares."""
         parts = [w.read(self.spark, "docs") for w in self._seg_whs]
         return functools.reduce(DataFrame.unionByName, parts)
+
+    @functools.cached_property
+    def _docs_declared(self) -> DataFrame:
+        """The base segment's doc store read with its footer schema: the
+        frame :meth:`_where_expr` plans a SQL ``where`` over. Never
+        executed, and built without the schema-inference job of
+        :attr:`_docs`."""
+        return self.wh.read_declared(self.spark, "docs")
 
     @functools.cached_property
     def _tokens_all(self) -> DataFrame:
@@ -719,13 +848,16 @@ class Index:
         """Top-k BM25 (OR semantics). mode: bmw | exact | intersect.
 
         Placement is decided after planning, from the term dictionary the
-        plan already read. A query with no DataFrame-valued mask — no
-        ``where``, ``min_should_match`` ≤ 1, none of the ``_`` hooks —
-        whose planned posting volume (Σ df of its planned terms) is at
-        most ``DRIVER_MAX_POSTINGS`` runs on the driver: the serving
-        kernel of :meth:`search_local` (tombstones honoured), returned as an
-        Arrow LocalRelation, so collecting it launches no Spark job.
-        Everything else (SQL filters, match sets, large volumes) runs the
+        plan already read. A query runs on the driver when its planned
+        posting volume (Σ df of its planned terms) is at most
+        ``DRIVER_MAX_POSTINGS``, ``min_should_match`` ≤ 1, none of the
+        ``_`` hooks is passed, and ``where`` is None or compiles to a
+        driver mask (:meth:`_where_expr`) on an index of at most
+        ``DRIVER_MAX_DOCS`` docs: the serving kernel of
+        :meth:`search_local` (tombstones honoured), returned as an Arrow
+        LocalRelation, so collecting it launches no Spark job. Everything
+        else (a ``where`` Spark's pushdown translation cannot express
+        whole, match sets, the bool hooks, large volumes) runs the
         per-shard kernel on the executors. Both
         placements return bit-identical ``(doc_id, score)`` rows. Either
         way the query is a batch of one: :meth:`_local_topk` on the
@@ -751,10 +883,11 @@ class Index:
         ``where`` is an optional SQL predicate over the document columns
         (e.g. ``"role = 'user' AND ts >= '2026-01-02'"``) — the ES bool
         *filter* clause: it restricts the scored doc set but NOT the
-        corpus statistics (idf/avgdl stay global, matching ES). The fast
-        path ships each shard its allowed-doc set via a cogroup — the
-        filter scan is column-pruned to (doc_id) + predicate columns and
-        stays distributed.
+        corpus statistics (idf/avgdl stay global, matching ES). On the
+        driver its compile is pushed into a pyarrow read of the doc store
+        (doc_id + predicate columns); on the executors each shard gets
+        its allowed-doc set via a cogroup, from a distributed filter scan
+        column-pruned the same way.
 
         ``min_should_match=m`` (ES query-level minimum_should_match):
         only docs containing ≥ m DISTINCT query terms are returned, with
@@ -779,13 +912,16 @@ class Index:
         if (
             volume is not None
             and volume <= DRIVER_MAX_POSTINGS
-            and where is None
             and min_should_match <= 1
             and _allowed_docs is None
             and _blocked_docs is None
+            and (
+                where is None
+                or (self.meta["n_docs"] <= DRIVER_MAX_DOCS and self._where_expr(where) is not None)
+            )
         ):
             [(d, s)] = self._local_topk(
-                [(idfw, buckets)], k, mode, *self._local_mask()
+                [(idfw, buckets)], k, mode, *self._local_mask(where)
             )
             if min_score is not None:
                 keep = s >= float(min_score)
@@ -884,21 +1020,48 @@ class Index:
             return None
         return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
 
-    def _local_allowed(self, where: list[tuple]) -> "np.ndarray":
-        """Sorted doc_ids satisfying a conjunction of ``(col, op, value)``
-        filters — a driver-side pyarrow read of the doc store pruned to
-        the doc_id column, each filter pushed into the scan as its
-        :data:`_FILTER_OPS` expression (the row set equals
-        ``_docs_df().filter(_filters_to_sql(where))``). Called only by
-        :meth:`_local_mask`. Meant for SELECTIVE predicates (the allowed
-        set is materialized driver-side); broad analytical filters belong
-        on :meth:`search`'s SQL ``where=``, which stays distributed."""
+    def _where_expr(self, where: str):
+        """The driver compile of a SQL ``where``, cached per string: a
+        pyarrow dataset expression selecting the rows of
+        ``_docs_df().filter(where)``, or None — the query then stays on the
+        executors. The string is planned over :attr:`_docs_declared` (no
+        Spark job; an unknown column raises the AnalysisException the
+        Spark surfaces raise), and the optimized plan's Filter condition
+        goes through Spark's own pushdown translator,
+        ``DataSourceStrategy.translateFilter``, the one that picks a
+        Parquet scan's pushed filters; :func:`_source_filter_expr` maps
+        the result. Anything it cannot translate whole (``turn_idx % 2 =
+        0``, a function call, a float comparison) compiles to None."""
+        if where not in self._where_cache:
+            plan = self._docs_declared.filter(where)._jdf.queryExecution().optimizedPlan()
+            expr = None
+            if (
+                plan.getClass().getSimpleName() == "Filter"
+                and plan.child().getClass().getSimpleName() == "LogicalRelation"
+            ):
+                jvm = self.spark._jvm
+                strategy = getattr(
+                    jvm.org.apache.spark.sql.execution.datasources, "DataSourceStrategy$"
+                ).__getattr__("MODULE$")
+                pushed = strategy.translateFilter(plan.condition(), True)
+                if pushed.isDefined():
+                    import pyarrow.dataset as pads
+
+                    schema = pads.dataset(self.wh.path("docs"), format="parquet").schema
+                    expr = _source_filter_expr(pushed.get(), schema)
+            self._where_cache[where] = expr
+        return self._where_cache[where]
+
+    def _local_allowed(self, expr) -> "np.ndarray":
+        """Sorted doc_ids the dataset expression ``expr`` selects — a
+        driver-side pyarrow read of the doc store pruned to the doc_id
+        column, ``expr`` pushed into the scan. Called only by
+        :meth:`_local_mask`, which compiles either filter front end to
+        ``expr``. The allowed set is held on the driver, so
+        :meth:`search` places a filtered query here only up to
+        ``DRIVER_MAX_DOCS`` docs."""
         import pyarrow.dataset as pads
 
-        expr = None
-        for col, op, val in where:
-            e = _filter_predicate(pads.field(col), op, val, "local ")
-            expr = e if expr is None else expr & e
         parts = []
         for w in self._seg_whs:
             tbl = pads.dataset(w.path("docs"), format="parquet").to_table(
@@ -912,20 +1075,25 @@ class Index:
 
     def _local_mask(
         self,
-        where: list[tuple] | None = None,
+        where: "list[tuple] | str | None" = None,
         allowed: "np.ndarray | None" = None,
         blocked: "np.ndarray | None" = None,
     ) -> tuple["np.ndarray | None", "np.ndarray | None"]:
         """(allowed, blocked) sorted doc masks of the driver placement —
         the twin of :meth:`_live`, and the only mask builder of the
         serving path (apply it with ``kernels._apply_doc_masks`` or hand
-        it to a kernel). ``where`` (:meth:`_local_allowed`) and
-        ``allowed`` intersect; ``blocked`` unions with the delete
-        tombstones; an allowed set absorbs the blocked ones, so at most
-        one of the two comes back non-None. Corpus statistics never see
-        either mask."""
+        it to a kernel). ``where`` — ``(col, op, value)`` tuples
+        (:func:`_filters_expr`) or a SQL string that compiles
+        (:meth:`_where_expr`) — selects through :meth:`_local_allowed`
+        and intersects with ``allowed``; ``blocked`` unions with the
+        delete tombstones; an allowed set absorbs the blocked ones, so at
+        most one of the two comes back non-None. Corpus statistics never
+        see either mask."""
         if where is not None:
-            wa = self._local_allowed(where)
+            expr = self._where_expr(where) if isinstance(where, str) else _filters_expr(where)
+            if expr is None:
+                raise ValueError(f"where {where!r} has no driver compile; use a Spark surface")
+            wa = self._local_allowed(expr)
             allowed = wa if allowed is None else np.intersect1d(allowed, wa)
         tombs = self._local_blocked()
         if tombs is not None:
@@ -1058,10 +1226,8 @@ class Index:
         pushed predicate only), tombstones drop, first k by doc_id at
         constant score ``boost``. The ES surfaces map directly:
         ids → ``[("doc_id", "in", ids)]``, exists → ``[(f, "notnull",
-        None)]``, missing → ``[(f, "isnull", None)]``. Same caveat as
-        every local filter: meant for SELECTIVE predicates (the allowed
-        set materializes driver-side); broad scans belong on
-        :meth:`constant_score`."""
+        None)]``, missing → ``[(f, "isnull", None)]``. The allowed set
+        materializes driver-side, as under every driver mask."""
         allowed, _ = self._local_mask(where)
         return [(int(d), float(boost)) for d in allowed[:k]]
 
@@ -1317,8 +1483,10 @@ class Index:
         the doc store (see :meth:`_local_mask`); scores are identical
         to the unfiltered ranks of surviving docs, exactly like
         ``search(where=...)`` (ES keeps corpus statistics global under a
-        filter clause). For broad analytical predicates or
-        min_should_match use ``search()`` — those belong on executors.
+        filter clause). ``search()`` takes the same filter as SQL and
+        runs it here too while it compiles and the index is small
+        (``DRIVER_MAX_DOCS``); min_should_match > 1 takes ``search()``
+        on the executors.
 
         Returns ``[(doc_id, score), ...]`` best-first (len ≤ k).
         """
@@ -6528,17 +6696,18 @@ class Index:
 
 def _filters_to_sql(filters: list[tuple]) -> str:
     """Compile a conjunction of ``(col, op, value)`` tuples — the same
-    surface :meth:`Index._local_allowed` takes — into a Spark SQL boolean,
+    surface :meth:`Index._local_mask` takes — into a Spark SQL boolean,
     each op spelled as in :data:`_FILTER_OPS` and checked by
     :func:`_filter_op`. One filter definition serves BOTH execution paths:
     tuples go verbatim to the pyarrow serving twins (through
     :meth:`Index._local_mask`), and through here to every distributed
-    ``where=`` surface."""
+    ``where=`` surface. String literals escape ``\\`` (Spark's escape
+    character) before doubling ``'``."""
     def lit(v):
         if isinstance(v, bool):
             return "TRUE" if v else "FALSE"
         if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
+            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
         if isinstance(v, (int, float)):
             return repr(v)
         raise ValueError(f"unsupported filter literal {v!r}")

@@ -63,6 +63,32 @@ class Warehouse:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(self.path(name))
 
+    def read_declared(self, spark: SparkSession, name: str) -> DataFrame:
+        """:meth:`read` of an unpartitioned table without its schema
+        inference (one Spark job): the read is given the Spark schema its
+        first parquet footer declares — the one Spark's writer stored
+        there, else what Spark infers from a pyarrow-written file (INT96
+        as TIMESTAMP, other naive timestamps as TIMESTAMP_NTZ)."""
+        import json
+
+        import pyarrow.dataset as pads
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+        from pyspark.sql.types import StructField, StructType, TimestampType
+
+        pf = pq.ParquetFile(min(pads.dataset(self.path(name), format="parquet").files))
+        stored = (pf.schema_arrow.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+        if stored is not None:
+            schema = StructType.fromJson(json.loads(stored))
+        else:
+            cols = [pf.schema.column(i) for i in range(len(pf.schema))]
+            int96 = {c.path for c in cols if c.physical_type == "INT96"}
+            schema = StructType([
+                StructField(f.name, TimestampType() if f.name in int96 else f.dataType)
+                for f in from_arrow_schema(pf.schema_arrow, prefer_timestamp_ntz=True)
+            ])
+        return spark.read.schema(schema).parquet(self.path(name))
+
     # -- driver-side fast paths (no Spark job) -----------------------------
     # Control-plane tables are a handful of rows; routing them through a
     # Spark write/read costs a full job each (~0.5 s of pure scheduling),

@@ -9,9 +9,10 @@ from kafka_elasticsearch_standalone_consumer_spark.session import get_spark
 # goes to the executors), or below zero (even an empty batch runs as Spark
 # jobs)
 SEGMENT_LIMITS = {"driver": 1 << 62, "executor": -1}
-# engine.DRIVER_MAX_POSTINGS per --query-placement: the values the
-# ``placements`` fixture forces
+# engine.DRIVER_MAX_POSTINGS and engine.DRIVER_MAX_DOCS per
+# --query-placement: the values the ``placements`` fixture forces
 QUERY_LIMITS = {"driver": 1 << 62, "executor": 0}
+QUERY_CONSTANTS = ("DRIVER_MAX_POSTINGS", "DRIVER_MAX_DOCS")
 
 
 def pytest_addoption(parser):
@@ -27,8 +28,9 @@ def pytest_addoption(parser):
         "--query-placement",
         choices=sorted(QUERY_LIMITS),
         default=None,
-        help="force the placement of every unfiltered search() / search_many() in "
-        "the run by setting engine.DRIVER_MAX_POSTINGS for the whole session",
+        help="force the placement of every search() / search_many() whose mask "
+        "compiles on the driver by setting engine.DRIVER_MAX_POSTINGS and "
+        "engine.DRIVER_MAX_DOCS for the whole session",
     )
 
 
@@ -42,7 +44,8 @@ def pytest_configure(config):
     if placement is not None:
         from kafka_elasticsearch_standalone_consumer_spark.query import engine
 
-        engine.DRIVER_MAX_POSTINGS = QUERY_LIMITS[placement]
+        for name in QUERY_CONSTANTS:
+            setattr(engine, name, QUERY_LIMITS[placement])
 
 
 @pytest.fixture(scope="session")
@@ -83,17 +86,19 @@ def built_index(spark, transcripts, tmp_path_factory):
 @pytest.fixture
 def placements(monkeypatch):
     """Iterate the placements of search() / search_many(), each forced in
-    turn: 'driver' lifts the posting-volume threshold out of reach,
-    'executor' sets it to 0 so every query takes the Spark job path.
+    turn: 'driver' lifts the posting-volume and doc-count thresholds out
+    of reach, 'executor' sets them to 0 so every query takes the Spark
+    job path.
     Identity tests loop over it so both paths stay compared with the
     serving kernel (the default threshold sends test-sized queries to the
     driver, where search() and search_local share the kernel)."""
     from kafka_elasticsearch_standalone_consumer_spark.query import engine
 
     def each():
-        for name, limit in QUERY_LIMITS.items():
-            monkeypatch.setattr(engine, "DRIVER_MAX_POSTINGS", limit)
-            yield name
+        for placement, limit in QUERY_LIMITS.items():
+            for name in QUERY_CONSTANTS:
+                monkeypatch.setattr(engine, name, limit)
+            yield placement
         monkeypatch.undo()
 
     return each

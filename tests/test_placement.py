@@ -1,5 +1,6 @@
-"""Cost-based placement of search() / search_many(): small unmasked
-queries on a warehouse index run on the driver and return an Arrow
+"""Cost-based placement of search() / search_many(): small queries whose
+mask compiles on the driver (none, or a SQL where Spark's own pushdown
+translation expresses whole) run on the driver and return an Arrow
 LocalRelation (zero Spark jobs to collect), everything else runs on the
 executors, and both placements return bit-identical rows. Also: empty
 results are zero-job frames with unchanged schemas, and an open Index is a
@@ -44,10 +45,17 @@ def test_driver_placement_launches_zero_jobs(spark, built_index):
 
 
 def test_ineligible_queries_stay_on_executors(spark, built_index):
-    """SQL filters and min_should_match > 1 keep the Spark job path (their
-    masks are DataFrames)."""
-    idx, _ = built_index
-    for kw in ({"where": "role = 'user'"}, {"min_should_match": 2}):
+    """A SQL where that compiles runs on the driver: zero Spark jobs
+    counted from a freshly opened Index (the open, the where's compile
+    and the doc mask included). A where Spark cannot translate whole and
+    min_should_match > 1 keep the Spark job path (their masks are
+    DataFrames)."""
+    _, wh = built_index
+    before = _jobs(spark)
+    idx = Index(spark, wh)
+    assert idx.search(Q, 10, where="role = 'user'").collect()
+    assert _jobs(spark) == before
+    for kw in ({"where": "turn_idx % 2 = 0"}, {"min_should_match": 2}):
         before = _jobs(spark)
         assert idx.search(Q, 10, **kw).collect()
         assert _jobs(spark) > before, kw
@@ -55,21 +63,33 @@ def test_ineligible_queries_stay_on_executors(spark, built_index):
 
 @pytest.fixture(scope="module")
 def deleted_wh(spark, transcripts, tmp_path_factory):
-    """Two segments plus tombstones on three of the best hits."""
+    """Two segments plus tombstones on both: two of the best hits of the
+    base and the best hit of the appended segment."""
     wh = str(tmp_path_factory.mktemp("placement") / "idx")
     build_index(spark, transcripts, wh, docs_per_shard=256, n_buckets=8)
+    base = set(Index(spark, wh)._local_mask([])[0].tolist())
     append_segment(
         spark, generate_transcripts(spark, n_convs=30, seed=7), wh, idempotency_key="s1"
     )
-    top = Index(spark, wh).search_local(Q, 10, mode="exact")
-    dead = ", ".join(str(d) for d, _ in top[:3])
-    delete_docs(spark, wh, f"doc_id IN ({dead})")
+    top = [d for d, _ in Index(spark, wh).search_local(Q, 100, mode="exact")]
+    dead = [d for d in top if d in base][:2] + [d for d in top if d not in base][:1]
+    assert len(dead) == 3
+    delete_docs(spark, wh, f"doc_id IN ({', '.join(map(str, dead))})")
     return wh
+
+
+# SQL wheres that compile to a driver mask, with their tuple twins
+WHERES = {
+    "role = 'user'": [("role", "=", "user")],
+    "role <> 'user' AND turn_idx >= 1": [("role", "!=", "user"), ("turn_idx", ">=", 1)],
+}
 
 
 def test_placements_bit_identical(spark, deleted_wh, placements):
     """Exact equality (no rounding) of (doc_id, score) across placements,
-    for every mode, with tombstones present and with min_score set."""
+    for every mode, with tombstones on both segments and with min_score
+    set; filtered queries also equal search_local with the tuple twins,
+    and on the driver they run no Spark job."""
     idx = Index(spark, deleted_wh)
     assert idx._local_blocked() is not None
     queries = [Q] + [q["query"] for q in reference_queries(8)]
@@ -84,6 +104,16 @@ def test_placements_bit_identical(spark, deleted_wh, placements):
                         (r["doc_id"], r["score"])
                         for r in idx.search(q, 10, mode=mode, min_score=min_score).collect()
                     ]
+                before = _jobs(spark)
+                for where, tuples in WHERES.items():
+                    got = [
+                        (r["doc_id"], r["score"])
+                        for r in idx.search(q, 10, mode=mode, where=where).collect()
+                    ]
+                    assert got == idx.search_local(q, 10, mode=mode, where=tuples), (q, where)
+                    out[q, mode, where] = got
+                if placement == "driver":
+                    assert _jobs(spark) == before, (q, mode)
         many = idx.search_many(queries, 10).collect()
         out["many"] = sorted((r["qid"], r["rank"], r["doc_id"], r["score"]) for r in many)
         for i, q in enumerate(queries):
@@ -94,6 +124,7 @@ def test_placements_bit_identical(spark, deleted_wh, placements):
     assert runs["driver"] == runs["executor"]
     assert runs["driver"][Q, "bmw", floor] and len(runs["driver"][Q, "bmw", floor]) < 10
     assert runs["driver"]["many"]
+    assert all(runs["driver"][Q, "bmw", where] for where in WHERES)
 
 
 def test_empty_results_are_zero_job_frames_with_unchanged_schemas(spark, built_index):
