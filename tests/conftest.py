@@ -13,6 +13,7 @@ SEGMENT_LIMITS = {"driver": 1 << 62, "executor": -1}
 # --query-placement: the values the ``placements`` fixture forces
 QUERY_LIMITS = {"driver": 1 << 62, "executor": 0}
 QUERY_CONSTANTS = ("DRIVER_MAX_POSTINGS", "DRIVER_MAX_DOCS")
+QUERY_DEFAULTS: dict = {}  # the engine's own values, before any override
 
 
 def pytest_addoption(parser):
@@ -45,6 +46,7 @@ def pytest_configure(config):
         from kafka_elasticsearch_standalone_consumer_spark.query import engine
 
         for name in QUERY_CONSTANTS:
+            QUERY_DEFAULTS[name] = getattr(engine, name)
             setattr(engine, name, QUERY_LIMITS[placement])
 
 
@@ -102,6 +104,17 @@ def placements(monkeypatch):
         monkeypatch.undo()
 
     return each
+
+
+@pytest.fixture
+def default_query_placement(monkeypatch):
+    """The engine's own placement thresholds for one test, whatever
+    --query-placement forced for the session: for tests that pin which
+    queries the default rule sends to the driver."""
+    from kafka_elasticsearch_standalone_consumer_spark.query import engine
+
+    for name, value in QUERY_DEFAULTS.items():
+        monkeypatch.setattr(engine, name, value)
 
 
 @pytest.fixture

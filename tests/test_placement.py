@@ -32,7 +32,7 @@ def _jobs(spark) -> int:
     return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
 
 
-def test_driver_placement_launches_zero_jobs(spark, built_index):
+def test_driver_placement_launches_zero_jobs(spark, built_index, default_query_placement):
     idx, _ = built_index
     idx.search(Q, 10).collect()  # warm the term-dictionary reads
     before = _jobs(spark)
@@ -44,7 +44,7 @@ def test_driver_placement_launches_zero_jobs(spark, built_index):
     assert {r["qid"] for r in many} == {"0", "1"}
 
 
-def test_ineligible_queries_stay_on_executors(spark, built_index):
+def test_ineligible_queries_stay_on_executors(spark, built_index, default_query_placement):
     """A SQL where that compiles runs on the driver: zero Spark jobs
     counted from a freshly opened Index (the open, the where's compile
     and the doc mask included). A where Spark cannot translate whole and
